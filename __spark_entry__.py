@@ -20,14 +20,11 @@ _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (priority-ranked best-of-group) on sf0.001.
 
-    Resolved through the shadow-inclusive lookup: the flagship is a
-    stable smoke target and must survive driver-gate rotations (it was
-    demoted to the shadow registry in the r13 addition-coverage band).
+    Resolved through ALL_QUERIES, not the gate: the flagship is a stable
+    smoke target and must survive gate rotations.
     """
     ensure_engine_confs(spark)
-    spec = _registry.REGISTRY.get(
-        "w1_priority_best_of_day"
-    ) or _registry.SHADOW_REGISTRY["w1_priority_best_of_day"]
+    spec = _registry.ALL_QUERIES["w1_priority_best_of_day"]
     return spec.spark_fn(spark, _SMOKE_SF_DIR)
 
 

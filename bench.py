@@ -23,8 +23,8 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from legendary_data_pipeline_spark.queries import (  # noqa: E402
+    ALL_QUERIES,
     REGISTRY,
-    SHADOW_REGISTRY,
 )
 from legendary_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -170,19 +170,18 @@ def main() -> None:
     # The gate rotates every round, but the pinned comparison series must
     # keep timing the SAME queries forever — so the default bench set is
     # the current gate PLUS any pinned names the rotation has since
-    # demoted to the shadow registry (their specs are unchanged there).
-    specs = {**SHADOW_REGISTRY, **REGISTRY}
+    # moved out of GATE (they stay in ALL_QUERIES, specs unchanged).
     if only:
         names = sorted(only.split(","))
     else:
         names = sorted(
             set(REGISTRY) | set(PINNED_R1) | set(PINNED_LEGACY)
         )
-    unknown = [n for n in names if n not in specs]
+    unknown = [n for n in names if n not in ALL_QUERIES]
     if unknown:
         sys.exit(
             f"unknown query names in LDP_BENCH_QUERIES: {unknown}; "
-            f"available: {sorted(specs)}"
+            f"available: {sorted(ALL_QUERIES)}"
         )
 
     spark = get_spark(
@@ -272,7 +271,7 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
 
     def run_once(name: str) -> float:
-        spec = specs[name]
+        spec = ALL_QUERIES[name]
         start = time.perf_counter()
         df = spec.spark_fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
@@ -326,7 +325,7 @@ def main() -> None:
     # unrequested extra query execution.
     if names:
         warm_name = "a1_percentile_rollup_180d"
-        if only or warm_name not in specs:  # ad-hoc, or renamed/removed
+        if only or warm_name not in ALL_QUERIES:  # ad-hoc, or renamed/removed
             warm_name = names[0]
         run_once(warm_name)
         spark.catalog.clearCache()

@@ -78,7 +78,8 @@ class QuerySpec:
     scan_budget: int | None = None
 
 
-REGISTRY: dict[str, QuerySpec] = {}
+# Every registered query, in registration order.
+ALL_QUERIES: dict[str, QuerySpec] = {}
 
 # Driver-contract budget: the correctness gate records rows for the FIRST
 # 50 registry entries only (observed round 1: bench ran all 51 queries,
@@ -90,7 +91,63 @@ REGISTRY: dict[str, QuerySpec] = {}
 # exported through __spark_entry__.queries().
 DRIVER_QUERY_CAP = 50
 
-SHADOW_REGISTRY: dict[str, QuerySpec] = {}
+# The correctness gate, in gate order: the one place gate membership is
+# decided. REGISTRY and SHADOW_REGISTRY (defined at the tail of this
+# module, once every queries_* submodule has registered) are views of
+# ALL_QUERIES split by this tuple. Rotating the gate means editing this
+# tuple; the per-rotation rationale lives in NOTES.md.
+GATE: tuple[str, ...] = (
+    "a1_approx_scale_variant",
+    "curation_c4_gates",
+    "ss_prefix_jaccard_pairs",
+    "ml_auc_by_segment",
+    "gr_copurchase_triangles",
+    "dq_psi_drift_orders_priority",
+    "ml_woe_iv",
+    "curation_mixture_allocation",
+    "st_spearman_matrix",
+    "dq_ks_order_totals_drift",
+    "st_numeric_mi_qty_price",
+    "ts_zscore_anomalies",
+    "ret_maxsim_topk",
+    "dq_benford_order_totals",
+    "ts_twap_event_values",
+    "curation_unigram_surprisal",
+    "gr_link_prediction_topk",
+    "er_golden_record_customers",
+    "curation_fineweb_line_signals",
+    "dq_equal_freq_bins_price",
+    "mm_audio_windows",
+    "skew_salted_user_totals",
+    "sim_ivf_recall_at_k",
+    "curation_gate_funnel",
+    "dedup_cluster_size_profile",
+    "stream_ewma_parity",
+    "stream_attribution_parity",
+    "stream_quality_parity",
+    "stream_psi_parity",
+    "stream_session_parity",
+    "ts_gap_fill_daily",
+    "an_temporal_embargo_split",
+    "ml_pr_at_thresholds",
+    "ml_stratified_split",
+    "ret_mrr_at_10",
+    "ret_ndcg_at_10",
+    "tx_keywords_tf_rarity",
+    "tx_readability",
+    "curation_domain_gates",
+    "sk_cms_join_size",
+    "ml_target_encoding",
+    "gr_clustering_coefficient",
+    "an_source_vocab_overlap",
+    "curation_cluster_fixed_sample",
+    "dedup_semdedup_fixed",
+    "emb_quality_report",
+    "tx_ngram_novelty",
+    "ts_user_activity_coverage",
+    "ml_two_proportion_test",
+    "st_did_urgent_orders",
+)
 
 
 def _make_spec(
@@ -113,26 +170,13 @@ def register(
     doc: str = "",
     scan_budget: int | None = None,
 ):
-    def deco(fn: SparkQuery) -> SparkQuery:
-        spec = _make_spec(name, fn, oracle, doc, scan_budget)
-        REGISTRY[name] = spec
-        return spec.spark_fn
-
-    return deco
-
-
-def register_shadow(
-    name: str,
-    oracle: str | None,
-    doc: str = "",
-    scan_budget: int | None = None,
-):
-    """Register a query for pytest-only oracle verification (not exported
-    to the driver gate — see DRIVER_QUERY_CAP)."""
+    """Add a query to ALL_QUERIES; GATE decides whether it is gated."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
+        if name in ALL_QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         spec = _make_spec(name, fn, oracle, doc, scan_budget)
-        SHADOW_REGISTRY[name] = spec
+        ALL_QUERIES[name] = spec
         return spec.spark_fn
 
     return deco
@@ -1095,7 +1139,7 @@ def u3_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 # production idiom: one parse per row into a struct, then field access)
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "f8_typed_json_struct",
     """
     SELECT event_type,
@@ -1267,7 +1311,7 @@ def w4_day_over_day_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "a8_cube_grouping_id",
     f"""
     SELECT l_returnflag, l_linestatus,
@@ -1291,7 +1335,7 @@ def a8_cube_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "a7_rollup_totals",
     f"""
     SELECT l_returnflag, l_linestatus,
@@ -1352,912 +1396,23 @@ from legendary_data_pipeline_spark import queries_analytics  # noqa: E402,F401
 from legendary_data_pipeline_spark import queries_mleval  # noqa: E402,F401
 from legendary_data_pipeline_spark import queries_streaming  # noqa: E402,F401
 
-# ---------------------------------------------------------------------------
-# Round-6 driver-gate rotation (see NOTES.md §Round-6)
-# ---------------------------------------------------------------------------
-# The driver's independent correctness harness only checks the first
-# DRIVER_QUERY_CAP registry entries, and that set had been frozen since
-# round 3 — every analytics/DQ/sketch/ER operator added since was only
-# verified by the (identical, but locally-run) shadow harness. Rotate 10
-# redundant early entries out (each stays oracle-verified in the shadow
-# suite, and each has a near-identical sibling still in the gate) and
-# promote the 10 highest-risk round-4/5 shadow queries so the driver's
-# DuckDB oracle exercises the new surface. Bench comparability across
-# rounds is preserved via the pinned 40-query intersection subset
-# recorded in NOTES.md.
-_DEMOTE_R6 = [
-    "f4_cents_display",  # sibling in gate: f1_money_parse_cents
-    "f2_sql_money_clean",  # sibling: f1_money_parse_cents
-    "f7_url_slug_link",  # sibling: f5_sanitize_documents
-    "u2_union_tagged_sources",  # sibling: j12_full_outer_reconcile
-    "o1_rank_nulls_last",  # siblings: w1 ranking, w5 global order
-    "f14_provenance_json",  # sibling: f8_json_extract_events
-    "w4_day_over_day_lag",  # sibling: w3_rolling_7d_stats
-    "dedup_minhash_signatures",  # subsumed by dedup_minhash_lsh_pairs
-    "dedup_simhash",  # subsumed by dedup_simhash_pairs
-    "a3_user_event_totals",  # sibling: e_daily_event_rollup
-]
-_PROMOTE_R6 = [
-    "dq_table_checksum",
-    "sk_hll_distinct_users",
-    "sk_theta_audience_overlap",
-    "er_fuzzy_pairs_part_names",
-    "e_funnel_conversion",
-    "curation_bloom_cross_corpus",
-    "curation_nb_quality_score",
-    "curation_leakage_safe_split",
-    "e_incremental_daily_rollup",
-    "st_mad_outliers",
-]
 # Guard against the partial-import trap: importing a query SUBMODULE
-# (queries_llm, queries_analytics, ...) before this module finishes
-# leaves that submodule half-registered when the rotation below runs.
-# Fail with the fix spelled out instead of a bare KeyError.
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R6, *_PROMOTE_R6)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
+# (queries_llm, queries_analytics, ...) before this module re-enters this
+# module while that submodule is still half-registered. Every submodule
+# owns gate entries (tests/test_queries_oracle.py pins that per
+# submodule), so the gate comes up short; fail with the fix spelled out
+# instead of a bare KeyError.
+_missing = [n for n in GATE if n not in ALL_QUERIES]
 if _missing:
     raise ImportError(
-        "query registry incomplete during rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
+        f"query registry incomplete (missing {_missing}): import "
+        "legendary_data_pipeline_spark.queries FIRST — importing a "
+        "queries_* submodule directly re-enters this module before its "
+        "registrations finish."
     )
-for _n in _DEMOTE_R6:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R6:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
+del _missing
 
-# Round-6b swap: the trained-IVF query is rows-only checkable (Lloyd
-# codebook — no SQL replay); the fixed-codebook variant carries a FULL
-# hash oracle over the same index mechanics. Swapping lifts the driver
-# gate from 48 to 49 oracle-paired entries out of 50. The trained form
-# keeps its recall-curve contracts as a shadow
-# (tests/test_similarity_recall.py).
-SHADOW_REGISTRY["sim_ivf_topk"] = REGISTRY.pop("sim_ivf_topk")
-REGISTRY["sim_ivf_fixed_topk"] = SHADOW_REGISTRY.pop("sim_ivf_fixed_topk")
-
-# ---------------------------------------------------------------------------
-# Round-7 driver-gate rotation (see NOTES.md §Round-7)
-# ---------------------------------------------------------------------------
-# Same policy as round 6, which immediately paid off (the rotation
-# surfaced the dq_table_checksum canonicalization bug): promote the 10
-# round-6 shadow queries the driver's independent harness has never
-# exercised, demoting gate entries whose semantics a near-identical
-# sibling still covers. Every demoted entry keeps its full DuckDB
-# oracle in the shadow suite; bench comparability is preserved by the
-# pinned intersection subset bench.py now emits itself.
-_DEMOTE_R7 = [
-    "j11_semi_join_exists",  # sibling: j6_anti_join_missing (semi/anti mirror)
-    "j3_compound_left_join",  # siblings: j1 equi, j12 full-outer predicates
-    "u3_pivot_wide",  # siblings: j2_unpivot (inverse), a7_grouping_sets
-    "w3_rolling_7d_stats",  # sibling: st_mad_outliers (windowed robust stats)
-    "sim_topk_bruteforce",  # siblings: sim_lsh_bucket_topk, sim_ivf_fixed_topk
-    "dedup_embedding_cosine",  # siblings: dedup_* family + sim_lsh_bucket_topk
-    "text_bpe_token_count",  # sibling: text_token_stats_by_lang
-    "t2_range_join_purchase_session",  # sibling: t1_asof_purchase_click
-    "e_incremental_daily_rollup",  # sibling: e_daily_event_rollup
-    "f10_conditional_feed_mapping",  # siblings: f1 money path, j7 coalesce
-]
-_PROMOTE_R7 = [
-    "curation_c4_gates",
-    "curation_c4_span_dedup",
-    "ss_prefix_jaccard_pairs",
-    "sk_cms_partkey_freq",
-    "ml_auc_by_segment",
-    "curation_html_extract",
-    "gr_copurchase_triangles",
-    "st_correlation_matrix",
-    "ret_rrf_fusion",
-    "ml_langid_confusion",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R7, *_PROMOTE_R7)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-7 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R7:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R7:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-
-# ---------------------------------------------------------------------------
-# Round-8 driver-gate rotation (see NOTES.md §Round-8)
-# ---------------------------------------------------------------------------
-# Same rotation policy (it caught real harness bugs in rounds 5 and 6):
-# promote 10 queries the independent driver oracle has never run, biased
-# toward representation-fragile outputs — survival curves (libm log/exp),
-# rank statistics, PSI/WOE logs, CUSUM accumulation, SCD2 timestamp
-# intervals, unicode script profiling, and exact water-filling
-# allocation. Every demoted entry has a near-identical sibling still in
-# the gate AND a green driver row from an earlier round; all keep their
-# full DuckDB oracles in the shadow suite.
-_DEMOTE_R8 = [
-    "sk_theta_audience_overlap",  # sibling: sk_hll_distinct_users (sketch distinct)
-    "er_fuzzy_pairs_part_names",  # sibling: ss_prefix_jaccard_pairs (fuzzy pairs)
-    "dedup_simhash_pairs",  # sibling: dedup_minhash_lsh_pairs (banded near-dup)
-    "dedup_ngram_jaccard",  # siblings: ss_prefix_jaccard_pairs, dedup_minhash_lsh_pairs
-    "text_langid",  # sibling: ml_langid_confusion (same langid kernel)
-    "text_fingerprint",  # sibling: dedup_exact_sha (hash projection)
-    "f5_sanitize_documents",  # sibling: curation_html_extract (text cleaning)
-    "j1_cast_bridged_join",  # siblings: j7 broadcast join, j12 full outer
-    "e_daily_event_rollup",  # sibling: a1_percentile_rollup_180d (grouped rollup)
-    "curation_nb_quality_score",  # sibling: text_quality_score (doc scoring)
-]
-_PROMOTE_R8 = [
-    "sv_user_retention_km",
-    "sv_logrank_user_segments",
-    "dq_psi_drift_orders_priority",
-    "ml_woe_iv",
-    "st_kendall_tau_qty_discount",
-    "st_gini_order_value",
-    "ts_cusum_daily_value",
-    "curation_mixture_allocation",
-    "scd2_user_event_state",
-    "tx_script_profile",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R8, *_PROMOTE_R8)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-8 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R8:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R8:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-
-# ---------------------------------------------------------------------------
-# Round-9 driver-gate rotation (see NOTES.md §Round-9)
-# ---------------------------------------------------------------------------
-# 107 of 191 registry queries had never seen the independent driver
-# oracle entering this round, and two of the three harness bugs to date
-# (r6 dq_table_checksum, r8 st_kendall_tau_qty_discount) were caught
-# ONLY by rotation. Promote 10 more never-driver-checked queries, again
-# biased toward representation-fragile outputs (rank statistics, KS/chi²
-# drift, mutual information, z-scores, calibration fractions, Benford
-# log-expected frequencies, time-weighted averages, surprisal filters);
-# demote 10 rows with a green r8 driver row AND a near-identical sibling
-# still in the gate. Demoted entries keep their full DuckDB oracles in
-# the shadow suite (test_queries_oracle.py runs all of them every time).
-_DEMOTE_R9 = [
-    "w5_price_deciles",  # sibling: a1_percentile_rollup_180d (percentiles)
-    "j12_full_outer_reconcile",  # siblings: j6 anti, j7 broadcast joins
-    "a7_grouping_sets",  # sibling: a1_percentile_rollup_180d (grouped rollup)
-    "mm_media_meta",  # sibling: mm_frame_sample (multimodal mapInPandas)
-    "e_funnel_conversion",  # sibling: e_sessionize_batch (event ordering)
-    "dedup_exact_sha",  # sibling: dedup_minhash_lsh_pairs (dedup family)
-    "text_token_stats_by_lang",  # sibling: text_quality_score (doc stats)
-    "curation_html_extract",  # siblings: curation_c4_gates / c4_span_dedup
-    "o3_latest_order_per_customer",  # sibling: w1_priority_best_of_day (top-1)
-    "s5_upsert_semantics",  # sibling: scd2_user_event_state (keyed state)
-]
-_PROMOTE_R9 = [
-    "st_spearman_matrix",
-    "dq_ks_order_totals_drift",
-    "st_chi_square_independence",
-    "st_numeric_mi_qty_price",
-    "ts_zscore_anomalies",
-    "ml_calibration_bins",
-    "ret_maxsim_topk",
-    "dq_benford_order_totals",
-    "ts_twap_event_values",
-    "curation_unigram_surprisal",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R9, *_PROMOTE_R9)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-9 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R9:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R9:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-
-# ---------------------------------------------------------------------------
-# Round-10 driver-gate rotation (see NOTES.md §Round-10)
-# ---------------------------------------------------------------------------
-# POLICY CHANGE (r9 verdict #6): the never-driver-checked tail was
-# GROWING — rotation retired 10/round while rounds add ~15-20 new
-# queries (118 of 212 never checked entering r10). From this round the
-# rotation swaps FIFTEEN: ten bias-picked toward the newest operator
-# families and representation-fragile outputs, plus a five-slot
-# round-robin "sweep" band that cycles the oldest never-checked
-# shadows. Every demoted entry has >=2 green driver rows (most have 9)
-# AND a near-identical sibling still in the gate; all keep their full
-# DuckDB oracles in the always-run shadow suite.
-# st_kendall_tau_qty_discount deliberately STAYS in the gate: the
-# round-10 all-BIGINT output must earn a green INDEPENDENT driver row
-# before it can ever be demoted.
-_DEMOTE_R10 = [
-    "a1_percentile_rollup_180d",  # siblings: st_mad_outliers, dq_equal_freq_bins_price (quantiles)
-    "corpus_curation_pipeline",  # siblings: curation_c4_gates, curation_c4_span_dedup
-    "dedup_minhash_lsh_pairs",  # sibling: ss_prefix_jaccard_pairs (banded set-sim pairs)
-    "f1_money_parse_cents",  # siblings: j7 coalesce/cents path, f8 extraction
-    "j6_anti_join_missing",  # sibling: j7_price_resolution_coalesce (join family)
-    "sim_lsh_bucket_topk",  # sibling: sim_ivf_fixed_topk (bucketed ANN top-k)
-    "text_quality_score",  # siblings: tx_script_profile, tx_bpe_fertility_by_lang
-    "e_sessionize_batch",  # sibling: scd2_user_event_state (per-user ordered state)
-    "sk_hll_distinct_users",  # sibling: sk_cms_partkey_freq (mergeable sketches)
-    "st_mad_outliers",  # sibling: ts_zscore_anomalies (robust outlier flags)
-    "dq_table_checksum",  # siblings: dq_ks/dq_psi/dq_benford (DQ suite)
-    "curation_bloom_cross_corpus",  # sibling: curation_semantic_decontamination
-    "st_correlation_matrix",  # sibling: st_spearman_matrix (exact moment matrix)
-    "ml_langid_confusion",  # siblings: ml_auc_by_segment, ml_calibration_bins
-    "ret_rrf_fusion",  # siblings: ret_maxsim_topk, ret_rbo_exact_vs_lsh
-]
-_PROMOTE_R10 = [
-    # ten bias-picked (r9 verdict #2): the round-9 operator families
-    "ht_mann_whitney_qty_flag",
-    "ht_wilcoxon_customer_value_shift",
-    "ts_theil_sen_daily_value",
-    "curation_gopher_repetition",
-    "gr_link_prediction_topk",
-    "er_golden_record_customers",
-    "an_source_js_divergence",
-    "ret_rbo_exact_vs_lsh",
-    "curation_semantic_decontamination",
-    "curation_token_budget_head",
-    # five-slot sweep band: oldest never-checked, family-diverse
-    "ht_kruskal_value_by_priority",
-    "curation_fineweb_line_signals",
-    "dq_equal_freq_bins_price",
-    "ts_ewma_daily_anomalies",
-    "tx_bpe_fertility_by_lang",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R10, *_PROMOTE_R10)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-10 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R10:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R10:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-
-# ---------------------------------------------------------------------------
-# Round-11 driver-gate rotation (see NOTES.md §Round-11)
-# ---------------------------------------------------------------------------
-# r10 verdict #1: the never-driver-checked tail GREW 118→127 because 25
-# new queries landed against 15 rotations. This round uses both levers:
-# rotate TWENTY (ten bias-picked from the round-10 operator cohort
-# X187–X211 — nonparametric tests, time-series decomposition/ACF, corpus
-# vocabulary/entropy, calibration error, Lorenz — plus a TEN-slot sweep
-# band cycling the oldest never-checked shadows, family-diverse), and
-# hold new-operator additions below the rotation rate. Every demoted
-# entry has >=1 green driver row (the round-10 promotions earned theirs
-# on first exposure in CORRECTNESS_r10; the rest have 2–10) AND a
-# near-identical sibling still in the gate; all keep their full DuckDB
-# oracles in the always-run shadow suite.
-# st_kendall_tau_qty_discount is demoted per r10 verdict #2: it stayed
-# in the r10 gate to earn an independent green for the all-BIGINT fix
-# and has it now (CORRECTNESS_r10 hash-green).
-_DEMOTE_R11 = [
-    "st_kendall_tau_qty_discount",  # sibling: st_spearman_matrix (rank stats)
-    "ht_mann_whitney_qty_flag",  # sibling: ht_cliffs_delta_qty_flag (two-group rank)
-    "ht_wilcoxon_customer_value_shift",  # sibling: ht_friedman_daily_event_ranks (paired ranks)
-    "ht_kruskal_value_by_priority",  # sibling: ht_friedman_daily_event_ranks (k-group ranks)
-    "ts_theil_sen_daily_value",  # sibling: ts_mann_kendall_daily_value (Kendall-family trend)
-    "ts_ewma_daily_anomalies",  # sibling: ts_zscore_anomalies (anomaly flags, stays)
-    "ts_cusum_daily_value",  # sibling: ts_mann_kendall_daily_value (change/trend detection)
-    "tx_bpe_fertility_by_lang",  # siblings: tx_vocab_richness, tx_corpus_entropy (corpus text)
-    "tx_script_profile",  # siblings: tx_vocab_richness, tx_corpus_entropy
-    "ml_calibration_bins",  # sibling: ml_expected_calibration_error (calibration)
-    "st_gini_order_value",  # sibling: st_lorenz_order_value (same cum-share construction)
-    "st_chi_square_independence",  # sibling: st_numeric_mi_qty_price (contingency grids, stays)
-    "curation_semantic_decontamination",  # sibling: curation_decontaminate (n-gram decontam)
-    "curation_token_budget_head",  # sibling: curation_pack_sequences (token budgets/packing)
-    "curation_gopher_repetition",  # sibling: curation_fineweb_line_signals (doc-quality gates, stays)
-    "an_source_js_divergence",  # sibling: dq_psi_drift_orders_priority (distribution divergence, stays)
-    "ret_rbo_exact_vs_lsh",  # siblings: ret_bm25_topk (incoming), ret_maxsim_topk (stays)
-    "scd2_user_event_state",  # sibling: s9_scd2_part_prices (SCD2 versioned state)
-    "t1_asof_purchase_click",  # sibling: t3_asof_forward_next_purchase (as-of join)
-    "mm_frame_sample",  # sibling: mm_audio_windows (multimodal mapInPandas)
-]
-_PROMOTE_R11 = [
-    # ten bias-picked (r10 verdict #1a): the round-10 operator cohort
-    "ht_cliffs_delta_qty_flag",
-    "ht_friedman_daily_event_ranks",
-    "ts_mann_kendall_daily_value",
-    "ts_seasonal_decompose_daily",
-    "ts_acf_daily_value",
-    "tx_vocab_richness",
-    "tx_corpus_entropy",
-    "st_trimmed_mean_price_by_flag",
-    "ml_expected_calibration_error",
-    "st_lorenz_order_value",
-    # ten-slot sweep band: oldest never-checked shadows, family-diverse
-    # (first-commit order; see NOTES.md §Round-11 for the age table)
-    "curation_decontaminate",
-    "curation_pack_sequences",
-    "curation_pii_scrub",
-    "dedup_cluster_components",
-    "mm_audio_windows",
-    "skew_salted_user_totals",
-    "t3_asof_forward_next_purchase",
-    "text_unicode_fold",
-    "s9_scd2_part_prices",
-    "ret_bm25_topk",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R11, *_PROMOTE_R11)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-11 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R11:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R11:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
-
-# ---------------------------------------------------------------------------
-# Round-12 driver-gate rotation (see NOTES.md §Round-12)
-# ---------------------------------------------------------------------------
-# r11 verdict #1: keep the rotation at 20 and drive the never-checked
-# tail below 100 (115 entering r12). Same two-band policy: the 7-slot
-# bias band takes the entire r11 operator cohort (X212–X219 minus CvM's
-# sibling — all 7 foreign-cwd oracle-green at sf0.01 before this
-# rotation committed), the 13-slot sweep band cycles the oldest
-# never-checked shadows, family-diverse (the NOTES "Round-12 rotation
-# prep" list, verified end of r11 and re-verified this session).
-# Demotions: 18 of the 20 r11 promotions (each earned a hash-green row
-# in CORRECTNESS_r11 on first exposure) plus the two survival queries
-# (multi-round greens; their incoming sibling sv_nelson_aalen is the
-# Kaplan–Meier/logrank family's additive companion).
-# mm_audio_windows and skew_salted_user_totals stay a second round —
-# they are the gate's ONLY multimodal / skew-handling representatives.
-_DEMOTE_R12 = [
-    "ht_cliffs_delta_qty_flag",  # sibling: ht_kendalls_w_daily_event_ranks (rank effect size)
-    "ht_friedman_daily_event_ranks",  # siblings: ht_page_trend + ht_kendalls_w (shared _complete_block_ranks prologue)
-    "ts_mann_kendall_daily_value",  # sibling: ht_page_trend_daily_event_ranks (Kendall-family trend)
-    "ts_seasonal_decompose_daily",  # sibling: ts_zscore_anomalies (daily-series windows, stays)
-    "ts_acf_daily_value",  # sibling: ts_zscore_anomalies (stays)
-    "tx_vocab_richness",  # sibling: curation_vocab_topk (incoming; vocabulary aggregation)
-    "tx_corpus_entropy",  # sibling: curation_unigram_surprisal (corpus LM stats, stays)
-    "st_trimmed_mean_price_by_flag",  # sibling: dq_equal_freq_bins_price (hoisted-threshold rank intervals, stays)
-    "ml_expected_calibration_error",  # sibling: ml_brier_decomposition (incoming; calibration decomposition)
-    "st_lorenz_order_value",  # sibling: ml_cumulative_gains (incoming; the lorenz plan on the negated key)
-    "curation_decontaminate",  # sibling: curation_c4_span_dedup (shingle spans, stays)
-    "curation_pack_sequences",  # sibling: curation_chunk_sequences (incoming; token-budget packing)
-    "curation_pii_scrub",  # sibling: curation_fineweb_line_signals (doc text gates, stays)
-    "dedup_cluster_components",  # sibling: dedup_keep_canonical (incoming; dedup-cluster consumer)
-    "t3_asof_forward_next_purchase",  # sibling: ts_twap_event_values (event-time ordered scan, stays)
-    "text_unicode_fold",  # sibling: text_bpe_segment (incoming; text transforms)
-    "s9_scd2_part_prices",  # sibling: er_golden_record_customers (keyed reconciliation, stays)
-    "ret_bm25_topk",  # sibling: ret_maxsim_topk (stays)
-    "sv_user_retention_km",  # sibling: sv_nelson_aalen_user_tenure (incoming; KM's additive companion)
-    "sv_logrank_user_segments",  # sibling: sv_nelson_aalen_user_tenure (incoming; survival family)
-]
-_PROMOTE_R12 = [
-    # seven bias-picked (r11 verdict #1): the round-11 operator cohort
-    "ht_cochran_armitage_status_by_priority",
-    "sv_nelson_aalen_user_tenure",
-    "gr_basket_pair_lift",
-    "ml_brier_decomposition",
-    "ml_cumulative_gains",
-    "ht_page_trend_daily_event_ranks",
-    "ht_kendalls_w_daily_event_ranks",
-    # thirteen-slot sweep band: oldest never-checked shadows,
-    # family-diverse (NOTES.md "Round-12 rotation prep" list)
-    "curation_repetition_quality",
-    "curation_stratified_sample",
-    "curation_cap_per_source",
-    "curation_vocab_topk",
-    "dedup_keep_canonical",
-    "curation_chunk_sequences",
-    "dedup_incremental_exact",
-    "curation_boilerplate_stats",
-    "curation_weighted_sample",
-    "emb_centroid_outliers",
-    "text_bpe_segment",
-    "curation_url_dedup",
-    "curation_domain_pagerank",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R12, *_PROMOTE_R12)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-12 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R12:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R12:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
-
-# ---------------------------------------------------------------------------
-# Round-13 driver-gate rotation (see NOTES.md §Round-13)
-# ---------------------------------------------------------------------------
-# r12 verdict #2: keep the rotation at 20 and drive the never-checked
-# tail to ≤83 (103 entering r13). Same two-band policy: the 8-slot bias
-# band takes the entire r12 operator cohort (X220–X227 — all
-# foreign-cwd oracle-green at sf0.001 AND sf0.01 at the end of r12,
-# NOTES "Round-13 rotation prep"), the 12-slot sweep band cycles the
-# oldest never-checked shadows in first-commit order, family-diverse.
-# Demotions: all 20 r12 promotions — every one earned a full hash-green
-# driver row in CORRECTNESS_r12 on first exposure (re-checked before
-# this rotation committed).
-_DEMOTE_R13 = [
-    "ht_cochran_armitage_status_by_priority",  # sibling: dq_quality_score_psi_by_source (incoming; scored-bucket drift)
-    "sv_nelson_aalen_user_tenure",  # survival family rests this round (KM/logrank/NA all driver-green r12 or earlier)
-    "gr_basket_pair_lift",  # sibling: er_blocking_health_report (incoming; pair-frame consumer)
-    "ml_brier_decomposition",  # sibling: ml_nb_quality_calibration (incoming; calibration readout)
-    "ml_cumulative_gains",  # sibling: ml_nb_quality_calibration (incoming; score-quality readout)
-    "ht_page_trend_daily_event_ranks",  # hypothesis-test family rests (3 driver-green rows in r12)
-    "ht_kendalls_w_daily_event_ranks",  # hypothesis-test family rests
-    "curation_repetition_quality",  # sibling: curation_strip_boilerplate (incoming; doc text gates)
-    "curation_stratified_sample",  # sibling: curation_stratified_take_n (incoming; stratified sampling)
-    "curation_cap_per_source",  # sibling: curation_stratified_take_n (incoming; per-group caps)
-    "curation_vocab_topk",  # sibling: curation_dsir_select (incoming; vocabulary/importance weights)
-    "dedup_keep_canonical",  # sibling: dedup_token_savings_report (incoming; same closure + drop-set plan)
-    "curation_chunk_sequences",  # sibling: curation_pack_composite_shards (incoming; token-budget packing)
-    "dedup_incremental_exact",  # sibling: dedup_strip_substrings (incoming; exact-hash dedup family)
-    "curation_boilerplate_stats",  # sibling: curation_strip_boilerplate (incoming; boilerplate family)
-    "curation_weighted_sample",  # sibling: curation_stratified_take_n (incoming; sampling family)
-    "emb_centroid_outliers",  # sibling: emb_random_projection (incoming; embedding hygiene)
-    "text_bpe_segment",  # sibling: dedup_bpe_ngram_jaccard (incoming; frozen-BPE consumer)
-    "curation_url_dedup",  # sibling: curation_overlap_matrix (incoming; cross-source dedup views)
-    "curation_domain_pagerank",  # sibling: curation_gopher_gates (incoming; domain-level curation)
-]
-_PROMOTE_R13 = [
-    # eight bias-picked (r12 verdict #2): the round-12 operator cohort
-    "dedup_token_savings_report",
-    "dedup_bpe_ngram_jaccard",
-    "ml_nb_quality_calibration",
-    "dq_quality_score_psi_by_source",
-    "er_blocking_health_report",
-    "dedup_threshold_sensitivity",
-    "sim_ivf_recall_at_k",
-    "dedup_winnow_pairs",
-    # twelve-slot sweep band: oldest never-checked shadows,
-    # family-diverse (NOTES.md "Round-13 rotation prep" list)
-    "curation_stratified_take_n",
-    "curation_pack_composite_shards",
-    "curation_contamination_score",
-    "curation_strip_boilerplate",
-    "curation_overlap_matrix",
-    "t4_click_attribution",
-    "curation_dsir_select",
-    "curation_gopher_gates",
-    "dedup_dup_span_stats",
-    "dedup_strip_substrings",
-    "emb_random_projection",
-    "curation_length_winsorize",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R13, *_PROMOTE_R13)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-13 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R13:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R13:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
-
-# Round-13 addition-coverage band: the six X228–X233 readouts
-# registered THIS round take gate slots immediately (each foreign-cwd
-# oracle-verified at sf0.001 AND sf0.01 before this rotation committed),
-# so the never-driver-checked tail still lands at the r12 verdict's
-# ≤83 target COUNTING the additions. The six demotions are the gate's
-# most-driver-checked members (7–12 green rows each, recomputed from
-# CORRECTNESS_r01–r12 before demoting), every family keeps a gate
-# representative, and four of them (f8/j2/j7/w1) are PINNED_R1 bench
-# anchors whose min-of-3 timing series continues regardless of gate
-# membership.
-_DEMOTE_R13B = [
-    "f8_json_extract_events",  # 12 greens; JSON family: j7 coalesce chain demoted too — f8's oracle re-runs in every pytest
-    "j2_unpivot_part_metrics",  # 12 greens; unpivot/VALUES core row keeps its shadow oracle
-    "j7_price_resolution_coalesce",  # 12 greens; coalesce-priority family
-    "w1_priority_best_of_day",  # 12 greens; window family (PINNED_R1 series continues in bench)
-    "curation_leakage_safe_split",  # 7 greens; curation family amply represented (funnel incoming)
-    "sim_ivf_fixed_topk",  # 7 greens; IVF family: recall@k stays, list-balance incoming
-]
-_PROMOTE_R13B = [
-    "curation_gate_funnel",
-    "dedup_cluster_size_profile",
-    "dedup_keeper_policy_delta",
-    "curation_mix_bias_report",
-    "sim_ivf_list_balance",
-    "curation_pack_efficiency",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R13B, *_PROMOTE_R13B)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-13 addition-coverage "
-        f"rotation (missing {_missing}): import "
-        "legendary_data_pipeline_spark.queries FIRST."
-    )
-for _n in _DEMOTE_R13B:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R13B:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
-
-# ---------------------------------------------------------------------------
-# Round-14 driver-gate rotation (see NOTES.md §Round-14)
-# ---------------------------------------------------------------------------
-# r13 verdict #1: execute the prepped rotation and drive the
-# never-driver-checked tail 83 → ≤63. The r13 operator cohort
-# (X228–X233) is already driver-checked, so no bias band this round: a
-# pure 20-slot sweep of the oldest never-checked shadows (first-commit
-# order, family-diverse — the exact list pre-verified oracle-green at
-# sf0.001 AND sf0.01 from a foreign-cwd session at the end of r13,
-# NOTES "Round-14 rotation prep"). Demotions: 20 of the 26 r13
-# promotions — every one earned a full hash-green driver row in
-# CORRECTNESS_r13 on first exposure (re-checked before this rotation
-# committed); the three kept members each hold a family seat the
-# incoming sweep does not re-cover (sim_ivf_recall_at_k: ANN/IVF;
-# dedup_cluster_size_profile: pair-closure dedup; curation_gate_funnel:
-# gate-attrition readout).
-_DEMOTE_R14 = [
-    "dedup_token_savings_report",  # sibling: dedup_cluster_size_profile (kept; same verified-pair closure)
-    "dedup_bpe_ngram_jaccard",  # siblings: ss_prefix_jaccard_pairs (gate), dedup_keep_longest (incoming)
-    "ml_nb_quality_calibration",  # siblings: ml_auc_by_segment, ml_woe_iv (gate; score-quality readouts)
-    "dq_quality_score_psi_by_source",  # siblings: dq_psi_drift_orders_priority (gate), dq_drift_orders_priority (incoming)
-    "er_blocking_health_report",  # siblings: er_sorted_neighborhood, er_best_match_part_names (incoming)
-    "dedup_threshold_sensitivity",  # sibling: dedup_cluster_size_profile (kept; same closure + threshold frames)
-    "dedup_winnow_pairs",  # siblings: ss_prefix_jaccard_pairs (gate), dedup_keep_longest (incoming)
-    "curation_stratified_take_n",  # sibling: st_systematic_weighted_sample (incoming; weighted/stratified draws)
-    "curation_pack_composite_shards",  # sibling: curation_sliding_chunks (incoming; token-budget chunk/pack family)
-    "curation_contamination_score",  # siblings: curation_c4_span_dedup (gate), u4_intersect_except_cohorts (incoming)
-    "curation_strip_boilerplate",  # sibling: curation_fineweb_line_signals (gate; line-level gates)
-    "curation_overlap_matrix",  # sibling: u4_intersect_except_cohorts (incoming; cross-source set overlap)
-    "t4_click_attribution",  # sibling: e_event_transitions (incoming; event-sequence temporal ops)
-    "curation_dsir_select",  # sibling: curation_temperature_mix (incoming; mixture-weight selection)
-    "curation_gopher_gates",  # sibling: curation_c4_gates (gate; doc-quality gate family)
-    "dedup_dup_span_stats",  # sibling: dedup_keep_longest (incoming; dup-structure readouts)
-    "dedup_strip_substrings",  # sibling: dedup_keep_longest (incoming; exact-hash dedup family)
-    "emb_random_projection",  # sibling: sim_ivf_recall_at_k (kept; embedding-column consumers)
-    "curation_length_winsorize",  # sibling: st_hist_order_totalprice (incoming; distribution shaping/binning)
-    "dedup_keeper_policy_delta",  # sibling: dedup_cluster_size_profile (kept; same keeper windows)
-]
-_PROMOTE_R14 = [
-    "curation_mixture_repeat",
-    "curation_shuffle_shard",
-    "curation_temperature_mix",
-    "dedup_keep_longest",
-    "e_retention_cohorts",
-    "e_event_transitions",
-    "curation_sliding_chunks",
-    "dq_constraint_report_orders",
-    "dq_profile_lineitem",
-    "er_best_match_part_names",
-    "skew_heavy_hitters_users",
-    "st_hist_order_totalprice",
-    "st_systematic_weighted_sample",
-    "st_trend_event_value_daily",
-    "dq_drift_orders_priority",
-    "er_sorted_neighborhood",
-    "skew_join_forecast_order_pairs",
-    "u4_intersect_except_cohorts",
-    "w6_percent_rank_cume_dist",
-    "dq_event_calendar_gaps",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R14, *_PROMOTE_R14)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-14 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R14:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R14:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
-
-# Round-14 addition-coverage band: the three X234–X236 streaming-parity
-# readouts registered THIS round (queries_streaming.py) take gate slots
-# immediately — the streaming family's first driver-oracle exposure
-# (r13 verdict #7) — so the never-driver-checked tail still lands at
-# the ≤63 target COUNTING the additions (83 − 20 sweep − 3 additions
-# + 3 registrations = 63). The three demotions complete the r13-
-# promotion demotion set (all 26 green in CORRECTNESS_r13; each keeps
-# its full shadow oracle).
-_DEMOTE_R14B = [
-    "curation_mix_bias_report",  # sibling: curation_mixture_allocation (gate; mixture readouts)
-    "sim_ivf_list_balance",  # sibling: sim_ivf_recall_at_k (kept; same _ivf_fixed_assign kernel)
-    "curation_pack_efficiency",  # sibling: curation_sliding_chunks (incoming; packing readouts)
-]
-_PROMOTE_R14B = [
-    "stream_rollup_parity",
-    "stream_dedup_parity",
-    "stream_maint_parity",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R14B, *_PROMOTE_R14B)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-14 addition-coverage "
-        f"rotation (missing {_missing}): import "
-        "legendary_data_pipeline_spark.queries FIRST."
-    )
-for _n in _DEMOTE_R14B:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R14B:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
-
-# Round-14 second addition-coverage band: X237 (streaming CMS
-# maintenance parity) and X238 (gate-disagreement matrix), registered
-# later in r14 — same policy: additions take gate slots immediately so
-# the never-checked tail stays at the ≤63 target counting them. The
-# two demotions are 7-green veterans whose semantics an incoming
-# addition re-covers; both stay in the PINNED_LEGACY bench basket
-# (timed every round) and keep their full shadow oracles.
-_DEMOTE_R14C = [
-    "sk_cms_partkey_freq",  # 7 greens; sibling: stream_cms_parity (incoming; same cell arithmetic + probe shape)
-    "curation_c4_span_dedup",  # 7 greens; siblings: curation_c4_gates (gate), curation_gate_disagreement (incoming; C4-verdict consumer)
-]
-_PROMOTE_R14C = [
-    "stream_cms_parity",
-    "curation_gate_disagreement",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R14C, *_PROMOTE_R14C)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-14 second "
-        f"addition-coverage rotation (missing {_missing}): import "
-        "legendary_data_pipeline_spark.queries FIRST."
-    )
-for _n in _DEMOTE_R14C:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R14C:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
-
-# ---------------------------------------------------------------------------
-# Round-15 driver-gate rotation (see NOTES.md §Round-15)
-# ---------------------------------------------------------------------------
-# r14 verdict #1: execute the prepped rotation and drive the
-# never-driver-checked tail 63 → ≤43. A pure 20-slot sweep of the
-# oldest never-checked shadows (first-commit order, family-diverse —
-# the exact list pre-verified oracle-green at sf0.001 AND sf0.01 from
-# a foreign-cwd session at the end of r14, AND sf1-probed a round
-# early; NOTES "Round-15 rotation prep"). Demotions: all 25 r14
-# promotions — every one earned a full hash-green driver row in
-# CORRECTNESS_r14 on first exposure (re-checked before this rotation
-# committed). The r14 streaming-parity cohort's family seat passes to
-# the FIVE r15 addition parities (X239–X243: EWMA anomaly,
-# stream-stream attribution, quality monitor, PSI monitor,
-# sessionization — the remaining never-oracled runtime surfaces),
-# promoted in the R15B band below.
-_DEMOTE_R15 = [
-    "curation_mixture_repeat",  # sibling: curation_mixture_allocation (gate; mixture-weight family)
-    "curation_shuffle_shard",  # sibling: curation_c4_gates (gate; corpus-curation family)
-    "curation_temperature_mix",  # sibling: curation_mixture_allocation (gate; temperature/mixture draws)
-    "dedup_keep_longest",  # sibling: ss_prefix_jaccard_pairs (gate; dedup/similarity family)
-    "e_retention_cohorts",  # sibling: ts_user_streaks (incoming; per-user temporal behavior)
-    "e_event_transitions",  # sibling: ts_interarrival_gaps (incoming; event-sequence temporal ops)
-    "curation_sliding_chunks",  # sibling: curation_c4_gates (gate; token-budget chunking family)
-    "dq_constraint_report_orders",  # sibling: stream_quality_parity (incoming R15B; same check_constraints kernel)
-    "dq_profile_lineitem",  # sibling: dq_functional_dependencies (incoming; profiling family)
-    "er_best_match_part_names",  # sibling: er_name_clusters (incoming; entity-resolution family)
-    "skew_heavy_hitters_users",  # sibling: sk_rolling_distinct_users (incoming; per-user frequency readouts)
-    "st_hist_order_totalprice",  # sibling: sk_quantile_rollup (incoming; distribution binning family)
-    "st_systematic_weighted_sample",  # sibling: an_rfm_segmentation (incoming; per-customer stratification)
-    "st_trend_event_value_daily",  # sibling: ts_seasonal_profile (incoming; daily-series readouts)
-    "dq_drift_orders_priority",  # siblings: dq_psi_drift_orders_priority (gate), dq_numeric_drift_order_totals (incoming)
-    "er_sorted_neighborhood",  # sibling: er_name_clusters (incoming; blocking/clustering family)
-    "skew_join_forecast_order_pairs",  # sibling: dq_table_diff (incoming; two-sided join readouts)
-    "u4_intersect_except_cohorts",  # sibling: an_rfm_segmentation (incoming; cohort set ops)
-    "w6_percent_rank_cume_dist",  # sibling: st_brand_revenue_concentration (incoming; rank/cume distribution)
-    "dq_event_calendar_gaps",  # sibling: ts_interarrival_gaps (incoming; same gap algebra, per-user grain)
-    "stream_rollup_parity",  # seat → X239–X243 streaming parities (R15B)
-    "stream_dedup_parity",  # seat → X239–X243 streaming parities (R15B)
-    "stream_maint_parity",  # seat → X239–X243 streaming parities (R15B)
-    "stream_cms_parity",  # seat → X239–X243 streaming parities (R15B)
-    "curation_gate_disagreement",  # sibling: curation_c4_gates (gate; gate-verdict family)
-]
-_PROMOTE_R15 = [
-    "txt_collocations",
-    "dq_functional_dependencies",
-    "dq_numeric_drift_order_totals",
-    "er_name_clusters",
-    "ts_cusum_changepoint",
-    "ts_interarrival_gaps",
-    "ts_seasonal_profile",
-    "ab_purchase_conversion_ztest",
-    "st_brand_revenue_concentration",
-    "mb_association_rules",
-    "dq_k_anonymity_customers",
-    "sk_quantile_rollup",
-    "ts_user_streaks",
-    "sim_hard_negatives",
-    "sk_rolling_distinct_users",
-    "sk_theta_core_audience",
-    "st_mutual_information",
-    "an_rfm_segmentation",
-    "dq_table_diff",
-    "an_contribution_topn",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R15, *_PROMOTE_R15)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-15 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R15:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R15:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
-
-# Round-15 addition-coverage band: the five X239–X243 streaming-parity
-# readouts registered THIS round (queries_streaming.py) take gate slots
-# immediately — first driver-oracle exposure for the remaining
-# never-oracled streaming runtime surfaces (stateful EWMA scoring, the
-# stream-stream interval join, the continuous quality + PSI monitors,
-# gap-based sessionization; r14 verdict #6). With the 25 demotions and
-# 20 sweep promotions above, the gate lands back at exactly 50 and the
-# never-driver-checked tail at the ≤43 target COUNTING the additions
-# (63 − 20 sweep − 5 additions + 5 registrations = 43).
-_PROMOTE_R15B = [
-    "stream_ewma_parity",
-    "stream_attribution_parity",
-    "stream_quality_parity",
-    "stream_psi_parity",
-    "stream_session_parity",
-]
-_missing = [_n for _n in _PROMOTE_R15B if _n not in SHADOW_REGISTRY]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-15 addition-coverage "
-        f"rotation (missing {_missing}): import "
-        "legendary_data_pipeline_spark.queries FIRST."
-    )
-for _n in _PROMOTE_R15B:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
-
-# ---------------------------------------------------------------------------
-# Round-16 driver-gate rotation (see NOTES.md §Round-16)
-# ---------------------------------------------------------------------------
-# r15 verdict #8: continue the rotation with optimization hygiene —
-# demotions >= additions, every first-exposure row pre-verified, tail
-# shrinking 43 -> 23. A pure 20-slot sweep of the oldest never-checked
-# shadows (first-commit order, family capped at 4) — the exact list
-# pre-verified oracle-green at sf0.001 AND sf0.01 from a FOREIGN-CWD
-# vanilla session during r15 (48/48 including alternates) AND
-# sf1-probed a round early (SCALE.md "Round-15 EARLY probe"; the probe
-# caught and fixed the ranked-retrieval fixed-fraction quadratic and
-# the semdedup unsalted-join nondeterminism before first exposure).
-# Demotions: the 20 r15 SWEEP promotions — every one earned a full
-# hash-green driver row in CORRECTNESS_r15 on first exposure
-# (re-checked before this rotation committed). The five X239–X243
-# streaming parities stay in the gate a second round ON PURPOSE: they
-# are this optimization round's primary target (r15 verdict #3), and
-# their driver-window timings are the before/after evidence.
-_DEMOTE_R16 = [
-    "txt_collocations",  # siblings: tx_keywords_tf_rarity / tx_ngram_novelty (incoming; corpus text statistics)
-    "dq_functional_dependencies",  # sibling: dq_ks_order_totals_drift (gate; DQ structural checks)
-    "dq_numeric_drift_order_totals",  # sibling: dq_psi_drift_orders_priority (gate; drift family)
-    "er_name_clusters",  # sibling: er_golden_record_customers (gate; entity-resolution family)
-    "ts_cusum_changepoint",  # sibling: ts_zscore_anomalies (gate; anomaly-detection family)
-    "ts_interarrival_gaps",  # sibling: ts_user_activity_coverage (incoming; event-gap algebra)
-    "ts_seasonal_profile",  # sibling: ts_gap_fill_daily (incoming; daily-series readouts)
-    "ab_purchase_conversion_ztest",  # sibling: ml_two_proportion_test (incoming; same two-proportion kernel)
-    "st_brand_revenue_concentration",  # sibling: st_did_urgent_orders (incoming; order-measure statistics)
-    "mb_association_rules",  # sibling: gr_copurchase_triangles (gate; co-purchase co-occurrence)
-    "dq_k_anonymity_customers",  # sibling: curation_domain_gates (incoming; threshold-gate readouts)
-    "sk_quantile_rollup",  # sibling: sk_cms_join_size (incoming; sketch family)
-    "ts_user_streaks",  # sibling: ts_user_activity_coverage (incoming; per-user temporal behavior)
-    "sim_hard_negatives",  # sibling: dedup_semdedup_fixed (incoming; embedding-similarity family)
-    "sk_rolling_distinct_users",  # sibling: sk_cms_join_size (incoming; sketch family)
-    "sk_theta_core_audience",  # sibling: sk_cms_join_size (incoming; sketch family)
-    "st_mutual_information",  # sibling: st_numeric_mi_qty_price (gate; MI/contingency family)
-    "an_rfm_segmentation",  # sibling: an_temporal_embargo_split (incoming; per-entity stratification)
-    "dq_table_diff",  # sibling: dq_ks_order_totals_drift (gate; two-sided reconciliation/drift)
-    "an_contribution_topn",  # sibling: an_source_vocab_overlap (incoming; analytics readouts)
-]
-_PROMOTE_R16 = [
-    "ts_gap_fill_daily",
-    "an_temporal_embargo_split",
-    "ml_pr_at_thresholds",
-    "ml_stratified_split",
-    "ret_mrr_at_10",
-    "ret_ndcg_at_10",
-    "tx_keywords_tf_rarity",
-    "tx_readability",
-    "curation_domain_gates",
-    "sk_cms_join_size",
-    "ml_target_encoding",
-    "gr_clustering_coefficient",
-    "an_source_vocab_overlap",
-    "curation_cluster_fixed_sample",
-    "dedup_semdedup_fixed",
-    "emb_quality_report",
-    "tx_ngram_novelty",
-    "ts_user_activity_coverage",
-    "ml_two_proportion_test",
-    "st_did_urgent_orders",
-]
-_missing = [
-    _n
-    for _n in (*_DEMOTE_R16, *_PROMOTE_R16)
-    if _n not in REGISTRY and _n not in SHADOW_REGISTRY
-]
-if _missing:
-    raise ImportError(
-        "query registry incomplete during round-16 rotation (missing "
-        f"{_missing}): import legendary_data_pipeline_spark.queries "
-        "FIRST — importing a queries_* submodule directly re-enters "
-        "this module before its registrations finish."
-    )
-for _n in _DEMOTE_R16:
-    SHADOW_REGISTRY[_n] = REGISTRY.pop(_n)
-for _n in _PROMOTE_R16:
-    REGISTRY[_n] = SHADOW_REGISTRY.pop(_n)
-del _n, _missing
+REGISTRY: dict[str, QuerySpec] = {n: ALL_QUERIES[n] for n in GATE}
+SHADOW_REGISTRY: dict[str, QuerySpec] = {
+    n: spec for n, spec in ALL_QUERIES.items() if n not in REGISTRY
+}

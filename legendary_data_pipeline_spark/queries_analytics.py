@@ -2,9 +2,9 @@
 
 Entity resolution (blocked fuzzy matching), deequ-style profiling and
 constraint reports, mergeable-sketch distinct rollups, skew
-diagnostics, and rolling z-score anomaly detection. All SHADOW-registry
-entries (driver gate is capped at 50; see queries.DRIVER_QUERY_CAP)
-with full DuckDB oracles run by tests/test_queries_oracle.py.
+diagnostics, and rolling z-score anomaly detection. Every entry carries
+a full DuckDB oracle run by tests/test_queries_oracle.py; queries.GATE
+decides which ones are in the correctness gate.
 
 Cross-engine determinism notes specific to this module:
 - `levenshtein` is the classic unit-cost edit distance in both engines;
@@ -48,7 +48,7 @@ from legendary_data_pipeline_spark.operators.profiling import (
 from legendary_data_pipeline_spark.queries import (
     _cents,
     _cents_sql,
-    register_shadow,
+    register,
 )
 
 # ---------------------------------------------------------------------------
@@ -59,7 +59,7 @@ _ER_MAX_DIST = 3
 _ER_BLOCK_SQL = "string_split(p_name, ' ')[-1]"
 
 
-@register_shadow(
+@register(
     "er_fuzzy_pairs_part_names",
     f"""
     WITH names AS (
@@ -94,7 +94,7 @@ def er_fuzzy_pairs_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("name_a", "name_b", "edit_dist")
 
 
-@register_shadow(
+@register(
     "er_best_match_part_names",
     f"""
     WITH names AS (
@@ -189,7 +189,7 @@ def _profile_oracle() -> str:
     return " UNION ALL ".join(parts)
 
 
-@register_shadow(
+@register(
     "dq_profile_lineitem",
     _profile_oracle(),
     doc="deequ-style column profile of lineitem: row/null/distinct "
@@ -210,7 +210,7 @@ def dq_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile_columns(li, _PROFILE_COLS).drop("mean")
 
 
-@register_shadow(
+@register(
     "dq_constraint_report_orders",
     """
     SELECT 'o_orderkey_not_null' AS check_name,
@@ -270,7 +270,7 @@ def dq_constraint_report_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "sk_hll_distinct_users",
     """
     SELECT event_type,
@@ -308,7 +308,7 @@ def sk_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HH_K = 10
 
 
-@register_shadow(
+@register(
     "skew_heavy_hitters_users",
     f"""
     WITH counts AS (
@@ -356,7 +356,7 @@ _Z_MIN_N = 10  # minimum frame rows before a z-score is emitted
 _Z_THRESH = 2.0
 
 
-@register_shadow(
+@register(
     "ts_zscore_anomalies",
     f"""
     WITH daily AS (
@@ -449,7 +449,7 @@ def ts_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HIST_BINS = 12
 
 
-@register_shadow(
+@register(
     "st_hist_order_totalprice",
     f"""
     WITH v AS (
@@ -482,7 +482,7 @@ def st_hist_order_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "st_trend_event_value_daily",
     f"""
     WITH daily AS (
@@ -534,7 +534,7 @@ _SAMP_STEP = 3000  # ~10% of docs at avg n_chars ≈ 300
 _SAMP_SEED = 41
 
 
-@register_shadow(
+@register(
     "st_systematic_weighted_sample",
     f"""
     WITH src AS (
@@ -593,7 +593,7 @@ def st_systematic_weighted_sample(
 _SNM_WINDOW = 2
 
 
-@register_shadow(
+@register(
     "er_sorted_neighborhood",
     f"""
     WITH names AS (
@@ -639,7 +639,7 @@ def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "dq_drift_orders_priority",
     """
     WITH b AS (
@@ -701,7 +701,7 @@ def dq_drift_orders_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PSI_S = 0.5
 
 
-@register_shadow(
+@register(
     "dq_psi_drift_orders_priority",
     f"""
     WITH b AS (
@@ -772,7 +772,7 @@ def dq_psi_drift_orders_priority(
 _FORECAST_K = 15
 
 
-@register_shadow(
+@register(
     "skew_join_forecast_order_pairs",
     f"""
     WITH counts AS (
@@ -808,7 +808,7 @@ def skew_join_forecast_order_pairs(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "w6_percent_rank_cume_dist",
     f"""
     WITH v AS (
@@ -851,7 +851,7 @@ def w6_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "u4_intersect_except_cohorts",
     """
     WITH before AS (
@@ -913,7 +913,7 @@ _COLL_TOP_K = 30
 _COLL_MIN_DOCS = 2
 
 
-@register_shadow(
+@register(
     "txt_collocations",
     f"""
     WITH toks AS (
@@ -960,7 +960,7 @@ def txt_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "dq_event_calendar_gaps",
     """
     WITH days AS (
@@ -1028,7 +1028,7 @@ def _benford_oracle() -> str:
     """
 
 
-@register_shadow(
+@register(
     "dq_benford_order_totals",
     _benford_oracle(),
     doc="Benford first-significant-digit audit of order totals — the "
@@ -1053,7 +1053,7 @@ def dq_benford_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CK_SEP_SQL = "chr(31)"  # unit separator, mirrors the operator default
 
 
-@register_shadow(
+@register(
     "dq_table_checksum",
     f"""
     WITH canon AS (
@@ -1104,7 +1104,7 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FD_NULL_TOKEN_SQL = "chr(0) || 'NULL'"
 
 
-@register_shadow(
+@register(
     "dq_functional_dependencies",
     f"""
     WITH g1 AS (
@@ -1157,7 +1157,7 @@ def dq_functional_dependencies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "er_name_clusters",
     f"""
     WITH RECURSIVE names AS (
@@ -1210,7 +1210,7 @@ def er_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "dq_numeric_drift_order_totals",
     f"""
     WITH v AS (
@@ -1280,7 +1280,7 @@ def dq_numeric_drift_order_totals(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ts_cusum_changepoint",
     f"""
     WITH daily AS (
@@ -1351,7 +1351,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ts_seasonal_profile",
     f"""
     WITH daily AS (
@@ -1403,7 +1403,7 @@ def ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "ts_interarrival_gaps",
     """
     WITH ordered AS (
@@ -1467,7 +1467,7 @@ def ts_interarrival_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "e_incremental_daily_rollup",
     f"""
     SELECT event_type,
@@ -1535,7 +1535,7 @@ def e_incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ab_purchase_conversion_ztest",
     """
     WITH units AS (
@@ -1608,7 +1608,7 @@ def ab_purchase_conversion_ztest(
     )
 
 
-@register_shadow(
+@register(
     "st_brand_revenue_concentration",
     f"""
     WITH member AS (
@@ -1677,7 +1677,7 @@ _AR_MIN_PAIRS = 3
 _AR_TOP_K = 40
 
 
-@register_shadow(
+@register(
     "mb_association_rules",
     f"""
     WITH base AS (
@@ -1732,7 +1732,7 @@ def mb_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "ts_twap_event_values",
     """
     WITH src AS (
@@ -1793,7 +1793,7 @@ def ts_twap_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KANON_K = 10
 
 
-@register_shadow(
+@register(
     "dq_k_anonymity_customers",
     f"""
     SELECT c_nationkey, c_mktsegment,
@@ -1834,7 +1834,7 @@ _QS_BINS = 64
 _QS_PCTS = [50, 90, 99]
 
 
-@register_shadow(
+@register(
     "sk_quantile_rollup",
     f"""
     WITH vals AS (
@@ -1920,7 +1920,7 @@ def sk_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ts_user_streaks",
     """
     WITH days AS (
@@ -1978,7 +1978,7 @@ def ts_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MAD_K = "4.4478"
 
 
-@register_shadow(
+@register(
     "st_mad_outliers",
     f"""
     WITH daily AS (
@@ -2050,7 +2050,7 @@ def st_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "sk_rolling_distinct_users",
     """
     WITH du AS (
@@ -2103,7 +2103,7 @@ def sk_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "sk_theta_audience_overlap",
     """
     WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
@@ -2201,7 +2201,7 @@ def sk_kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "sk_theta_core_audience",
     """
     WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
@@ -2236,7 +2236,7 @@ def sk_theta_core_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "st_correlation_matrix",
     """
     WITH d AS (
@@ -2301,7 +2301,7 @@ def st_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "dq_ks_order_totals_drift",
     f"""
     WITH b AS (
@@ -2372,7 +2372,7 @@ def dq_ks_order_totals_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "st_gini_order_value",
     f"""
     WITH d AS (
@@ -2423,7 +2423,7 @@ def st_gini_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "st_kendall_tau_qty_discount",
     """
     WITH d AS (
@@ -2515,7 +2515,7 @@ def _rank2_cte(name: str, col: str) -> str:
       FROM {name}c)"""
 
 
-@register_shadow(
+@register(
     "st_spearman_matrix",
     f"""
     WITH d AS (
@@ -2597,7 +2597,7 @@ _CONTINGENCY_SQL = """
 """
 
 
-@register_shadow(
+@register(
     "st_chi_square_independence",
     f"""
     WITH {_CONTINGENCY_SQL},
@@ -2655,7 +2655,7 @@ def st_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "st_mutual_information",
     f"""
     WITH {_CONTINGENCY_SQL},
@@ -2701,7 +2701,7 @@ def st_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ts_gap_fill_daily",
     """
     WITH daily AS (
@@ -2773,7 +2773,7 @@ def ts_gap_fill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "gr_copurchase_triangles",
     """
     WITH e AS (
@@ -2821,7 +2821,7 @@ def gr_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "an_rfm_segmentation",
     """
     WITH base AS (
@@ -2903,7 +2903,7 @@ def an_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (only_right).
 
 
-@register_shadow(
+@register(
     "dq_table_diff",
     """
     WITH base AS (
@@ -3007,7 +3007,7 @@ def dq_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "an_contribution_topn",
     """
     WITH per_cat AS (
@@ -3055,7 +3055,7 @@ def an_contribution_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contribution_topn(li, "l_partkey", cents, n=10)
 
 
-@register_shadow(
+@register(
     "an_temporal_embargo_split",
     """
     WITH e AS (
@@ -3152,7 +3152,7 @@ def _cms_oracle_sql() -> str:
     """
 
 
-@register_shadow(
+@register(
     "sk_cms_partkey_freq",
     _cms_oracle_sql(),
     doc="Count-Min sketch point-frequency estimates for the 20 hottest "
@@ -3253,7 +3253,7 @@ def _cms_join_oracle_sql() -> str:
     """
 
 
-@register_shadow(
+@register(
     "sk_cms_join_size",
     _cms_join_oracle_sql(),
     doc="Join-cardinality estimate WITHOUT running (or scanning for) "
@@ -3299,7 +3299,7 @@ def sk_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X140 local clustering coefficients (round 6)
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "gr_clustering_coefficient",
     """
     WITH li AS (
@@ -3371,7 +3371,7 @@ def gr_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X143 source vocabulary overlap matrix (round 6)
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "an_source_vocab_overlap",
     """
     WITH st AS (
@@ -3474,7 +3474,7 @@ _NMI_CONTINGENCY_SQL = f"""
 """
 
 
-@register_shadow(
+@register(
     "st_numeric_mi_qty_price",
     f"""
     WITH {_NMI_CONTINGENCY_SQL},
@@ -3531,7 +3531,7 @@ def st_numeric_mi_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "scd2_user_event_state",
     """
     WITH d AS (
@@ -3600,7 +3600,7 @@ def scd2_user_event_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COV_WIN_S = 300  # each event covers [t, t+300s) of activity
 
 
-@register_shadow(
+@register(
     "ts_user_activity_coverage",
     f"""
     WITH spans AS (
@@ -3669,7 +3669,7 @@ def ts_user_activity_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KM_HORIZON_S = 43200
 
 
-@register_shadow(
+@register(
     "sv_user_retention_km",
     f"""
     WITH spans AS (
@@ -3744,7 +3744,7 @@ def sv_user_retention_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kaplan_meier(subj, "__dur", "__event", scaled_e6=True)
 
 
-@register_shadow(
+@register(
     "sv_logrank_user_segments",
     f"""
     WITH spans AS (
@@ -3852,7 +3852,7 @@ def sv_logrank_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ts_cusum_daily_value",
     """
     WITH daily AS (
@@ -3917,7 +3917,7 @@ def ts_cusum_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "st_did_urgent_orders",
     f"""
     WITH base AS (
@@ -3983,7 +3983,7 @@ def st_did_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ht_mann_whitney_qty_flag",
     """
     WITH base AS (
@@ -4043,7 +4043,7 @@ def ht_mann_whitney_qty_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mann_whitney_u(li, "l_quantity", "l_returnflag", "R", "N")
 
 
-@register_shadow(
+@register(
     "ht_kruskal_value_by_priority",
     f"""
     WITH base AS (
@@ -4108,7 +4108,7 @@ def ht_kruskal_value_by_priority(
     return kruskal_wallis(d, "v", "g")
 
 
-@register_shadow(
+@register(
     "ht_welch_value_urgent_low",
     f"""
     WITH base AS (
@@ -4180,7 +4180,7 @@ def ht_welch_value_urgent_low(spark: SparkSession, sf_dir: str) -> DataFrame:
     return welch_t_test(d, "v", "g", "1-URGENT", "5-LOW")
 
 
-@register_shadow(
+@register(
     "ht_anova_value_by_priority",
     f"""
     WITH base AS (
@@ -4264,7 +4264,7 @@ def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "ts_theil_sen_daily_value",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -4308,7 +4308,7 @@ def ts_theil_sen_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "ts_mann_kendall_daily_value",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -4362,7 +4362,7 @@ def ts_mann_kendall_daily_value(
     )
 
 
-@register_shadow(
+@register(
     "st_lorenz_order_value",
     f"""
     WITH d AS (
@@ -4416,7 +4416,7 @@ def st_lorenz_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lorenz_points(d, "v", group_cols=["g"], n_points=10)
 
 
-@register_shadow(
+@register(
     "st_trimmed_mean_price_by_flag",
     f"""
     WITH d AS (
@@ -4507,7 +4507,7 @@ def _fk_orphan_sql() -> str:
     """
 
 
-@register_shadow(
+@register(
     "dq_fk_orphan_lineitem",
     _fk_orphan_sql(),
     doc="Referential-integrity audit of lineitem's three foreign keys "
@@ -4548,7 +4548,7 @@ def dq_fk_orphan_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "dq_uncertainty_priority_status",
     """
     WITH cells AS (
@@ -4608,7 +4608,7 @@ def dq_uncertainty_priority_status(
     )
 
 
-@register_shadow(
+@register(
     "emb_label_centroid_matrix",
     """
     WITH base AS (
@@ -4652,7 +4652,7 @@ def emb_label_centroid_matrix(
     return label_centroid_matrix(emb)
 
 
-@register_shadow(
+@register(
     "ht_moods_median_value_by_priority",
     f"""
     WITH base AS (
@@ -4717,7 +4717,7 @@ def ht_moods_median_value_by_priority(
     return moods_median_test(d, "v", "g")
 
 
-@register_shadow(
+@register(
     "st_partial_corr_qty_price_discount",
     """
     WITH d AS (
@@ -4808,7 +4808,7 @@ def st_partial_corr_qty_price_discount(
     return partial_correlation(d, "x", "y", "z")
 
 
-@register_shadow(
+@register(
     "ts_wow_growth_daily_value",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL})
@@ -4838,7 +4838,7 @@ def ts_wow_growth_daily_value(
     )
 
 
-@register_shadow(
+@register(
     "ts_seasonal_decompose_daily",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -4893,7 +4893,7 @@ def ts_seasonal_decompose_daily(
     )
 
 
-@register_shadow(
+@register(
     "ts_cross_correlation_click_purchase",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -4941,7 +4941,7 @@ def ts_cross_correlation_click_purchase(
     )
 
 
-@register_shadow(
+@register(
     "ht_cohens_d_value_urgent_low",
     f"""
     WITH base AS (
@@ -5008,7 +5008,7 @@ def ht_cohens_d_value_urgent_low(
     return cohens_d(d, "v", "g", "1-URGENT", "5-LOW")
 
 
-@register_shadow(
+@register(
     "ht_jonckheere_priority_value",
     f"""
     WITH base AS (
@@ -5103,7 +5103,7 @@ def ht_jonckheere_priority_value(
     return jonckheere_terpstra(d, "v", "g")
 
 
-@register_shadow(
+@register(
     "ts_acf_daily_value",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -5149,7 +5149,7 @@ def ts_acf_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "ht_cliffs_delta_qty_flag",
     """
     WITH base AS (
@@ -5198,7 +5198,7 @@ def ht_cliffs_delta_qty_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cliffs_delta(li, "l_quantity", "l_returnflag", "R", "N")
 
 
-@register_shadow(
+@register(
     "ts_runs_test_daily_value",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -5256,7 +5256,7 @@ def ts_runs_test_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "ht_friedman_daily_event_ranks",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -5318,7 +5318,7 @@ def ht_friedman_daily_event_ranks(
     )
 
 
-@register_shadow(
+@register(
     "ts_ewma_daily_anomalies",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -5387,7 +5387,7 @@ def ts_ewma_daily_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "gr_link_prediction_topk",
     """
     WITH li AS (
@@ -5460,7 +5460,7 @@ def gr_link_prediction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "dq_equal_freq_bins_price",
     f"""
     WITH base AS (
@@ -5507,7 +5507,7 @@ def dq_equal_freq_bins_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "er_golden_record_customers",
     f"""
     WITH base AS (
@@ -5590,7 +5590,7 @@ def er_golden_record_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "an_source_js_divergence",
     """
     WITH d AS (
@@ -5663,7 +5663,7 @@ def an_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ht_wilcoxon_customer_value_shift",
     f"""
     WITH pc AS (
@@ -5742,7 +5742,7 @@ def ht_wilcoxon_customer_value_shift(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ht_brown_forsythe_value_by_priority",
     f"""
     WITH base AS (
@@ -5814,7 +5814,7 @@ def ht_brown_forsythe_value_by_priority(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ht_cochran_armitage_status_by_priority",
     """
     WITH d AS (
@@ -5884,7 +5884,7 @@ def ht_cochran_armitage_status_by_priority(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "sv_nelson_aalen_user_tenure",
     f"""
     WITH spans AS (
@@ -5955,7 +5955,7 @@ def sv_nelson_aalen_user_tenure(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "gr_basket_pair_lift",
     """
     WITH items AS (
@@ -6004,7 +6004,7 @@ def gr_basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ht_page_trend_daily_event_ranks",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -6069,7 +6069,7 @@ def ht_page_trend_daily_event_ranks(
     )
 
 
-@register_shadow(
+@register(
     "ht_kendalls_w_daily_event_ranks",
     f"""
     WITH daily AS ({_DAILY_CENTS_SQL}),
@@ -6143,7 +6143,7 @@ def ht_kendalls_w_daily_event_ranks(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "dq_cvm_order_totals_drift",
     f"""
     WITH b AS (
@@ -6221,7 +6221,7 @@ def dq_cvm_order_totals_drift(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "er_blocking_health_report",
     f"""
     WITH names AS (

@@ -3,10 +3,9 @@ decontamination, PII scrubbing, repetition quality, stratified sampling,
 and sequence packing — the operations a training-data pipeline runs
 between raw crawl and tokenizer.
 
-All five are registered in the SHADOW registry (the driver gate is
-capped at 50 entries; see queries.DRIVER_QUERY_CAP) but carry full
-DuckDB oracles and run through the same golden-query pytest harness
-(tests/test_queries_oracle.py) as the driver-visible entries.
+Every entry carries a full DuckDB oracle and runs through the
+golden-query pytest harness (tests/test_queries_oracle.py); queries.GATE
+decides which ones are in the correctness gate.
 """
 
 from __future__ import annotations
@@ -24,7 +23,7 @@ from legendary_data_pipeline_spark.functions.hashing import (
     seeded_md5_long_sql,
 )
 from legendary_data_pipeline_spark.operators import curation as C
-from legendary_data_pipeline_spark.queries import register_shadow
+from legendary_data_pipeline_spark.queries import register
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments
@@ -50,7 +49,7 @@ def _shingle_expr(n: int) -> str:
 _DECON_N = 4
 
 
-@register_shadow(
+@register(
     "curation_decontaminate",
     f"""
     WITH toks AS (
@@ -109,7 +108,7 @@ _PII_TEXT_SQL = """
 """
 
 
-@register_shadow(
+@register(
     "curation_pii_scrub",
     f"""
     WITH pii AS (
@@ -200,7 +199,7 @@ def curation_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "curation_repetition_quality",
     f"""
     WITH toks AS (
@@ -265,7 +264,7 @@ def _rate_ladder_sql() -> str:
     return f"CASE {whens} ELSE {int(_DEFAULT_RATE * 10_000)} END"
 
 
-@register_shadow(
+@register(
     "curation_stratified_sample",
     f"""
     WITH gated AS (
@@ -305,7 +304,7 @@ _TAKE_N = 15
 _TAKE_SEED = 7
 
 
-@register_shadow(
+@register(
     "curation_stratified_take_n",
     f"""
     WITH ranked AS (
@@ -340,7 +339,7 @@ def curation_stratified_take_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "skew_salted_user_totals",
     """
     SELECT user_id,
@@ -377,7 +376,7 @@ def skew_salted_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VOCAB_K = 100
 
 
-@register_shadow(
+@register(
     "curation_vocab_topk",
     f"""
     WITH toks AS (
@@ -464,7 +463,7 @@ _QUALITY_Q_SQL = f"""
 """
 
 
-@register_shadow(
+@register(
     "curation_cap_per_source",
     f"""
     WITH {_QUALITY_Q_SQL},
@@ -511,7 +510,7 @@ def curation_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_BUDGET = 256
 
 
-@register_shadow(
+@register(
     "curation_pack_sequences",
     f"""
     WITH t AS (
@@ -548,7 +547,7 @@ def curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "curation_pack_efficiency",
     f"""
     WITH t AS (
@@ -625,7 +624,7 @@ _PACK_SHARD_BUCKETS = 8
 _PACK_SHARD_SEED = 7
 
 
-@register_shadow(
+@register(
     "curation_pack_composite_shards",
     f"""
     WITH t AS (
@@ -671,7 +670,7 @@ def curation_pack_composite_shards(
     )
 
 
-@register_shadow(
+@register(
     "curation_chunk_sequences",
     f"""
     WITH t AS (
@@ -722,7 +721,7 @@ _SHUFFLE_SHARDS = 8
 _SHUFFLE_SEED = 7
 
 
-@register_shadow(
+@register(
     "curation_shuffle_shard",
     f"""
     WITH h AS (
@@ -768,7 +767,7 @@ def _weight_ladder_sql() -> str:
     return f"CASE {whens} ELSE {int(round(_MIX_DEFAULT * 10_000))} END"
 
 
-@register_shadow(
+@register(
     "curation_mixture_repeat",
     f"""
     WITH w AS (
@@ -849,7 +848,7 @@ _SPAN_CTES = f"""
 """
 
 
-@register_shadow(
+@register(
     "curation_boilerplate_stats",
     f"""
     WITH {_SPAN_CTES},
@@ -878,7 +877,7 @@ def curation_boilerplate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "curation_strip_boilerplate",
     f"""
     WITH {_SPAN_CTES},
@@ -916,7 +915,7 @@ _WSAMPLE_N = 20
 _WSAMPLE_SEED = 13
 
 
-@register_shadow(
+@register(
     "curation_weighted_sample",
     f"""
     WITH keyed AS (
@@ -966,7 +965,7 @@ _SCORE_N = 4
 _SCORE_THRESHOLD = 0.05
 
 
-@register_shadow(
+@register(
     "curation_contamination_score",
     f"""
     WITH toks AS (
@@ -1049,7 +1048,7 @@ _SCD2_FIXTURE_SQL = """
 """
 
 
-@register_shadow(
+@register(
     "s9_scd2_part_prices",
     f"""
     WITH {_SCD2_FIXTURE_SQL},
@@ -1180,7 +1179,7 @@ def _url_variant_col() -> F.Column:
     )
 
 
-@register_shadow(
+@register(
     "curation_url_dedup",
     f"""
     WITH urls AS (
@@ -1268,7 +1267,7 @@ def _pagerank_oracle_sql(iterations: int = _PR_ITERS,
     return head + "".join(blocks) + tail
 
 
-@register_shadow(
+@register(
     "curation_domain_pagerank",
     _pagerank_oracle_sql(),
     doc="Domain-authority PageRank over the inter-site link graph "
@@ -1306,7 +1305,7 @@ def curation_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "curation_overlap_matrix",
     f"""
     WITH toks AS (
@@ -1389,7 +1388,7 @@ _DSIR_N = 50
 _DSIR_SEED = 29
 
 
-@register_shadow(
+@register(
     "curation_dsir_select",
     f"""
     WITH toks AS (
@@ -1508,7 +1507,7 @@ def curation_cluster_balanced_sample(
     return out.select("doc_id", "cluster", "sample_rank")
 
 
-@register_shadow(
+@register(
     "curation_cluster_fixed_sample",
     f"""
     WITH base AS (
@@ -1600,7 +1599,7 @@ _SURP_MAX = 3_420_000  # mean µnats ≈ ln-perplexity 3.42 (ppl ≈ 30.6)
 _SURP_TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), __w -> __w <> '')"
 
 
-@register_shadow(
+@register(
     "curation_unigram_surprisal",
     f"""
     WITH tr AS (
@@ -1673,7 +1672,7 @@ def curation_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "curation_gopher_gates",
     f"""
     WITH toks AS (
@@ -1767,7 +1766,7 @@ _SUBSTR_SPANS_CTES = f"""
 """
 
 
-@register_shadow(
+@register(
     "dedup_dup_span_stats",
     f"""
     WITH {_SUBSTR_SPANS_CTES},
@@ -1792,7 +1791,7 @@ def dedup_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.dup_span_stats(docs, n=_SUBSTR_N)
 
 
-@register_shadow(
+@register(
     "dedup_strip_substrings",
     f"""
     WITH {_SUBSTR_SPANS_CTES},
@@ -1833,7 +1832,7 @@ def dedup_strip_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # percentile winsorization (operators/curation.winsorize_outliers)
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "curation_length_winsorize",
     f"""
     WITH base AS (
@@ -1875,7 +1874,7 @@ _MIX_BUDGET = 0.5
 _MIX_SEED = 11
 
 
-@register_shadow(
+@register(
     "curation_temperature_mix",
     f"""
     WITH base AS (
@@ -1928,7 +1927,7 @@ def curation_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "curation_mix_bias_report",
     f"""
     WITH base AS (
@@ -2056,7 +2055,7 @@ _CHUNK_SIZE = 64
 _CHUNK_STRIDE = 48
 
 
-@register_shadow(
+@register(
     "curation_sliding_chunks",
     f"""
     WITH base AS (
@@ -2100,7 +2099,7 @@ _NB_M = 4096
 _NB_SCALE = 1_000_000
 
 
-@register_shadow(
+@register(
     "curation_nb_quality_score",
     f"""
     WITH toks AS (
@@ -2186,7 +2185,7 @@ def _bloom_pos_sql(i: str) -> str:
     return bloom_sql_positions("text", i, _BLOOM_M)
 
 
-@register_shadow(
+@register(
     "curation_bloom_cross_corpus",
     f"""
     WITH ii AS (SELECT unnest(range({_BLOOM_K})) AS i),
@@ -2295,7 +2294,7 @@ _C4_SENTS_SQL = (
 )
 
 
-@register_shadow(
+@register(
     "curation_c4_gates",
     f"""
     WITH enriched AS ({_C4_ENRICH_SQL}),
@@ -2347,7 +2346,7 @@ def curation_c4_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.c4_gates(_c4_enriched(docs), bad_words=_C4_BADWORDS)
 
 
-@register_shadow(
+@register(
     "curation_c4_span_dedup",
     f"""
     WITH enriched AS ({_C4_ENRICH_SQL}),
@@ -2503,7 +2502,7 @@ _GATE_SIGNALS_CTES = f"""
 """
 
 
-@register_shadow(
+@register(
     "curation_gate_funnel",
     f"""
     {_GATE_SIGNALS_CTES},
@@ -2565,7 +2564,7 @@ def curation_gate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "curation_gate_disagreement",
     f"""
     {_GATE_SIGNALS_CTES},
@@ -2687,7 +2686,7 @@ def _html_pages(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", page.alias("raw_html"))
 
 
-@register_shadow(
+@register(
     "curation_html_extract",
     f"""
     WITH pages AS ({_HTML_PAGE_SQL}),
@@ -2755,7 +2754,7 @@ def curation_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIXA_BUDGET = 300
 
 
-@register_shadow(
+@register(
     "curation_mixture_allocation",
     f"""
     WITH src AS (
@@ -2845,7 +2844,7 @@ def curation_mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BSURP_MAX = 3_530_000  # mean bigram µnats — near-median split at sf0.01
 
 
-@register_shadow(
+@register(
     "curation_bigram_surprisal",
     f"""
     WITH trt AS (
@@ -2962,7 +2961,7 @@ _REP_KEEP_SQL = " AND ".join(
 )
 
 
-@register_shadow(
+@register(
     "curation_gopher_repetition",
     f"""
     WITH base AS (
@@ -3094,7 +3093,7 @@ def curation_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "curation_fineweb_line_signals",
     f"""
     WITH base AS (
@@ -3146,7 +3145,7 @@ def curation_fineweb_line_signals(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ht_mcnemar_gate_disagreement",
     f"""
     WITH base AS (
@@ -3229,7 +3228,7 @@ def ht_mcnemar_gate_disagreement(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ht_cochrans_q_line_gates",
     f"""
     WITH base AS (
@@ -3375,7 +3374,7 @@ _NB_TRAIN_NEG = "source = 'src1' AND doc_id % 2 = 0"
 _NB_HOLDOUT = "source IN ('src0', 'src1') AND doc_id % 2 = 1"
 
 
-@register_shadow(
+@register(
     "ml_nb_quality_calibration",
     f"""
     WITH {_nb_model_ctes(_NB_TRAIN_POS, _NB_TRAIN_NEG)},
@@ -3459,7 +3458,7 @@ _NB_PSI_BASE = "source = 'src2'"
 _NB_PSI_CURR = "source = 'src3'"
 
 
-@register_shadow(
+@register(
     "dq_quality_score_psi_by_source",
     f"""
     WITH {_nb_model_ctes("source = 'src0'", "source = 'src1'")},

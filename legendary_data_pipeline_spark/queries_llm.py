@@ -23,7 +23,7 @@ from legendary_data_pipeline_spark.functions.hashing import (
 from legendary_data_pipeline_spark.operators import dedup as D
 from legendary_data_pipeline_spark.operators import similarity as S
 from legendary_data_pipeline_spark.operators import textstats as T
-from legendary_data_pipeline_spark.queries import register, register_shadow
+from legendary_data_pipeline_spark.queries import register
 
 # ---------------------------------------------------------------------------
 # SQL fragment generators (mirror the Spark operators exactly)
@@ -193,11 +193,11 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# multimodal: audio windowing (shadow)
+# multimodal: audio windowing
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "mm_audio_windows",
     """
     WITH hashed AS (
@@ -236,7 +236,7 @@ def mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup clusters: pairs closed into connected components
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "dedup_cluster_components",
     f"""
     WITH RECURSIVE {_minhash_sig_sql()},
@@ -321,7 +321,7 @@ _CLUSTER_SQL_CTES = f"""
 """
 
 
-@register_shadow(
+@register(
     "dedup_keep_canonical",
     f"""
     WITH RECURSIVE {_CLUSTER_SQL_CTES},
@@ -573,7 +573,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float state a SQL engine cannot re-derive (k-means is iterative
     # float math over a driver sample), so no SQL expression can name
     # the same lists. The hash-oracle-able twin is sim_ivf_fixed_topk
-    # (frozen codebook — in the driver gate); THIS form keeps the
+    # (frozen codebook); THIS form keeps the
     # recall-floor contracts (tests/test_similarity_recall.py).
     doc="IVF approximate nearest neighbors: a driver-trained (bounded "
     "sample, numpy Lloyd) coarse-quantizer codebook builds inverted "
@@ -1065,7 +1065,7 @@ _SESSION_CTE = """
 """
 
 
-@register_shadow(
+@register(
     "t3_asof_forward_next_purchase",
     """
     WITH p0 AS (
@@ -1301,7 +1301,7 @@ _INCR_KEY_SQL = """
 """
 
 
-@register_shadow(
+@register(
     "dedup_incremental_exact",
     f"""
     WITH keyed AS (
@@ -1350,11 +1350,11 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# embedding hygiene: cosine-to-label-centroid outliers (shadow)
+# embedding hygiene: cosine-to-label-centroid outliers
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "emb_centroid_outliers",
     """
     WITH base AS (
@@ -1393,11 +1393,11 @@ def emb_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# similarity: IVF-PQ (memory-compressed ANN; shadow, rows-only)
+# similarity: IVF-PQ (memory-compressed ANN; rows-only)
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "sim_ivf_pq_topk",
     None,  # STAYS rows-only: PQ subspace codebooks are seeded-numpy
     # k-means state (float iteration on the driver), and reconstruction
@@ -1420,11 +1420,11 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text: unicode normalization / folding (shadow)
+# text: unicode normalization / folding
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "text_unicode_fold",
     r"""
     WITH inj AS (
@@ -1613,7 +1613,7 @@ def _bpe_fixed_oracle_sql() -> str:
     """
 
 
-@register_shadow(
+@register(
     "text_bpe_segment",
     _bpe_fixed_oracle_sql(),
     doc="Word-level BPE subword budgets under a FROZEN 32-merge table "
@@ -1668,7 +1668,7 @@ def text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "t4_click_attribution",
     """
     WITH ev AS (
@@ -1723,13 +1723,13 @@ def t4_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# retrieval: BM25 top-k (shadow)
+# retrieval: BM25 top-k
 # ---------------------------------------------------------------------------
 
 _BM25_K1, _BM25_B, _BM25_K = 1.2, 0.75, 5
 
 
-@register_shadow(
+@register(
     "ret_bm25_topk",
     f"""
     WITH toks AS (
@@ -1826,7 +1826,7 @@ def dedup_semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.semdedup(emb, n_clusters=16, tau=0.9)
 
 
-@register_shadow(
+@register(
     "dedup_semdedup_fixed",
     f"""
     WITH base AS (
@@ -1902,7 +1902,7 @@ _JL_PROJ_COLS_SQL = ", ".join(
 )
 
 
-@register_shadow(
+@register(
     "emb_random_projection",
     f"""
     WITH base AS (
@@ -1930,7 +1930,7 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "dedup_keep_longest",
     f"""
     WITH RECURSIVE {_CLUSTER_SQL_CTES},
@@ -1975,7 +1975,7 @@ def dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "dedup_cluster_size_profile",
     f"""
     WITH RECURSIVE {_CLUSTER_SQL_CTES},
@@ -2023,7 +2023,7 @@ def dedup_cluster_size_profile(
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "dedup_keeper_policy_delta",
     f"""
     WITH RECURSIVE {_CLUSTER_SQL_CTES},
@@ -2127,7 +2127,7 @@ _FUNNEL_STEPS = ("view", "click", "purchase")
 _FUNNEL_HORIZON_S = 24 * 3600
 
 
-@register_shadow(
+@register(
     "e_funnel_conversion",
     f"""
     WITH s1 AS (
@@ -2172,7 +2172,7 @@ def e_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return funnel_report(ev, list(_FUNNEL_STEPS), _FUNNEL_HORIZON_S)
 
 
-@register_shadow(
+@register(
     "e_retention_cohorts",
     """
     WITH days AS (
@@ -2210,7 +2210,7 @@ def e_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retention_cohorts(ev)
 
 
-@register_shadow(
+@register(
     "e_event_transitions",
     """
     WITH seq AS (
@@ -2241,7 +2241,7 @@ def e_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return event_transitions(ev)
 
 
-@register_shadow(
+@register(
     "mm_phash_dedup",
     None,  # STAYS rows-only: the aHash fingerprint is a numpy byte-
     # resample over opaque binary payloads (stand-in for a real codec —
@@ -2277,7 +2277,7 @@ _SPLIT_SEED = 41
 _SPLIT_VAL_PCT = 10
 
 
-@register_shadow(
+@register(
     "curation_leakage_safe_split",
     f"""
     WITH RECURSIVE {_CLUSTER_SQL_CTES},
@@ -2323,7 +2323,7 @@ _MAXSIM_NV = 8  # 64-dim embedding → 8 token-vectors of 8 dims
 _MAXSIM_K = 3
 
 
-@register_shadow(
+@register(
     "ret_maxsim_topk",
     f"""
     WITH mv AS (
@@ -2385,7 +2385,7 @@ def ret_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HARDNEG_MAX_ANCHORS = 256
 
 
-@register_shadow(
+@register(
     "sim_hard_negatives",
     f"""
     WITH base AS (
@@ -2460,7 +2460,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X132 readability scoring / X133 keyword extraction (round 6)
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "tx_readability",
     """
     WITH base AS (
@@ -2494,7 +2494,7 @@ def tx_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.readability(docs)
 
 
-@register_shadow(
+@register(
     "tx_keywords_tf_rarity",
     """
     WITH toks AS (
@@ -2530,7 +2530,7 @@ def tx_keywords_tf_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X137 domain-level quality gating (round 6)
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "curation_domain_gates",
     f"""
     WITH {_QUALITY_SQL_STATS},
@@ -2600,7 +2600,7 @@ _IVFX_NPROBE = 2
 _IVFX_K = 3
 
 
-@register_shadow(
+@register(
     "sim_ivf_fixed_topk",
     f"""
     WITH base AS (
@@ -2675,7 +2675,7 @@ def sim_ivf_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "sim_ivf_list_balance",
     f"""
     WITH base AS (
@@ -2727,7 +2727,7 @@ def sim_ivf_list_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X144 language-ID confusion matrix + exact Cohen's kappa (round 6)
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "ml_langid_confusion",
     f"""
     WITH t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
@@ -2791,7 +2791,7 @@ def ml_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "tx_ngram_novelty",
     f"""
     WITH {_shingle_cte().strip().rstrip()},
@@ -2833,7 +2833,7 @@ def tx_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EMBQ_DIM = 64
 
 
-@register_shadow(
+@register(
     "emb_quality_report",
     f"""
     WITH base AS (
@@ -2925,7 +2925,7 @@ def _script_dominant_sql() -> str:
     )
 
 
-@register_shadow(
+@register(
     "tx_script_profile",
     f"""
     WITH base AS (
@@ -2961,7 +2961,7 @@ def tx_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUDGET_TOKENS = 12_000  # ≈ half the corpus tokens at both test SFs
 
 
-@register_shadow(
+@register(
     "curation_token_budget_head",
     f"""
     WITH {_QUALITY_SQL_STATS},
@@ -3007,7 +3007,7 @@ def curation_token_budget_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "tx_bpe_fertility_by_lang",
     f"""
     WITH ws AS (
@@ -3157,7 +3157,7 @@ def _rbo_oracle_sql() -> str:
     """
 
 
-@register_shadow(
+@register(
     "ret_rbo_exact_vs_lsh",
     _rbo_oracle_sql(),
     doc="Rank-biased overlap (Webber et al. 2010) between the EXACT "
@@ -3192,7 +3192,7 @@ def ret_rbo_exact_vs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDECON_TAU_E6 = 330_000  # ~p90 of the max-cos distribution at sf0.01
 
 
-@register_shadow(
+@register(
     "curation_semantic_decontamination",
     f"""
     WITH base AS (
@@ -3243,7 +3243,7 @@ def curation_semantic_decontamination(
 _RICH_TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), __w -> __w <> '')"
 
 
-@register_shadow(
+@register(
     "tx_vocab_richness",
     f"""
     WITH tok AS (
@@ -3285,7 +3285,7 @@ def tx_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.vocab_richness(docs)
 
 
-@register_shadow(
+@register(
     "tx_corpus_entropy",
     f"""
     WITH base AS (
@@ -3355,7 +3355,7 @@ def tx_corpus_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.corpus_entropy(docs)
 
 
-@register_shadow(
+@register(
     "tx_vocab_coverage_points",
     f"""
     WITH tok AS (
@@ -3418,7 +3418,7 @@ def tx_vocab_coverage_points(
     return T.vocab_coverage_points(docs)
 
 
-@register_shadow(
+@register(
     "tx_zipf_fit",
     f"""
     WITH tok AS (
@@ -3479,7 +3479,7 @@ def tx_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.zipf_fit(docs)
 
 
-@register_shadow(
+@register(
     "tx_source_cosine_matrix",
     f"""
     WITH tok AS (
@@ -3542,7 +3542,7 @@ def _bpe_words_col():
     )
 
 
-@register_shadow(
+@register(
     "dedup_token_savings_report",
     f"""
     WITH RECURSIVE {_CLUSTER_SQL_CTES},
@@ -3635,7 +3635,7 @@ def dedup_token_savings_report(
 _BPE_SHINGLE_N = 4
 
 
-@register_shadow(
+@register(
     "dedup_bpe_ngram_jaccard",
     f"""
     WITH ws AS ({_bpe_words_sql("lang, n_chars")}),
@@ -3744,7 +3744,7 @@ def _sens_row_sql(t: float) -> str:
               WHERE c.node <> c.component) AS bpe_tokens_removed"""
 
 
-@register_shadow(
+@register(
     "dedup_threshold_sensitivity",
     f"""
     WITH RECURSIVE {_minhash_sig_sql()},
@@ -3863,7 +3863,7 @@ def dedup_threshold_sensitivity(
 _RECALL_MAX_Q = 256
 
 
-@register_shadow(
+@register(
     "sim_ivf_recall_at_k",
     f"""
     WITH base AS (
@@ -4039,7 +4039,7 @@ _WINNOW_GRAM = (
 )
 
 
-@register_shadow(
+@register(
     "dedup_winnow_pairs",
     f"""
     WITH toks AS (

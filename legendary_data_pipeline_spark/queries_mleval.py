@@ -1,4 +1,4 @@
-"""Shadow queries: set-similarity join + classifier-evaluation suite.
+"""Set-similarity join + classifier-evaluation suite queries.
 
 X127 prefix-filter Jaccard join (operators/setsim.py) and X128-X131
 classifier evaluation (operators/mleval.py). Each query pairs the Spark
@@ -23,7 +23,7 @@ from legendary_data_pipeline_spark.catalog import load_distributed
 from legendary_data_pipeline_spark.operators import mleval as M
 from legendary_data_pipeline_spark.operators import setsim as S
 from legendary_data_pipeline_spark.operators import similarity as SIM
-from legendary_data_pipeline_spark.queries import register_shadow
+from legendary_data_pipeline_spark.queries import register
 
 # Shared DuckDB fragments -------------------------------------------------
 
@@ -70,7 +70,7 @@ def _pred_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X127 — prefix-filtering exact Jaccard self-join (AllPairs/PPJoin family)
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "ss_prefix_jaccard_pairs",
     """
     WITH toks AS (
@@ -126,7 +126,7 @@ def ss_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X128 — exact tie-corrected ROC-AUC per segment (Mann-Whitney form)
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "ml_auc_by_segment",
     f"""
     WITH base0 AS ({_EVAL_BASE}),
@@ -179,7 +179,7 @@ def ml_auc_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X129 — calibration / reliability bins
 # ---------------------------------------------------------------------------
 
-@register_shadow(
+@register(
     "ml_calibration_bins",
     f"""
     WITH {_PRED_CTE},
@@ -215,7 +215,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GRID = [k / 10.0 for k in range(1, 10)]
 
-@register_shadow(
+@register(
     "ml_pr_at_thresholds",
     f"""
     WITH {_PRED_CTE},
@@ -361,7 +361,7 @@ def _ranked_frame(
 
 _MRR_LCM = M._lcm_1_to(_RET_K)
 
-@register_shadow(
+@register(
     "ret_mrr_at_10",
     f"""
     WITH {_RANKED_CTE},
@@ -417,7 +417,7 @@ def _ndcg_case_sql() -> tuple[str, str]:
 
 _GAIN_CASE, _IDEAL_CASE = _ndcg_case_sql()
 
-@register_shadow(
+@register(
     "ret_ndcg_at_10",
     f"""
     WITH {_RANKED_CTE},
@@ -470,7 +470,7 @@ def ret_ndcg_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SPLIT_SEED = 7
 
-@register_shadow(
+@register(
     "ml_stratified_split",
     f"""
     WITH h AS (
@@ -516,7 +516,7 @@ def ml_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TE_M = 10
 
-@register_shadow(
+@register(
     "ml_target_encoding",
     f"""
     WITH base AS (
@@ -587,7 +587,7 @@ def _rrf_half_rank_sql(lo: int, alias: str) -> str:
 """
 
 
-@register_shadow(
+@register(
     "ret_rrf_fusion",
     f"""
     WITH {_rrf_half_rank_sql(1, "ra")},
@@ -649,7 +649,7 @@ def ret_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WOE_S = 0.5
 
 
-@register_shadow(
+@register(
     "ml_woe_iv",
     f"""
     WITH per AS (
@@ -711,7 +711,7 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_shadow(
+@register(
     "ml_two_proportion_test",
     """
     WITH agg AS (
@@ -763,7 +763,7 @@ def ml_two_proportion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "ret_precision_recall_at_10",
     f"""
     WITH {_RANKED_CTE},
@@ -827,7 +827,7 @@ def ret_precision_recall_at_10(
     )
 
 
-@register_shadow(
+@register(
     "ml_expected_calibration_error",
     f"""
     WITH {_PRED_CTE},
@@ -869,7 +869,7 @@ def ml_expected_calibration_error(
     return M.expected_calibration_error(pred, "pred", "lab", n_bins=10)
 
 
-@register_shadow(
+@register(
     "ml_brier_decomposition",
     f"""
     WITH {_PRED_CTE},
@@ -940,7 +940,7 @@ def ml_brier_decomposition(
     return M.brier_decomposition(pred, "pred", "lab", n_bins=10)
 
 
-@register_shadow(
+@register(
     "ml_cumulative_gains",
     f"""
     WITH {_PRED_CTE},

@@ -1,13 +1,13 @@
-"""Shadow queries: Structured-Streaming parity readouts (X234–X237,
-X239–X243).
+"""Structured-Streaming parity readouts (X234–X237, X239–X243).
 
 The streaming surface (streaming/*.py) replaces the reference's cron
 re-runs (every reference script is a batch job re-run on a schedule —
 e.g. 03_build_market_price_daily.js rebuilds the daily snapshot table
 idempotently; SURVEY §2.9) with continuously-maintained tables. Until
 round 14 that surface was pytest-only: batch-parity and replay
-contracts, but never an independent driver-oracle row. These three
-queries close that gap — each one EXECUTES a genuine Structured
+contracts, but never an independent oracle row in the correctness
+gate. The nine parity queries below close that gap (queries.GATE
+decides which of them are gated) — each one EXECUTES a genuine Structured
 Streaming job (Trigger.AvailableNow, multi-micro-batch via
 maxFilesPerTrigger=1, real checkpoint + state store) inside the query
 callable, then returns the maintained table for the driver to hash
@@ -40,6 +40,13 @@ call (r14 advice #2/#3). The staging pass itself reads the corpus
 once; the RETURNED frame scans only the target, so the
 registration-time scan gate sees 1 parquet scan (declared).
 
+Deployment assumption: the staging root is a driver-side mkdtemp that
+the executors write into and read back, so parity runs assume a single
+node (local mode, where /dev/shm is shared by driver and executors) or
+`$LDP_STREAM_SCRATCH` pointing at storage every node mounts at the same
+path. On a multi-node cluster without it, executors would write their
+checkpoint and target files to their own local /dev/shm.
+
 100 TB posture: these queries exist to prove the maintenance algebra,
 not to model production staging — at scale the stream source is the
 landing bucket/Kafka (streaming/kafka.py) and never a re-write of the
@@ -58,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.catalog import load_table
-from legendary_data_pipeline_spark.queries import register_shadow
+from legendary_data_pipeline_spark.queries import register
 
 #: Staged events carry the engine's normalized integer-nanos ts
 #: (catalog.normalize_event_ts), not the on-disk TIMESTAMP — the stream
@@ -182,7 +189,7 @@ def _parity_run(spark: SparkSession, prefix: str, partitions: str = "8"):
             shutil.rmtree(f"{root}/{sub}", ignore_errors=True)
 
 
-@register_shadow(
+@register(
     "stream_rollup_parity",
     """
     SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
@@ -232,7 +239,7 @@ def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "stream_dedup_parity",
     """
     SELECT event_type,
@@ -287,7 +294,7 @@ def stream_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_shadow(
+@register(
     "stream_maint_parity",
     """
     SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
@@ -414,7 +421,7 @@ def _stream_cms_oracle() -> str:
     """
 
 
-@register_shadow(
+@register(
     "stream_cms_parity",
     _stream_cms_oracle(),
     doc="X237 streaming Count-Min maintenance parity: "
@@ -576,7 +583,7 @@ _EWMA_DEN = " + ".join(
 )
 
 
-@register_shadow(
+@register(
     "stream_ewma_parity",
     f"""
     WITH daily AS (
@@ -676,7 +683,7 @@ def stream_ewma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ATTR_HORIZON_MIN = 60
 
 
-@register_shadow(
+@register(
     "stream_attribution_parity",
     """
     WITH ev AS (
@@ -768,7 +775,7 @@ def _quality_oracle() -> str:
     return "\n    UNION ALL".join(blocks)
 
 
-@register_shadow(
+@register(
     "stream_quality_parity",
     _quality_oracle(),
     doc="X241 continuous-quality-monitor parity: run_quality_monitor_once "
@@ -852,7 +859,7 @@ def _psi_half_sql(i: int, cmp: str) -> str:
       FROM rows{i}, s{i})"""
 
 
-@register_shadow(
+@register(
     "stream_psi_parity",
     f"""
     WITH ev AS (
@@ -919,7 +926,7 @@ def stream_psi_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESSION_GAP_S = 21600  # 6 h — multi-event sessions at fixture density
 
 
-@register_shadow(
+@register(
     "stream_session_parity",
     f"""
     WITH ev AS (

@@ -67,13 +67,9 @@ def test_stdout_line_fits_driver_tail_capture():
 
 
 def test_pinned_names_resolve_in_some_registry():
-    from legendary_data_pipeline_spark.queries import (
-        REGISTRY,
-        SHADOW_REGISTRY,
-    )
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES
 
     bench = _load_bench()
-    known = set(REGISTRY) | set(SHADOW_REGISTRY)
     pinned = set(bench.PINNED_R1) | set(bench.PINNED_LEGACY)
-    missing = [n for n in pinned if n not in known]
+    missing = [n for n in pinned if n not in ALL_QUERIES]
     assert not missing, f"pinned bench names missing from registries: {missing}"

@@ -118,9 +118,7 @@ def test_sanitizer_line_terminators_cross_engine(spark, tmp_path):
     p = str(tmp_path / "documents.parquet")
     pdf.to_parquet(p)
 
-    spec = Q.REGISTRY.get("text_bpe_segment") or Q.SHADOW_REGISTRY[
-        "text_bpe_segment"
-    ]
+    spec = Q.ALL_QUERIES["text_bpe_segment"]
     got = {
         r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
         for r in spec.spark_fn(spark, str(tmp_path)).collect()

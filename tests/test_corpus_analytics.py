@@ -151,16 +151,11 @@ def test_drift_empty_side_raises(spark):
 
 
 def test_source_vocab_overlap_shapes(spark):
-    # gate-membership-agnostic lookup (the r16 rotation promoted this
-    # name; rotations move names between the two registries freely)
-    from legendary_data_pipeline_spark.queries import (
-        REGISTRY,
-        SHADOW_REGISTRY,
-    )
+    # gate-membership-agnostic lookup (rotations move names in and out
+    # of GATE freely)
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES
 
-    spec = REGISTRY.get("an_source_vocab_overlap") or SHADOW_REGISTRY[
-        "an_source_vocab_overlap"
-    ]
+    spec = ALL_QUERIES["an_source_vocab_overlap"]
     df = spec.spark_fn(spark, "/root/testdata/sf0.001")
     rows = df.collect()
     assert rows

@@ -174,14 +174,13 @@ def test_parity_queries_keep_full_oracles():
     (seat passed to the X239–X243 parities). The standing contract is
     that they keep their full DuckDB oracles wherever they live, so
     shadow pytest coverage never weakens to rows-only."""
-    from legendary_data_pipeline_spark.queries import REGISTRY, SHADOW_REGISTRY
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES
 
-    both = REGISTRY | SHADOW_REGISTRY
     for name in ("stream_rollup_parity", "stream_dedup_parity",
                  "stream_maint_parity", "stream_cms_parity",
                  "curation_gate_disagreement"):
-        assert name in both
-        assert both[name].oracle is not None
+        assert name in ALL_QUERIES
+        assert ALL_QUERIES[name].oracle is not None
 
 
 def test_cms_maintenance_equals_one_shot_sketch(spark, tmp_path):

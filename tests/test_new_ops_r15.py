@@ -46,18 +46,18 @@ def _null_text_sf_dir(spark, tmp_path) -> str:
 
 
 def test_gate_disagreement_null_text_oracle_parity(spark, tmp_path):
-    from legendary_data_pipeline_spark.queries import SHADOW_REGISTRY, REGISTRY
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES
 
-    spec = (REGISTRY | SHADOW_REGISTRY)["curation_gate_disagreement"]
+    spec = ALL_QUERIES["curation_gate_disagreement"]
     sf = _null_text_sf_dir(spark, tmp_path)
     compare_to_oracle(spec.spark_fn(spark, sf), spec.oracle, sf)
 
 
 def test_gate_funnel_null_text_oracle_parity(spark, tmp_path):
     # the funnel shares _GATE_SIGNALS_CTES — pin it on the same fixture
-    from legendary_data_pipeline_spark.queries import SHADOW_REGISTRY, REGISTRY
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES
 
-    spec = (REGISTRY | SHADOW_REGISTRY)["curation_gate_funnel"]
+    spec = ALL_QUERIES["curation_gate_funnel"]
     sf = _null_text_sf_dir(spark, tmp_path)
     compare_to_oracle(spec.spark_fn(spark, sf), spec.oracle, sf)
 
@@ -80,7 +80,7 @@ def test_parity_queries_restore_shuffle_partitions_and_clean_tmp(spark):
     query must leave the session's shuffle-partition conf unchanged
     (no dependence on the next query's ensure_engine_confs), and must
     not leave its staging input / checkpoint dirs behind in /tmp."""
-    from legendary_data_pipeline_spark.queries import REGISTRY, SHADOW_REGISTRY
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES
     from legendary_data_pipeline_spark.session import ensure_engine_confs
 
     prior = spark.conf.get("spark.sql.shuffle.partitions")
@@ -101,7 +101,7 @@ def test_parity_queries_restore_shuffle_partitions_and_clean_tmp(spark):
 
         base = _scratch_base() or _tf.gettempdir()
         for name in _PARITY_QUERIES:
-            spec = (REGISTRY | SHADOW_REGISTRY)[name]
+            spec = ALL_QUERIES[name]
             before = set(glob.glob(f"{base}/ldp_stream_*"))
             df = spec.spark_fn(spark, SF_DIR)
             assert (
@@ -120,10 +120,10 @@ def test_parity_queries_restore_shuffle_partitions_and_clean_tmp(spark):
 def test_parity_queries_declare_scan_budget():
     """r14 verdict #2: the scan-audit disposition must be
     machine-readable on all four parity queries."""
-    from legendary_data_pipeline_spark.queries import REGISTRY, SHADOW_REGISTRY
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES
 
     for name in _PARITY_QUERIES:
-        spec = (REGISTRY | SHADOW_REGISTRY)[name]
+        spec = ALL_QUERIES[name]
         assert spec.scan_budget is not None, name
 
 

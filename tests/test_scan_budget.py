@@ -19,7 +19,7 @@ scan-multiplicity guarantee. Budgets are therefore pre-AQE counts:
   - default budget: 2 (one corpus scan + one auxiliary side)
   - a query whose CONTRACT needs more (multi-source coalesce,
     exact-vs-sketch verification harness, single-column FK probes)
-    declares `scan_budget=N` at its @register/@register_shadow site —
+    declares `scan_budget=N` at its @register site —
     the machine-readable by-contract marker — with the rationale in
     its doc string.
 
@@ -57,27 +57,19 @@ def _baseline() -> set[str]:
 
 
 def _new_specs():
-    from legendary_data_pipeline_spark.queries import (
-        REGISTRY,
-        SHADOW_REGISTRY,
-    )
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES
 
     base = _baseline()
-    specs = {**SHADOW_REGISTRY, **REGISTRY}
-    return {n: s for n, s in specs.items() if n not in base}
+    return {n: s for n, s in ALL_QUERIES.items() if n not in base}
 
 
 def test_baseline_is_the_r12_registry():
     # the baseline must stay a SUBSET of the live registry (renames /
     # deletions shrink it legitimately; a typo'd baseline name would
     # silently exempt nothing and audit everything, so pin the overlap)
-    from legendary_data_pipeline_spark.queries import (
-        REGISTRY,
-        SHADOW_REGISTRY,
-    )
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES
 
-    live = set(REGISTRY) | set(SHADOW_REGISTRY)
-    stale = _baseline() - live
+    stale = _baseline() - set(ALL_QUERIES)
     assert not stale, (
         f"baseline names no longer registered: {sorted(stale)} — if a "
         "query was renamed/removed, prune it from "

@@ -5,8 +5,10 @@ Usage: python tools/dump_plans.py <suffix> name1 name2 ...
 Writes plans/r15/<name>_<suffix>.txt for each query.
 
 Streaming parity queries are skipped automatically — building their
-returned frame would EXECUTE the availableNow job; their evidence is
-the phase probe (tools/probe_stream_phases.py) instead.
+returned frame would EXECUTE the availableNow job. Per-micro-batch
+streaming phases come from the traced perfbench run instead
+(`python3 perfbench/run.py --workload daily-pipeline --trace 1`, the
+`streaming.*` metrics; see perfbench/README.md).
 """
 
 from __future__ import annotations
@@ -18,10 +20,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from legendary_data_pipeline_spark.queries import (  # noqa: E402
-    REGISTRY,
-    SHADOW_REGISTRY,
-)
+from legendary_data_pipeline_spark.queries import ALL_QUERIES  # noqa: E402
 from legendary_data_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -35,7 +34,6 @@ OUT_DIR = os.path.join(
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
-    specs = {**SHADOW_REGISTRY, **REGISTRY}
     os.makedirs(OUT_DIR, exist_ok=True)
     spark = get_spark(
         app_name="dump-plans",
@@ -50,7 +48,7 @@ def main() -> None:
         if name.startswith("stream_"):
             print(f"skip {name} (streaming parity — plan capture would run the job)")
             continue
-        spec = specs[name]
+        spec = ALL_QUERIES[name]
         df = spec.spark_fn(spark, SF_DIR)
         buf = io.StringIO()
         with redirect_stdout(buf):

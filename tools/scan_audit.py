@@ -35,10 +35,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from legendary_data_pipeline_spark.queries import (
-        REGISTRY,
-        SHADOW_REGISTRY,
-    )
+    from legendary_data_pipeline_spark.queries import ALL_QUERIES, REGISTRY
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -49,9 +46,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    specs = dict(REGISTRY)
-    if args.shadow:
-        specs = {**SHADOW_REGISTRY, **specs}
+    specs = ALL_QUERIES if args.shadow else REGISTRY
     names = sorted(args.only.split(",")) if args.only else sorted(specs)
     sf_dir = f"/root/testdata/{args.sf}"
     flagged = 0
