@@ -18,6 +18,7 @@ from legendary_data_pipeline_spark.functions.text import (
     slugify,
 )
 from legendary_data_pipeline_spark.functions.hashing import md5_long, seeded_md5_long
+from legendary_data_pipeline_spark.functions.numeric import e6
 
 __all__ = [
     "cents_to_display",
@@ -30,4 +31,5 @@ __all__ = [
     "slugify",
     "md5_long",
     "seeded_md5_long",
+    "e6",
 ]

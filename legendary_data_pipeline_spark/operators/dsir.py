@@ -76,7 +76,6 @@ def dsir_importance(
     text_col: str = "text",
     shingle_n: int = 2,
     m: int = 1024,
-    round_digits: int = 6,
 ) -> DataFrame:
     """(id, log_importance): per raw document, the log likelihood ratio
     of its hashed profile under target vs raw bucket distributions.
@@ -95,7 +94,7 @@ def dsir_importance(
     scored = (
         raw_counts.join(F.broadcast(ratio), "bucket")
         .groupBy(id_col)
-        .agg(F.round(F.sum(F.col("cnt") * F.col("__lr")), round_digits).alias(
+        .agg(F.round(F.sum(F.col("cnt") * F.col("__lr")), 6).alias(
             "log_importance"
         ))
     )
@@ -117,21 +116,18 @@ def dsir_select(
     shingle_n: int = 2,
     m: int = 1024,
     seed: int = 29,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Importance-resample `n` raw documents toward the target
     distribution: Gumbel-top-n on log_importance — inclusion probability
     ∝ exp(log_importance), without replacement, a pure function of
     (data, seed). Returns (id, log_importance, sample_rank)."""
-    imp = dsir_importance(
-        raw, target, id_col, text_col, shingle_n, m, round_digits
-    )
+    imp = dsir_importance(raw, target, id_col, text_col, shingle_n, m)
     u = (
         seeded_md5_long(F.col(id_col).cast("string"), seed).cast("double")
         + F.lit(1.0)
     ) / F.lit(float(1 << 60))
     gumbel = -F.log(-F.log(u))
-    key = F.round(F.col("log_importance") + gumbel, round_digits)
+    key = F.round(F.col("log_importance") + gumbel, 6)
     # Global top-n via orderBy+limit → TakeOrderedAndProject (bounded
     # per-partition heaps, no data-sized single-partition window); the
     # rank window then runs over ≤ n rows.

@@ -64,16 +64,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from legendary_data_pipeline_spark.functions.numeric import e6
 from legendary_data_pipeline_spark.operators.stats import (
     distributed_below_counts,
 )
 
 _DEC = "decimal(38,0)"
-
-
-def _e6(col: Column) -> Column:
-    """round(x·1e6) BIGINT — the engine's canonical fractional output."""
-    return F.round(col.cast("double") * F.lit(1e6)).cast("long")
 
 
 def mann_whitney_u(
@@ -162,7 +158,7 @@ def mann_whitney_u(
         ).alias("auc_ab"),
         F.when(
             (F.col("__n_a") > 0) & (F.col("__n_b") > 0) & (var > 0),
-            _e6(z),
+            e6(z),
         ).alias("z_e6"),
     )
 
@@ -250,7 +246,7 @@ def kruskal_wallis(
         ).cast("long").alias("dof"),
         F.when(
             (F.col("n_groups") >= 2) & (tie_factor > 0),
-            _e6(h / tie_factor),
+            e6(h / tie_factor),
         ).alias("h_e6"),
     )
 
@@ -341,8 +337,8 @@ def welch_t_test(
         F.col("__nb").cast("long").alias("n_b"),
         F.when(F.col("__na") > 0, mean_a).alias("mean_a"),
         F.when(F.col("__nb") > 0, mean_b).alias("mean_b"),
-        F.when(ok & (se2 > 0), _e6(t)).alias("t_e6"),
-        F.when(ok & (se2 > 0), _e6(dof)).alias("dof_e6"),
+        F.when(ok & (se2 > 0), e6(t)).alias("t_e6"),
+        F.when(ok & (se2 > 0), e6(dof)).alias("dof_e6"),
     )
 
 
@@ -408,8 +404,8 @@ def anova_oneway(
             F.col("n_groups") > 0,
             F.col("__n").cast("long") - F.col("n_groups"),
         ).alias("dof_within"),
-        F.when(ok, _e6(f)).alias("f_e6"),
-        F.when(sst > 0, _e6(ssb / sst)).alias("eta_sq_e6"),
+        F.when(ok, e6(f)).alias("f_e6"),
+        F.when(sst > 0, e6(ssb / sst)).alias("eta_sq_e6"),
     )
 
 
@@ -548,7 +544,7 @@ def wilcoxon_signed_rank(
         "n_pairs",
         F.col("__n").cast("long").alias("n_nonzero"),
         w_plus.alias("w_plus"),
-        F.when((F.col("__n") > 0) & (var > 0), _e6(z)).alias("z_e6"),
+        F.when((F.col("__n") > 0) & (var > 0), e6(z)).alias("z_e6"),
     )
 
 
@@ -931,7 +927,7 @@ def jonckheere_terpstra(
         n.cast("long").alias("n"),
         "k",
         jd.alias("j"),
-        F.when((F.col("k") >= 2) & (var > 0), _e6(z)).alias("z_e6"),
+        F.when((F.col("k") >= 2) & (var > 0), e6(z)).alias("z_e6"),
     )
 
 
@@ -1027,7 +1023,7 @@ def runs_test(
         "runs",
         F.when(
             (F.col("n_above") > 0) & (F.col("n_below") > 0) & (var > 0),
-            _e6(z),
+            e6(z),
         ).alias("z_e6"),
     )
 
@@ -1284,8 +1280,8 @@ def cohens_d(
         F.col("__nb").cast("long").alias("n_b"),
         mean_a.alias("mean_a"),
         mean_b.alias("mean_b"),
-        F.when(ok, _e6(d_stat)).alias("d_e6"),
-        F.when(ok, _e6(d_stat * j_corr)).alias("g_e6"),
+        F.when(ok, e6(d_stat)).alias("d_e6"),
+        F.when(ok, e6(d_stat * j_corr)).alias("g_e6"),
     )
 
 
@@ -1414,7 +1410,7 @@ def moods_median_test(
         (F.col("k") - F.lit(1)).cast("long").alias("dof"),
         "n_above",
         "n_below",
-        F.when(ok, _e6(F.col("__chi2"))).alias("chi2_e6"),
+        F.when(ok, e6(F.col("__chi2"))).alias("chi2_e6"),
     )
 
 
@@ -1519,7 +1515,7 @@ def cochran_armitage_trend(
         "n",
         "k",
         "n_success",
-        F.when(ok, _e6(z)).alias("z_e6"),
+        F.when(ok, e6(z)).alias("z_e6"),
     )
 
 
@@ -1613,7 +1609,7 @@ def page_trend_test(
         "k",
         F.col("__l2").cast("long").alias("l2"),
         F.when(
-            (F.col("n_blocks") >= 1) & (F.col("k") >= 2), _e6(z)
+            (F.col("n_blocks") >= 1) & (F.col("k") >= 2), e6(z)
         ).alias("z_e6"),
     )
 

@@ -58,7 +58,6 @@ def score_perplexity(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_ppl: float = 1000.0,
-    round_digits: int = 4,
 ) -> DataFrame:
     """(id, n_tokens, ppl, keep): per-document perplexity under the
     trained model, and the CCNet-style gate `keep = ppl <= max_ppl`.
@@ -109,7 +108,7 @@ def score_perplexity(
         return pd.DataFrame({"n_tokens": n_out, "ppl": p_out})
 
     out = df.select(F.col(id_col), score(F.col(text_col)).alias("__s"))
-    ppl = F.round(F.col("__s.ppl"), round_digits)
+    ppl = F.round(F.col("__s.ppl"), 4)
     return out.select(
         id_col,
         F.col("__s.n_tokens").alias("n_tokens"),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.functions.hashing import seeded_md5_long
+from legendary_data_pipeline_spark.functions.numeric import e6
 
 __all__ = [
     "auc_by_group",
@@ -56,7 +57,6 @@ def auc_by_group(
     group_cols: list[str],
     score_col: str,
     label_col: str,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Exact tie-corrected ROC-AUC per group (Mann-Whitney U form).
 
@@ -73,7 +73,7 @@ def auc_by_group(
     NULLs to opposite ends of an ascending window, so keeping them
     would silently diverge between engines.
 
-    Output: group_cols..., n_pos, n_neg, auc (round 6).
+    Output: group_cols..., n_pos, n_neg, auc_e6.
     """
     df = df.where(
         F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
@@ -112,15 +112,8 @@ def auc_by_group(
         * F.col("n_neg").cast("decimal(38,0)")
     )
     ratio = F.col("__num2").cast("double") / denom.cast("double")
-    if scaled_e6:
-        # Round-9 e6 gate convention (see queries._e6): fractional
-        # round(DOUBLE, 6) is not engine-version-canonical.
-        auc = F.when(denom > 0, F.round(ratio * F.lit(1e6)).cast("long"))
-        return agg.select(
-            *group_cols, "n_pos", "n_neg", auc.alias("auc_e6")
-        )
-    auc = F.when(denom > 0, F.round(ratio, 6))
-    return agg.select(*group_cols, "n_pos", "n_neg", auc.alias("auc"))
+    auc = F.when(denom > 0, e6(ratio))
+    return agg.select(*group_cols, "n_pos", "n_neg", auc.alias("auc_e6"))
 
 
 def calibration_bins(
@@ -128,13 +121,14 @@ def calibration_bins(
     pred_col: str,
     label_col: str,
     n_bins: int = 10,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Reliability-diagram counts: equal-width bins over pred in [0, 1].
 
     bin = min(floor(pred * n_bins), n_bins - 1); output per non-empty
-    bin: bin id, bin midpoint, n, n_pos, frac_pos (round 6). All counts
+    bin: bin id, bin midpoint, n, n_pos, frac_pos_e6. All counts
     integer; the midpoint and the final ratio are the only floats.
+    bin_mid stays a double: it is one shared IEEE expression over small
+    integers, bit-stable without any fractional round.
     Rows with a NULL prediction or label are dropped (a NULL would
     otherwise silently form its own NULL bin).
     """
@@ -155,18 +149,9 @@ def calibration_bins(
     )
     mid = (F.col("bin").cast("double") + F.lit(0.5)) / F.lit(float(n_bins))
     ratio = F.col("n_pos").cast("double") / F.col("n").cast("double")
-    if scaled_e6:
-        # Round-9 e6 gate convention (see queries._e6). bin_mid stays a
-        # double: it is one shared IEEE expression over small integers,
-        # bit-stable without any fractional round.
-        frac = F.round(ratio * F.lit(1e6)).cast("long")
-        return out.select(
-            "bin", mid.alias("bin_mid"), "n", "n_pos",
-            frac.alias("frac_pos_e6"),
-        )
-    frac = F.round(ratio, 6)
     return out.select(
-        "bin", mid.alias("bin_mid"), "n", "n_pos", frac.alias("frac_pos")
+        "bin", mid.alias("bin_mid"), "n", "n_pos",
+        e6(ratio).alias("frac_pos_e6"),
     )
 
 
@@ -275,8 +260,6 @@ def woe_iv(
     cat_col: str,
     label_col: str,
     smoothing: float = 0.5,
-    round_digits: int = 6,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Weight of evidence per category + the feature's information
     value — the credit-scoring-standard categorical predictiveness
@@ -290,12 +273,12 @@ def woe_iv(
     zero-count cells stay finite. ``label_col`` must be 0/1; NULL
     labels are dropped (no class), NULL categories form their own bin
     (GROUP BY semantics). Counts are exact integers; the single ln and
-    two divisions are fixed double expressions, round(6) absorbing
+    two divisions are fixed double expressions, `e6` scaling absorbing
     last-ulp libm differences — the engine's mutual-information
     convention.
 
-    Output: (cat_col, n, n_pos, n_neg, woe, iv) — `iv` is the same
-    feature-level total on every row.
+    Output: (cat_col, n, n_pos, n_neg, woe_e6, iv_e6) — `iv_e6` is the
+    same feature-level total on every row.
 
     Plan: ONE category-keyed aggregation (map-side combinable); the
     marginals and the IV total aggregate the category-sized frame,
@@ -333,34 +316,17 @@ def woe_iv(
         (F.col("n_pos").cast("double") + s) * neg_adj
         / ((F.col("n_neg").cast("double") + s) * pos_adj)
     )
-    if scaled_e6:
-        # Round-9 e6 gate convention (see queries._e6): fractional
-        # round(DOUBLE, 6) is not engine-version-canonical.
-        terms = per.select(
-            F.col(cat_col),
-            "n",
-            "n_pos",
-            "n_neg",
-            F.round(woe * F.lit(1e6)).cast("long").alias("woe_e6"),
-            ((dp - dn) * woe).alias("__iv_term"),
-        )
-        iv = F.round(F.sum("__iv_term").over(w_all) * F.lit(1e6)).cast(
-            "long"
-        )
-        return terms.select(
-            cat_col, "n", "n_pos", "n_neg", "woe_e6", iv.alias("iv_e6")
-        )
     terms = per.select(
         F.col(cat_col),
         "n",
         "n_pos",
         "n_neg",
-        F.round(woe, round_digits).alias("woe"),
+        e6(woe).alias("woe_e6"),
         ((dp - dn) * woe).alias("__iv_term"),
     )
-    iv = F.round(F.sum("__iv_term").over(w_all), round_digits)
+    iv = e6(F.sum("__iv_term").over(w_all))
     return terms.select(
-        cat_col, "n", "n_pos", "n_neg", "woe", iv.alias("iv")
+        cat_col, "n", "n_pos", "n_neg", "woe_e6", iv.alias("iv_e6")
     )
 
 
@@ -403,9 +369,7 @@ def rrf_fuse(
     )
 
 
-def confusion_stats(
-    df: DataFrame, true_col: str, pred_col: str, scaled_e6: bool = False
-) -> DataFrame:
+def confusion_stats(df: DataFrame, true_col: str, pred_col: str) -> DataFrame:
     """Multiclass confusion matrix with exact Cohen's kappa.
 
     One (true, pred)-keyed aggregation gives the cells; marginals are
@@ -414,11 +378,13 @@ def confusion_stats(
 
         kappa = (N·trace − Σ_i r_i·c_i) / (N² − Σ_i r_i·c_i)
 
-    so kappa and accuracy are single final divisions (round 6) —
+    so kappa and accuracy are single final divisions (`e6` scaled) —
     engine-deterministic. Every cell row carries the overall stats
-    (n_total, n_agree, accuracy, kappa) via a broadcast 1-row frame.
+    (n_total, n_agree, accuracy_e6, kappa_e6) via a broadcast 1-row
+    frame.
 
-    Output: (true_col, pred_col, n, n_total, n_agree, accuracy, kappa).
+    Output: (true_col, pred_col, n, n_total, n_agree, accuracy_e6,
+    kappa_e6).
     """
     # Pin the class²-sized cell table: five consumers below (row/col
     # marginals, agreement, total, the per-cell output join) would
@@ -445,34 +411,25 @@ def confusion_stats(
             F.col("__agree").cast("long").alias("n_agree"),
             F.when(
                 F.col("__n") > 0,
-                _acc_kappa_round(
+                e6(
                     F.col("__agree").cast("double")
-                    / F.col("__n").cast("double"),
-                    scaled_e6,
+                    / F.col("__n").cast("double")
                 ),
-            ).alias("accuracy_e6" if scaled_e6 else "accuracy"),
+            ).alias("accuracy_e6"),
             F.when(
                 F.col("__n") * F.col("__n") - F.col("__pe") != 0,
-                _acc_kappa_round(
+                e6(
                     (F.col("__n") * F.col("__agree") - F.col("__pe")).cast(
                         "double"
                     )
                     / (F.col("__n") * F.col("__n") - F.col("__pe")).cast(
                         "double"
-                    ),
-                    scaled_e6,
+                    )
                 ),
-            ).alias("kappa_e6" if scaled_e6 else "kappa"),
+            ).alias("kappa_e6"),
         )
     )
     return cells.crossJoin(F.broadcast(stats))
-
-
-def _acc_kappa_round(ratio, scaled_e6: bool):
-    """Round-9 e6 gate convention (see queries._e6) or legacy round(6)."""
-    if scaled_e6:
-        return F.round(ratio * F.lit(1e6)).cast("long")
-    return F.round(ratio, 6)
 
 
 def _lcm_1_to(k: int) -> int:
@@ -655,8 +612,6 @@ def two_proportion_test(
     label_col: str,
     group_a,
     group_b,
-    round_digits: int = 6,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Two-proportion z-test between two named groups — the A/B
     experiment readout (did variant B's conversion rate move?) and the
@@ -667,17 +622,13 @@ def two_proportion_test(
     ``label_col`` must be 0/1; NULL labels drop; rows outside the two
     named groups are ignored. Counts are exact integers from ONE
     filtered aggregation (no per-group branches); the z expression is
-    a fixed IEEE double tree over them, round(6) (z², not |z|, would
-    lose the direction — sign means A over B). Degenerate inputs (an
-    empty group, pooled rate 0 or 1) yield NULL z.
+    a fixed IEEE double tree over them, emitted as ``z_e6`` (z², not
+    |z|, would lose the direction — sign means A over B). Degenerate
+    inputs (an empty group, pooled rate 0 or 1) yield NULL z. p_a, p_b
+    and diff are RAW IEEE ratios (exact-integer divisions — bit-stable
+    without any round).
 
-    ``scaled_e6=True`` switches to the round-9 representation-proof
-    form: p_a/p_b/diff as RAW IEEE ratios (exact-integer divisions —
-    bit-stable without any round) and z as ``z_e6`` BIGINT, removing
-    the engine-version-fragile fractional round from every output.
-
-    Output (1 row): n_a, pos_a, n_b, pos_b, p_a, p_b, diff, z
-    (or z_e6).
+    Output (1 row): n_a, pos_a, n_b, pos_b, p_a, p_b, diff, z_e6.
     """
     lab = F.col(label_col).cast("long")
     g = F.col(group_col)
@@ -701,25 +652,14 @@ def two_proportion_test(
     z = F.when(
         (F.col("n_a") > 0) & (F.col("n_b") > 0), (pa - pb) / F.nullif(se, F.lit(0.0))
     )
-    if scaled_e6:
-        return agg.select(
-            "n_a", "pos_a", "n_b", "pos_b",
-            F.when(F.col("n_a") > 0, pa).alias("p_a"),
-            F.when(F.col("n_b") > 0, pb).alias("p_b"),
-            F.when(
-                (F.col("n_a") > 0) & (F.col("n_b") > 0), pa - pb
-            ).alias("diff"),
-            F.round(z * F.lit(1e6)).cast("long").alias("z_e6"),
-        )
     return agg.select(
         "n_a", "pos_a", "n_b", "pos_b",
-        F.when(F.col("n_a") > 0, F.round(pa, round_digits)).alias("p_a"),
-        F.when(F.col("n_b") > 0, F.round(pb, round_digits)).alias("p_b"),
+        F.when(F.col("n_a") > 0, pa).alias("p_a"),
+        F.when(F.col("n_b") > 0, pb).alias("p_b"),
         F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0),
-            F.round(pa - pb, round_digits),
+            (F.col("n_a") > 0) & (F.col("n_b") > 0), pa - pb
         ).alias("diff"),
-        F.round(z, round_digits).alias("z"),
+        e6(z).alias("z_e6"),
     )
 
 
@@ -877,13 +817,8 @@ def expected_calibration_error(
     return agg.select(
         "n",
         "n_bins_used",
-        F.when(
-            F.col("n") > 0, F.round(ece * F.lit(1e6)).cast("long")
-        ).alias("ece_e6"),
-        F.when(
-            F.col("n") > 0,
-            F.round(F.col("__mce") * F.lit(1e6)).cast("long"),
-        ).alias("mce_e6"),
+        F.when(F.col("n") > 0, e6(ece)).alias("ece_e6"),
+        F.when(F.col("n") > 0, e6(F.col("__mce"))).alias("mce_e6"),
     )
 
 
@@ -983,18 +918,16 @@ def brier_decomposition(
     )
     unc = ybar * (F.lit(1.0) - ybar)
     wbv = brier - (rel - res + unc)
-    def _e6(c):
-        return F.round(c * F.lit(1e6)).cast("long")
     ok = F.col("n") > 0
     return agg.select(
         "n",
         "n_pos",
         "n_bins_used",
-        F.when(ok, _e6(brier)).alias("brier_e6"),
-        F.when(ok, _e6(rel)).alias("reliability_e6"),
-        F.when(ok, _e6(res)).alias("resolution_e6"),
-        F.when(ok, _e6(unc)).alias("uncertainty_e6"),
-        F.when(ok, _e6(wbv)).alias("within_bin_var_e6"),
+        F.when(ok, e6(brier)).alias("brier_e6"),
+        F.when(ok, e6(rel)).alias("reliability_e6"),
+        F.when(ok, e6(res)).alias("resolution_e6"),
+        F.when(ok, e6(unc)).alias("uncertainty_e6"),
+        F.when(ok, e6(wbv)).alias("within_bin_var_e6"),
     )
 
 

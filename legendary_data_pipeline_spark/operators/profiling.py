@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from legendary_data_pipeline_spark.functions.numeric import e6
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -455,7 +457,6 @@ def psi_drift(
     col: str,
     null_label: str = "<null>",
     smoothing: float = 0.5,
-    round_digits: int = 6,
     require_nonempty: bool = True,
     scaled_e6: bool = False,
 ) -> DataFrame:
@@ -478,7 +479,9 @@ def psi_drift(
 
     Output, one row per union category:
       (value, n_base, n_current, p_base, p_current, psi_term, psi)
-    with `psi` the same feature-level total on every row.
+    with `psi` the same feature-level total on every row. With
+    `scaled_e6` the four fractional columns leave as `e6` integers
+    instead (`p_base_e6`, `p_current_e6`, `psi_term_e6`, `psi_e6`).
 
     Plan: both sides reduce to value-cardinality count tables before
     the full outer join, so everything after the two scans is
@@ -525,14 +528,6 @@ def psi_drift(
     q = (F.col("n_current").cast("double") + s) / (tc + s * k)
     term = (p - q) * F.log(p / q)
     if scaled_e6:
-        # Representation-proof driver-gate form (round-9): fractional
-        # round(DOUBLE, 6) is not engine-version-canonical (NOTES.md
-        # §Round-9 envprobe), so gate outputs scale to exact BIGINT
-        # micro-units instead — a 1-ulp libm/round difference cannot
-        # move the integer except on exact .5 ties.
-        def e6(c):
-            return F.round(c * F.lit(1e6)).cast("long")
-
         terms = joined.select(
             "value",
             "n_base",
@@ -551,12 +546,12 @@ def psi_drift(
         "value",
         "n_base",
         "n_current",
-        F.round(p, round_digits).alias("p_base"),
-        F.round(q, round_digits).alias("p_current"),
-        F.round(term, round_digits).alias("psi_term"),
+        F.round(p, 6).alias("p_base"),
+        F.round(q, 6).alias("p_current"),
+        F.round(term, 6).alias("psi_term"),
         term.alias("__t"),
     )
-    psi = F.round(F.sum("__t").over(w_all), round_digits)
+    psi = F.round(F.sum("__t").over(w_all), 6)
     return terms.select(
         "value", "n_base", "n_current", "p_base", "p_current",
         "psi_term", psi.alias("psi"),
@@ -567,9 +562,7 @@ def ks_two_sample(
     base: DataFrame,
     current: DataFrame,
     value: Column,
-    round_digits: int = 6,
     require_nonempty: bool = True,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """EXACT two-sample Kolmogorov–Smirnov statistic for a numeric
     column between two snapshots — the unbinned companion to
@@ -580,10 +573,10 @@ def ks_two_sample(
     `value` must be engine-exact (integers/cents — the money
     convention); NULLs are dropped on both sides. Output (1 row):
 
-        (n_base, n_current, d_stat, at_value, sqrt_scaled)
+        (n_base, n_current, d_stat_e6, at_value, sqrt_scaled_e6)
 
     `at_value` = the smallest value attaining the supremum (the WHERE
-    of the shift); `sqrt_scaled` = D·sqrt(n·m/(n+m)), the quantity
+    of the shift); `sqrt_scaled_e6` = D·sqrt(n·m/(n+m)), the quantity
     compared against Kolmogorov critical values (1.358 ≈ α 0.05).
 
     Exactness: per-value counts are integers; each CDF difference is
@@ -661,29 +654,14 @@ def ks_two_sample(
     n_d = F.col("__nb").cast("double")
     m_d = F.col("__nc").cast("double")
     d_stat = F.col("__d").cast("double") / (n_d * m_d)
-    if scaled_e6:
-        # Round-9 e6 gate convention (see queries._e6): fractional
-        # round(DOUBLE, 6) is not engine-version-canonical.
-        def e6(c):
-            return F.round(c * F.lit(1e6)).cast("long")
-
-        return top.select(
-            F.col("__nb").cast("long").alias("n_base"),
-            F.col("__nc").cast("long").alias("n_current"),
-            e6(d_stat).alias("d_stat_e6"),
-            F.col("__v").alias("at_value"),
-            e6(d_stat * F.sqrt(n_d * m_d / (n_d + m_d))).alias(
-                "sqrt_scaled_e6"
-            ),
-        )
     return top.select(
         F.col("__nb").cast("long").alias("n_base"),
         F.col("__nc").cast("long").alias("n_current"),
-        F.round(d_stat, round_digits).alias("d_stat"),
+        e6(d_stat).alias("d_stat_e6"),
         F.col("__v").alias("at_value"),
-        F.round(
-            d_stat * F.sqrt(n_d * m_d / (n_d + m_d)), round_digits
-        ).alias("sqrt_scaled"),
+        e6(d_stat * F.sqrt(n_d * m_d / (n_d + m_d))).alias(
+            "sqrt_scaled_e6"
+        ),
     )
 
 
@@ -785,7 +763,7 @@ def cramer_von_mises(
         F.col("__nc").cast("long").alias("n_current"),
         F.when(
             (F.col("__nb") > 0) & (F.col("__nc") > 0),
-            F.round(t * F.lit(1e6)).cast("long"),
+            e6(t),
         ).alias("t_e6"),
     )
 
@@ -1212,7 +1190,6 @@ def js_divergence_pairs(
         ).alias("n_items"),
         F.sum(term).alias("__jsd"),
     )
-    e6 = lambda c: F.round(c * F.lit(1e6)).cast("long")  # noqa: E731
     ln2 = 0.6931471805599453
     return out.select(
         "group_a",

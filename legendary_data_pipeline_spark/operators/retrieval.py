@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from legendary_data_pipeline_spark.functions.numeric import e6
 from legendary_data_pipeline_spark.operators.dedup import tokens_expr
 from legendary_data_pipeline_spark.operators.ranking import top_k_per_group
 
@@ -35,7 +36,6 @@ def bm25_topk(
     text_col: str = "text",
     query_id: str = "query_id",
     query_text: str = "query_text",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Top-k documents per query under BM25.
 
@@ -91,7 +91,7 @@ def bm25_topk(
         .join(F.broadcast(df_q), "term")
         .join(dl, id_col)
         .groupBy(query_id, id_col)
-        .agg(F.round(F.sum(idf * norm_tf), round_digits).alias("score"))
+        .agg(F.round(F.sum(idf * norm_tf), 6).alias("score"))
     )
     return top_k_per_group(
         scored,
@@ -173,12 +173,11 @@ def maxsim_topk(
     id_col: str = "vec_id",
     label_col: str = "label",
     vecs_col: str = "vecs",
-    round_digits: int = 6,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Exact late-interaction top-k: for each query row, the k docs with
-    the highest MaxSim score. Rounds before ranking and ties break on
-    neighbor id, so the selected set is stable across engines/retries.
+    the highest MaxSim score. Scores as `e6` integers (`maxsim_e6`)
+    before ranking and ties break on neighbor id, so the selected set is
+    stable across engines/retries.
     Label blocking bounds the candidate join exactly as in
     `similarity.cosine_topk`; pass `block_on_label=False` only for the
     labeled exact-baseline mode."""
@@ -205,25 +204,18 @@ def maxsim_topk(
     else:
         joined = queries.crossJoin(cands)
     joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    # scaled_e6: round-9 e6 gate convention (see queries._e6).
-    if scaled_e6:
-        score = F.round(
-            maxsim_expr("q_vecs", "c_vecs") * F.lit(1e6)
-        ).cast("long")
-        sim_col = "maxsim_e6"
-    else:
-        score = F.round(maxsim_expr("q_vecs", "c_vecs"), round_digits)
-        sim_col = "maxsim"
     scored = joined.select(
-        "query_id", "neighbor_id", score.alias(sim_col)
+        "query_id",
+        "neighbor_id",
+        e6(maxsim_expr("q_vecs", "c_vecs")).alias("maxsim_e6"),
     )
     return top_k_per_group(
         scored,
         ["query_id"],
-        [F.col(sim_col).desc(), F.col("neighbor_id").asc()],
+        [F.col("maxsim_e6").desc(), F.col("neighbor_id").asc()],
         k=k,
         rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank", sim_col)
+    ).select("query_id", "neighbor_id", "rank", "maxsim_e6")
 
 
 def rbo_suffix(k: int, p: float):

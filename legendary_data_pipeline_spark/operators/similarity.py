@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from legendary_data_pipeline_spark.functions.numeric import e6
 from legendary_data_pipeline_spark.operators.ranking import top_k_per_group
 from legendary_data_pipeline_spark.operators.sampling import (
     bounded_hash_sample,
@@ -57,14 +58,14 @@ def cosine_topk(
     k: int = 3,
     query_filter: Column | None = None,
     block_on_label: bool = True,
-    round_digits: int = 6,
     scaled_e6: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
     Rounds the similarity before ranking so ordering (and therefore the
     selected top-k) is stable across engines/retries; ties break on
-    neighbor id.
+    neighbor id. The score is `cos_sim`, rounded to 6 places, or with
+    `scaled_e6` the `e6` integer `cos_sim_e6`.
     """
     # Pin the parsed-vector frame: the query and candidate sides are
     # two consumers and would otherwise each replay the scan + parse.
@@ -90,12 +91,11 @@ def cosine_topk(
         joined = queries.crossJoin(cands)
     joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
     ratio = dot_expr("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))
-    # scaled_e6: round-9 e6 gate convention (see queries._e6).
     if scaled_e6:
-        cos = F.round(ratio * F.lit(1e6)).cast("long")
+        cos = e6(ratio)
         sim_col = "cos_sim_e6"
     else:
-        cos = F.round(ratio, round_digits)
+        cos = F.round(ratio, 6)
         sim_col = "cos_sim"
     scored = joined.select("query_id", "neighbor_id", cos.alias(sim_col))
     return top_k_per_group(
@@ -272,7 +272,6 @@ def embedding_cosine_pairs(
     embeddings: DataFrame,
     threshold: float = 0.35,
     block_on_label: bool = True,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cos ≥ threshold).
 
@@ -306,8 +305,7 @@ def embedding_cosine_pairs(
         cond = F.col("id_a") < F.col("id_b")
     joined = a.join(b, cond)
     cos = F.round(
-        dot_expr("vec_a", "vec_b") / (F.col("nrm_a") * F.col("nrm_b")),
-        round_digits,
+        dot_expr("vec_a", "vec_b") / (F.col("nrm_a") * F.col("nrm_b")), 6
     )
     return (
         joined.select("id_a", "id_b", cos.alias("cos_sim"))
@@ -321,7 +319,6 @@ def lsh_bucket_topk(
     k: int = 3,
     query_filter: Column | None = None,
     probes: int = 1,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Approximate top-k: sign-bucket vectors, search within buckets.
 
@@ -339,6 +336,8 @@ def lsh_bucket_topk(
     the probes-1 buckets differing in one sign bit — the standard
     recall knob that beats dropping planes (candidate volume grows
     linearly with probes instead of doubling per removed plane).
+
+    Output: (query_id, neighbor_id, rank, cos_sim_e6).
     """
     import hashlib
 
@@ -402,14 +401,9 @@ def lsh_bucket_topk(
         F.col("query_id") != F.col("neighbor_id")
     )
     ratio = dot_expr("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))
-    # scaled_e6: round-9 e6 gate convention (see queries._e6).
-    if scaled_e6:
-        cos = F.round(ratio * F.lit(1e6)).cast("long")
-        sim_col = "cos_sim_e6"
-    else:
-        cos = F.round(ratio, 6)
-        sim_col = "cos_sim"
-    scored = joined.select("query_id", "neighbor_id", cos.alias(sim_col))
+    scored = joined.select(
+        "query_id", "neighbor_id", e6(ratio).alias("cos_sim_e6")
+    )
     if probes > 1:
         # a neighbor reachable through several probed buckets appears
         # once per bucket — dedupe before ranking
@@ -417,15 +411,14 @@ def lsh_bucket_topk(
     return top_k_per_group(
         scored,
         ["query_id"],
-        [F.col(sim_col).desc(), F.col("neighbor_id").asc()],
+        [F.col("cos_sim_e6").desc(), F.col("neighbor_id").asc()],
         k=k,
         rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank", sim_col)
+    ).select("query_id", "neighbor_id", "rank", "cos_sim_e6")
 
 
 def label_centroid_cosine(
     embeddings: DataFrame,
-    round_digits: int = 6,
     outlier_threshold: float = 0.5,
 ) -> DataFrame:
     """Embedding-hygiene pass: each vector's cosine to its label's mean
@@ -457,8 +450,7 @@ def label_centroid_cosine(
     )
     joined = base.join(F.broadcast(centv), "label")
     cos = F.round(
-        dot_expr("vec", "cvec") / (norm_expr("vec") * norm_expr("cvec")),
-        round_digits,
+        dot_expr("vec", "cvec") / (norm_expr("vec") * norm_expr("cvec")), 6
     )
     return joined.select(
         "vec_id",
@@ -866,7 +858,6 @@ def hard_negatives(
     embeddings: DataFrame,
     k: int = 3,
     query_filter: Column | None = None,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Contrastive-training pair mining: for each anchor, the k most
     cosine-similar vectors with a DIFFERENT label — the "hard
@@ -902,8 +893,7 @@ def hard_negatives(
         cands, F.col("a_label") != F.col("n_label")
     )
     cos = F.round(
-        dot_expr("a_vec", "n_vec") / (F.col("a_norm") * F.col("n_norm")),
-        round_digits,
+        dot_expr("a_vec", "n_vec") / (F.col("a_norm") * F.col("n_norm")), 6
     )
     scored = joined.select(
         "anchor_id",
@@ -1021,8 +1011,6 @@ def ivf_fixed_topk(
     n_probe: int = 4,
     k: int = 3,
     query_filter: Column | None = None,
-    round_digits: int = 6,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """IVF approximate top-k with a FIXED seed codebook — the
     hash-oracle-able ANN variant.
@@ -1045,6 +1033,8 @@ def ivf_fixed_topk(
     assignment is a broadcast join + per-vector top-1 window; search
     joins queries' probed lists to corpus lists on centroid id — no
     cartesian over the corpus.
+
+    Output: (query_id, neighbor_id, rank, cos_sim_e6).
     """
     # Pin the parsed-vector frame: three consumers (codebook filter,
     # corpus assignment, query assignment) otherwise each replay the
@@ -1084,18 +1074,10 @@ def ivf_fixed_topk(
         F.lit(0.0),
         lambda a, x: a + x,
     )
-    ratio = dot / (qn * cn)
-    # scaled_e6: round-9 e6 gate convention (see queries._e6) — the
-    # rounded-double form is not engine-version-canonical, and the
-    # ORDER BY over it could flip ranks across engine versions.
-    if scaled_e6:
-        cos = F.round(ratio * F.lit(1e6)).cast("long")
-        sim_col = "cos_sim_e6"
-    else:
-        cos = F.round(ratio, round_digits)
-        sim_col = "cos_sim"
+    # e6, not a rounded double: the ORDER BY over a fractional round
+    # could flip ranks across engine versions.
     scored = joined.select(
-        "query_id", "neighbor_id", cos.alias(sim_col)
+        "query_id", "neighbor_id", e6(dot / (qn * cn)).alias("cos_sim_e6")
     ).distinct()  # a neighbor can appear via several probed lists
     from legendary_data_pipeline_spark.operators.ranking import (
         top_k_per_group,
@@ -1104,10 +1086,10 @@ def ivf_fixed_topk(
     return top_k_per_group(
         scored,
         ["query_id"],
-        [F.col(sim_col).desc(), F.col("neighbor_id").asc()],
+        [F.col("cos_sim_e6").desc(), F.col("neighbor_id").asc()],
         k=k,
         rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank", sim_col)
+    ).select("query_id", "neighbor_id", "rank", "cos_sim_e6")
 
 
 def ivf_fixed_list_profile(
@@ -1156,17 +1138,14 @@ def ivf_fixed_list_profile(
     return full.crossJoin(F.broadcast(tot)).select(
         "cid",
         "list_size",
-        F.round(
-            F.col("list_size").cast("double")
-            / F.col("__n").cast("double")
-            * F.lit(1e6)
-        ).cast("long").alias("share_e6"),
-        F.round(
+        e6(
+            F.col("list_size").cast("double") / F.col("__n").cast("double")
+        ).alias("share_e6"),
+        e6(
             F.col("list_size").cast("double")
             * F.lit(float(n_centroids))
             / F.col("__n").cast("double")
-            * F.lit(1e6)
-        ).cast("long").alias("load_factor_e6"),
+        ).alias("load_factor_e6"),
     )
 
 
@@ -1174,7 +1153,6 @@ def semdedup_fixed(
     embeddings: DataFrame,
     n_centroids: int = 16,
     tau: float = 0.9,
-    round_digits: int = 6,
     pair_salt: int = 32,
 ) -> DataFrame:
     """Fixed-codebook SemDeDup twin — the hash-oracle-able variant of
@@ -1263,7 +1241,7 @@ def semdedup_fixed(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    cos = F.round(dot / (F.col("__na") * F.col("__nb")), round_digits)
+    cos = F.round(dot / (F.col("__na") * F.col("__nb")), 6)
     dups = (
         pairs.filter(cos >= F.lit(float(tau)))
         .groupBy("__ib")
@@ -1407,7 +1385,7 @@ def semantic_decontamination(
     scored = pairs.select(
         "__tid",
         "__bid",
-        F.round(cos * F.lit(1e6)).cast("long").alias("__cos_e6"),
+        e6(cos).alias("__cos_e6"),
     )
     best = scored.groupBy("__tid").agg(
         F.max(
@@ -1497,5 +1475,5 @@ def label_centroid_matrix(
     return j.select(
         "label_a",
         "label_b",
-        F.round(cos * F.lit(1e6)).cast("long").alias("cos_e6"),
+        e6(cos).alias("cos_e6"),
     )

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.functions.hashing import seeded_md5_long
+from legendary_data_pipeline_spark.functions.numeric import e6
 
 
 def histogram_auto(
@@ -887,7 +888,6 @@ def correlation_matrix(
     df: DataFrame,
     cols: Sequence[str],
     scale: int = 4,
-    round_digits: int = 6,
     scaled_e6: bool = False,
     small_int_fastpath: bool = False,
 ) -> DataFrame:
@@ -986,10 +986,8 @@ def correlation_matrix(
         denom = F.sqrt(var_a) * F.sqrt(var_b)
         ratio = num / F.nullif(denom, F.lit(0.0))
         if scaled_e6:
-            # Round-9 e6 gate convention (see queries._e6): fractional
-            # round(DOUBLE, 6) is not engine-version-canonical.
-            return F.round(ratio * F.lit(1e6)).cast("long")
-        return F.round(ratio, round_digits)
+            return e6(ratio)
+        return F.round(ratio, 6)
 
     out_col = "corr_e6" if scaled_e6 else "corr"
     # ONE branch over the 1-row moment frame: reshape to pair rows via
@@ -1015,7 +1013,6 @@ def gini_concentration(
     df: DataFrame,
     value_col: str,
     group_cols: Sequence[str] = (),
-    round_digits: int = 6,
     scaled_e6: bool = False,
     coarse_groups: bool = True,
 ) -> DataFrame:
@@ -1095,15 +1092,13 @@ def gini_concentration(
     den = (F.col("__n") * F.col("__s")).cast("double")
     ratio = num / F.nullif(den, F.lit(0.0))
     if scaled_e6:
-        # Round-9 e6 gate convention (see queries._e6): fractional
-        # round(DOUBLE, 6) is not engine-version-canonical.
         return agg.select(
             *groups,
             F.col("__n").cast("long").alias("n"),
             F.col("__s").cast("long").alias("total"),
-            F.round(ratio * F.lit(1e6)).cast("long").alias("gini_e6"),
+            e6(ratio).alias("gini_e6"),
         )
-    gini = F.round(ratio, round_digits)
+    gini = F.round(ratio, 6)
     return agg.select(
         *groups,
         F.col("__n").cast("long").alias("n"),
@@ -1116,7 +1111,6 @@ def kendall_tau_b(
     df: DataFrame,
     col_a: str,
     col_b: str,
-    round_digits: int = 6,
     scaled_e6: bool = False,
 ) -> DataFrame:
     """EXACT Kendall's tau-b (tie-corrected) for an ordinal column
@@ -1231,7 +1225,7 @@ def kendall_tau_b(
         # BIGINT removes doubles from the output entirely; a 1-ulp
         # input difference cannot move the integer except on exact .5
         # ties, which sqrt-derived values never hit.
-        tau = F.round(ratio * F.lit(1e6)).cast("long")
+        tau = e6(ratio)
         # Round-10: concordant/discordant leave the operator as BIGINT,
         # not decimal(38,0). Every driver hash-red cell in project
         # history (r6 dq_table_checksum, r8/r9 kendall) emitted
@@ -1248,7 +1242,7 @@ def kendall_tau_b(
             F.col("discordant").cast("long").alias("discordant"),
             tau.alias("tau_b_e6"),
         )
-    tau = F.round(ratio, round_digits)
+    tau = F.round(ratio, 6)
     return joined.select(
         F.col("n").cast("long").alias("n"),
         "concordant",
@@ -1273,7 +1267,6 @@ def spearman_matrix(
     df: DataFrame,
     cols: Sequence[str],
     scale: int = 4,
-    round_digits: int = 6,
     scaled_e6: bool = False,
     int64_values: bool = False,
 ) -> DataFrame:
@@ -1430,7 +1423,6 @@ def spearman_matrix(
     # rank2 <= 2n: products fit int64 through n ~ 1.5e9 listwise rows
     # (the fastpath's documented bound); beyond that, coarsen first.
     out = correlation_matrix(ranked, list(cols), scale=0,
-                             round_digits=round_digits,
                              scaled_e6=scaled_e6,
                              small_int_fastpath=True)
     if scaled_e6:
@@ -1471,8 +1463,6 @@ def chi_square_independence(
     df: DataFrame,
     col_a: str,
     col_b: str,
-    round_digits: int = 6,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Pearson chi-square test of independence for two categorical
     columns, plus Cramér's V effect size — the DQ primitive behind "is
@@ -1485,10 +1475,10 @@ def chi_square_independence(
     IEEE-exact sqrt — deterministic cross-engine, no float
     accumulation anywhere (the per-cell terms that ARE summed in
     double are category-cardinality-many, magnitudes ~1, and the
-    result rounds to `round_digits`).
+    results leave as `e6` integers).
 
     Output (1 row): n, n_rows (distinct a), n_cols (distinct b), dof,
-    chi2, cramers_v. Degenerate tables (single row or column) get
+    chi2_e6, cramers_v_e6. Degenerate tables (single row or column) get
     dof=0 and NULL chi2/V.
 
     Scale: one (a,b) groupBy — category-sized result; marginals
@@ -1560,24 +1550,8 @@ def chi_square_independence(
         "n_rows",
         "n_cols",
         dof.cast("long").alias("dof"),
-        *(
-            (
-                # Round-9 e6 gate convention (see queries._e6).
-                F.when(
-                    dof > 0,
-                    F.round(F.col("__chi2") * F.lit(1e6)).cast("long"),
-                ).alias("chi2_e6"),
-                F.when(
-                    dof > 0, F.round(v * F.lit(1e6)).cast("long")
-                ).alias("cramers_v_e6"),
-            )
-            if scaled_e6
-            else (
-                F.when(dof > 0, F.round(F.col("__chi2"), round_digits))
-                .alias("chi2"),
-                F.when(dof > 0, F.round(v, round_digits)).alias("cramers_v"),
-            )
-        ),
+        F.when(dof > 0, e6(F.col("__chi2"))).alias("chi2_e6"),
+        F.when(dof > 0, e6(v)).alias("cramers_v_e6"),
     )
 
 
@@ -1585,8 +1559,6 @@ def mutual_information(
     df: DataFrame,
     col_a: str,
     col_b: str,
-    round_digits: int = 6,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Entropy / mutual-information summary for two categorical
     columns (nats): H(a), H(b), I(a;b), and the normalized
@@ -1597,12 +1569,12 @@ def mutual_information(
     Built on the same exact contingency pass as
     `chi_square_independence`; each cell contributes
     (obs/n)·ln(obs·n / (row_tot·col_tot)) from exact integers. ln is
-    the one libm call (not IEEE-exactness-mandated), so results carry
-    `round_digits` rounding — at magnitude ~1 a last-ulp difference
-    cannot move the 6th decimal.
+    the one libm call (not IEEE-exactness-mandated), so results leave
+    as `e6` integers — at magnitude ~1 a last-ulp difference cannot
+    move the integer except on an exact .5 tie.
 
-    Output (1 row): n, h_a, h_b, mi, nmi (NULL when either marginal
-    entropy is 0).
+    Output (1 row): n, h_a_e6, h_b_e6, mi_e6, nmi_e6 (NULL when either
+    marginal entropy is 0).
     """
     ct = contingency_counts(df, col_a, col_b)
     n = F.col("n").cast("double")
@@ -1622,27 +1594,12 @@ def mutual_information(
         F.sum(mi_term).alias("__mi"),
     )
     denom = F.sqrt(F.col("__ha") * F.col("__hb"))
-    if scaled_e6:
-        # Round-9 e6 gate convention (see queries._e6): fractional
-        # round(DOUBLE, 6) is not engine-version-canonical.
-        def e6(c):
-            return F.round(c * F.lit(1e6)).cast("long")
-
-        return agg.select(
-            "n",
-            e6(F.col("__ha")).alias("h_a_e6"),
-            e6(F.col("__hb")).alias("h_b_e6"),
-            e6(F.col("__mi")).alias("mi_e6"),
-            e6(F.col("__mi") / F.nullif(denom, F.lit(0.0))).alias("nmi_e6"),
-        )
     return agg.select(
         "n",
-        F.round(F.col("__ha"), round_digits).alias("h_a"),
-        F.round(F.col("__hb"), round_digits).alias("h_b"),
-        F.round(F.col("__mi"), round_digits).alias("mi"),
-        F.round(
-            F.col("__mi") / F.nullif(denom, F.lit(0.0)), round_digits
-        ).alias("nmi"),
+        e6(F.col("__ha")).alias("h_a_e6"),
+        e6(F.col("__hb")).alias("h_b_e6"),
+        e6(F.col("__mi")).alias("mi_e6"),
+        e6(F.col("__mi") / F.nullif(denom, F.lit(0.0))).alias("nmi_e6"),
     )
 
 
@@ -1919,7 +1876,6 @@ def kaplan_meier(
     df: DataFrame,
     duration_col: str,
     event_col: str,
-    round_digits: int = 6,
     bucket: int | None = None,
     max_distinct_times: int = 200_000,
     scaled_e6: bool = False,
@@ -2044,19 +2000,15 @@ def kaplan_meier(
         (F.col("n_events") == F.col("n_at_risk")).cast("int")
     ).over(w_upto_t)
     if scaled_e6:
-        # Round-9 e6 gate convention (see queries._e6): the survival
-        # probability leaves the engine as round(S·1e6) BIGINT — a
-        # fractional round(DOUBLE, 6) is not engine-version-canonical.
         survival = F.when(wiped == 1, F.lit(0).cast("long")).otherwise(
-            F.round(F.exp(F.sum(ln_term).over(w_upto_t)) * F.lit(1e6))
-            .cast("long")
+            e6(F.exp(F.sum(ln_term).over(w_upto_t)))
         )
         return ann.select(
             "t", "n_at_risk", "n_events", "n_censored",
             survival.alias("survival_e6"),
         )
     survival = F.when(wiped == 1, F.lit(0.0)).otherwise(
-        F.round(F.exp(F.sum(ln_term).over(w_upto_t)), round_digits)
+        F.round(F.exp(F.sum(ln_term).over(w_upto_t)), 6)
     )
     return ann.select(
         "t", "n_at_risk", "n_events", "n_censored",
@@ -2068,10 +2020,8 @@ def nelson_aalen(
     df: DataFrame,
     duration_col: str,
     event_col: str,
-    round_digits: int = 6,
     bucket: int | None = None,
     max_distinct_times: int = 200_000,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Nelson–Aalen cumulative-hazard estimator — the additive
     companion to `kaplan_meier`'s multiplicative survival curve:
@@ -2091,11 +2041,11 @@ def nelson_aalen(
     durations). Each d_s/n_s term is one exact IEEE division of exact
     integers; the cumulative sum runs over the time-ordered window so
     both engines accumulate the identical sequence in the identical
-    order (the KM exp(Σln) precedent), and round(6)/e6 absorbs
+    order (the KM exp(Σln) precedent), and `e6` scaling absorbs
     last-ulp drift.
 
     Output, one row per distinct exit time:
-      (t, n_at_risk, n_events, n_censored, cum_hazard[_e6])
+      (t, n_at_risk, n_events, n_censored, cum_hazard_e6)
     """
     t = F.col(duration_col)
     if bucket is not None:
@@ -2158,16 +2108,9 @@ def nelson_aalen(
         Window.unboundedPreceding, 0
     )
     hazard = F.sum(term).over(w_upto_t)
-    if scaled_e6:
-        return ann.select(
-            "t", "n_at_risk", "n_events", "n_censored",
-            F.round(hazard * F.lit(1e6)).cast("long").alias(
-                "cum_hazard_e6"
-            ),
-        )
     return ann.select(
         "t", "n_at_risk", "n_events", "n_censored",
-        F.round(hazard, round_digits).alias("cum_hazard"),
+        e6(hazard).alias("cum_hazard_e6"),
     )
 
 
@@ -2178,9 +2121,7 @@ def logrank_test(
     group_col: str,
     group_a,
     group_b,
-    round_digits: int = 6,
     bucket: int | None = None,
-    scaled_e6: bool = False,
 ) -> DataFrame:
     """Two-group log-rank test — "do these retention curves differ?"
     for the Kaplan–Meier setting (censoring-aware, the standard
@@ -2195,12 +2136,13 @@ def logrank_test(
 
     Exits and risk sets are exact integers built the `kaplan_meier`
     way (one distinct-time frame, cumulative windows per group); the
-    E/V terms are double summands of magnitude ≲1 aggregated under
-    round(6) (the mutual-information convention). Times with n_t ≤ 1
+    E/V terms are double summands of magnitude ≲1, emitted as `e6`
+    integers (the mutual-information convention). Times with n_t ≤ 1
     contribute no variance (the hypergeometric is degenerate). Rows
     outside the two named groups, or with NULL duration/event, drop.
 
-    Output (1 row): n_a, n_b, events_a, events_b, exp_a, z, chi2 —
+    Output (1 row): n_a, n_b, events_a, events_b, exp_a_e6, z_e6,
+    chi2_e6 —
     sign of z: positive means group A had MORE events than expected
     (worse survival). NULL z/chi2 when V = 0 (no comparable times).
 
@@ -2212,7 +2154,7 @@ def logrank_test(
     gone because the structure it protected against is gone. ``bucket``
     remains as a semantic coarsener (floor durations to a grid). The
     E/V double summands are magnitude-≲1 terms aggregated under the
-    round-6/e6 convention (order-tolerant by design); the integer
+    e6 convention (order-tolerant by design); the integer
     columns stay exact for any partitioning.
     """
     t = F.col(duration_col)
@@ -2276,24 +2218,11 @@ def logrank_test(
     z = (F.col("events_a").cast("double") - F.col("__exp_a")) / F.sqrt(
         F.col("__v")
     )
-    if scaled_e6:
-        # Round-9 e6 gate convention (see queries._e6): statistics
-        # leave the engine as round(x·1e6) BIGINT — fractional
-        # round(DOUBLE, 6) is not engine-version-canonical.
-        def e6(c):
-            return F.round(c * F.lit(1e6)).cast("long")
-
-        return agg.select(
-            "n_a", "n_b", "events_a", "events_b",
-            e6(F.col("__exp_a")).alias("exp_a_e6"),
-            F.when(F.col("__v") > 0, e6(z)).alias("z_e6"),
-            F.when(F.col("__v") > 0, e6(z * z)).alias("chi2_e6"),
-        )
     return agg.select(
         "n_a", "n_b", "events_a", "events_b",
-        F.round(F.col("__exp_a"), round_digits).alias("exp_a"),
-        F.when(F.col("__v") > 0, F.round(z, round_digits)).alias("z"),
-        F.when(F.col("__v") > 0, F.round(z * z, round_digits)).alias("chi2"),
+        e6(F.col("__exp_a")).alias("exp_a_e6"),
+        F.when(F.col("__v") > 0, e6(z)).alias("z_e6"),
+        F.when(F.col("__v") > 0, e6(z * z)).alias("chi2_e6"),
     )
 
 
@@ -2302,7 +2231,6 @@ def cusum_curve(
     order_col: str,
     value_col: str,
     group_cols: Sequence[str] = (),
-    round_digits: int = 6,
     scaled_e6: bool = False,
 ) -> DataFrame:
     """Full CUSUM CURVE for an ordered series, with the changepoint
@@ -2366,13 +2294,9 @@ def cusum_curve(
         )
     )
     if scaled_e6:
-        # Round-9 e6 gate convention (see queries._e6): the reported
-        # curve value leaves the engine as round(cum/n·1e6) BIGINT —
-        # fractional round(DOUBLE, 6) is not engine-version-canonical.
-        cusum = F.round(
+        cusum = e6(
             F.col("__cum").cast("double") / F.col("__n").cast("double")
-            * F.lit(1e6)
-        ).cast("long")
+        )
         return ann.select(
             *groups,
             F.col("__o").alias(order_col),
@@ -2381,8 +2305,7 @@ def cusum_curve(
             (first_at_max == 1).alias("is_changepoint"),
         )
     cusum = F.round(
-        F.col("__cum").cast("double") / F.col("__n").cast("double"),
-        round_digits,
+        F.col("__cum").cast("double") / F.col("__n").cast("double"), 6
     )
     return ann.select(
         *groups,
@@ -2398,7 +2321,6 @@ def diff_in_diff(
     group_col: Column,
     post_col: Column,
     value_col: Column,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Difference-in-differences estimate of a treatment effect:
 
@@ -2413,7 +2335,7 @@ def diff_in_diff(
     after the intervention), ``value_col`` integer (cents convention).
     Rows with a NULL in any of the three drop. All four cell sums and
     counts are exact integers from ONE aggregation; the four means and
-    the estimate are fixed IEEE divisions under round(6). Any empty
+    the estimate are fixed IEEE divisions, left unrounded. Any empty
     cell yields NULL did (the design is incomplete, not zero-effect).
 
     Output (1 row): n_tp, n_tc, n_cp, n_cc (cell counts:
@@ -2762,9 +2684,7 @@ def cross_correlation(
     return m.select(
         F.col("lag").cast("long").alias("lag"),
         "n",
-        F.when(F.col("n") >= 2, F.round(r * F.lit(1e6)).cast("long")).alias(
-            "r_e6"
-        ),
+        F.when(F.col("n") >= 2, e6(r)).alias("r_e6"),
     )
 
 
@@ -2858,9 +2778,7 @@ def autocorrelation(
         *groups,
         F.col("lag").cast("long").alias("lag"),
         "n",
-        F.when(F.col("n") >= 2, F.round(r * F.lit(1e6)).cast("long")).alias(
-            "r_e6"
-        ),
+        F.when(F.col("n") >= 2, e6(r)).alias("r_e6"),
     )
 
 
@@ -2992,7 +2910,7 @@ def mann_kendall(
         "n_points",
         s.alias("s"),
         tau.alias("tau"),
-        F.round(z * F.lit(1e6)).cast("long").alias("z_e6"),
+        e6(z).alias("z_e6"),
     )
 
 
@@ -3261,7 +3179,6 @@ def partial_correlation(
     partial = F.when(
         den2 > 0, (rxy - rxz * ryz) / F.sqrt(den2)
     )
-    e6 = lambda c: F.round(c * F.lit(1e6)).cast("long")  # noqa: E731
     ok = F.col("n") >= 2
     return m.select(
         "n",
@@ -3369,7 +3286,6 @@ def uncertainty_coefficient(
         F.sum(h_y_term).alias("__hy"),
         F.sum(mi_term).alias("__mi"),
     )
-    e6 = lambda c: F.round(c * F.lit(1e6)).cast("long")  # noqa: E731
     hx = F.col("__hx")
     hy = F.col("__hy")
     mi = F.col("__mi")

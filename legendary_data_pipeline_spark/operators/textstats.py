@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.functions.hashing import md5_long
+from legendary_data_pipeline_spark.functions.numeric import e6
 from legendary_data_pipeline_spark.operators.dedup import tokens_expr
 
 #: generic English-ish stopwords intersected with the corpus vocabulary
@@ -470,7 +471,6 @@ def ngram_novelty(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Per-document n-gram NOVELTY: what fraction of a doc's distinct
     word n-grams appear in NO other document? The inverse signal of
@@ -773,7 +773,6 @@ def corpus_entropy(
     h1 = h("__n_uni", "__s_uni")
     h2 = h("__n_bi", "__s_bi")
     hctx = h("__n_ctx", "__s_ctx")
-    e6 = lambda c: F.round(c * F.lit(1e6)).cast("long")  # noqa: E731
     red = F.when(
         F.col("__v") >= 2, F.lit(1.0) - h1 / F.log(F.col("__v").cast("double"))
     )
@@ -966,7 +965,6 @@ def zipf_fit(
     slope = num / F.nullif(den_x, F.lit(0.0))
     intercept = (F.col("__swy") - slope * F.col("__swx")) / sw
     r2 = (num * num) / F.nullif(den_x * den_y, F.lit(0.0))
-    e6 = lambda c: F.round(c * F.lit(1e6)).cast("long")  # noqa: E731
     ok = F.col("n_classes") >= 2
     return agg.select(
         *groups,
@@ -1058,5 +1056,5 @@ def source_cosine_matrix(
         F.col("__ga").alias("source_a"),
         F.col("__gb").alias("source_b"),
         F.col("__dot").cast("long").alias("dot"),
-        F.round(cos * F.lit(1e6)).cast("long").alias("cos_e6"),
+        e6(cos).alias("cos_e6"),
     )

@@ -20,17 +20,13 @@ cell must be bit-identical across Spark and DuckDB):
   bit-for-bit on doubles — verified, and covered by tests.
 - Statistics (round-9 e6 convention): any value that would end in a
   FRACTIONAL `round(double, k)` is emitted instead as the exact
-  integer `round(x * 1e6)` BIGINT (`_e6` / `_e6_sql`). Fractional
-  double rounding is not engine-version-canonical — DuckDB changed its
-  algorithm across releases, which is what turned the r8
-  `st_kendall_tau_qty_discount` driver cell red while every local run
-  was bit-identical. Scale-0 rounding is nearest-integer everywhere,
-  and integers survive any harness canonicalization. Raw doubles are
-  still fine when they are one shared IEEE expression tree over exact
-  inputs (ratios of integers, sqrt/div of decimal moments) — IEEE
-  mandates correct rounding for + - * / sqrt, so those match
-  bit-for-bit WITHOUT any rounding; the rule is "never let an engine's
-  fractional round be the last op before the driver hash".
+  integer `round(x * 1e6)` BIGINT, built by `functions.e6` (its
+  docstring gives the reason and the DuckDB twin the oracles inline).
+  Raw doubles are still fine when they are one shared IEEE expression
+  tree over exact inputs (ratios of integers, sqrt/div of decimal
+  moments) — IEEE mandates correct rounding for + - * / sqrt, so those
+  match bit-for-bit WITHOUT any rounding; the rule is "never let an
+  engine's fractional round be the last op before the driver hash".
 """
 
 from __future__ import annotations
@@ -205,27 +201,6 @@ def _cents(col_name: str) -> F.Column:
 
 def _cents_sql(expr: str) -> str:
     return f"CAST(round(CAST({expr} AS DECIMAL(18,2)) * 100, 0) AS BIGINT)"
-
-
-def _e6(col: F.Column) -> F.Column:
-    """Canonical micro-scaled integer for a double statistic.
-
-    Round-9 representation convention for driver-gate outputs: a
-    fractional `round(x, 6)` DOUBLE is NOT engine-version-canonical
-    (DuckDB changed its double-round algorithm across releases — the r8
-    `st_kendall_tau_qty_discount` red cell; see NOTES.md §Round-9), so
-    gate statistics leave the engine as `round(x * 1e6)` BIGINT instead:
-    scale-0 rounding of a double is nearest-integer in every engine, a
-    1-ulp upstream difference (libm ln/exp, round path) cannot move the
-    integer except on exact .5 ties, and integers hash identically under
-    any harness canonicalization. Pair with `_e6_sql` in the oracle.
-    """
-    return F.round(col.cast("double") * F.lit(1e6)).cast("long")
-
-
-def _e6_sql(expr: str) -> str:
-    """DuckDB twin of `_e6` — same expression tree, same semantics."""
-    return f"CAST(round((CAST({expr} AS DOUBLE)) * 1e6) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------

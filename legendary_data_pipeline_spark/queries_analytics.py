@@ -2368,7 +2368,6 @@ def dq_ks_order_totals_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.filter(F.col("o_orderdate") < cut),
         orders.filter(F.col("o_orderdate") >= cut),
         _cents("o_totalprice"),
-        scaled_e6=True,
     )
 
 
@@ -2650,9 +2649,7 @@ def st_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    return chi_square_independence(
-        li, "l_returnflag", "l_linestatus", scaled_e6=True
-    )
+    return chi_square_independence(li, "l_returnflag", "l_linestatus")
 
 
 @register(
@@ -2691,9 +2688,7 @@ def st_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    return mutual_information(
-        li, "l_returnflag", "l_linestatus", scaled_e6=True
-    )
+    return mutual_information(li, "l_returnflag", "l_linestatus")
 
 
 # ---------------------------------------------------------------------------
@@ -3521,9 +3516,7 @@ def st_numeric_mi_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("price_bucket"),
     )
-    return mutual_information(
-        binned, "qty_bucket", "price_bucket", scaled_e6=True
-    )
+    return mutual_information(binned, "qty_bucket", "price_bucket")
 
 
 # ---------------------------------------------------------------------------
@@ -3842,9 +3835,7 @@ def sv_logrank_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "__seg"
         ),
     )
-    return logrank_test(
-        subj, "__dur", "__event", "__seg", "even", "odd", scaled_e6=True
-    )
+    return logrank_test(subj, "__dur", "__event", "__seg", "even", "odd")
 
 
 # ---------------------------------------------------------------------------
@@ -5947,7 +5938,7 @@ def sv_nelson_aalen_user_tenure(
             F.col("__last") < F.max("__last").over(w_all) - _KM_HORIZON_S
         ).cast("int").alias("__event"),
     )
-    return nelson_aalen(subj, "__dur", "__event", scaled_e6=True)
+    return nelson_aalen(subj, "__dur", "__event")
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,7 @@ from legendary_data_pipeline_spark.functions.hashing import (
     md5_long_sql,
     seeded_md5_long_sql,
 )
+from legendary_data_pipeline_spark.functions.numeric import e6
 from legendary_data_pipeline_spark.operators import curation as C
 from legendary_data_pipeline_spark.queries import register
 
@@ -604,11 +605,10 @@ def curation_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_packs"),
         F.sum("n_docs").cast("long").alias("n_docs"),
         F.sum("pack_tokens").cast("long").alias("tokens_total"),
-        F.round(
+        e6(
             F.sum("pack_tokens").cast("double")
             / (F.count(F.lit(1)).cast("double") * F.lit(float(_PACK_BUDGET)))
-            * F.lit(1e6)
-        ).cast("long").alias("fill_mean_e6"),
+        ).alias("fill_mean_e6"),
         F.sum(
             (F.col("pack_tokens") > F.lit(_PACK_BUDGET)).cast("long")
         ).cast("long").alias("n_overflow_packs"),
@@ -1463,8 +1463,7 @@ def curation_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounded value stays the Gumbel ranking key inside dsir_select.
     return out.select(
         "doc_id",
-        F.round(F.col("log_importance") * F.lit(1e6)).cast("long")
-        .alias("log_importance_e6"),
+        e6(F.col("log_importance")).alias("log_importance_e6"),
         F.col("sample_rank").cast("int").alias("sample_rank"),
     )
 
@@ -1917,7 +1916,7 @@ def curation_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-9 representation convention for libm-backed outputs.
     return out.select(
         "doc_id", "lang", "n_tokens",
-        F.round(F.col("rate") * F.lit(1e6)).cast("long").alias("rate_e6"),
+        e6(F.col("rate")).alias("rate_e6"),
         "keep",
     )
 
@@ -2007,9 +2006,7 @@ def curation_mix_bias_report(
         .alias("tokens_kept"),
         # rate is constant per stratum (a pure function of lang) —
         # carry it through the agg instead of re-joining the rate frame
-        F.max(F.round(F.col("rate") * F.lit(1e6)).cast("long")).alias(
-            "rate_e6"
-        ),
+        F.max(e6(F.col("rate"))).alias("rate_e6"),
     ).localCheckpoint(eager=False)
     tot = per.agg(
         F.sum("tokens_corpus").cast("long").alias("__tc"),
@@ -2030,19 +2027,15 @@ def curation_mix_bias_report(
             "tokens_corpus",
             "tokens_kept",
             "rate_e6",
-            F.round(
+            e6(
                 F.col("tokens_corpus").cast("double")
                 / F.col("__tc").cast("double")
-                * F.lit(1e6)
-            ).cast("long").alias("share_corpus_e6"),
-            F.round(F.col("__pow") / F.col("__z") * F.lit(1e6))
-            .cast("long")
-            .alias("target_share_e6"),
-            F.round(
+            ).alias("share_corpus_e6"),
+            e6(F.col("__pow") / F.col("__z")).alias("target_share_e6"),
+            e6(
                 F.col("tokens_kept").cast("double")
                 / F.col("__tk").cast("double")
-                * F.lit(1e6)
-            ).cast("long").alias("share_kept_e6"),
+            ).alias("share_kept_e6"),
         )
     )
 
@@ -3450,7 +3443,7 @@ def ml_nb_quality_calibration(
         p.alias("p"),
         (F.col("source") == "src0").cast("int").alias("label"),
     )
-    return calibration_bins(frame, "p", "label", n_bins=10, scaled_e6=True)
+    return calibration_bins(frame, "p", "label", n_bins=10)
 
 
 _NB_PSI_BIN_UNATS = 2_000_000  # 2-nat score bins (~10 categories)

@@ -20,6 +20,7 @@ from legendary_data_pipeline_spark.functions.hashing import (
     md5_long_sql,
     seeded_md5_long_sql,
 )
+from legendary_data_pipeline_spark.functions.numeric import e6
 from legendary_data_pipeline_spark.operators import dedup as D
 from legendary_data_pipeline_spark.operators import similarity as S
 from legendary_data_pipeline_spark.operators import textstats as T
@@ -522,8 +523,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leaves as a BIGINT no harness canonicalization can bend.
     return pairs.select(
         "id_a", "id_b",
-        F.round(F.col("cos_sim") * F.lit(1e6)).cast("long")
-        .alias("cos_sim_e6"),
+        e6(F.col("cos_sim")).alias("cos_sim_e6"),
     )
 
 
@@ -562,8 +562,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "neighbor_id",
         F.col("rank").cast("long").alias("knn_rank"),
-        F.round(F.col("cos_sim") * F.lit(1e6)).cast("long")
-        .alias("cos_sim_e6"),
+        e6(F.col("cos_sim")).alias("cos_sim_e6"),
     )
 
 
@@ -640,7 +639,7 @@ def sim_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_distributed(spark, sf_dir, "embeddings")
     out = S.lsh_bucket_topk(
         emb, planes=_LSH_PLANES, k=3,
-        query_filter=(F.col("vec_id") % 5 == 0), scaled_e6=True,
+        query_filter=(F.col("vec_id") % 5 == 0),
     )
     return out.select(
         "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"),
@@ -1386,8 +1385,7 @@ def emb_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = S.label_centroid_cosine(emb, outlier_threshold=0.5)
     return out.select(
         "vec_id", "label",
-        F.round(F.col("cos_to_centroid") * F.lit(1e6)).cast("long")
-        .alias("cos_to_centroid_e6"),
+        e6(F.col("cos_to_centroid")).alias("cos_to_centroid_e6"),
         "is_outlier",
     )
 
@@ -1794,7 +1792,7 @@ def ret_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = bm25_topk(docs, queries, k=_BM25_K, k1=_BM25_K1, b=_BM25_B)
     return out.select(
         "query_id", "doc_id", F.col("rank").cast("int").alias("rank"),
-        F.round(F.col("score") * F.lit(1e6)).cast("long").alias("score_e6")
+        e6(F.col("score")).alias("score_e6"),
     )
 
 
@@ -1923,9 +1921,7 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         *[
-            F.round(F.col("proj")[j] * F.lit(1e6)).cast("long")
-            .alias(f"p{j}_e6")
-            for j in range(_JL_DIMS)
+            e6(F.col("proj")[j]).alias(f"p{j}_e6") for j in range(_JL_DIMS)
         ],
     )
 
@@ -2368,7 +2364,6 @@ def ret_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = multivec_from_embedding(emb, _MAXSIM_NV)
     return maxsim_topk(
         mv, k=_MAXSIM_K, query_filter=F.col("vec_id") < _MAXSIM_K,
-        scaled_e6=True,
     )
 
 
@@ -2451,8 +2446,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "negative_id",
         "negative_label",
         F.col("rank").cast("int").alias("rank"),
-        F.round(F.col("cos_sim") * F.lit(1e6)).cast("long")
-        .alias("cos_sim_e6"),
+        e6(F.col("cos_sim")).alias("cos_sim_e6"),
     )
 
 
@@ -2660,7 +2654,6 @@ def sim_ivf_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_probe=_IVFX_NPROBE,
         k=_IVFX_K,
         query_filter=(F.col("vec_id") % 5 == 0),
-        scaled_e6=True,
     )
     return out.select(
         "query_id",
@@ -2781,9 +2774,7 @@ def ml_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = T.lang_id(docs, keep_cols=("lang",)).select(
         F.col("lang").alias("true_lang"), F.col("predicted_lang")
     )
-    return confusion_stats(
-        pred, "true_lang", "predicted_lang", scaled_e6=True
-    )
+    return confusion_stats(pred, "true_lang", "predicted_lang")
 
 
 # ---------------------------------------------------------------------------
@@ -3178,7 +3169,7 @@ def ret_rbo_exact_vs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lsh = S.lsh_bucket_topk(
         emb, planes=_LSH_PLANES, k=_RBO_K,
-        query_filter=(F.col("vec_id") % 5 == 0), scaled_e6=True,
+        query_filter=(F.col("vec_id") % 5 == 0),
     )
     return rbo_at_k(
         exact, lsh, "query_id", "neighbor_id", "rank",
@@ -3994,7 +3985,6 @@ def sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_probe=_IVFX_NPROBE,
         k=_IVFX_K,
         query_filter=qf,
-        scaled_e6=True,
     ).select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
     hits = (
         truth.join(approx, ["query_id", "neighbor_id"], "left")

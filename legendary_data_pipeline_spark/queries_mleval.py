@@ -170,9 +170,7 @@ def ml_auc_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("embedding", 1).cast("double").alias("score"),
         (F.col("label") >= 5).cast("long").alias("lab"),
     )
-    return M.auc_by_group(
-        base, ["segment"], "score", "lab", scaled_e6=True
-    )
+    return M.auc_by_group(base, ["segment"], "score", "lab")
 
 
 # ---------------------------------------------------------------------------
@@ -204,9 +202,7 @@ def ml_auc_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = _pred_frame(spark, sf_dir)
-    return M.calibration_bins(
-        pred, "pred", "lab", n_bins=10, scaled_e6=True
-    )
+    return M.calibration_bins(pred, "pred", "lab", n_bins=10)
 
 
 # ---------------------------------------------------------------------------
@@ -701,9 +697,7 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         (F.col("o_orderstatus") == "F").cast("int").alias("__lab"),
     )
-    return M.woe_iv(
-        base, "o_orderpriority", "__lab", smoothing=_WOE_S, scaled_e6=True
-    )
+    return M.woe_iv(base, "o_orderpriority", "__lab", smoothing=_WOE_S)
 
 
 # ---------------------------------------------------------------------------
@@ -759,7 +753,6 @@ def ml_two_proportion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return M.two_proportion_test(
         base, "o_orderpriority", "__lab", "1-URGENT", "5-LOW",
-        scaled_e6=True,
     )
 
 

@@ -913,7 +913,7 @@ def stream_psi_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             report, ckpt = f"{root}/report", f"{root}/ckpt"
             run_psi_monitor_once(
                 spark, staging, _STAGED_SCHEMA, ev, "event_type",
-                report, ckpt, max_files_per_trigger=1, scaled_e6=True,
+                report, ckpt, max_files_per_trigger=1,
             )
         finally:
             ev.unpersist()

@@ -183,7 +183,6 @@ def psi_monitor_sink(
     col: str,
     report_path: str,
     psi_alert: float = 0.25,  # the standard "population shifted" bar
-    scaled_e6: bool = False,
 ):
     """`foreachBatch` writer: Population Stability Index of each
     micro-batch's `col` distribution against a STATIC baseline — the
@@ -197,10 +196,10 @@ def psi_monitor_sink(
     PSI crosses `psi_alert`. Both sides reduce to value-cardinality
     count tables per batch — metadata-scale.
 
-    `scaled_e6=True` writes the report in the engine's driver-gate
-    representation-proof form (exact BIGINT micro-units — see
-    psi_drift): the alert compares `psi_e6 > round(psi_alert * 1e6)`,
-    bit-equivalent across engine versions.
+    The report is `psi_drift`'s `scaled_e6` form (exact BIGINT
+    micro-units, `functions.e6`): the alert compares
+    `psi_e6 > round(psi_alert * 1e6)`, bit-equivalent across engine
+    versions.
     """
     from legendary_data_pipeline_spark.operators.profiling import psi_drift
 
@@ -214,20 +213,13 @@ def psi_monitor_sink(
         if batch_df.limit(1).count() == 0:
             return
         rep = psi_drift(
-            baseline, batch_df, col,
-            require_nonempty=False, scaled_e6=scaled_e6,
+            baseline, batch_df, col, require_nonempty=False, scaled_e6=True
         )
         rows = rep.collect()  # value-cardinality — metadata-scale
         if not rows:
             return
-        if scaled_e6:
-            psi_total = rows[0]["psi_e6"]
-            alert = psi_total is not None and psi_total > round(
-                psi_alert * 1e6
-            )
-        else:
-            psi_total = rows[0]["psi"]
-            alert = psi_total is not None and psi_total > psi_alert
+        psi_total = rows[0]["psi_e6"]
+        alert = psi_total is not None and psi_total > round(psi_alert * 1e6)
         spark = batch_df.sparkSession
         out = spark.createDataFrame(rows, rep.schema).select(
             "*", F.lit(alert).alias("alert")
@@ -249,7 +241,6 @@ def run_psi_monitor_once(
     checkpoint_path: str,
     psi_alert: float = 0.25,
     max_files_per_trigger: int | None = None,
-    scaled_e6: bool = False,
 ) -> None:
     """Drain all available input files once through the PSI monitor."""
     reader = spark.readStream.schema(input_schema)
@@ -260,9 +251,7 @@ def run_psi_monitor_once(
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_path)
         .foreachBatch(
-            psi_monitor_sink(
-                baseline, col, report_path, psi_alert, scaled_e6=scaled_e6
-            )
+            psi_monitor_sink(baseline, col, report_path, psi_alert)
         )
         .trigger(availableNow=True)
         .start()

@@ -128,3 +128,8 @@ def compare_to_oracle(spark_df, oracle: str, sf_dir: str, max_diffs: int = 5):
         raise AssertionError(
             "value mismatch (cols=%s):\n%s" % (a_cols, "\n".join(diffs))
         )
+
+
+def executed_plan(df) -> str:
+    """The physical plan string the plan-shape tests match against."""
+    return df._jdf.queryExecution().executedPlan().toString()

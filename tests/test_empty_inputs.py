@@ -210,9 +210,9 @@ def test_round6_ops_on_empty_inputs(spark):
     cat = spark.createDataFrame([], "a string, b string")
     r = chi_square_independence(cat, "a", "b").first()
     assert r["n"] is None or r["n"] == 0
-    assert r["chi2"] is None
+    assert r["chi2_e6"] is None
     r = mutual_information(cat, "a", "b").first()
-    assert r["mi"] is None or r["mi"] == 0.0
+    assert r["mi_e6"] is None or r["mi_e6"] == 0
     ts = spark.createDataFrame([], "g string, d date, v long")
     assert gap_fill_daily(ts, "d", ["v"], ["g"]).count() == 0
     orders = spark.createDataFrame([], "c long, d date, amt double")
@@ -284,12 +284,12 @@ def test_round7_operators_on_empty_inputs(spark):
     cat = spark.createDataFrame([], "cat string, lab int")
     assert woe_iv(cat, "cat", "lab").count() == 0
     r = two_proportion_test(cat, "cat", "lab", "a", "b").first()
-    assert r["n_a"] == 0 and r["z"] is None
+    assert r["n_a"] == 0 and r["z_e6"] is None
     te = spark.createDataFrame([], "t long, e int")
     assert kaplan_meier(te, "t", "e").count() == 0
     ge = spark.createDataFrame([], "g string, t long, e int")
     r = logrank_test(ge, "t", "e", "g", "a", "b").first()
-    assert r["z"] is None
+    assert r["z_e6"] is None
     dv = spark.createDataFrame([], "day long, v long")
     assert cusum_curve(dv, "day", "v").count() == 0
     sp = spark.createDataFrame([], "k string, start long, end long")

@@ -53,13 +53,13 @@ def test_auc_matches_pair_counting_reference(scored):
     for g in ("g1", "g2"):
         sub = [(r["score"], r["lab"]) for r in rows if r["g"] == g]
         ref = _auc_reference([s for s, _ in sub], [l for _, l in sub])
-        assert out[g]["auc"] == pytest.approx(ref, abs=1e-6), g
-    assert out["g2"]["auc"] < 0.5 < out["g1"]["auc"]
+        assert abs(out[g]["auc_e6"] - ref * 1e6) <= 1, g
+    assert out["g2"]["auc_e6"] < 500_000 < out["g1"]["auc_e6"]
 
 
 def test_auc_degenerate_group_is_null(scored):
     out = {r["g"]: r for r in auc_by_group(scored, ["g"], "score", "lab").collect()}
-    assert out["g3"]["auc"] is None
+    assert out["g3"]["auc_e6"] is None
     assert out["g3"]["n_neg"] == 0
 
 
@@ -74,7 +74,7 @@ def test_calibration_bins_partition_rows(spark):
     # pred == 1.0 lands in the top bin, not bin 10
     assert max(by_bin) == 9
     for r in out:
-        assert 0 <= r["frac_pos"] <= 1
+        assert 0 <= r["frac_pos_e6"] <= 1_000_000
         assert r["bin_mid"] == pytest.approx((r["bin"] + 0.5) / 10)
 
 
@@ -267,14 +267,14 @@ def test_confusion_stats_perfect_and_chance(spark):
         [("a", "a")] * 3 + [("b", "b")] * 2, "t string, p string"
     )
     r = confusion_stats(perfect, "t", "p").limit(1).collect()[0]
-    assert r["accuracy"] == 1.0 and r["kappa"] == 1.0
+    assert r["accuracy_e6"] == 1_000_000 and r["kappa_e6"] == 1_000_000
 
     # constant predictor: accuracy = base rate, kappa exactly 0
     const = spark.createDataFrame(
         [("a", "a"), ("a", "a"), ("b", "a"), ("b", "a")], "t string, p string"
     )
     r = confusion_stats(const, "t", "p").limit(1).collect()[0]
-    assert r["accuracy"] == 0.5 and r["kappa"] == 0.0
+    assert r["accuracy_e6"] == 500_000 and r["kappa_e6"] == 0
 
 
 def test_confusion_cells_sum_to_total(spark):
@@ -299,7 +299,7 @@ def test_null_scores_dropped_consistently(spark):
     df = spark.createDataFrame(rows, "g string, score double, lab int")
     out = auc_by_group(df, ["g"], "score", "lab").collect()[0]
     # only the two complete rows count: perfectly separated -> AUC 1
-    assert out["n_pos"] == 1 and out["n_neg"] == 1 and out["auc"] == 1.0
+    assert out["n_pos"] == 1 and out["n_neg"] == 1 and out["auc_e6"] == 1_000_000
     cal = calibration_bins(df, "score", "lab")
     assert sum(r["n"] for r in cal.collect()) == 2
     pr = pr_at_thresholds(df, "score", "lab", [0.5]).collect()[0]
@@ -335,13 +335,15 @@ def test_two_proportion_hand_computed_and_sign(spark):
     df = spark.createDataFrame(rows, "g string, lab int")
     r = two_proportion_test(df, "g", "lab", "a", "b").collect()[0]
     assert (r["n_a"], r["pos_a"], r["n_b"], r["pos_b"]) == (100, 30, 100, 10)
-    assert r["p_a"] == 0.3 and r["p_b"] == 0.1 and r["diff"] == 0.2
+    # raw IEEE ratios: bit-equal to the same expression tree in Python
+    assert r["p_a"] == 0.3 and r["p_b"] == 0.1
+    assert r["diff"] == 30 / 100 - 10 / 100
     pooled = 40 / 200
     se = math.sqrt(pooled * (1 - pooled) * (1 / 100 + 1 / 100))
-    assert r["z"] == round(0.2 / se, 6)
+    assert r["z_e6"] == round((30 / 100 - 10 / 100) / se * 1e6)
     # swapped groups flip the sign
     r2 = two_proportion_test(df, "g", "lab", "b", "a").collect()[0]
-    assert r2["z"] == -r["z"]
+    assert r2["z_e6"] == -r["z_e6"]
 
 
 def test_two_proportion_degenerate_cases(spark):
@@ -355,13 +357,13 @@ def test_two_proportion_degenerate_cases(spark):
     # group b absent → NULL p_b/diff/z, counts zero
     r = two_proportion_test(df, "g", "lab", "a", "b").collect()[0]
     assert (r["n_b"], r["pos_b"]) == (0, 0)
-    assert r["p_b"] is None and r["z"] is None
+    assert r["p_b"] is None and r["z_e6"] is None
     # both groups all-positive → pooled = 1 → se = 0 → NULL z
     df2 = spark.createDataFrame(
         [("a", 1), ("b", 1)], "g string, lab int"
     )
     r2 = two_proportion_test(df2, "g", "lab", "a", "b").collect()[0]
-    assert r2["z"] is None and r2["diff"] == 0.0
+    assert r2["z_e6"] is None and r2["diff"] == 0.0
     # NULL labels dropped; out-of-scope groups ignored
     df3 = spark.createDataFrame(
         [("a", 1), ("a", None), ("z", 1), ("b", 0)], "g string, lab int"
@@ -385,7 +387,7 @@ def test_auc_denominator_decimal_no_wrap(spark):
     out = auc_by_group(df, ["g"], "score", "lab")
     r = out.collect()[0]
     assert (r["n_pos"], r["n_neg"]) == (2, 2)
-    assert r["auc"] == 0.75  # hand-computed: 3 of 4 pairs concordant
+    assert r["auc_e6"] == 750_000  # hand-computed: 3 of 4 pairs concordant
     # the denominator expression is decimal(38,0) end-to-end
     plan = out._jdf.queryExecution().analyzed().toString()
     assert "decimal(38,0)" in plan

@@ -66,10 +66,10 @@ def test_nelson_aalen_hand_computed(spark):
     got = {
         r.t: r for r in nelson_aalen(df, "d", "e").orderBy("t").collect()
     }
-    assert got[1].n_at_risk == 3 and got[1].cum_hazard == 0.333333
+    assert got[1].n_at_risk == 3 and got[1].cum_hazard_e6 == 333333
     assert got[2].n_at_risk == 2 and got[2].n_censored == 1
-    assert got[2].cum_hazard == 0.333333  # censor adds no hazard
-    assert got[3].n_at_risk == 1 and got[3].cum_hazard == 1.333333
+    assert got[2].cum_hazard_e6 == 333333  # censor adds no hazard
+    assert got[3].n_at_risk == 1 and got[3].cum_hazard_e6 == 1333333
 
 
 def test_nelson_aalen_guard_and_bucket(spark):
@@ -84,8 +84,8 @@ def test_nelson_aalen_guard_and_bucket(spark):
     out = nelson_aalen(df, "d", "e", bucket=5).orderBy("t").collect()
     assert [r.t for r in out] == [0, 5]
     assert out[0].n_at_risk == 10 and out[0].n_events == 5
-    assert out[0].cum_hazard == 0.5
-    assert out[1].cum_hazard == 1.5  # 1/2 + 5/5
+    assert out[0].cum_hazard_e6 == 500000
+    assert out[1].cum_hazard_e6 == 1500000  # 1/2 + 5/5
 
 
 # ---------------------------------------------------------------------------
@@ -407,7 +407,7 @@ def test_cvm_sees_oscillating_shift_ks_underweights(spark):
     cur = spark.createDataFrame(
         [(2 * i + 1,) for i in range(100)], "v long"
     )
-    ks = ks_two_sample(base, cur, F.col("v"), scaled_e6=True).collect()[0]
+    ks = ks_two_sample(base, cur, F.col("v")).collect()[0]
     cvm = cramer_von_mises(base, cur, F.col("v")).collect()[0]
     assert ks.d_stat_e6 == 10000  # D = 1/100
     # T = (100·100/200²)·Σ gaps² = 0.25·(100·(1/100)² + 100·0)
@@ -588,16 +588,16 @@ def test_nelson_aalen_matches_python_reference(spark):
         for t in times:
             if d[t] > 0 and at_risk > 0:
                 h += d[t] / at_risk
-            ref[t] = (at_risk, d[t], c[t], round(h, 6))
+            ref[t] = (at_risk, d[t], c[t], h)
             at_risk -= d[t] + c[t]
         df = spark.createDataFrame(subjects, "d long, e long")
         got = {
-            r.t: (r.n_at_risk, r.n_events, r.n_censored, r.cum_hazard)
+            r.t: (r.n_at_risk, r.n_events, r.n_censored, r.cum_hazard_e6)
             for r in nelson_aalen(df, "d", "e").collect()
         }
         assert set(got) == set(ref)
         for t in ref:
             assert got[t][:3] == ref[t][:3]
-            assert got[t][3] == pytest.approx(ref[t][3], abs=1e-6)
+            assert abs(got[t][3] - ref[t][3] * 1e6) <= 1
 
     check()

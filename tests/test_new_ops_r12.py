@@ -397,7 +397,6 @@ def test_ivf_recall_perfect_when_probing_all_lists(spark, sf_dir):
             n_probe=_IVFX_NC,
             k=_IVFX_K,
             query_filter=qf,
-            scaled_e6=True,
         ).collect()
     }
     assert truth == full

@@ -270,7 +270,7 @@ def test_ewma_parity_state_crosses_batches(spark, tmp_path):
 
 
 def test_psi_monitor_scaled_e6_report(spark, tmp_path):
-    """X242's sink contract: scaled_e6=True writes the driver-gate e6
+    """X242's sink contract: the report carries the driver-gate e6
     integer columns and derives the alert from psi_e6 against the
     micro-unit bar."""
     from legendary_data_pipeline_spark.operators.profiling import psi_drift
@@ -288,7 +288,7 @@ def test_psi_monitor_scaled_e6_report(spark, tmp_path):
     report = str(tmp_path / "report")
     run_psi_monitor_once(
         spark, str(tmp_path / "in"), "c string", base, "c",
-        report, str(tmp_path / "ckpt"), scaled_e6=True,
+        report, str(tmp_path / "ckpt"),
     )
     rows = spark.read.parquet(report).collect()
     assert {r.value for r in rows} == {"a", "b"}

@@ -17,9 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.oracle_utils import executed_plan
 
 
 def _docs(spark, n=60):
@@ -37,7 +35,7 @@ def test_bloom_probe_plan_is_join_free(spark):
 
     docs = _docs(spark)
     bm = build_bloom(docs, "text", m_bits=1 << 12)
-    plan = _plan(probe_bloom(docs, "text", bm))
+    plan = executed_plan(probe_bloom(docs, "text", bm))
     assert "Join" not in plan
     assert "Exchange" not in plan  # zero shuffles on the probe side
 
@@ -60,7 +58,7 @@ def test_leakage_split_component_join_unhinted(spark):
     out = leakage_safe_split(docs, comps)
     logical = out._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in logical  # no forced broadcast
-    assert "Join" in _plan(out)
+    assert "Join" in executed_plan(out)
 
 
 def test_nb_scoring_broadcasts_weights(spark):
@@ -71,7 +69,7 @@ def test_nb_scoring_broadcasts_weights(spark):
 
     docs = _docs(spark)
     weights, prior = train_nb(docs, docs.limit(10), m=256)
-    plan = _plan(score_nb(docs, weights, prior, m=256))
+    plan = executed_plan(score_nb(docs, weights, prior, m=256))
     assert "BroadcastHashJoin" in plan
 
 
@@ -83,7 +81,7 @@ def test_suppression_is_semi_join(spark):
     df = spark.range(100).select(
         (F.col("id") % 5).alias("a"), (F.col("id") % 3).alias("b")
     )
-    plan = _plan(suppress_below_k(df, ["a", "b"], k=10))
+    plan = executed_plan(suppress_below_k(df, ["a", "b"], k=10))
     assert "LeftSemi" in plan
 
 
@@ -101,6 +99,6 @@ def test_maxsim_blocked_is_not_cartesian(spark):
         (F.col("id") % 4).cast("int").alias("label"),
     )
     mv = multivec_from_embedding(emb, n_vecs=2)
-    plan = _plan(maxsim_topk(mv, k=2, query_filter=F.col("vec_id") < 2))
+    plan = executed_plan(maxsim_topk(mv, k=2, query_filter=F.col("vec_id") < 2))
     assert "CartesianProduct" not in plan
     assert "Join" in plan

@@ -19,9 +19,7 @@ from datetime import date
 
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.oracle_utils import executed_plan
 
 
 def _docs(spark, n=40):
@@ -37,7 +35,7 @@ def _docs(spark, n=40):
 def test_c4_gates_is_map_only(spark):
     from legendary_data_pipeline_spark.operators.curation import c4_gates
 
-    plan = _plan(c4_gates(_docs(spark), bad_words=("porn",)))
+    plan = executed_plan(c4_gates(_docs(spark), bad_words=("porn",)))
     assert "Exchange" not in plan
 
 
@@ -47,14 +45,14 @@ def test_html_extract_is_map_only(spark):
     df = _docs(spark).select(
         "doc_id", F.concat(F.lit("<p>"), "text", F.lit("</p>")).alias("raw_html")
     )
-    plan = _plan(html_extract(df))
+    plan = executed_plan(html_extract(df))
     assert "Exchange" not in plan
 
 
 def test_c4_span_stats_no_cartesian(spark):
     from legendary_data_pipeline_spark.operators.curation import c4_span_stats
 
-    plan = _plan(c4_span_stats(_docs(spark)))
+    plan = executed_plan(c4_span_stats(_docs(spark)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -66,7 +64,7 @@ def test_gap_fill_window_is_group_partitioned(spark):
         [("a", date(2024, 1, 1), 1), ("a", date(2024, 1, 5), 5)],
         "g string, d date, v long",
     )
-    plan = _plan(gap_fill_daily(df, "d", ["v"], ["g"]))
+    plan = executed_plan(gap_fill_daily(df, "d", ["v"], ["g"]))
     # The fill window partitions by the group key — no global sort.
     assert "Window" in plan
     assert "SinglePartition" not in plan
@@ -81,7 +79,7 @@ def test_chi_square_marginals_broadcast(spark):
         (F.col("id") % 3).cast("string").alias("a"),
         (F.col("id") % 5).cast("string").alias("b"),
     )
-    plan = _plan(chi_square_independence(df, "a", "b"))
+    plan = executed_plan(chi_square_independence(df, "a", "b"))
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -92,7 +90,7 @@ def test_triangle_count_no_cartesian(spark):
     edges = spark.range(100).select(
         (F.col("id") % 30).alias("id_a"), (F.col("id") % 7 + 30).alias("id_b")
     )
-    plan = _plan(triangle_count(edges))
+    plan = executed_plan(triangle_count(edges))
     assert "CartesianProduct" not in plan
 
 
@@ -110,5 +108,5 @@ def test_hard_negatives_ivf_no_cartesian(spark):
             (F.col("id") % 3).cast("double"),
         ).alias("embedding"),
     )
-    plan = _plan(hard_negatives_ivf(emb, k=2, n_centroids=4, n_probe=2))
+    plan = executed_plan(hard_negatives_ivf(emb, k=2, n_centroids=4, n_probe=2))
     assert "CartesianProduct" not in plan

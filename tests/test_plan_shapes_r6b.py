@@ -15,9 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.oracle_utils import executed_plan
 
 
 def _docs(spark, n=40):
@@ -41,13 +39,13 @@ def _scored(spark, n=200):
 def test_readability_is_map_only(spark):
     from legendary_data_pipeline_spark.operators.textstats import readability
 
-    assert "Exchange" not in _plan(readability(_docs(spark)))
+    assert "Exchange" not in executed_plan(readability(_docs(spark)))
 
 
 def test_auc_no_global_single_partition_sweep(spark):
     from legendary_data_pipeline_spark.operators.mleval import auc_by_group
 
-    plan = _plan(auc_by_group(_scored(spark), ["g"], "score", "lab"))
+    plan = executed_plan(auc_by_group(_scored(spark), ["g"], "score", "lab"))
     # the cumulative window must partition by group, not run globally
     assert "Exchange SinglePartition" not in plan
 
@@ -57,7 +55,7 @@ def test_pr_grid_is_broadcast(spark):
         pr_at_thresholds,
     )
 
-    plan = _plan(
+    plan = executed_plan(
         pr_at_thresholds(_scored(spark), "score", "lab", [0.2, 0.5, 0.8])
     )
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
@@ -71,7 +69,7 @@ def test_prefix_join_no_cartesian_or_bnlj(spark):
     )
 
     tok = tokenize_ws_distinct(_docs(spark), "text", "doc_id")
-    plan = _plan(prefix_filter_jaccard_join(tok, 1, 2))
+    plan = executed_plan(prefix_filter_jaccard_join(tok, 1, 2))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -81,6 +79,6 @@ def test_keywords_no_cartesian(spark):
         keywords_tf_rarity,
     )
 
-    plan = _plan(keywords_tf_rarity(_docs(spark)))
+    plan = executed_plan(keywords_tf_rarity(_docs(spark)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -19,9 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.oracle_utils import executed_plan
 
 
 def _vals(spark, n=64):
@@ -39,7 +37,7 @@ def test_psi_scans_each_side_once(spark):
     from legendary_data_pipeline_spark.operators.profiling import psi_drift
 
     d = _vals(spark)
-    plan = _plan(psi_drift(d, d, "cat"))
+    plan = executed_plan(psi_drift(d, d, "cat"))
     assert "CartesianProduct" not in plan
     # one corpus pass per snapshot side: totals/psi attach via windows
     # over the count frame, never extra agg branches re-reading the data
@@ -49,7 +47,7 @@ def test_psi_scans_each_side_once(spark):
 def test_woe_iv_single_corpus_pass(spark):
     from legendary_data_pipeline_spark.operators.mleval import woe_iv
 
-    plan = _plan(woe_iv(_vals(spark), "cat", "lab"))
+    plan = executed_plan(woe_iv(_vals(spark), "cat", "lab"))
     assert "CartesianProduct" not in plan
     assert plan.count("Range (0, 64") == 1
 
@@ -57,7 +55,7 @@ def test_woe_iv_single_corpus_pass(spark):
 def test_kendall_bounded_data_passes(spark):
     from legendary_data_pipeline_spark.operators.stats import kendall_tau_b
 
-    plan = _plan(kendall_tau_b(_vals(spark), "a", "b"))
+    plan = executed_plan(kendall_tau_b(_vals(spark), "a", "b"))
     assert "CartesianProduct" not in plan
     # marginals come from ONE annotated pass; only the cell self-join
     # adds two more consumers of the grid aggregation
@@ -67,7 +65,7 @@ def test_kendall_bounded_data_passes(spark):
 def test_spearman_window_rides_on_value_aggregate(spark):
     from legendary_data_pipeline_spark.operators.stats import spearman_matrix
 
-    plan = _plan(spearman_matrix(_vals(spark), ["x", "y"]))
+    plan = executed_plan(spearman_matrix(_vals(spark), ["x", "y"]))
     # Round 9: the rank construction (distinct-value aggregate +
     # distributed prefix-sum windows) now lives BEHIND the pinned
     # rank-map checkpoint, so the final plan shows no Window at all —
@@ -92,7 +90,7 @@ def test_pearson_single_source_pass(spark):
         correlation_matrix,
     )
 
-    plan = _plan(correlation_matrix(_vals(spark), ["x", "y", "a"]))
+    plan = executed_plan(correlation_matrix(_vals(spark), ["x", "y", "a"]))
     # one moment pass; pair reshape explodes literal structs — a
     # per-pair union would replay the scan once per pair
     assert plan.count("Range (0, 64") == 1
@@ -103,7 +101,7 @@ def test_gini_window_rides_on_value_aggregate(spark):
         gini_concentration,
     )
 
-    plan = _plan(gini_concentration(_vals(spark), "a", ["cat"]))
+    plan = executed_plan(gini_concentration(_vals(spark), "a", ["cat"]))
     assert "Window" in plan and "HashAggregate" in plan
 
 
@@ -116,7 +114,7 @@ def test_scd2_reuses_one_key_exchange(spark):
         [("u", i, "s%d" % (i % 3)) for i in range(30)],
         "k string, t long, state string",
     )
-    plan = _plan(scd2_from_changelog(log, ["k"], "t", ["state"]))
+    plan = executed_plan(scd2_from_changelog(log, ["k"], "t", ["state"]))
     # hashpartitioning on the key appears; count the data-sized
     # exchanges: every Exchange must be keyed (no SinglePartition over
     # data; the episode frame is episode-sized, also keyed)
@@ -132,7 +130,7 @@ def test_surprisal_scoring_no_cartesian(spark):
     docs = spark.createDataFrame(
         [(i, "a b c") for i in range(10)], "doc_id long, text string"
     )
-    plan = _plan(unigram_surprisal_gate(docs, docs, 10**9))
+    plan = executed_plan(unigram_surprisal_gate(docs, docs, 10**9))
     assert "CartesianProduct" not in plan
 
 
@@ -145,6 +143,6 @@ def test_embedding_quality_single_aggregation(spark):
         [(i, "l", [1.0, 2.0]) for i in range(10)],
         "vec_id long, label string, embedding array<double>",
     )
-    plan = _plan(embedding_quality_report(emb, expected_dim=2))
+    plan = executed_plan(embedding_quality_report(emb, expected_dim=2))
     assert "Window" not in plan
     assert "Join" not in plan  # one straight aggregation

@@ -146,7 +146,6 @@ def test_calibration_bins_property_matches_python(spark):
                 "p",
                 "label",
                 n_bins=10,
-                scaled_e6=True,
             ).collect()
         }
         ref: dict[int, list[int]] = {}

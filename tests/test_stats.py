@@ -669,14 +669,14 @@ def test_chi_square_perfect_dependence_and_independence(spark):
         [("x", "x")] * 5 + [("y", "y")] * 5, "a string, b string"
     )
     r = chi_square_independence(dep, "a", "b").first()
-    assert r["dof"] == 1 and r["cramers_v"] == 1.0
+    assert r["dof"] == 1 and r["cramers_v_e6"] == 1_000_000
     # Perfect independence: uniform product table ⇒ chi2 = 0.
     ind = spark.createDataFrame(
         [(a, b) for a in "xy" for b in "uv" for _ in range(3)],
         "a string, b string",
     )
     r = ind.transform(lambda d: chi_square_independence(d, "a", "b")).first()
-    assert r["chi2"] == 0.0 and r["cramers_v"] == 0.0
+    assert r["chi2_e6"] == 0 and r["cramers_v_e6"] == 0
 
 
 def test_chi_square_degenerate_single_category(spark):
@@ -688,7 +688,7 @@ def test_chi_square_degenerate_single_category(spark):
         [("only", "u"), ("only", "v")], "a string, b string"
     )
     r = chi_square_independence(df, "a", "b").first()
-    assert r["dof"] == 0 and r["chi2"] is None and r["cramers_v"] is None
+    assert r["dof"] == 0 and r["chi2_e6"] is None and r["cramers_v_e6"] is None
 
 
 def test_mutual_information_bounds(spark):
@@ -702,14 +702,14 @@ def test_mutual_information_bounds(spark):
         [("x", "x")] * 4 + [("y", "y")] * 4, "a string, b string"
     )
     r = mutual_information(dep, "a", "b").first()
-    assert r["mi"] == round(math.log(2), 6) and r["nmi"] == 1.0
+    assert r["mi_e6"] == round(math.log(2) * 1e6) and r["nmi_e6"] == 1_000_000
     # Independent: MI = 0.
     ind = spark.createDataFrame(
         [(a, b) for a in "xy" for b in "uv" for _ in range(3)],
         "a string, b string",
     )
     r = mutual_information(ind, "a", "b").first()
-    assert r["mi"] == 0.0
+    assert r["mi_e6"] == 0
 
 
 def test_gap_fill_daily_spine_and_ffill(spark):

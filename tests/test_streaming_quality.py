@@ -192,8 +192,8 @@ def test_psi_monitor_alerts_on_shifted_batch(spark, tmp_path):
         by_batch.setdefault(r.batch_id, r.alert)
     assert sorted(by_batch.values()) == [False, True]
     # matching batch: tiny PSI; flipped batch: way past 0.25
-    psis = {r.batch_id: r.psi for r in rep.collect()}
-    assert min(psis.values()) < 0.05 and max(psis.values()) > 0.25
+    psis = {r.batch_id: r.psi_e6 for r in rep.collect()}
+    assert min(psis.values()) < 50_000 and max(psis.values()) > 250_000
 
 
 def test_psi_monitor_rejects_empty_baseline(spark, tmp_path):

@@ -2,7 +2,8 @@
 """Dump .explain("formatted") for named registry/shadow queries.
 
 Usage: python tools/dump_plans.py <suffix> name1 name2 ...
-Writes plans/r15/<name>_<suffix>.txt for each query.
+Writes plans/r16/<name>_<suffix>.txt for each query (the round
+directory comes from $LDP_PLANS_ROUND, default r16).
 
 Streaming parity queries are skipped automatically — building their
 returned frame would EXECUTE the availableNow job. Per-micro-batch
