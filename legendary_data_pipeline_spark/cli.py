@@ -6,7 +6,9 @@ flags: `--date/--since/--until/--all-dates/--currency`,
 `01_import_pricecharting_csv.js:100-117`) over a parquet warehouse
 directory: each table lives at `<warehouse>/<name>`, writers are the
 idempotent sinks from `operators.upsert`, and every run is recorded in
-`<warehouse>/pipeline_runs` (S10).
+`<warehouse>/pipeline_runs` (S10). A run's `row_count` is observed from
+the write itself (`DataFrame.observe` on the frame handed to the
+writer), so logging it costs no second pass over the plan.
 
     python -m legendary_data_pipeline_spark.cli import-pricecharting \
         --warehouse /data/wh --file prices.csv --game pokemon --date 2026-08-13
@@ -20,7 +22,8 @@ import argparse
 import sys
 from datetime import date as _date
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.plans import jobs
 from legendary_data_pipeline_spark.session import get_spark
@@ -48,6 +51,13 @@ def _today() -> str:
     return _date.today().isoformat()
 
 
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` counting its rows into the returned Observation (`.get["rows"]`)
+    during whatever action consumes it — no extra job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
 def cmd_import_pricecharting(spark: SparkSession, args) -> int:
     from legendary_data_pipeline_spark.operators.upsert import (
         write_upsert_parquet,
@@ -69,6 +79,8 @@ def cmd_import_pricecharting(spark: SparkSession, args) -> int:
         ["game", "pricecharting_id", "source_date"],
         spark,
     )
+    # Logs the size of the merged table, which the input frame does not
+    # carry, so this one is read back rather than observed.
     n = spark.read.parquet(
         _table(args.warehouse, "pricecharting_prices_raw")
     ).count()
@@ -80,15 +92,14 @@ def cmd_normalize_scryfall(spark: SparkSession, args) -> int:
     from legendary_data_pipeline_spark.operators.upsert import (
         write_upsert_parquet,
     )
-    from pyspark.sql import functions as F
 
     log = _table(args.warehouse, "pipeline_runs")
     run_id = start_run(spark, log, "normalize_scryfall")
-    out = jobs.normalize_scryfall(
+    out, obs = _observed(jobs.normalize_scryfall(
         _read(spark, args.warehouse, "scryfall_cards_raw"),
         _read(spark, args.warehouse, "market_items"),
         args.date,
-    )
+    ))
     write_upsert_parquet(
         _table(args.warehouse, "market_price_snapshots"),
         out,
@@ -103,7 +114,7 @@ def cmd_normalize_scryfall(spark: SparkSession, args) -> int:
         spark,
         order_within_source=[F.col("value_cents").desc()],
     )
-    finish_run(spark, log, run_id, "normalize_scryfall", out.count())
+    finish_run(spark, log, run_id, "normalize_scryfall", obs.get["rows"])
     return 0
 
 
@@ -114,20 +125,20 @@ def cmd_build_daily(spark: SparkSession, args) -> int:
 
     log = _table(args.warehouse, "pipeline_runs")
     run_id = start_run(spark, log, "build_market_price_daily")
-    out = jobs.build_market_price_daily(
+    out, obs = _observed(jobs.build_market_price_daily(
         _read(spark, args.warehouse, "market_price_snapshots"),
         date=None if args.all_dates else args.date,
         since=args.since,
         until=args.until,
         currency=args.currency,
-    )
+    ))
     write_upsert_partitioned(
         _table(args.warehouse, "market_price_daily"),
         out,
         ["as_of_date"],
         spark,
     )
-    finish_run(spark, log, run_id, "build_market_price_daily", out.count())
+    finish_run(spark, log, run_id, "build_market_price_daily", obs.get["rows"])
     return 0
 
 
@@ -138,16 +149,16 @@ def cmd_rollup_values(spark: SparkSession, args) -> int:
 
     log = _table(args.warehouse, "pipeline_runs")
     run_id = start_run(spark, log, "rollup_market_values")
-    out = jobs.rollup_market_values(
+    out, obs = _observed(jobs.rollup_market_values(
         _read(spark, args.warehouse, "market_sales_comps"), args.date
-    )
+    ))
     write_upsert_partitioned(
         _table(args.warehouse, "market_values_daily"),
         out,
         ["as_of_date"],
         spark,
     )
-    finish_run(spark, log, run_id, "rollup_market_values", out.count())
+    finish_run(spark, log, run_id, "rollup_market_values", obs.get["rows"])
     return 0
 
 
@@ -160,15 +171,17 @@ def cmd_export_feed(spark: SparkSession, args) -> int:
 
     log = _table(args.warehouse, "pipeline_runs")
     run_id = start_run(spark, log, "export_feed")
-    feed = jobs.export_google_merchant_feed(
+    # Observed above the feed's sort, which the range-sort's sampling job
+    # does not run, so only the write counts rows.
+    feed, obs = _observed(jobs.export_google_merchant_feed(
         _read(spark, args.warehouse, "products"),
         opt("tcg_cards"),
         opt("ygo_card_images"),
         opt("scryfall_cards_raw"),
         site_base=args.site_base,
-    )
+    ))
     write_feed(feed, args.out, fmt=args.format)
-    finish_run(spark, log, run_id, "export_feed", feed.count())
+    finish_run(spark, log, run_id, "export_feed", obs.get["rows"])
     return 0
 
 
@@ -194,6 +207,7 @@ def cmd_revalue(spark: SparkSession, args) -> int:
     )
     items = _read(spark, args.warehouse, "user_collection_items")
     updates, valuations = jobs.revalue_collection(items, prices, args.date)
+    valuations, obs = _observed(valuations)
     # S7: replace the day's valuations FIRST — `valuations` lineage scans
     # the items files, which the S8 rewrite below replaces.
     write_upsert_partitioned(
@@ -202,7 +216,6 @@ def cmd_revalue(spark: SparkSession, args) -> int:
         ["as_of_date"],
         spark,
     )
-    n_valuations = valuations.count()
     # S8: bulk keyed update of item values (join replaces the column).
     refreshed = items.drop("last_value_cents").join(
         updates.select("id", "last_value_cents"), "id", "left"
@@ -210,7 +223,7 @@ def cmd_revalue(spark: SparkSession, args) -> int:
     write_upsert_parquet(
         _table(args.warehouse, "user_collection_items"), refreshed, ["id"], spark
     )
-    finish_run(spark, log, run_id, "revalue_collection", n_valuations)
+    finish_run(spark, log, run_id, "revalue_collection", obs.get["rows"])
     return 0
 
 
@@ -223,8 +236,6 @@ def cmd_curate(spark: SparkSession, args) -> int:
     batch corpora — same stage function, same keyed-dedup convention, so
     a batch backfill and the stream produce identical curated tables.
     """
-    from pyspark.sql import functions as F
-
     from legendary_data_pipeline_spark.sources.jsonl import (
         quarantine,
         read_jsonl,
@@ -442,8 +453,6 @@ def cmd_dq(spark: SparkSession, args) -> int:
     scan for the row-level checks plus one distinct pass per unique key.
     """
     import json as _json
-
-    from pyspark.sql import functions as F
 
     from legendary_data_pipeline_spark.operators.profiling import (
         check_constraints,

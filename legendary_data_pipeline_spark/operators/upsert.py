@@ -79,9 +79,13 @@ def write_upsert_parquet(
 ) -> None:
     """S5 physical writer for non-partitioned tables.
 
-    Reads current state, merges, writes to a new location-in-time then
-    atomically swaps via overwrite. For partitioned daily-snapshot tables
-    prefer `write_upsert_partitioned` (rewrites only touched dates).
+    Reads current state, merges, pins the merged rows with an eager
+    `localCheckpoint` (executor-local blocks, not durable storage), then
+    overwrites the table in place. The overwrite is not atomic: the old
+    files are deleted before the new ones are committed, so a write that
+    fails part-way loses the table's rows (the checkpoint does not outlive
+    the session). For partitioned daily-snapshot tables prefer
+    `write_upsert_partitioned` (rewrites only touched dates).
     """
     try:
         existing = spark.read.parquet(existing_path)
@@ -155,10 +159,11 @@ def write_upsert_partitioned(
 ) -> None:
     """S7 physical writer: replace exactly the partitions present in
     `updates` (dynamic partition overwrite) — the delete-then-insert-date
-    pattern, minus the full-table rewrite."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    pattern, minus the full-table rewrite. The mode is a per-write option,
+    so the session's `partitionOverwriteMode` is left as it was."""
     (
         updates.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(existing_path)
     )

@@ -9,6 +9,13 @@ per run (`started`, `finished`) keyed by run_id; "current state" is the
 latest event per run (last-value-per-group, the same J9 pattern). Append
 beats update-in-place on immutable storage and is the idempotency-safe
 shape at scale.
+
+Each event is a one-row frame of JVM literals over a one-partition
+`range`, cast to `RUNLOG_SCHEMA`, so an append is one write job with one
+task and leaves one parquet file. (`createDataFrame` of a Python list
+would parallelize the row over every default slice and run a
+Python-worker task per slice on every action.) `event_at` is an aware
+UTC datetime: a naive one is read as host-local time on the way in.
 """
 
 from __future__ import annotations
@@ -19,6 +26,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 RUNLOG_SCHEMA = (
     "run_id string, job string, status string, file_name string, "
@@ -36,9 +44,10 @@ def sha256_file(path: str) -> str:
 
 
 def _append(spark: SparkSession, log_path: str, row: dict) -> None:
-    spark.createDataFrame([row], schema=RUNLOG_SCHEMA).write.mode(
-        "append"
-    ).parquet(log_path)
+    fields = DataType.fromDDL(RUNLOG_SCHEMA).fields
+    spark.range(1, numPartitions=1).select(
+        *[F.lit(row[f.name]).cast(f.dataType).alias(f.name) for f in fields]
+    ).write.mode("append").parquet(log_path)
 
 
 def start_run(
@@ -61,7 +70,7 @@ def start_run(
             "file_sha256": file_sha256,
             "row_count": None,
             "meta": meta,
-            "event_at": datetime.now(timezone.utc).replace(tzinfo=None),
+            "event_at": datetime.now(timezone.utc),
         },
     )
     return run_id
@@ -86,7 +95,7 @@ def finish_run(
             "file_sha256": None,
             "row_count": row_count,
             "meta": None,
-            "event_at": datetime.now(timezone.utc).replace(tzinfo=None),
+            "event_at": datetime.now(timezone.utc),
         },
     )
 

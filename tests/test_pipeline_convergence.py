@@ -15,7 +15,9 @@ from __future__ import annotations
 
 import glob
 import json
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark import cli
@@ -182,3 +184,68 @@ def test_full_chain_rerun_converges(spark, tmp_path, monkeypatch):
         ).collect()
     }
     assert len(shas) == 1  # same input file, same recorded lineage hash
+
+
+@pytest.fixture(scope="module")
+def chain_once(spark, tmp_path_factory):
+    """One pass of the chain; returns the warehouse and each job's logged
+    `finished` row_count, read before any test appends more runs."""
+    tmp = tmp_path_factory.mktemp("runlog")
+    wh = str(tmp / "wh")
+    _run_chain(spark, wh, _write_fixture(spark, tmp, wh), str(tmp / "feed"))
+    finished = spark.read.parquet(f"{wh}/pipeline_runs").filter(
+        F.col("status") == "finished"
+    )
+    return wh, {r["job"]: r["row_count"] for r in finished.collect()}
+
+
+def test_run_log_row_counts_match_outputs(spark, chain_once):
+    """Each job's logged row_count (observed from its write) equals a count
+    of what it wrote, taken here from the tables."""
+    wh, logged = chain_once
+
+    def rows(table):
+        return spark.read.parquet(f"{wh}/{table}").count()
+
+    assert logged == {
+        "import_pricecharting": rows("pricecharting_prices_raw"),
+        "normalize_scryfall": rows("market_price_snapshots"),
+        "build_market_price_daily": rows("market_price_daily"),  # --all-dates
+        "rollup_market_values": rows("market_values_daily"),
+        "export_feed": rows("products"),  # one feed row per product
+        "revalue_collection": rows("user_collection_daily_valuations"),
+    }
+
+
+def test_build_daily_without_snapshots_logs_zero(spark, chain_once):
+    """A day with no snapshots writes nothing and logs 0; reading the
+    observed count of that empty write must not block."""
+    wh, logged = chain_once
+    argv = ["build-daily", "--warehouse", wh, "--date", "2030-01-01"]
+    errors = []
+
+    def run():
+        try:
+            _run(spark, argv)
+        except Exception as exc:  # re-raised below, in the test thread
+            errors.append(exc)
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(300)
+    assert not worker.is_alive(), "build-daily still running after 300 s"
+    if errors:
+        raise errors[0]
+    finished = spark.read.parquet(f"{wh}/pipeline_runs").filter(
+        (F.col("job") == "build_market_price_daily")
+        & (F.col("status") == "finished")
+    )
+    assert sorted(r["row_count"] for r in finished.collect()) == sorted(
+        [0, logged["build_market_price_daily"]]
+    )
+
+
+def test_run_log_writes_one_file_per_event(spark, chain_once):
+    wh, _ = chain_once
+    files = glob.glob(f"{wh}/pipeline_runs/*.parquet")
+    assert len(files) == spark.read.parquet(f"{wh}/pipeline_runs").count()

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -99,6 +100,29 @@ def test_runlog_lifecycle(spark, tmp_path, csv_path):
     assert len(state) == 1
     assert state[0].status == "finished"
     assert state[0].row_count == 2
+
+
+def test_runlog_event_at_is_utc_whatever_the_host_timezone(spark, tmp_path):
+    """`event_at` is the true UTC instant when the Python process's local
+    timezone is not UTC (a naive datetime would be read as local time)."""
+    log_path = str(tmp_path / "runs")
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Tokyo"
+    time.tzset()
+    try:
+        t0 = time.time()
+        start_run(spark, log_path, "tz_probe")
+        t1 = time.time()
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    (row,) = spark.read.parquet(log_path).select(
+        F.unix_micros("event_at").alias("us")
+    ).collect()
+    assert t0 - 1 <= row.us / 1e6 <= t1 + 1
 
 
 # ---------------------------------------------------------------------------

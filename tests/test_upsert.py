@@ -98,6 +98,29 @@ def test_write_upsert_partitioned_replaces_only_touched(spark, tmp_path):
     }
 
 
+def test_write_upsert_partitioned_leaves_session_conf(spark, tmp_path):
+    """Dynamic overwrite is the write's own option: a session left on
+    `static` stays `static`, and the write still keeps the partitions it
+    does not touch (a static overwrite would delete them)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "daily")
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        for day, v in (("2024-01-01", 10), ("2024-01-02", 20)):
+            write_upsert_partitioned(
+                path,
+                spark.sql(f"SELECT DATE'{day}' AS as_of_date, {v} AS v"),
+                ["as_of_date"],
+                spark,
+            )
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+    state = {str(r.as_of_date): r.v for r in spark.read.parquet(path).collect()}
+    assert state == {"2024-01-01": 10, "2024-01-02": 20}
+
+
 def test_write_upsert_auto_falls_back_to_parquet(spark, tmp_path):
     """Without Delta in the environment, auto upsert uses the documented
     parquet fallback and still converges."""
