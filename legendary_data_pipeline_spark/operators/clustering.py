@@ -23,26 +23,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.operators.dsir import hashed_ngram_counts
-from legendary_data_pipeline_spark.operators.sampling import (
-    bounded_hash_sample,
+from legendary_data_pipeline_spark.operators.similarity import (
+    _as_double,
+    _fixed_assign,
+    _frozen_codebook,
+    _trained_codebook,
 )
-from legendary_data_pipeline_spark.operators.similarity import _lloyd_codebook
+
+#: Hashed-profile geometry of the topic features: word bigrams into
+#: 256 buckets.
+_SHINGLE_N, _M = 2, 256
+#: Seed of both the topic codebook sample and the balanced draw.
+_SEED = 33
 
 
-def doc_feature_vectors(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 2,
-    m: int = 256,
-) -> DataFrame:
-    """(id, buckets, counts): each document's sparse hashed profile,
+def doc_feature_vectors(df: DataFrame) -> DataFrame:
+    """(doc_id, buckets, counts): each document's sparse hashed profile,
     bucket-sorted so densification is a deterministic scatter."""
-    counts = hashed_ngram_counts(df, id_col, text_col, shingle_n, m)
+    counts = hashed_ngram_counts(df, "doc_id", "text", _SHINGLE_N, _M)
     pairs = F.array_sort(
         F.collect_list(F.struct("bucket", "cnt"))
     )
-    return counts.groupBy(id_col).agg(
+    return counts.groupBy("doc_id").agg(
         F.transform(pairs, lambda s: s["bucket"]).alias("buckets"),
         F.transform(pairs, lambda s: s["cnt"]).alias("counts"),
     )
@@ -55,64 +57,54 @@ def _densify(bk: np.ndarray, ct: np.ndarray, m: int) -> np.ndarray:
     return v / n if n > 0 else v
 
 
+def _densify_rows(buckets, counts) -> np.ndarray:
+    return np.stack(
+        [
+            _densify(
+                np.asarray(b, dtype=np.int64),
+                np.asarray(c, dtype=np.float64),
+                _M,
+            )
+            for b, c in zip(buckets, counts)
+        ]
+    )
+
+
 def kmeans_topics(
     df: DataFrame,
     k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 2,
-    m: int = 256,
-    seed: int = 33,
-    max_train: int = 4096,
     train_fraction: float = 0.2,
 ) -> DataFrame:
-    """(id, cluster): deterministic k-means topic assignment over
+    """(doc_id, cluster): deterministic k-means topic assignment over
     L2-normalized hashed-n-gram profiles."""
-    feats = doc_feature_vectors(df, id_col, text_col, shingle_n, m)
-    sample = bounded_hash_sample(
+    feats = doc_feature_vectors(df)
+    codebook = _trained_codebook(
         feats,
-        id_col,
-        seed,
-        max_rows=max_train,
-        fraction=train_fraction,
-        min_rows=k * 4,
+        "doc_id",
+        k,
+        seed=_SEED,
+        iters=8,
+        train_fraction=train_fraction,
+        to_matrix=lambda rows: _densify_rows(
+            [r["buckets"] for r in rows], [r["counts"] for r in rows]
+        ),
     )
-    if not sample:
+    if codebook is None:
         return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, cluster int"
+            [], "doc_id long, cluster int"
         )
-    X = np.stack(
-        [
-            _densify(
-                np.asarray(r["buckets"], dtype=np.int64),
-                np.asarray(r["counts"], dtype=np.float64),
-                m,
-            )
-            for r in sample
-        ]
-    )
-    C = _lloyd_codebook(X, k, iters=8, seed=seed)
-    c_norm2 = (C * C).sum(axis=1)
+    _, _, dist = codebook
 
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("int")
     def assign(bk: pd.Series, ct: pd.Series) -> pd.Series:
-        V = np.stack(
-            [
-                _densify(
-                    np.asarray(b, dtype=np.int64),
-                    np.asarray(c, dtype=np.float64),
-                    m,
-                )
-                for b, c in zip(bk, ct)
-            ]
+        return pd.Series(
+            dist(_densify_rows(bk, ct)).argmin(axis=1).astype("int32")
         )
-        d2 = V @ C.T * (-2.0) + c_norm2[None, :]
-        return pd.Series(d2.argmin(axis=1).astype("int32"))
 
     return feats.select(
-        F.col(id_col), assign("buckets", "counts").alias("cluster")
+        F.col("doc_id"), assign("buckets", "counts").alias("cluster")
     )
 
 
@@ -120,11 +112,6 @@ def cluster_balanced_take_n(
     df: DataFrame,
     n_per_cluster: int,
     k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 2,
-    m: int = 256,
-    seed: int = 33,
 ) -> DataFrame:
     """Deterministic cluster-balanced selection: assign topics, then
     exactly min(n, |cluster|) docs per cluster by seeded hash order
@@ -135,36 +122,35 @@ def cluster_balanced_take_n(
     )
 
     # LEFT join + sentinel cluster −1: documents too short to produce
-    # any n-gram feature (fewer than shingle_n tokens, empty/NULL text)
+    # any n-gram feature (fewer than two tokens, empty/NULL text)
     # still participate in the draw as their own stratum instead of
     # silently vanishing from the sample.
     assigned = df.join(
-        kmeans_topics(df, k, id_col, text_col, shingle_n, m, seed),
-        id_col,
+        kmeans_topics(df, k),
+        "doc_id",
         "left",
     ).withColumn("cluster", F.coalesce(F.col("cluster"), F.lit(-1)))
     return stratified_take_n(
         assigned,
         n_per_cluster,
         stratum_col="cluster",
-        id_col=id_col,
-        seed=seed,
+        id_col="doc_id",
+        seed=_SEED,
     )
 
 
 def fixed_codebook_assign(
     embeddings: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, cluster) nearest-centroid assignment against a FIXED
+    """(vec_id, cluster) nearest-centroid assignment against a FIXED
     codebook: the corpus vectors with the ``n_centroids`` smallest ids
-    (same freeze convention as `similarity.ivf_fixed_topk`). Distances
-    are declarative sequential-fold arithmetic (`zip_with`/`aggregate`,
-    ties → lower centroid id), so a SQL oracle replays every assignment
-    bit-for-bit — the hash-oracle-able twin of the trained
-    `kmeans_topics` (whose Lloyd codebook is rows-only checkable).
+    (same freeze convention and the same `similarity._fixed_assign`
+    kernel as `similarity.ivf_fixed_topk`). Distances are declarative
+    sequential-fold arithmetic (`zip_with`/`aggregate`, ties → lower
+    centroid id), so a SQL oracle replays every assignment bit-for-bit
+    — the hash-oracle-able twin of the trained `kmeans_topics` (whose
+    Lloyd codebook is rows-only checkable).
 
     Plan shape: the codebook is an ``n_centroids``-row broadcast; the
     corpus streams through one broadcast nested-loop fan-out and a
@@ -172,27 +158,10 @@ def fixed_codebook_assign(
     window's hash partitioning on the id.
     """
     base = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+        "vec_id", _as_double(F.col("embedding")).alias("vec")
     )
-    cents = base.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("__cid"), F.col("__v").alias("__cv")
-    )
-    xx = F.aggregate(F.col("__v"), F.lit(0.0), lambda a, x: a + x * x)
-    cc = F.aggregate(F.col("__cv"), F.lit(0.0), lambda a, x: a + x * x)
-    dot = F.aggregate(
-        F.zip_with(F.col("__v"), F.col("__cv"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    d2 = xx + cc - F.lit(2.0) * dot
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(d2.asc(), F.col("__cid").asc())
-    return (
-        base.crossJoin(F.broadcast(cents))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(F.col(id_col), F.col("__cid").alias("cluster"))
+    return _fixed_assign(base, _frozen_codebook(base, n_centroids), 1).select(
+        "vec_id", F.col("cid").alias("cluster")
     )
 
 
@@ -200,8 +169,6 @@ def cluster_fixed_balanced_take_n(
     embeddings: DataFrame,
     n_per_cluster: int,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 33,
 ) -> DataFrame:
     """Cluster-balanced selection with a FIXED codebook: assign every
@@ -217,11 +184,11 @@ def cluster_fixed_balanced_take_n(
         stratified_take_n,
     )
 
-    assigned = fixed_codebook_assign(embeddings, n_centroids, id_col, vec_col)
+    assigned = fixed_codebook_assign(embeddings, n_centroids)
     return stratified_take_n(
         assigned,
         n_per_cluster,
         stratum_col="cluster",
-        id_col=id_col,
+        id_col="vec_id",
         seed=seed,
     )

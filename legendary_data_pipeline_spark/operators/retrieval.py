@@ -23,7 +23,10 @@ from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.functions.numeric import e6
 from legendary_data_pipeline_spark.operators.dedup import tokens_expr
-from legendary_data_pipeline_spark.operators.ranking import top_k_per_group
+from legendary_data_pipeline_spark.operators.similarity import (
+    _rank_top_k,
+    dot_expr,
+)
 
 
 def bm25_topk(
@@ -32,12 +35,9 @@ def bm25_topk(
     k: int = 5,
     k1: float = 1.2,
     b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id: str = "query_id",
-    query_text: str = "query_text",
 ) -> DataFrame:
-    """Top-k documents per query under BM25.
+    """Top-k documents per query under BM25: `docs` (doc_id, text),
+    `queries` (query_id, query_text) → (query_id, doc_id, rank, score).
 
     idf = ln(1 + (N − df + 0.5)/(df + 0.5)) (the standard non-negative
     variant); tf saturates with k1 and normalizes by document length
@@ -45,12 +45,12 @@ def bm25_topk(
     (set semantics — the common choice for short seed queries).
     """
     toks = docs.select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("term")
+        F.col("doc_id"), F.explode(tokens_expr("text")).alias("term")
     ).localCheckpoint(eager=False)  # tf + dl + avgdl (r11 scan audit)
-    tf = toks.groupBy(id_col, "term").agg(
+    tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)  # df_ + scored replay otherwise
-    dl = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     n_docs = docs.count()
     avgdl = (
         dl.agg(F.sum("dl")).first()[0] or 0
@@ -58,9 +58,9 @@ def bm25_topk(
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
     q_terms = queries.select(
-        F.col(query_id),
+        F.col("query_id"),
         F.explode(
-            F.array_distinct(tokens_expr(query_text))
+            F.array_distinct(tokens_expr("query_text"))
         ).alias("term"),
     )
 
@@ -89,17 +89,11 @@ def bm25_topk(
     scored = (
         tf.join(F.broadcast(q_terms), "term")
         .join(F.broadcast(df_q), "term")
-        .join(dl, id_col)
-        .groupBy(query_id, id_col)
+        .join(dl, "doc_id")
+        .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum(idf * norm_tf), 6).alias("score"))
     )
-    return top_k_per_group(
-        scored,
-        [query_id],
-        [F.col("score").desc(), F.col(id_col).asc()],
-        k=k,
-        rank_col="rank",
-    ).select(query_id, id_col, "rank", "score")
+    return _rank_top_k(scored, k, "score", nid="doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -110,26 +104,21 @@ def bm25_topk(
 def multivec_from_embedding(
     df: DataFrame,
     n_vecs: int,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    keep_cols: tuple[str, ...] = ("label",),
 ) -> DataFrame:
     """Deterministically reshape a D-dim embedding into `n_vecs` equal
     token-vectors of D/n_vecs dims — the multi-vector column shape
     (`array<array<double>>`) late-interaction retrieval consumes. In a
     real pipeline the token vectors come from the encoder; this adapter
     exists so the operator is testable on the single-vector
-    `embeddings` table."""
-    dim_expr = F.size(F.col(emb_col))
-    sub = F.col(emb_col).cast("array<double>")
+    `embeddings` table: (vec_id, label, vecs)."""
+    dim_expr = F.size(F.col("embedding"))
+    sub = F.col("embedding").cast("array<double>")
     per = (dim_expr / n_vecs).cast("int")
     vecs = F.transform(
         F.sequence(F.lit(0), F.lit(n_vecs - 1)),
         lambda i: F.slice(sub, i * per + 1, per),
     )
-    return df.select(
-        F.col(id_col), *[F.col(c) for c in keep_cols], vecs.alias("vecs")
-    )
+    return df.select(F.col("vec_id"), F.col("label"), vecs.alias("vecs"))
 
 
 def maxsim_expr(q_col: str, d_col: str) -> Column:
@@ -150,17 +139,12 @@ def maxsim_expr(q_col: str, d_col: str) -> Column:
     O(Q·N). The candidate-set composition mirrors `ivf_pq_topk`'s
     shortlist-then-refine shape.
     """
-    dot = lambda q, d: F.aggregate(  # noqa: E731
-        F.zip_with(q, d, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return F.aggregate(
         F.col(q_col),
         F.lit(0.0),
         lambda acc, q: acc
         + F.array_max(
-            F.transform(F.col(d_col), lambda d: dot(q, d))
+            F.transform(F.col(d_col), lambda d: dot_expr(q, d))
         ),
     )
 
@@ -169,53 +153,34 @@ def maxsim_topk(
     multivecs: DataFrame,
     k: int = 3,
     query_filter: Column | None = None,
-    block_on_label: bool = True,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vecs_col: str = "vecs",
 ) -> DataFrame:
-    """Exact late-interaction top-k: for each query row, the k docs with
-    the highest MaxSim score. Scores as `e6` integers (`maxsim_e6`)
-    before ranking and ties break on neighbor id, so the selected set is
-    stable across engines/retries.
+    """Exact late-interaction top-k over (vec_id, label, vecs) rows: for
+    each query row, the k docs with the highest MaxSim score. Scores as
+    `e6` integers (`maxsim_e6`) before ranking and ties break on
+    neighbor id, so the selected set is stable across engines/retries.
     Label blocking bounds the candidate join exactly as in
-    `similarity.cosine_topk`; pass `block_on_label=False` only for the
-    labeled exact-baseline mode."""
-    from legendary_data_pipeline_spark.operators.ranking import (
-        top_k_per_group,
-    )
-
-    base = multivecs.select(
-        F.col(id_col), F.col(label_col), F.col(vecs_col)
-    )
+    `similarity.cosine_topk`."""
+    base = multivecs.select(F.col("vec_id"), F.col("label"), F.col("vecs"))
     queries = base if query_filter is None else base.filter(query_filter)
     queries = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("q_label"),
-        F.col(vecs_col).alias("q_vecs"),
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("q_label"),
+        F.col("vecs").alias("q_vecs"),
     )
     cands = base.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("c_label"),
-        F.col(vecs_col).alias("c_vecs"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("c_label"),
+        F.col("vecs").alias("c_vecs"),
     )
-    if block_on_label:
-        joined = queries.join(cands, F.col("q_label") == F.col("c_label"))
-    else:
-        joined = queries.crossJoin(cands)
-    joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
+    joined = queries.join(
+        cands, F.col("q_label") == F.col("c_label")
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
     scored = joined.select(
         "query_id",
         "neighbor_id",
         e6(maxsim_expr("q_vecs", "c_vecs")).alias("maxsim_e6"),
     )
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("maxsim_e6").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank", "maxsim_e6")
+    return _rank_top_k(scored, k, "maxsim_e6")
 
 
 def rbo_suffix(k: int, p: float):

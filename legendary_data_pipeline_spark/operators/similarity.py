@@ -14,6 +14,21 @@
 - `semdedup` — semantic near-dup removal (within-cluster greedy
   cosine, min-id keeper).
 
+Every operator here (and in `retrieval` / `clustering`) builds on one
+set of shared pieces, so each piece of arithmetic has one definition:
+
+- `dot_expr` / `norm_expr` (`_sq_norm`) — the sequential left folds
+  all JVM-side similarity math uses; `_normed` projects a query or
+  candidate side with its norm, `_cosine` divides the fold by the norms.
+- `_rank_top_k` — the ranking tail: per query, the k best rows by
+  (score desc, neighbor id asc), numbered `rank`.
+- `_trained_codebook` — the bounded-sample Lloyd prelude of the
+  trained (rows-only) operators, with its ‖v−c‖² assignment scores;
+  `_list_topk` — their per-inverted-list numpy local top-k.
+- `_frozen_codebook` / `_fixed_assign` — the fixed-codebook freeze and
+  fold-arithmetic nearest-centroid assignment of the hash-oracle-able
+  twins.
+
 Scale design (100 TB): brute force is O(Q×N); block it (label, LSH
 bucket, IVF coarse centroid) so each probe touches a small candidate
 set. The query side should be broadcast when small. Math stays in
@@ -33,24 +48,77 @@ from legendary_data_pipeline_spark.operators.sampling import (
     bounded_hash_sample,
 )
 
+#: Output schema of the trained top-k operators (empty-sample result).
+_TOPK_SCHEMA = "query_id long, neighbor_id long, rank int, cos_sim double"
+#: Per-list kernel output of the cogrouped IVF scorers.
+_LIST_SCHEMA = "query_id long, neighbor_id long, cos_sim double"
+
 
 def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
 
 
-def dot_expr(a: str, b: str) -> Column:
-    """Sequential-fold dot product (deterministic summation order)."""
+def _col(a: str | Column) -> Column:
+    return F.col(a) if isinstance(a, str) else a
+
+
+def dot_expr(a: str | Column, b: str | Column) -> Column:
+    """Sequential-fold dot product (deterministic summation order):
+    ((0 + a0·b0) + a1·b1) + …, the index-order fold DuckDB's
+    `list_inner_product` also computes. Takes column names or columns
+    (array literals, lambda variables)."""
     return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
+        F.zip_with(_col(a), _col(b), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
 
 
-def norm_expr(a: str) -> Column:
-    return F.sqrt(
-        F.aggregate(F.col(a), F.lit(0.0), lambda acc, x: acc + x * x)
+def _sq_norm(a: str | Column) -> Column:
+    """Sequential-fold squared norm, ((0 + a0²) + a1²) + …."""
+    return F.aggregate(_col(a), F.lit(0.0), lambda acc, x: acc + x * x)
+
+
+def norm_expr(a: str | Column) -> Column:
+    return F.sqrt(_sq_norm(a))
+
+
+def _normed(frame: DataFrame, id_name: str, prefix: str, *extra: Column) -> DataFrame:
+    """One side of a pair join over a (vec_id, vec, …) frame:
+    (id_name, *extra, <prefix>_vec, <prefix>_norm)."""
+    return frame.select(
+        F.col("vec_id").alias(id_name),
+        *extra,
+        F.col("vec").alias(f"{prefix}_vec"),
+        norm_expr("vec").alias(f"{prefix}_norm"),
     )
+
+
+def _cosine(a: str, b: str) -> Column:
+    """Cosine of two `_normed` sides, by their prefixes."""
+    return dot_expr(f"{a}_vec", f"{b}_vec") / (
+        F.col(f"{a}_norm") * F.col(f"{b}_norm")
+    )
+
+
+def _rank_top_k(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    q: str = "query_id",
+    nid: str = "neighbor_id",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The ranking tail of every top-k scorer: per `q`, the k rows with
+    the highest `score`, ties to the smaller `nid`, numbered `rank`.
+    Output: (q, nid, *carry, rank, score)."""
+    return top_k_per_group(
+        scored,
+        [q],
+        [F.col(score).desc(), F.col(nid).asc()],
+        k=k,
+        rank_col="rank",
+    ).select(q, nid, *carry, "rank", score)
 
 
 def cosine_topk(
@@ -73,24 +141,14 @@ def cosine_topk(
         "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
     ).localCheckpoint(eager=False)
     queries = base if query_filter is None else base.filter(query_filter)
-    queries = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("vec").alias("q_vec"),
-        norm_expr("vec").alias("q_norm"),
-    )
-    cands = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("c_label"),
-        F.col("vec").alias("c_vec"),
-        norm_expr("vec").alias("c_norm"),
-    )
+    queries = _normed(queries, "query_id", "q", F.col("label").alias("q_label"))
+    cands = _normed(base, "neighbor_id", "c", F.col("label").alias("c_label"))
     if block_on_label:
         joined = queries.join(cands, F.col("q_label") == F.col("c_label"))
     else:
         joined = queries.crossJoin(cands)
     joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    ratio = dot_expr("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))
+    ratio = _cosine("q", "c")
     if scaled_e6:
         cos = e6(ratio)
         sim_col = "cos_sim_e6"
@@ -98,13 +156,7 @@ def cosine_topk(
         cos = F.round(ratio, 6)
         sim_col = "cos_sim"
     scored = joined.select("query_id", "neighbor_id", cos.alias(sim_col))
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col(sim_col).desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank", sim_col)
+    return _rank_top_k(scored, k, sim_col)
 
 
 def _lloyd_codebook(X, n_centroids: int, iters: int, seed: int):
@@ -137,15 +189,84 @@ def _lloyd_codebook(X, n_centroids: int, iters: int, seed: int):
     return C
 
 
+def _trained_codebook(
+    sample_frame: DataFrame,
+    id_col: str,
+    n_centroids: int,
+    seed: int,
+    iters: int = 5,
+    train_fraction: float = 0.2,
+    to_matrix=None,
+):
+    """The trained-codebook prelude of `ivf_topk`, `ivf_pq_topk`,
+    `semdedup` and `clustering.kmeans_topics`: collect a bounded
+    hash-gated sample (≤ 4096 rows, ≥ 4 per centroid), train a Lloyd
+    codebook on it driver-side, and return (X, C, dist) — the sample
+    matrix, the centroids, and `dist(V)` = ‖v−c‖² up to the
+    rank-constant ‖v‖² (one matmul per batch; argmin ties to the lowest
+    centroid id). None when the sample is empty. `to_matrix` turns the
+    sample rows into X (default: their `vec` arrays)."""
+    sample = bounded_hash_sample(
+        sample_frame,
+        id_col,
+        seed,
+        fraction=train_fraction,
+        min_rows=n_centroids * 4,
+    )
+    if not sample:
+        return None
+    if to_matrix is None:
+        X = np.asarray([row["vec"] for row in sample], dtype=np.float64)
+    else:
+        X = to_matrix(sample)
+    C = _lloyd_codebook(X, n_centroids, iters=iters, seed=seed)
+    c_norm2 = (C * C).sum(axis=1)
+
+    def dist(V: np.ndarray) -> np.ndarray:
+        return V @ C.T * (-2.0) + c_norm2[None, :]
+
+    return X, C, dist
+
+
+def _list_topk(qpdf: pd.DataFrame, cpdf: pd.DataFrame, k: int, sims_of) -> pd.DataFrame:
+    """Per-inverted-list local top-k of one cogrouped (queries,
+    candidates) block: `sims_of(qpdf, cpdf)` scores the block as a
+    rounded query × candidate matrix; each query keeps its k best
+    non-self candidates by (cos desc, neighbor_id asc) — the exact local
+    order, so the union of the per-list top-k contains the global
+    top-k. Output matches `_LIST_SCHEMA`."""
+    out_q, out_n, out_s = [], [], []
+    if not (qpdf.empty or cpdf.empty):
+        sims = sims_of(qpdf, cpdf)
+        nids = cpdf["neighbor_id"].to_numpy()
+        for i, qid in enumerate(qpdf["query_id"].to_numpy()):
+            mask = nids != qid
+            cand_n, cand_s = nids[mask], sims[i][mask]
+            order = np.lexsort((cand_n, -cand_s))[:k]
+            out_q.extend([qid] * len(order))
+            out_n.extend(cand_n[order])
+            out_s.extend(cand_s[order])
+    return pd.DataFrame(
+        {"query_id": np.asarray(out_q, dtype="int64"),
+         "neighbor_id": np.asarray(out_n, dtype="int64"),
+         "cos_sim": np.asarray(out_s, dtype="float64")}
+    )
+
+
+def _exact_sims(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> np.ndarray:
+    Q = np.stack(qpdf["q_vec"].to_numpy())
+    Cm = np.stack(cpdf["c_vec"].to_numpy())
+    qn = np.linalg.norm(Q, axis=1)
+    cn = np.linalg.norm(Cm, axis=1)
+    return np.round((Q @ Cm.T) / (qn[:, None] * cn[None, :]), 6)
+
+
 def ivf_topk(
     embeddings: DataFrame,
     n_centroids: int = 32,
     n_probe: int = 4,
     k: int = 3,
     query_filter: Column | None = None,
-    seed: int = 42,
-    max_train: int = 4096,
-    train_fraction: float = 0.2,
 ) -> DataFrame:
     """IVF-style approximate top-k: sampled codebook + multi-probe lists.
 
@@ -155,7 +276,7 @@ def ivf_topk(
     `n_probe` closest lists. The classic IVF trade: recall rises with
     n_probe, cost falls with n_centroids.
 
-    100 TB shape: the codebook sample is capped (`max_train` rows — a
+    100 TB shape: the codebook sample is capped (4096 rows — a
     metadata-scale driver action, NOT a data-path collect), the centroid
     matrix ships to executors inside the Arrow-batched assignment UDF
     (n_centroids × dim doubles — kilobytes), and both assignment passes
@@ -173,36 +294,23 @@ def ivf_topk(
     base = embeddings.select(
         "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
     )
-    sample = bounded_hash_sample(
-        base.select("vec_id", "vec"),
-        "vec_id",
-        seed,
-        max_rows=max_train,
-        fraction=train_fraction,
-        min_rows=n_centroids * 4,
+    codebook = _trained_codebook(
+        base.select("vec_id", "vec"), "vec_id", n_centroids, seed=42
     )
-    if not sample:
-        spark = embeddings.sparkSession
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cos_sim double"
-        )
-    X = np.asarray([row["vec"] for row in sample], dtype=np.float64)
-    C = _lloyd_codebook(X, n_centroids, iters=5, seed=seed)
-    c_norm2 = (C * C).sum(axis=1)
-
-    def _scores(series: pd.Series):
-        V = np.stack(series.to_numpy())
-        # ||v-c||² up to the rank-constant ||v||²: one matmul per batch.
-        return V @ C.T * (-2.0) + c_norm2[None, :]
+    if codebook is None:
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    _, _, dist = codebook
 
     @pandas_udf("int")
     def nearest_list(series: pd.Series) -> pd.Series:
-        return pd.Series(_scores(series).argmin(axis=1).astype("int32"))
+        return pd.Series(
+            dist(np.stack(series.to_numpy())).argmin(axis=1).astype("int32")
+        )
 
     @pandas_udf("array<int>")
     def probe_lists(series: pd.Series) -> pd.Series:
         # stable argsort: ties break on lowest centroid id, deterministic.
-        order = np.argsort(_scores(series), axis=1, kind="stable")
+        order = np.argsort(dist(np.stack(series.to_numpy())), axis=1, kind="stable")
         return pd.Series(list(order[:, :n_probe].astype("int32")))
 
     cands = base.select(
@@ -219,59 +327,19 @@ def ivf_topk(
     )
 
     def _score_list(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype="int64"),
-             "neighbor_id": pd.Series(dtype="int64"),
-             "cos_sim": pd.Series(dtype="float64")}
-        )
-        if qpdf.empty or cpdf.empty:
-            return empty
-        Q = np.stack(qpdf["q_vec"].to_numpy())
-        Cm = np.stack(cpdf["c_vec"].to_numpy())
-        qn = np.linalg.norm(Q, axis=1)
-        cn = np.linalg.norm(Cm, axis=1)
-        sims = np.round((Q @ Cm.T) / (qn[:, None] * cn[None, :]), 6)
-        qids = qpdf["query_id"].to_numpy()
-        nids = cpdf["neighbor_id"].to_numpy()
-        out_q, out_n, out_s = [], [], []
-        for i, qid in enumerate(qids):
-            row = sims[i]
-            mask = nids != qid
-            cand_n, cand_s = nids[mask], row[mask]
-            if cand_n.size == 0:
-                continue
-            # top-k by (cos desc, neighbor_id asc) — exact local order so
-            # the union of per-list top-k contains the global top-k.
-            order = np.lexsort((cand_n, -cand_s))[:k]
-            out_q.extend([qid] * len(order))
-            out_n.extend(cand_n[order])
-            out_s.extend(cand_s[order])
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {"query_id": np.asarray(out_q, dtype="int64"),
-             "neighbor_id": np.asarray(out_n, dtype="int64"),
-             "cos_sim": np.asarray(out_s, dtype="float64")}
-        )
+        return _list_topk(qpdf, cpdf, k, _exact_sims)
 
     scored = (
         queries.groupBy("centroid_id")
         .cogroup(cands.groupBy("centroid_id"))
-        .applyInPandas(_score_list, "query_id long, neighbor_id long, cos_sim double")
+        .applyInPandas(_score_list, _LIST_SCHEMA)
     )
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank", "cos_sim")
+    return _rank_top_k(scored, k, "cos_sim")
 
 
 def embedding_cosine_pairs(
     embeddings: DataFrame,
     threshold: float = 0.35,
-    block_on_label: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cos ≥ threshold).
 
@@ -297,13 +365,10 @@ def embedding_cosine_pairs(
         F.col("vec").alias("vec_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    if block_on_label:
-        cond = (F.col("label_a") == F.col("label_b")) & (
-            F.col("id_a") < F.col("id_b")
-        )
-    else:
-        cond = F.col("id_a") < F.col("id_b")
-    joined = a.join(b, cond)
+    joined = a.join(
+        b,
+        (F.col("label_a") == F.col("label_b")) & (F.col("id_a") < F.col("id_b")),
+    )
     cos = F.round(
         dot_expr("vec_a", "vec_b") / (F.col("nrm_a") * F.col("nrm_b")), 6
     )
@@ -344,7 +409,12 @@ def lsh_bucket_topk(
     base = embeddings.select(
         "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
     )
-    dim = base.select(F.size("vec").alias("d")).first()["d"]
+    row = base.select(F.size("vec").alias("d")).first()
+    if row is None:  # no row to probe the width from
+        return embeddings.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, rank int, cos_sim_e6 long"
+        )
+    dim = row["d"]
 
     def sign_of(p: int, d: int) -> float:
         h = int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:15], 16)
@@ -352,11 +422,7 @@ def lsh_bucket_topk(
 
     def plane_sign(p: int) -> Column:
         signs = F.array(*[F.lit(sign_of(p, d)) for d in range(dim)])
-        proj = F.aggregate(
-            F.zip_with(F.col("vec"), signs, lambda x, s: x * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        proj = dot_expr("vec", signs)
         return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
 
     bucket = None
@@ -385,36 +451,23 @@ def lsh_bucket_topk(
         )
     else:
         queries = queries.withColumn("__probe", F.col("bucket"))
-    queries = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("__probe").alias("q_bucket"),
-        F.col("vec").alias("q_vec"),
-        norm_expr("vec").alias("q_norm"),
+    queries = _normed(
+        queries, "query_id", "q", F.col("__probe").alias("q_bucket")
     )
-    cands = bucketed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("bucket").alias("c_bucket"),
-        F.col("vec").alias("c_vec"),
-        norm_expr("vec").alias("c_norm"),
+    cands = _normed(
+        bucketed, "neighbor_id", "c", F.col("bucket").alias("c_bucket")
     )
     joined = queries.join(cands, F.col("q_bucket") == F.col("c_bucket")).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    ratio = dot_expr("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))
     scored = joined.select(
-        "query_id", "neighbor_id", e6(ratio).alias("cos_sim_e6")
+        "query_id", "neighbor_id", e6(_cosine("q", "c")).alias("cos_sim_e6")
     )
     if probes > 1:
         # a neighbor reachable through several probed buckets appears
         # once per bucket — dedupe before ranking
         scored = scored.distinct()
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim_e6").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank", "cos_sim_e6")
+    return _rank_top_k(scored, k, "cos_sim_e6")
 
 
 def label_centroid_cosine(
@@ -461,29 +514,22 @@ def label_centroid_cosine(
 
 def ivf_pq_topk(
     embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_probe: int = 8,
     k: int = 3,
-    pq_m: int = 8,
-    pq_bits: int = 8,
     rerank_factor: int = 8,
     query_filter: Column | None = None,
-    seed: int = 42,
-    max_train: int = 4096,
-    train_fraction: float = 0.2,
 ) -> DataFrame:
     """IVF + Product Quantization approximate top-k — the MEMORY-scale
-    ANN path: candidates are searched as `pq_m` sub-codebook codes
-    (`pq_bits` bits each) plus their true norm, not as full vectors.
+    ANN path: candidates are searched as 8 sub-codebook codes (8 bits
+    each) plus their true norm, not as full vectors.
 
     At 100 TB the index, not the scan, is what must fit: a 64-dim
     float32 corpus is 256 B/vector; with m=8 the searched
     representation is 8 codes + 1 float ≈ 16 B — a ~16× reduction, the
     difference between an index that fits executor memory and one that
-    spills. Codebooks (coarse + per-subspace) train driver-side on the
-    same bounded hash-gated sample as `ivf_topk` (metadata-scale, a
-    pure function of the data) and ship to executors as numpy constants
-    inside the Arrow UDFs.
+    spills. Codebooks (16 coarse lists + per-subspace) train driver-side
+    on the same bounded hash-gated sample as `ivf_topk` (metadata-scale,
+    a pure function of the data) and ship to executors as numpy
+    constants inside the Arrow UDFs.
 
     Search is FAISS-style ADC (asymmetric distance computation): PQ
     codes encode the RESIDUAL v − coarse_centroid; per (query, list)
@@ -505,43 +551,30 @@ def ivf_pq_topk(
 
     Approximate by contract (rows-only check): recall is floor-asserted
     against the brute-force oracle in tests, alongside the ivf_topk
-    curve. Raise pq_bits/pq_m toward exactness, n_probe/rerank_factor
-    for recall, n_centroids with corpus size.
+    curve. `rerank_factor` is the recall knob; the index geometry
+    (16 lists, 8 probed) is fixed.
     """
     from pyspark.sql.functions import pandas_udf
 
-    if pq_bits < 1 or pq_bits > 8:
-        raise ValueError(f"pq_bits must be in [1, 8], got {pq_bits}")
-    n_sub = 1 << pq_bits
+    n_centroids, n_probe, pq_m, n_sub, seed = 16, 8, 8, 1 << 8, 42
     shortlist_k = k * rerank_factor if rerank_factor else k
 
     base = embeddings.select(
         "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
     )
-    sample = bounded_hash_sample(
-        base.select("vec_id", "vec"),
-        "vec_id",
-        seed,
-        max_rows=max_train,
-        fraction=train_fraction,
-        min_rows=n_centroids * 4,
+    codebook = _trained_codebook(
+        base.select("vec_id", "vec"), "vec_id", n_centroids, seed
     )
-    if not sample:
-        spark = embeddings.sparkSession
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cos_sim double"
-        )
-    X = np.asarray([row["vec"] for row in sample], dtype=np.float64)
+    if codebook is None:
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    X, C, dist = codebook
     dim = X.shape[1]
     if dim % pq_m != 0:
         raise ValueError(f"pq_m={pq_m} must divide dim={dim}")
     d_sub = dim // pq_m
 
-    C = _lloyd_codebook(X, n_centroids, iters=5, seed=seed)
-    c_norm2 = (C * C).sum(axis=1)
     # Per-subspace codebooks over residuals of the training sample.
-    d2 = X @ C.T * (-2.0) + c_norm2[None, :]
-    R = X - C[d2.argmin(axis=1)]
+    R = X - C[dist(X).argmin(axis=1)]
     sub_books = np.stack(
         [
             _lloyd_codebook(
@@ -551,13 +584,10 @@ def ivf_pq_topk(
         ]
     )  # (pq_m, n_sub_eff, d_sub); n_sub_eff ≤ n_sub if the sample is tiny
 
-    def _coarse_scores(V: np.ndarray) -> np.ndarray:
-        return V @ C.T * (-2.0) + c_norm2[None, :]
-
     @pandas_udf("struct<centroid_id:int, codes:array<short>, vnorm:double>")
     def encode(series: pd.Series) -> pd.DataFrame:
         V = np.stack(series.to_numpy())
-        cid = _coarse_scores(V).argmin(axis=1)
+        cid = dist(V).argmin(axis=1)
         Rv = V - C[cid]
         codes = np.empty((len(V), pq_m), dtype=np.int16)
         for j in range(pq_m):
@@ -575,7 +605,7 @@ def ivf_pq_topk(
 
     @pandas_udf("array<int>")
     def probe_lists(series: pd.Series) -> pd.Series:
-        order = np.argsort(_coarse_scores(np.stack(series.to_numpy())),
+        order = np.argsort(dist(np.stack(series.to_numpy())),
                            axis=1, kind="stable")
         return pd.Series(list(order[:, :n_probe].astype("int32")))
 
@@ -592,22 +622,12 @@ def ivf_pq_topk(
         F.explode(probe_lists("vec")).alias("centroid_id"),
     )
 
-    def _score_list(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype="int64"),
-             "neighbor_id": pd.Series(dtype="int64"),
-             "cos_sim": pd.Series(dtype="float64")}
-        )
-        if qpdf.empty or cpdf.empty:
-            return empty
-        cid = int(cpdf["centroid_id"].iloc[0])
-        cent = C[cid]
+    def _adc_sims(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> np.ndarray:
+        cent = C[int(cpdf["centroid_id"].iloc[0])]
         Q = np.stack(qpdf["q_vec"].to_numpy())
         qn = np.linalg.norm(Q, axis=1)
         codes = np.stack(cpdf["codes"].to_numpy()).astype(np.int64)  # (nc, m)
         vnorm = cpdf["vnorm"].to_numpy()
-        nids = cpdf["neighbor_id"].to_numpy()
-        qids = qpdf["query_id"].to_numpy()
         # ADC tables: T[q, j, s] = q_sub_j · sub_book[j][s], then
         # dot(q, c) ≈ q·centroid + Σ_j T[q, j, code_j] — m gathers per
         # list, never a per-pair loop.
@@ -616,87 +636,43 @@ def ivf_pq_topk(
         resid = np.zeros((len(Q), len(codes)))
         for j in range(pq_m):
             resid += T[:, j, :][:, codes[:, j]]
-        sims = np.round(
+        return np.round(
             ((Q @ cent)[:, None] + resid) / (qn[:, None] * vnorm[None, :]), 6
         )
-        out_q, out_n, out_s = [], [], []
-        for i, qid in enumerate(qids):
-            row = sims[i]
-            mask = nids != qid
-            cand_n, cand_s = nids[mask], row[mask]
-            if cand_n.size == 0:
-                continue
-            order = np.lexsort((cand_n, -cand_s))[:shortlist_k]
-            out_q.extend([qid] * len(order))
-            out_n.extend(cand_n[order])
-            out_s.extend(cand_s[order])
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {"query_id": np.asarray(out_q, dtype="int64"),
-             "neighbor_id": np.asarray(out_n, dtype="int64"),
-             "cos_sim": np.asarray(out_s, dtype="float64")}
-        )
+
+    def _score_list(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
+        return _list_topk(qpdf, cpdf, shortlist_k, _adc_sims)
 
     scored = (
         queries.groupBy("centroid_id")
         .cogroup(cands.groupBy("centroid_id"))
-        .applyInPandas(
-            _score_list, "query_id long, neighbor_id long, cos_sim double"
-        )
+        .applyInPandas(_score_list, _LIST_SCHEMA)
     )
     if not rerank_factor:
-        return top_k_per_group(
-            scored,
-            ["query_id"],
-            [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-            k=k,
-            rank_col="rank",
-        ).select("query_id", "neighbor_id", "rank", "cos_sim")
+        return _rank_top_k(scored, k, "cos_sim")
 
     # Refine: exact cosines for the shortlist only. Each candidate lives
     # in exactly one inverted list, so shortlist pairs are already
     # unique; the shortlist is query-proportional (≤ n_probe·k·rerank
     # rows per query) and BROADCASTs into the corpus-side vector fetch.
     shortlist = scored.select("query_id", "neighbor_id")
-    q_vecs = q_base.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("q_vec"),
-        norm_expr("vec").alias("q_norm"),
-    )
-    c_vecs = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("vec").alias("r_vec"),
-        norm_expr("vec").alias("r_norm"),
-    )
     exact = (
-        c_vecs.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(q_vecs), "query_id")
+        _normed(base, "neighbor_id", "r")
+        .join(F.broadcast(shortlist), "neighbor_id")
+        .join(F.broadcast(_normed(q_base, "query_id", "q")), "query_id")
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot_expr("q_vec", "r_vec")
-                / (F.col("q_norm") * F.col("r_norm")),
-                6,
-            ).alias("cos_sim"),
+            F.round(_cosine("q", "r"), 6).alias("cos_sim"),
         )
     )
-    return top_k_per_group(
-        exact,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank", "cos_sim")
+    return _rank_top_k(exact, k, "cos_sim")
 
 
 def semdedup(
     embeddings: DataFrame,
     n_clusters: int = 16,
     tau: float = 0.95,
-    seed: int = 41,
-    max_train: int = 4096,
     train_fraction: float = 0.2,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication in embedding
@@ -723,27 +699,20 @@ def semdedup(
     base = embeddings.select(
         "vec_id", _as_double(F.col("embedding")).alias("vec")
     )
-    sample = bounded_hash_sample(
-        base,
-        "vec_id",
-        seed,
-        max_rows=max_train,
-        fraction=train_fraction,
-        min_rows=n_clusters * 4,
+    codebook = _trained_codebook(
+        base, "vec_id", n_clusters, seed=41, train_fraction=train_fraction
     )
-    if not sample:
+    if codebook is None:
         return embeddings.sparkSession.createDataFrame(
             [], "vec_id long, cluster int, keep boolean, dup_of long"
         )
-    X = np.asarray([r["vec"] for r in sample], dtype=np.float64)
-    C = _lloyd_codebook(X, n_clusters, iters=5, seed=seed)
-    c_norm2 = (C * C).sum(axis=1)
+    _, _, dist = codebook
 
     @pandas_udf("int")
     def assign(s: pd.Series) -> pd.Series:
-        V = np.stack(s.to_numpy())
-        d2 = V @ C.T * (-2.0) + c_norm2[None, :]
-        return pd.Series(d2.argmin(axis=1).astype("int32"))
+        return pd.Series(
+            dist(np.stack(s.to_numpy())).argmin(axis=1).astype("int32")
+        )
 
     clustered = base.withColumn("cluster", assign("vec"))
 
@@ -786,9 +755,9 @@ def semdedup(
 # Johnson–Lindenstrauss random projection
 # ---------------------------------------------------------------------------
 
-def jl_signs(out_dims: int, dim: int, seed: str = "jl") -> list[list[float]]:
+def jl_signs(out_dims: int, dim: int) -> list[list[float]]:
     """Deterministic Achlioptas ±1 matrix, md5-derived from
-    (seed, row, dim) — stateless, identical in any engine or language.
+    ("jl", row, dim) — stateless, identical in any engine or language.
     Row j is the j-th projection direction."""
     import hashlib
 
@@ -796,7 +765,7 @@ def jl_signs(out_dims: int, dim: int, seed: str = "jl") -> list[list[float]]:
     for j in range(out_dims):
         row = []
         for d in range(dim):
-            h = int(hashlib.md5(f"{seed}:{j}:{d}".encode()).hexdigest()[:15], 16)
+            h = int(hashlib.md5(f"jl:{j}:{d}".encode()).hexdigest()[:15], 16)
             row.append(1.0 if h % 2 == 0 else -1.0)
         rows.append(row)
     return rows
@@ -805,9 +774,6 @@ def jl_signs(out_dims: int, dim: int, seed: str = "jl") -> list[list[float]]:
 def random_projection(
     embeddings: DataFrame,
     out_dims: int = 8,
-    vec_col: str = "embedding",
-    id_cols: tuple[str, ...] = ("vec_id", "label"),
-    seed: str = "jl",
     dim: int | None = None,
 ) -> DataFrame:
     """Johnson–Lindenstrauss dimensionality reduction: project each
@@ -817,13 +783,14 @@ def random_projection(
     output feeds SemDeDup / IVF / cosine dedup at a fraction of the
     width.
 
-    Returns (*id_cols, proj: array<double>). The sign matrix depends
-    only on (seed, j, d): computed once driver-side, shipped as column
+    Returns (vec_id, label, proj: array<double>). The sign matrix depends
+    only on (j, d): computed once driver-side, shipped as column
     literals — per-row cost is out_dims fused multiply-add passes in
     the scan stage, no shuffle, no stored model.
     """
+    id_cols = ("vec_id", "label")
     base = embeddings.select(
-        *id_cols, _as_double(F.col(vec_col)).alias("__v")
+        *id_cols, _as_double(F.col("embedding")).alias("__v")
     )
     if dim is None:
         # Eager one-row probe for the vector width; pass `dim` to skip
@@ -834,19 +801,12 @@ def random_projection(
                 *id_cols, F.lit(None).cast("array<double>").alias("proj")
             )
         dim = row["d"]
-    signs = jl_signs(out_dims, dim, seed)
+    signs = jl_signs(out_dims, dim)
     scale = out_dims ** -0.5
 
     def proj_of(j: int) -> Column:
         s = F.array(*[F.lit(v) for v in signs[j]])
-        return (
-            F.aggregate(
-                F.zip_with(F.col("__v"), s, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            * F.lit(scale)
-        )
+        return dot_expr("__v", s) * F.lit(scale)
 
     return base.select(
         *id_cols,
@@ -877,39 +837,21 @@ def hard_negatives(
         "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
     )
     anchors = base if query_filter is None else base.filter(query_filter)
-    anchors = anchors.select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("a_label"),
-        F.col("vec").alias("a_vec"),
-        norm_expr("vec").alias("a_norm"),
-    )
-    cands = base.select(
-        F.col("vec_id").alias("negative_id"),
-        F.col("label").alias("n_label"),
-        F.col("vec").alias("n_vec"),
-        norm_expr("vec").alias("n_norm"),
-    )
+    anchors = _normed(anchors, "anchor_id", "a", F.col("label").alias("a_label"))
+    cands = _normed(base, "negative_id", "n", F.col("label").alias("n_label"))
     joined = anchors.join(
         cands, F.col("a_label") != F.col("n_label")
-    )
-    cos = F.round(
-        dot_expr("a_vec", "n_vec") / (F.col("a_norm") * F.col("n_norm")), 6
     )
     scored = joined.select(
         "anchor_id",
         "a_label",
         "negative_id",
         F.col("n_label").alias("negative_label"),
-        cos.alias("cos_sim"),
+        F.round(_cosine("a", "n"), 6).alias("cos_sim"),
     )
-    return top_k_per_group(
-        scored,
-        ["anchor_id"],
-        [F.col("cos_sim").desc(), F.col("negative_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select(
-        "anchor_id", "negative_id", "negative_label", "rank", "cos_sim"
+    return _rank_top_k(
+        scored, k, "cos_sim", q="anchor_id", nid="negative_id",
+        carry=("negative_label",),
     )
 
 
@@ -920,7 +862,6 @@ def hard_negatives_ivf(
     n_probe: int = 4,
     overfetch: int = 4,
     query_filter: Column | None = None,
-    seed: int = 42,
 ) -> DataFrame:
     """The 100 TB form of `hard_negatives`: mine cross-label near-misses
     from an IVF shortlist instead of the all-cross-label join.
@@ -945,7 +886,6 @@ def hard_negatives_ivf(
         n_probe=n_probe,
         k=k * overfetch,
         query_filter=query_filter,
-        seed=seed,
     )
     labels = embeddings.select("vec_id", "label")
     anchors = labels.select(
@@ -960,48 +900,41 @@ def hard_negatives_ivf(
         .join(negs, "neighbor_id")
         .filter(F.col("a_label") != F.col("negative_label"))
     )
-    return (
-        top_k_per_group(
-            joined,
-            ["query_id"],
-            [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-            k=k,
-            rank_col="rank",
-        )
-        .select(
-            F.col("query_id").alias("anchor_id"),
-            F.col("neighbor_id").alias("negative_id"),
-            "negative_label",
-            "rank",
-            "cos_sim",
-        )
+    return _rank_top_k(
+        joined, k, "cos_sim", carry=("negative_label",)
+    ).withColumnsRenamed(
+        {"query_id": "anchor_id", "neighbor_id": "negative_id"}
     )
 
 
-def _ivf_fixed_assign(
-    with_cents: DataFrame, id_alias: str, keep_rank: int
+def _frozen_codebook(base: DataFrame, n_centroids: int) -> DataFrame:
+    """The fixed codebook of the hash-oracle-able twins: the vectors of
+    a (vec_id, vec) frame with the ``n_centroids`` smallest ids, as
+    (cid, cvec)."""
+    return base.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
+    )
+
+
+def _fixed_assign(
+    base: DataFrame, cents: DataFrame, keep_rank: int
 ) -> DataFrame:
-    """Nearest-centroid ranking over a (vec, cvec, cid) fan-out frame:
-    sequential-fold squared distances, ties to the smaller cid, keep
-    the `keep_rank` closest — the shared assignment kernel of
-    `ivf_fixed_topk` (corpus top-1 + query probe lists) and
-    `ivf_fixed_list_profile`, factored out so the balance profile can
-    never desynchronize from the index arithmetic it audits. (The
-    public (id, cluster) form of the same arithmetic lives in
-    `clustering.fixed_codebook_assign`.)"""
-    xx = F.aggregate(F.col("vec"), F.lit(0.0), lambda a, x: a + x * x)
-    cc = F.aggregate(F.col("cvec"), F.lit(0.0), lambda a, x: a + x * x)
-    dot = F.aggregate(
-        F.zip_with(F.col("vec"), F.col("cvec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    d2 = xx + cc - F.lit(2.0) * dot
-    w = Window.partitionBy(id_alias).orderBy(d2.asc(), F.col("cid").asc())
+    """Nearest-centroid ranking of a (vec_id, vec) frame against a
+    `_frozen_codebook`: sequential-fold squared distances
+    ‖v‖² + ‖c‖² − 2·v·c, ties to the smaller cid, keep the `keep_rank`
+    closest as (vec_id, cid, vec). The one assignment kernel of
+    `ivf_fixed_topk` (corpus top-1 + query probe lists),
+    `ivf_fixed_list_profile`, `semdedup_fixed` and
+    `clustering.fixed_codebook_assign`, so the balance profile and the
+    clustering twins can never desynchronize from the index arithmetic.
+    The codebook broadcasts into a nested-loop fan-out."""
+    d2 = _sq_norm("vec") + _sq_norm("cvec") - F.lit(2.0) * dot_expr("vec", "cvec")
+    w = Window.partitionBy("vec_id").orderBy(d2.asc(), F.col("cid").asc())
     return (
-        with_cents.withColumn("__rn", F.row_number().over(w))
+        base.crossJoin(F.broadcast(cents))
+        .withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= keep_rank)
-        .select(id_alias, "cid", "vec")
+        .select("vec_id", "cid", "vec")
     )
 
 
@@ -1042,54 +975,28 @@ def ivf_fixed_topk(
     base = embeddings.select(
         "vec_id", _as_double(F.col("embedding")).alias("vec")
     ).localCheckpoint(eager=False)
-    cents = base.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
-    )
+    cents = _frozen_codebook(base, n_centroids)
 
-    corpus = _ivf_fixed_assign(
-        base.crossJoin(F.broadcast(cents)), "vec_id", 1
-    ).select(
+    corpus = _fixed_assign(base, cents, 1).select(
         F.col("vec_id").alias("neighbor_id"),
         "cid",
         F.col("vec").alias("c_vec"),
     )
     q_base = base if query_filter is None else base.filter(query_filter)
-    queries = _ivf_fixed_assign(
-        q_base.crossJoin(F.broadcast(cents)), "vec_id", n_probe
-    ).select(
+    queries = _fixed_assign(q_base, cents, n_probe).select(
         F.col("vec_id").alias("query_id"), "cid", F.col("vec").alias("q_vec")
     )
 
     joined = queries.join(corpus, "cid").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    qn = F.sqrt(
-        F.aggregate(F.col("q_vec"), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    cn = F.sqrt(
-        F.aggregate(F.col("c_vec"), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("q_vec"), F.col("c_vec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    cos = dot_expr("q_vec", "c_vec") / (norm_expr("q_vec") * norm_expr("c_vec"))
     # e6, not a rounded double: the ORDER BY over a fractional round
     # could flip ranks across engine versions.
     scored = joined.select(
-        "query_id", "neighbor_id", e6(dot / (qn * cn)).alias("cos_sim_e6")
+        "query_id", "neighbor_id", e6(cos).alias("cos_sim_e6")
     ).distinct()  # a neighbor can appear via several probed lists
-    from legendary_data_pipeline_spark.operators.ranking import (
-        top_k_per_group,
-    )
-
-    return top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim_e6").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "rank", "cos_sim_e6")
+    return _rank_top_k(scored, k, "cos_sim_e6")
 
 
 def ivf_fixed_list_profile(
@@ -1114,12 +1021,8 @@ def ivf_fixed_list_profile(
     base = embeddings.select(
         "vec_id", _as_double(F.col("embedding")).alias("vec")
     ).localCheckpoint(eager=False)
-    cents = base.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("vec").alias("cvec")
-    )
-    assigned = _ivf_fixed_assign(
-        base.crossJoin(F.broadcast(cents)), "vec_id", 1
-    ).select("vec_id", "cid")
+    cents = _frozen_codebook(base, n_centroids)
+    assigned = _fixed_assign(base, cents, 1).select("vec_id", "cid")
     sizes = assigned.groupBy("cid").agg(
         F.count(F.lit(1)).cast("long").alias("list_size")
     )
@@ -1200,20 +1103,13 @@ def semdedup_fixed(
         "vec_id", _as_double(F.col("embedding")).alias("vec")
     )
     assigned = fixed_codebook_assign(
-        embeddings, n_centroids, "vec_id", "embedding"
+        embeddings, n_centroids
     ).localCheckpoint(eager=False)  # self-join + final keeper join
     # Norms are per-VECTOR, so compute them once here (n rows) rather
     # than inside the pair expression (n² evaluations of the same fold).
     withvec = (
         assigned.join(base, "vec_id")
-        .withColumn(
-            "__norm",
-            F.sqrt(
-                F.aggregate(
-                    F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x
-                )
-            ),
-        )
+        .withColumn("__norm", norm_expr("vec"))
         .localCheckpoint(eager=False)
     )  # both pair-join sides (r11 scan audit: 8 embeddings scans)
     n_salt = max(1, int(pair_salt))
@@ -1236,12 +1132,9 @@ def semdedup_fixed(
     pairs = a.join(b, ["cluster", "__salt"]).filter(
         F.col("__ia") < F.col("__ib")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("__va"), F.col("__vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    cos = F.round(
+        dot_expr("__va", "__vb") / (F.col("__na") * F.col("__nb")), 6
     )
-    cos = F.round(dot / (F.col("__na") * F.col("__nb")), 6)
     dups = (
         pairs.filter(cos >= F.lit(float(tau)))
         .groupBy("__ib")
@@ -1259,8 +1152,6 @@ def semdedup_fixed(
 def embedding_quality_report(
     embeddings: DataFrame,
     expected_dim: int,
-    label_col: str = "label",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-column hygiene report per label — the pre-flight check
     every similarity/dedup/IVF job should run before trusting a vector
@@ -1281,7 +1172,7 @@ def embedding_quality_report(
     shuffle beyond the label-keyed agg. NULL labels form their own row
     (GROUP BY semantics).
     """
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     is_null = v.isNull()
     wrong_dim = ~is_null & (F.size(v) != F.lit(int(expected_dim)))
     nonfinite = (
@@ -1292,12 +1183,12 @@ def embedding_quality_report(
             lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf"))),
         )
     )
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
+    norm = norm_expr(v)
     clean = ~is_null & ~wrong_dim & ~nonfinite
     zero_norm = clean & (norm == F.lit(0.0))
     micro = F.floor(norm * F.lit(1_000_000.0)).cast("long")
     clean_micro = F.when(clean, micro)
-    agg = embeddings.groupBy(label_col).agg(
+    agg = embeddings.groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),
         F.sum(is_null.cast("long")).cast("long").alias("n_null_vec"),
         F.sum(wrong_dim.cast("long")).cast("long").alias("n_wrong_dim"),
@@ -1316,7 +1207,7 @@ def embedding_quality_report(
         ).cast("long"),
     )
     return agg.select(
-        label_col,
+        "label",
         "n_vectors",
         "n_null_vec",
         "n_wrong_dim",
@@ -1332,8 +1223,6 @@ def semantic_decontamination(
     train: DataFrame,
     benchmark: DataFrame,
     tau_e6: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-space decontamination: flag training vectors whose
     cosine to ANY benchmark vector reaches ``tau_e6`` (micro-scaled) —
@@ -1356,31 +1245,23 @@ def semantic_decontamination(
     contract). Training vectors with no valid benchmark pair (empty
     benchmark) emit NULL max and contaminated = false.
 
-    Output: id, max_cos_e6, nearest_benchmark_id, contaminated.
+    Output: vec_id, max_cos_e6, nearest_benchmark_id, contaminated.
     """
     # Pin: the scoring pass and the all-ids left-join base both
     # consume the training projection (round-9 multi-consumer rule).
     t = train.select(
-        F.col(id_col).alias("__tid"),
-        _as_double(F.col(vec_col)).alias("__tv"),
+        F.col("vec_id").alias("__tid"),
+        _as_double(F.col("embedding")).alias("__tv"),
     ).localCheckpoint(eager=False)
     b = benchmark.select(
-        F.col(id_col).alias("__bid"),
-        _as_double(F.col(vec_col)).alias("__bv"),
+        F.col("vec_id").alias("__bid"),
+        _as_double(F.col("embedding")).alias("__bv"),
     )
     t = t.withColumn("__tn", norm_expr("__tv"))
     b = b.withColumn("__bn", norm_expr("__bv"))
     pairs = t.crossJoin(F.broadcast(b))
     cos = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("__tv"), F.col("__bv"), lambda x, y: x * y
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (F.col("__tn") * F.col("__bn")),
-        6,
+        dot_expr("__tv", "__bv") / (F.col("__tn") * F.col("__bn")), 6
     )
     scored = pairs.select(
         "__tid",
@@ -1394,17 +1275,17 @@ def semantic_decontamination(
             )
         ).alias("__best")
     )
-    out = t.select(F.col("__tid").alias(id_col)).join(
+    out = t.select(F.col("__tid").alias("vec_id")).join(
         best.select(
-            F.col("__tid").alias(id_col),
+            F.col("__tid").alias("vec_id"),
             F.col("__best.c").alias("max_cos_e6"),
             F.col("__best.b").alias("nearest_benchmark_id"),
         ),
-        id_col,
+        "vec_id",
         "left",
     )
     return out.select(
-        id_col,
+        "vec_id",
         "max_cos_e6",
         "nearest_benchmark_id",
         F.coalesce(

@@ -103,54 +103,6 @@ def write_upsert_parquet(
     merged.write.mode("overwrite").parquet(existing_path)
 
 
-def delta_available(spark: SparkSession) -> bool:
-    """True when the Delta Lake package is importable AND registered with
-    this session (spark.sql.extensions includes DeltaSparkSessionExtension)."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    ext = spark.conf.get("spark.sql.extensions", "") or ""
-    return "DeltaSparkSessionExtension" in ext
-
-
-def write_upsert_auto(
-    existing_path: str,
-    updates: DataFrame,
-    keys: Sequence[str],
-    spark: SparkSession,
-    order_within_source: Sequence[Column] = (),
-) -> str:
-    """S5 writer choosing the best available storage primitive.
-
-    With Delta available: a real `MERGE INTO` (matched → update all,
-    not-matched → insert all) — transactional, no full-table rewrite.
-    Otherwise: the documented plain-parquet fallback (union + key-window
-    dedup + overwrite). Returns which path ran ('delta' | 'parquet') so
-    jobs can log it.
-    """
-    if delta_available(spark):
-        from delta.tables import DeltaTable
-
-        if DeltaTable.isDeltaTable(spark, existing_path):
-            target = DeltaTable.forPath(spark, existing_path)
-            cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-            (
-                target.alias("t")
-                .merge(updates.alias("s"), cond)
-                .whenMatchedUpdateAll()
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-        else:
-            updates.write.format("delta").mode("overwrite").save(existing_path)
-        return "delta"
-    write_upsert_parquet(
-        existing_path, updates, keys, spark, order_within_source
-    )
-    return "parquet"
-
-
 def write_upsert_partitioned(
     existing_path: str,
     updates: DataFrame,

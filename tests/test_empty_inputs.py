@@ -17,6 +17,7 @@ from legendary_data_pipeline_spark.operators.curation import (
 from legendary_data_pipeline_spark.operators.graph import pagerank
 from legendary_data_pipeline_spark.operators.similarity import (
     label_centroid_cosine,
+    lsh_bucket_topk,
 )
 from legendary_data_pipeline_spark.operators.upsert import scd2_apply
 
@@ -90,6 +91,17 @@ def test_centroid_cosine_empty_embeddings(spark):
         "cos_to_centroid",
         "is_outlier",
     }
+
+
+def test_lsh_bucket_topk_empty_embeddings(spark):
+    """No row to probe the vector width from: the typed empty top-k, as
+    the other top-k scorers return."""
+    emb = spark.createDataFrame(
+        [], "vec_id long, embedding array<float>, label int"
+    )
+    out = lsh_bucket_topk(emb)
+    assert out.collect() == []
+    assert out.columns == ["query_id", "neighbor_id", "rank", "cos_sim_e6"]
 
 
 def test_z_order_empty_frame_writes_empty_table(spark, tmp_path):

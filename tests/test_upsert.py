@@ -121,26 +121,6 @@ def test_write_upsert_partitioned_leaves_session_conf(spark, tmp_path):
     assert state == {"2024-01-01": 10, "2024-01-02": 20}
 
 
-def test_write_upsert_auto_falls_back_to_parquet(spark, tmp_path):
-    """Without Delta in the environment, auto upsert uses the documented
-    parquet fallback and still converges."""
-    from legendary_data_pipeline_spark.operators.upsert import (
-        delta_available,
-        write_upsert_auto,
-    )
-
-    path = str(tmp_path / "auto")
-    first = spark.createDataFrame([(1, 10)], "k int, v int")
-    mode = write_upsert_auto(path, first, ["k"], spark)
-    assert mode == ("delta" if delta_available(spark) else "parquet")
-    second = spark.createDataFrame([(1, 11), (2, 20)], "k int, v int")
-    write_upsert_auto(path, second, ["k"], spark)
-    state = {r.k: r.v for r in spark.read.parquet(path).collect()} \
-        if mode == "parquet" else \
-        {r.k: r.v for r in spark.read.format("delta").load(path).collect()}
-    assert state == {1: 11, 2: 20}
-
-
 def test_scd2_apply_semantics(spark):
     from legendary_data_pipeline_spark.operators.upsert import scd2_apply
 
