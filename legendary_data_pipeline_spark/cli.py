@@ -8,7 +8,11 @@ directory: each table lives at `<warehouse>/<name>`, writers are the
 idempotent sinks from `operators.upsert`, and every run is recorded in
 `<warehouse>/pipeline_runs` (S10). A run's `row_count` is observed from
 the write itself (`DataFrame.observe` on the frame handed to the
-writer), so logging it costs no second pass over the plan.
+writer), so logging it costs no second pass over the plan, and the
+run-log events are committed from the driver, so they cost no Spark job
+either: a command's jobs are its reads, shuffles and writes. `revalue`
+writes the repriced item rows from its one items ⋈ prices join straight
+into the swap upsert of the items table.
 
     python -m legendary_data_pipeline_spark.cli import-pricecharting \
         --warehouse /data/wh --file prices.csv --game pokemon --date 2026-08-13
@@ -205,23 +209,22 @@ def cmd_revalue(spark: SparkSession, args) -> int:
         _read(spark, args.warehouse, "mtg_prices_effective"),
         tcg_ebay=opt("tcg_card_prices_ebay"),
     )
-    items = _read(spark, args.warehouse, "user_collection_items")
-    updates, valuations = jobs.revalue_collection(items, prices, args.date)
+    repriced, valuations = jobs.revalue_collection(
+        _read(spark, args.warehouse, "user_collection_items"), prices, args.date
+    )
     valuations, obs = _observed(valuations)
     # S7: replace the day's valuations FIRST — `valuations` lineage scans
-    # the items files, which the S8 rewrite below replaces.
+    # the items files, which the S8 rewrite below swaps out.
     write_upsert_partitioned(
         _table(args.warehouse, "user_collection_daily_valuations"),
         valuations,
         ["as_of_date"],
         spark,
     )
-    # S8: bulk keyed update of item values (join replaces the column).
-    refreshed = items.drop("last_value_cents").join(
-        updates.select("id", "last_value_cents"), "id", "left"
-    )
+    # S8: bulk keyed update of item values; the repriced rows are the
+    # whole items table with the column replaced.
     write_upsert_parquet(
-        _table(args.warehouse, "user_collection_items"), refreshed, ["id"], spark
+        _table(args.warehouse, "user_collection_items"), repriced, ["id"], spark
     )
     finish_run(spark, log, run_id, "revalue_collection", obs.get["rows"])
     return 0
@@ -257,7 +260,7 @@ def cmd_curate(spark: SparkSession, args) -> int:
         n_bad = bad.count()
     else:
         raw, n_bad = spark.read.parquet(args.input), 0
-        bad = spark.createDataFrame([], "raw_line string")
+        bad = spark.range(0).select(F.lit(None).cast("string").alias("raw_line"))
     # ALWAYS rewrite the quarantine table (both branches, even when
     # empty) — a rerun must never leave a previous run's bad lines
     # behind for triage to misattribute. Parquet, not JSON: an empty

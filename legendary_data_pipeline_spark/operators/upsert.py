@@ -14,6 +14,9 @@ writers:
   updates. One shuffle on the key columns; at scale the key set should be
   the table's bucket/partition key so the shuffle co-locates with the
   write layout.
+- `write_upsert_parquet` — S5's shape for a non-partitioned table: the
+  merge is written beside the table and swapped in by renames, so a
+  failed write never loses the old rows.
 - `write_upsert_partitioned` — S7's shape: dynamic partition overwrite on
   `as_of_date`-style partition columns; only touched partitions rewrite,
   which is the scalable idempotency story for daily snapshot tables.
@@ -28,6 +31,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from legendary_data_pipeline_spark.sources.layout import hadoop_fs, rename
 
 _PRECEDENCE = "__ldp_precedence"
 _ROWNUM = "__ldp_rn"
@@ -77,16 +82,30 @@ def write_upsert_parquet(
     spark: SparkSession,
     order_within_source: Sequence[Column] = (),
 ) -> None:
-    """S5 physical writer for non-partitioned tables.
+    """S5 physical writer for non-partitioned tables: merge, then swap.
 
-    Reads current state, merges, pins the merged rows with an eager
-    `localCheckpoint` (executor-local blocks, not durable storage), then
-    overwrites the table in place. The overwrite is not atomic: the old
-    files are deleted before the new ones are committed, so a write that
-    fails part-way loses the table's rows (the checkpoint does not outlive
-    the session). For partitioned daily-snapshot tables prefer
+    The merge of the current rows and `updates` is written to the sibling
+    `<path>.__new__`, then swapped in by Hadoop `FileSystem` renames:
+    `<path>` → `<path>.__old__`, `.__new__` → `<path>`, and the old copy
+    is deleted. The merge reads `<path>` while writing elsewhere, so
+    nothing has to be materialized first (no checkpoint, one write job),
+    and the old files stay whole until the new ones are committed. If the
+    second rename raises, the first is undone before the error surfaces.
+
+    Recovery rule, applied on entry: a process that died between the two
+    renames leaves `<path>.__old__` and no `<path>`; the old copy is
+    renamed back before the merge reads it. A `.__old__` next to a
+    present `<path>` is a finished swap whose delete did not run, and is
+    removed. For partitioned daily-snapshot tables prefer
     `write_upsert_partitioned` (rewrites only touched dates).
     """
+    fs, path = hadoop_fs(spark, existing_path)
+    new, old = path.suffix(".__new__"), path.suffix(".__old__")
+    if fs.exists(old):
+        if fs.exists(path):
+            fs.delete(old, True)
+        else:
+            rename(fs, old, path)
     try:
         existing = spark.read.parquet(existing_path)
     except Exception:
@@ -98,9 +117,17 @@ def write_upsert_parquet(
         merged = upsert(updates.limit(0), updates, keys, order_within_source)
     else:
         merged = upsert(existing, updates, keys, order_within_source)
-    # Materialize before overwriting the path we read from.
-    merged = merged.localCheckpoint(eager=True)
-    merged.write.mode("overwrite").parquet(existing_path)
+    merged.write.mode("overwrite").parquet(new.toString())
+    replaced = fs.exists(path)
+    if replaced:
+        rename(fs, path, old)
+    try:
+        rename(fs, new, path)
+    except BaseException:
+        if replaced:
+            rename(fs, old, path)
+        raise
+    fs.delete(old, True)
 
 
 def write_upsert_partitioned(

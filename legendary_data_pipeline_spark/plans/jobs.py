@@ -577,10 +577,14 @@ _GAME_NORM = {"ygo": "yugioh", "magic": "mtg"}
 def revalue_collection(
     items: DataFrame, prices: DataFrame, as_of_date: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Items × broadcast price dim → (item updates, per-user valuations).
+    """Items × broadcast price dim → (repriced items, per-user valuations).
 
     Replaces the reference's driver-side Maps + row loop
     (revalueCollection.mjs:43-103): J7 broadcast hash join, A3 groupBy.
+    Both outputs come from the one join. The repriced items are every
+    input row with `last_value_cents` replaced, columns in table order
+    (`id`, the other item columns, `last_value_cents` last), so the S8
+    rewrite of the items table writes them as they are.
     Semantics preserved: qty null→0; per-unit `last_value_cents`
     = round(price*100) or NULL when unpriced (incl. null card_id);
     cost contributes only when non-null; value contributes only when
@@ -599,25 +603,22 @@ def revalue_collection(
         & (F.col("i.card_id").cast("string") == F.col("pr.card_id")),
         "left",
     )
-    qty = F.coalesce(F.col("i.quantity"), F.lit(0)).cast("long")
-    price_cents = F.round(F.col("pr.price") * 100, 0).cast("long")
-    valued = joined.select(
+    kept = [c for c in items.columns if c not in ("id", "last_value_cents")]
+    repriced = joined.select(
         F.col("i.id").alias("id"),
-        F.col("i.user_id").alias("user_id"),
-        qty.alias("qty"),
-        F.col("i.cost_cents").cast("long").alias("cost_cents"),
-        price_cents.alias("last_value_cents"),
+        *[F.col(f"i.`{c}`").alias(c) for c in kept],
+        F.round(F.col("pr.price") * 100, 0).cast("long").alias("last_value_cents"),
     )
 
-    updates = valued.select("id", "last_value_cents")
-    valuations = valued.groupBy("user_id").agg(
-        F.sum("qty").alias("total_quantity"),
+    qty = F.coalesce(F.col("quantity"), F.lit(0)).cast("long")
+    valuations = repriced.groupBy("user_id").agg(
+        F.sum(qty).alias("total_quantity"),
         F.count(F.lit(1)).alias("distinct_items"),
         F.coalesce(
-            F.sum(F.col("cost_cents") * F.col("qty")), F.lit(0)
+            F.sum(F.col("cost_cents").cast("long") * qty), F.lit(0)
         ).alias("total_cost_cents"),
         F.coalesce(
-            F.sum(F.col("last_value_cents") * F.col("qty")), F.lit(0)
+            F.sum(F.col("last_value_cents") * qty), F.lit(0)
         ).alias("total_value_cents"),
     ).select(
         "user_id",
@@ -627,4 +628,4 @@ def revalue_collection(
         "total_cost_cents",
         "total_value_cents",
     )
-    return updates, valuations
+    return repriced, valuations

@@ -123,6 +123,21 @@ def write_z_ordered(
     )
 
 
+def hadoop_fs(spark, path: str):
+    """`(FileSystem, Path)` for `path` through the Hadoop FileSystem API,
+    so callers list, create and rename on any supported filesystem
+    (local, HDFS, S3A) — never `os`, which only sees local paths."""
+    sc = spark.sparkContext
+    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration()), hadoop_path
+
+
+def rename(fs, src, dst) -> None:
+    """`fs.rename` that raises instead of returning False."""
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src.toString()} -> {dst.toString()} failed")
+
+
 def table_file_stats(spark, path: str) -> "DataFrame":
     """(file, bytes) per data file of a parquet table — the compaction
     planner's input.
@@ -135,9 +150,7 @@ def table_file_stats(spark, path: str) -> "DataFrame":
     """
     from pyspark.sql import Row
 
-    sc = spark.sparkContext
-    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, hadoop_path = hadoop_fs(spark, path)
     it = fs.listFiles(hadoop_path, True)
     rows = []
     while it.hasNext():

@@ -10,23 +10,35 @@ latest event per run (last-value-per-group, the same J9 pattern). Append
 beats update-in-place on immutable storage and is the idempotency-safe
 shape at scale.
 
-Each event is a one-row frame of JVM literals over a one-partition
-`range`, cast to `RUNLOG_SCHEMA`, so an append is one write job with one
-task and leaves one parquet file. (`createDataFrame` of a Python list
-would parallelize the row over every default slice and run a
-Python-worker task per slice on every action.) `event_at` is an aware
-UTC datetime: a naive one is read as host-local time on the way in.
+Each event is one small parquet file written from the driver: pyarrow
+encodes the row against `RUNLOG_SCHEMA` and the bytes are committed
+through the Hadoop FileSystem API. A one-row event needs no Spark job —
+a job pays scheduling, task launch and the write committer for a few
+hundred bytes, about ten times the driver-side write. The file is
+created under a hidden `_tmp-` name and then renamed into place, so a
+reader (Spark skips `_`/`.` names when listing) never sees a partial
+event. The footer carries Spark's row-schema key, so `spark.read`
+resolves the same schema from these files as from events written by a
+Spark job, and old and new events mix in one log. `event_at` is an
+aware UTC datetime: a naive one is read as host-local time on the way
+in.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
+
+from legendary_data_pipeline_spark.sources.layout import hadoop_fs, rename
 
 RUNLOG_SCHEMA = (
     "run_id string, job string, status string, file_name string, "
@@ -43,11 +55,33 @@ def sha256_file(path: str) -> str:
     return digest.hexdigest()
 
 
+@functools.cache
+def _arrow_schema() -> pa.Schema:
+    """`RUNLOG_SCHEMA` as Arrow (timestamps as UTC microseconds), with
+    the Spark schema under the footer key Spark's reader resolves first."""
+    struct = DataType.fromDDL(RUNLOG_SCHEMA)
+    return to_arrow_schema(struct).with_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": struct.json()}
+    )
+
+
 def _append(spark: SparkSession, log_path: str, row: dict) -> None:
-    fields = DataType.fromDDL(RUNLOG_SCHEMA).fields
-    spark.range(1, numPartitions=1).select(
-        *[F.lit(row[f.name]).cast(f.dataType).alias(f.name) for f in fields]
-    ).write.mode("append").parquet(log_path)
+    buf = pa.BufferOutputStream()
+    pq.write_table(
+        pa.Table.from_pylist([row], schema=_arrow_schema()),
+        buf,
+        compression="snappy",
+    )
+    fs, log = hadoop_fs(spark, log_path)
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    name = f"part-{uuid.uuid4()}.snappy.parquet"
+    tmp = path(log, f"_tmp-{name}")
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    rename(fs, tmp, path(log, name))
 
 
 def start_run(

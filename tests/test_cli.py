@@ -315,6 +315,10 @@ def test_cli_curate_nb_filter_and_split(spark, sf_dir, tmp_path):
     assert set(
         r["split"] for r in curated.select("split").distinct().collect()
     ) <= {"train", "val"}
+    # A parquet input has no bad lines: the quarantine is rewritten empty.
+    quarantine = spark.read.parquet(f"{wh}/curate_quarantine")
+    assert quarantine.schema.simpleString() == "struct<raw_line:string>"
+    assert quarantine.count() == 0
 
 
 def test_cli_curate_decontam_split_manifests(spark, sf_dir, tmp_path):

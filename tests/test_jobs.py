@@ -310,9 +310,23 @@ def test_revalue_collection(spark):
         "id string, user_id string, game string, card_id string,"
         " quantity int, cost_cents long",
     )
-    updates, valuations = jobs.revalue_collection(items, prices, "2024-06-01")
-    upd = {r.id: r.last_value_cents for r in updates.collect()}
+    repriced, valuations = jobs.revalue_collection(items, prices, "2024-06-01")
+    upd = {r.id: r.last_value_cents for r in repriced.collect()}
     assert upd == {"i1": 1250, "i2": 200, "i3": None, "i4": 100000, "i5": None}
+    # Every input row, unchanged apart from the appended price, in table
+    # order: `id` first, `last_value_cents` last.
+    assert repriced.columns == [*items.columns, "last_value_cents"]
+    assert sorted(repriced.drop("last_value_cents").collect()) == sorted(
+        items.collect()
+    )
+    # An items table that already has the column keeps its place last.
+    stale = items.withColumn("last_value_cents", F.lit(1).cast("long")).select(
+        "id", "last_value_cents", "user_id", "game", "card_id", "quantity",
+        "cost_cents",
+    )
+    again, _ = jobs.revalue_collection(stale, prices, "2024-06-01")
+    assert again.columns == repriced.columns
+    assert sorted(again.collect()) == sorted(repriced.collect())
     vals = {r.user_id: r for r in valuations.collect()}
     u1 = vals["u1"]
     # qty=2+1+4; items=3; cost=500*2+100*4 (null cost skipped);

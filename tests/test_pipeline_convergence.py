@@ -118,18 +118,23 @@ def _write_fixture(spark, tmp_path, wh):
     return str(csv)
 
 
+def _chain(wh, csv, feed_out):
+    """argv of each command of the chain, in run order."""
+    return [
+        ["import-pricecharting", "--warehouse", wh, "--file", csv,
+         "--game", "pokemon", "--date", "2024-06-01"],
+        ["normalize-scryfall", "--warehouse", wh, "--date", "2024-06-01"],
+        ["build-daily", "--warehouse", wh, "--all-dates"],
+        ["rollup-values", "--warehouse", wh, "--date", "2024-06-01"],
+        ["export-feed", "--warehouse", wh, "--out", feed_out,
+         "--format", "tsv"],
+        ["revalue", "--warehouse", wh, "--date", "2024-06-01"],
+    ]
+
+
 def _run_chain(spark, wh, csv, feed_out):
-    _run(spark, [
-        "import-pricecharting", "--warehouse", wh, "--file", csv,
-        "--game", "pokemon", "--date", "2024-06-01",
-    ])
-    _run(spark, ["normalize-scryfall", "--warehouse", wh,
-                 "--date", "2024-06-01"])
-    _run(spark, ["build-daily", "--warehouse", wh, "--all-dates"])
-    _run(spark, ["rollup-values", "--warehouse", wh, "--date", "2024-06-01"])
-    _run(spark, ["export-feed", "--warehouse", wh, "--out", feed_out,
-                 "--format", "tsv"])
-    _run(spark, ["revalue", "--warehouse", wh, "--date", "2024-06-01"])
+    for argv in _chain(wh, csv, feed_out):
+        _run(spark, argv)
 
 
 def _feed_bytes(feed_out: str) -> bytes:
@@ -249,3 +254,36 @@ def test_run_log_writes_one_file_per_event(spark, chain_once):
     wh, _ = chain_once
     files = glob.glob(f"{wh}/pipeline_runs/*.parquet")
     assert len(files) == spark.read.parquet(f"{wh}/pipeline_runs").count()
+
+
+# Spark jobs each command may run on this fixture, (day, re-run). Run-log
+# events, the upsert swap and revalue's one join run none of their own;
+# what is left is schema inference of each parquet read, broadcasts,
+# shuffle stages and the writes. A new bookkeeping job fails this test.
+_JOB_BUDGET = {
+    "import-pricecharting": (6, 7),
+    "normalize-scryfall": (5, 6),
+    "build-daily": (3, 3),
+    "rollup-values": (3, 3),
+    "export-feed": (6, 6),
+    "revalue": (11, 11),
+}
+
+
+def test_pipeline_commands_stay_within_job_budget(spark, tmp_path):
+    wh = str(tmp_path / "wh")
+    csv = _write_fixture(spark, tmp_path, wh)
+    sc = spark.sparkContext
+    over = {}
+    for rerun in (0, 1):
+        for argv in _chain(wh, csv, str(tmp_path / f"feed{rerun}")):
+            group = f"job-budget-{tmp_path.name}-{rerun}-{argv[0]}"
+            sc.setJobGroup(group, group)
+            try:
+                _run(spark, argv)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            if jobs > _JOB_BUDGET[argv[0]][rerun]:
+                over[argv[0], ("day", "re-run")[rerun]] = jobs
+    assert not over, f"jobs over budget {over}; budget {_JOB_BUDGET}"

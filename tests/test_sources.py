@@ -4,9 +4,11 @@ from __future__ import annotations
 
 import os
 import time
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from legendary_data_pipeline_spark.sources.csv_alias import (
     PRICECHARTING_ALIASES,
@@ -16,7 +18,9 @@ from legendary_data_pipeline_spark.sources.feed_writer import (
     collect_single_file,
     write_feed,
 )
+from legendary_data_pipeline_spark.sources import runlog
 from legendary_data_pipeline_spark.sources.runlog import (
+    RUNLOG_SCHEMA,
     current_runs,
     finish_run,
     sha256_file,
@@ -123,6 +127,79 @@ def test_runlog_event_at_is_utc_whatever_the_host_timezone(spark, tmp_path):
         F.unix_micros("event_at").alias("us")
     ).collect()
     assert t0 - 1 <= row.us / 1e6 <= t1 + 1
+
+
+def test_runlog_ignores_uncommitted_event_file(spark, tmp_path):
+    """An event whose commit was interrupted stays under its hidden
+    `_tmp-` name: neither the reader nor `current_runs` sees it."""
+    log_path = str(tmp_path / "runs")
+    run_id = start_run(spark, log_path, "import")
+    (committed,) = [n for n in os.listdir(log_path) if n.endswith(".parquet")]
+    stray = os.path.join(log_path, f"_tmp-{committed}")
+    with open(os.path.join(log_path, committed), "rb") as fh:
+        head = fh.read()
+    with open(stray, "wb") as fh:
+        fh.write(head[: len(head) // 2])  # a partial write
+    assert spark.read.parquet(log_path).count() == 1
+    (state,) = current_runs(spark, log_path).collect()
+    assert (state.run_id, state.status) == (run_id, "started")
+
+
+def _spark_job_event(spark, log_path: str, row: dict) -> None:
+    """An event as a Spark write job stores it: one-row literal frame
+    cast to `RUNLOG_SCHEMA`, appended as parquet (logs written before
+    the driver-side commit hold files like this)."""
+    fields = DataType.fromDDL(RUNLOG_SCHEMA).fields
+    spark.range(1, numPartitions=1).select(
+        *[F.lit(row[f.name]).cast(f.dataType).alias(f.name) for f in fields]
+    ).write.mode("append").parquet(log_path)
+
+
+def test_runlog_mixes_spark_written_and_driver_written_events(spark, tmp_path):
+    """A log holding events from both writers reads back with the
+    declared schema, and the same event written either way reads back
+    with the same values."""
+    log_path = str(tmp_path / "runs")
+    at = datetime(2024, 6, 1, 12, 30, 45, 123456, tzinfo=timezone.utc)
+    events = [
+        {"job": "import", "status": "started", "file_name": "prices.csv",
+         "file_sha256": "ab" * 32, "row_count": None,
+         "meta": '{"game": "pokemon"}', "event_at": at},
+        {"job": "import", "status": "finished", "file_name": None,
+         "file_sha256": None, "row_count": 7, "meta": None,
+         "event_at": at + timedelta(seconds=1)},
+    ]
+    for event in events:
+        _spark_job_event(spark, log_path, {**event, "run_id": "spark-job"})
+        runlog._append(spark, log_path, {**event, "run_id": "driver"})
+
+    log = spark.read.parquet(log_path)
+    assert log.schema == DataType.fromDDL(RUNLOG_SCHEMA)
+    # event_at as epoch micros: collected datetimes depend on the host TZ
+    rows = [
+        r.asDict()
+        for r in log.withColumn("event_at", F.unix_micros("event_at")).collect()
+    ]
+    by_writer = {
+        w: sorted(
+            ({k: v for k, v in r.items() if k != "run_id"}
+             for r in rows if r["run_id"] == w),
+            key=lambda r: r["status"],
+        )
+        for w in ("spark-job", "driver")
+    }
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    expected = sorted(
+        ({**e, "event_at": (e["event_at"] - epoch) // timedelta(microseconds=1)}
+         for e in events),
+        key=lambda r: r["status"],
+    )
+    assert by_writer["spark-job"] == by_writer["driver"] == expected
+    state = {
+        r.run_id: (r.status, r.row_count)
+        for r in current_runs(spark, log_path).collect()
+    }
+    assert state == {"spark-job": ("finished", 7), "driver": ("finished", 7)}
 
 
 # ---------------------------------------------------------------------------

@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
+from legendary_data_pipeline_spark.operators import upsert as upsert_mod
 from legendary_data_pipeline_spark.operators.upsert import (
     insert_missing,
     upsert,
@@ -72,6 +76,110 @@ def test_write_upsert_parquet_first_batch_dedupes_keys(spark, tmp_path):
     state = {r.k: r.v for r in spark.read.parquet(path).collect()}
     assert state == {1: 11, 2: 20}
     assert spark.read.parquet(path).count() == 2
+
+
+def _state(spark, path):
+    return {r.k: r.v for r in spark.read.parquet(path).collect()}
+
+
+def test_write_upsert_parquet_failed_swap_keeps_old_rows(
+    spark, tmp_path, monkeypatch
+):
+    """The write fails after the old files moved aside: the old rows are
+    back at the path when the error surfaces, and no sibling is left."""
+    path = str(tmp_path / "t")
+    write_upsert_parquet(
+        path, spark.createDataFrame([(1, 10), (2, 20)], "k int, v int"),
+        ["k"], spark,
+    )
+    real = upsert_mod.rename
+
+    def failing(fs, src, dst):
+        if src.getName().endswith(".__new__"):
+            raise OSError("injected: new files cannot be moved in")
+        real(fs, src, dst)
+
+    monkeypatch.setattr(upsert_mod, "rename", failing)
+    with pytest.raises(OSError, match="injected"):
+        write_upsert_parquet(
+            path, spark.createDataFrame([(2, 99)], "k int, v int"),
+            ["k"], spark,
+        )
+    assert _state(spark, path) == {1: 10, 2: 20}
+    assert not os.path.exists(path + ".__old__")
+
+
+def test_write_upsert_parquet_restores_interrupted_swap(spark, tmp_path):
+    """A process that died between the renames leaves `.__old__` and no
+    table: the next write restores the old copy, then merges into it."""
+    path = str(tmp_path / "t")
+    write_upsert_parquet(
+        path, spark.createDataFrame([(1, 10), (2, 20)], "k int, v int"),
+        ["k"], spark,
+    )
+    os.rename(path, path + ".__old__")
+    write_upsert_parquet(
+        path, spark.createDataFrame([(2, 21), (3, 30)], "k int, v int"),
+        ["k"], spark,
+    )
+    assert _state(spark, path) == {1: 10, 2: 21, 3: 30}
+    assert not os.path.exists(path + ".__old__")
+    assert not os.path.exists(path + ".__new__")
+
+
+def test_write_upsert_parquet_drops_leftover_old_copy(spark, tmp_path):
+    """A swap that committed but died before deleting `.__old__`: the next
+    write merges into the committed table and removes the old copy."""
+    path = str(tmp_path / "t")
+    write_upsert_parquet(
+        path, spark.createDataFrame([(1, 10)], "k int, v int"), ["k"], spark
+    )
+    spark.createDataFrame([(9, 90)], "k int, v int").write.parquet(
+        path + ".__old__"
+    )
+    write_upsert_parquet(
+        path, spark.createDataFrame([(2, 20)], "k int, v int"), ["k"], spark
+    )
+    assert _state(spark, path) == {1: 10, 2: 20}
+    assert not os.path.exists(path + ".__old__")
+
+
+def test_upsert_sink_rerun_after_interrupted_batch_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch killed after moving the old files aside is replayed
+    (foreachBatch re-runs the batch id after a restart) and ends where an
+    uninterrupted run ends."""
+    from legendary_data_pipeline_spark.streaming.snapshots import upsert_sink
+
+    batches = [
+        spark.createDataFrame([(1, 10), (2, 20)], "k int, v int"),
+        spark.createDataFrame([(2, 21), (3, 30)], "k int, v int"),
+    ]
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for target in (clean, crashed):
+        upsert_sink(target, ["k"])(batches[0], 0)
+    upsert_sink(clean, ["k"])(batches[1], 1)
+
+    class Killed(BaseException):
+        pass
+
+    real = upsert_mod.rename
+
+    def killed_after_first_rename(fs, src, dst):
+        real(fs, src, dst)
+        raise Killed  # no rollback runs: the process is gone
+
+    monkeypatch.setattr(upsert_mod, "rename", killed_after_first_rename)
+    with pytest.raises(Killed):
+        upsert_sink(crashed, ["k"])(batches[1], 1)
+    monkeypatch.setattr(upsert_mod, "rename", real)
+    assert not os.path.exists(crashed)
+    assert os.path.exists(crashed + ".__old__")
+
+    upsert_sink(crashed, ["k"])(batches[1], 1)
+    assert _state(spark, crashed) == _state(spark, clean) == {1: 10, 2: 21, 3: 30}
+    assert sorted(os.listdir(tmp_path)) == ["clean", "crashed"]
 
 
 def test_write_upsert_partitioned_replaces_only_touched(spark, tmp_path):
