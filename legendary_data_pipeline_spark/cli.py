@@ -36,6 +36,7 @@ from legendary_data_pipeline_spark.sources.csv_alias import (
     read_csv_with_aliases,
 )
 from legendary_data_pipeline_spark.sources.feed_writer import write_feed
+from legendary_data_pipeline_spark.sources.layout import hadoop_fs
 from legendary_data_pipeline_spark.sources.runlog import (
     finish_run,
     sha256_file,
@@ -49,6 +50,16 @@ def _table(warehouse: str, name: str) -> str:
 
 def _read(spark: SparkSession, warehouse: str, name: str) -> DataFrame:
     return spark.read.parquet(_table(warehouse, name))
+
+
+def _read_optional(
+    spark: SparkSession, warehouse: str, name: str
+) -> DataFrame | None:
+    """An optional table (the reference probes these with try/catch):
+    None when its path does not exist; a present table that fails to
+    read raises."""
+    fs, path = hadoop_fs(spark, _table(warehouse, name))
+    return _read(spark, warehouse, name) if fs.exists(path) else None
 
 
 def _today() -> str:
@@ -167,21 +178,16 @@ def cmd_rollup_values(spark: SparkSession, args) -> int:
 
 
 def cmd_export_feed(spark: SparkSession, args) -> int:
-    def opt(name: str) -> DataFrame | None:
-        try:
-            return _read(spark, args.warehouse, name)
-        except Exception:
-            return None  # optional table — probed like the reference's try/catch
-
-    log = _table(args.warehouse, "pipeline_runs")
+    wh = args.warehouse
+    log = _table(wh, "pipeline_runs")
     run_id = start_run(spark, log, "export_feed")
     # Observed above the feed's sort, which the range-sort's sampling job
     # does not run, so only the write counts rows.
     feed, obs = _observed(jobs.export_google_merchant_feed(
-        _read(spark, args.warehouse, "products"),
-        opt("tcg_cards"),
-        opt("ygo_card_images"),
-        opt("scryfall_cards_raw"),
+        _read(spark, wh, "products"),
+        _read_optional(spark, wh, "tcg_cards"),
+        _read_optional(spark, wh, "ygo_card_images"),
+        _read_optional(spark, wh, "scryfall_cards_raw"),
         site_base=args.site_base,
     ))
     write_feed(feed, args.out, fmt=args.format)
@@ -195,19 +201,13 @@ def cmd_revalue(spark: SparkSession, args) -> int:
         write_upsert_parquet,
     )
 
-    def opt(name: str) -> DataFrame | None:
-        try:
-            return _read(spark, args.warehouse, name)
-        except Exception:
-            return None
-
     log = _table(args.warehouse, "pipeline_runs")
     run_id = start_run(spark, log, "revalue_collection")
     prices = jobs.resolve_prices(
         _read(spark, args.warehouse, "tcg_card_prices_tcgplayer"),
         _read(spark, args.warehouse, "ygo_card_prices"),
         _read(spark, args.warehouse, "mtg_prices_effective"),
-        tcg_ebay=opt("tcg_card_prices_ebay"),
+        tcg_ebay=_read_optional(spark, args.warehouse, "tcg_card_prices_ebay"),
     )
     repriced, valuations = jobs.revalue_collection(
         _read(spark, args.warehouse, "user_collection_items"), prices, args.date

@@ -1301,12 +1301,10 @@ def _pooled_two_median(d: DataFrame) -> DataFrame:
     per_v = d.groupBy("__v").agg(
         F.count(F.lit(1)).cast("long").alias("__c")
     )
-    cum = distributed_below_counts(per_v, "__v", ["__c"], inclusive=False)
-    tot = cum.agg(F.sum("__c").cast("long").alias("__n"))
-    j = cum.crossJoin(F.broadcast(tot))
+    j = distributed_below_counts(per_v, "__v", ["__c"], inclusive=False)
     # 1-indexed lower/upper middle ranks: k1 = (n+1)//2, k2 = (n+2)//2
-    k1 = F.shiftright(F.col("__n") + F.lit(1), 1)
-    k2 = F.shiftright(F.col("__n") + F.lit(2), 1)
+    k1 = F.shiftright(F.col("__c_total") + F.lit(1), 1)
+    k2 = F.shiftright(F.col("__c_total") + F.lit(2), 1)
     covers = F.col("__c_cum") + F.col("__c")  # top rank this value covers
     return j.agg(
         F.min(F.when(covers >= k1, F.col("__v"))).alias("__v1"),

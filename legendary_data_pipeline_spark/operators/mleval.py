@@ -957,9 +957,10 @@ def cumulative_gains(
         lift_d = (pos_kept · n) / (total_pos · n_kept)
 
     Scale: one (pred)-distinct groupBy + one distributed below-counts
-    pass on the DESCENDING order (negated key) + one aggregation with
-    k conditional sums — the lorenz_points plan, cut thresholds
-    hoisted to the broadcast totals frame as BIGINTs. NULLs drop;
+    pass on the DESCENDING order (negated key; it also yields the
+    row and positive totals) + one aggregation with k conditional
+    sums — the lorenz_points plan, cut thresholds as BIGINT
+    expressions over those totals. NULLs drop;
     ``label_col`` must be 0/1 integer-valued.
 
     Output per point (k rows; 0 rows on an empty/all-NULL input — the
@@ -972,6 +973,7 @@ def cumulative_gains(
             f"cumulative_gains: n_points must be >= 1, got {n_points}"
         )
     from legendary_data_pipeline_spark.operators.stats import (
+        bigint_mul_div,
         distributed_below_counts,
     )
 
@@ -995,24 +997,19 @@ def cumulative_gains(
             F.sum("__y").cast("long").alias("__pos"),
         )
     )
-    cum = distributed_below_counts(
-        per_v, "__nv", ["__c"], inclusive=False
-    ).localCheckpoint(eager=False)  # totals + per-point sums
-    totals = cum.agg(
-        F.sum("__c").cast("long").alias("__n"),
-        F.sum("__pos").cast("long").alias("__tp"),
+    j = distributed_below_counts(
+        per_v, "__nv", ["__c", "__pos"], inclusive=False
     ).select(
-        "__n",
-        "__tp",
+        "__c",
+        "__pos",
+        "__c_cum",
+        F.col("__c_total").alias("__n"),
+        F.col("__pos_total").alias("__tp"),
         *[
-            F.expr(
-                f"CAST((CAST(__n AS DECIMAL(38,0)) * {p}) "
-                f"DIV {n_points} AS BIGINT)"
-            ).alias(f"__t{p}")
+            bigint_mul_div("__c_total", p, n_points).alias(f"__t{p}")
             for p in range(1, n_points + 1)
         ],
     )
-    j = cum.crossJoin(F.broadcast(totals))
     agg_cols = [
         F.max("__n").alias("__n"),
         F.max("__tp").alias("__tp"),

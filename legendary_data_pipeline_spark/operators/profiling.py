@@ -614,11 +614,10 @@ def ks_two_sample(
             F.coalesce("__cc", F.lit(0)).alias("__cc"),
         )
     )
-    # Inclusive running counts via the distributed prefix-sum (round
-    # 9): a Window.orderBy(value) here would funnel the distinct-value
-    # frame through ONE partition — data-sized for continuous measures
-    # (cents!) at corpus scale. Totals ride along as an extra pair of
-    # count sums over the SAME checkpointed frame (no branch replay).
+    # Inclusive running counts and both sides' totals via the
+    # distributed prefix-sum (round 9): a Window.orderBy(value) here
+    # would funnel the distinct-value frame through ONE partition —
+    # data-sized for continuous measures (cents!) at corpus scale.
     from legendary_data_pipeline_spark.operators.stats import (
         distributed_below_counts,
     )
@@ -626,20 +625,16 @@ def ks_two_sample(
     cum = distributed_below_counts(
         merged, "__v", ["__cb", "__cc"], inclusive=True
     )
-    totals = cum.groupBy().agg(
-        F.sum("__cb").cast("decimal(38,0)").alias("__nb"),
-        F.sum("__cc").cast("decimal(38,0)").alias("__nc"),
-    )
     cb = F.col("__cb_cum").cast("decimal(38,0)")
     cc = F.col("__cc_cum").cast("decimal(38,0)")
+    nb = F.col("__cb_total").cast("decimal(38,0)")
+    nc = F.col("__cc_total").cast("decimal(38,0)")
     # |F1 - F2| scaled by n_base*n_current: exact integer cross-product
-    per_v = cum.crossJoin(F.broadcast(totals)).select(
+    per_v = cum.select(
         "__v",
-        F.abs(cb * F.col("__nc") - cc * F.col("__nb"))
-        .cast("decimal(38,0)")
-        .alias("__d"),
-        "__nb",
-        "__nc",
+        F.abs(cb * nc - cc * nb).cast("decimal(38,0)").alias("__d"),
+        nb.alias("__nb"),
+        nc.alias("__nc"),
     )
     # Supremum + earliest attaining value via two metadata-sized
     # aggregations instead of a global ORDER BY window (the previous
@@ -740,16 +735,19 @@ def cramer_von_mises(
 
     cum = distributed_below_counts(
         merged, "__v", ["__cb", "__cc"], inclusive=True
-    )
-    totals = cum.groupBy().agg(
-        F.sum("__cb").cast("decimal(38,0)").alias("__nb"),
-        F.sum("__cc").cast("decimal(38,0)").alias("__nc"),
+    ).select(
+        "__cb",
+        "__cc",
+        "__cb_cum",
+        "__cc_cum",
+        F.col("__cb_total").cast("decimal(38,0)").alias("__nb"),
+        F.col("__cc_total").cast("decimal(38,0)").alias("__nc"),
     )
     cb = F.col("__cb_cum").cast("decimal(38,0)")
     cc = F.col("__cc_cum").cast("decimal(38,0)")
     w = (F.col("__cb") + F.col("__cc")).cast("decimal(38,0)")
     dterm = (cb * F.col("__nc") - cc * F.col("__nb")).cast("decimal(38,0)")
-    agg = cum.crossJoin(F.broadcast(totals)).groupBy("__nb", "__nc").agg(
+    agg = cum.groupBy("__nb", "__nc").agg(
         F.sum((w * dterm * dterm).cast("decimal(38,0)"))
         .cast("decimal(38,0)")
         .alias("__num"),

@@ -787,6 +787,17 @@ def sketch_quantile(
 # exact-moment association statistics
 # ---------------------------------------------------------------------------
 
+def bigint_mul_div(col: str, num: int, den: int, ceil: bool = False) -> Column:
+    """⌊col·num/den⌋ (⌈…⌉ with ``ceil``) for a non-negative BIGINT
+    column, in BIGINT and exact for every such value: ``col`` is split
+    at ``den`` so no product leaves int64 (``num``·``den`` must fit).
+    The per-group thresholds over prefix-sum totals (trim counts,
+    coverage targets, cut points) use it instead of a per-row decimal
+    DIV."""
+    rem = f"({col} % {den}) * {num}" + (f" + {den - 1}" if ceil else "")
+    return F.expr(f"({col} DIV {den}) * {num} + ({rem}) DIV {den}")
+
+
 def distributed_below_counts(
     g: DataFrame,
     value_col: str,
@@ -802,8 +813,13 @@ def distributed_below_counts(
     with integer count columns ``cnt_cols``. Output: ``g``'s columns
     plus, per count column c, ``{c}_cum`` = Σ c over values strictly
     below this row's value (``inclusive=False``) or ≤ it
-    (``inclusive=True``). Results are a pure function of the data —
+    (``inclusive=True``), and ``{c}_total`` = Σ c over the row's whole
+    group (over all of ``g`` without ``group_cols``). Both keep c's
+    type: BIGINT counts give BIGINT sums, which raise on overflow under
+    ANSI rather than wrap. Results are a pure function of the data —
     identical for any partitioning — so oracle exactness is untouched.
+    Callers read group totals from ``{c}_total`` instead of
+    re-aggregating the output and joining it back.
 
     Why not ``Window.orderBy(value)`` over the whole frame: that plans
     an Exchange SinglePartition, funnelling the DISTINCT-VALUE frame
@@ -820,8 +836,8 @@ def distributed_below_counts(
        nothing upstream is replayed — the pagerank lineage-truncation
        precedent).
     2. Per-partition totals → a P-row offsets frame (P = shuffle
-       partitions; the only remaining ordered window runs over those P
-       metadata rows).
+       partitions; the only remaining windows — the ordered offsets and
+       the group totals — run over those P metadata rows).
     3. Per-PARTITION cumulative windows (bounded by partition size) +
        a broadcast join of the offsets.
 
@@ -855,6 +871,7 @@ def distributed_below_counts(
     off_w = Window.partitionBy(*groups).orderBy(F.col("__pid").asc()).rowsBetween(
         Window.unboundedPreceding, -1
     )
+    tot_w = Window.partitionBy(*groups)
     offs = per_p.select(
         *[F.col(c).alias(f"__g_{c}") for c in groups],
         F.col("__pid").alias("__opid"),
@@ -864,6 +881,7 @@ def distributed_below_counts(
             )
             for c in cnts
         ],
+        *[F.sum(f"__t_{c}").over(tot_w).alias(f"__tot_{c}") for c in cnts],
     )
     cond = ann["__pid"] == offs["__opid"]
     for c in groups:
@@ -881,6 +899,7 @@ def distributed_below_counts(
             ).alias(f"{c}_cum")
             for c in cnts
         ],
+        *[F.col(f"__tot_{c}").alias(f"{c}_total") for c in cnts],
     )
 
 
@@ -1255,12 +1274,6 @@ def kendall_tau_b(
 #: spine via an explicit broadcast (see the r15 note inside
 #: `spearman_matrix`); larger maps keep the shuffle join.
 _RANKMAP_BROADCAST_MAX_ROWS = 1_000_000
-
-#: Same posture for `equal_freq_bins`' per-group totals frame: at or
-#: under this many groups the totals join broadcasts (a row is a few
-#: tens of bytes — well inside the engine's 64 MB broadcast posture);
-#: larger group sets keep the shuffle join.
-_GROUP_TOTALS_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def spearman_matrix(
@@ -2182,21 +2195,17 @@ def logrank_test(
         F.sum(F.lit(1) - F.col("__a")).cast("long").alias("__x_b"),
     )
     # Exact integer risk sets with NO data-sized single-partition
-    # window (round 9): exited-before counts via the distributed
-    # prefix-sum over the range-shuffled distinct-time frame; totals
-    # ride as a 1-row broadcast over the SAME checkpointed frame.
+    # window (round 9): exited-before counts and totals via the
+    # distributed prefix-sum over the range-shuffled distinct-time frame.
     cum = distributed_below_counts(
         per_t, "__t", ["__x_a", "__x_b"], inclusive=False
     )
-    tot = cum.groupBy().agg(
-        F.sum("__x_a").cast("long").alias("__tot_a"),
-        F.sum("__x_b").cast("long").alias("__tot_b"),
-    )
-    ann = cum.crossJoin(F.broadcast(tot)).select(
+    ann = cum.select(
         "__t", "__d_a", "__d_b",
-        (F.col("__tot_a") - F.col("__x_a_cum")).cast("long").alias("__n_a"),
-        (F.col("__tot_b") - F.col("__x_b_cum")).cast("long").alias("__n_b"),
-        "__tot_a", "__tot_b",
+        (F.col("__x_a_total") - F.col("__x_a_cum")).alias("__n_a"),
+        (F.col("__x_b_total") - F.col("__x_b_cum")).alias("__n_b"),
+        F.col("__x_a_total").alias("__tot_a"),
+        F.col("__x_b_total").alias("__tot_b"),
     )
     nt = (F.col("__n_a") + F.col("__n_b")).cast("double")
     dt = (F.col("__d_a") + F.col("__d_b")).cast("double")
@@ -3027,71 +3036,36 @@ def equal_freq_bins(
     (distinct values in the bin), n_rows.
 
     Scale: one map-side-combinable groupBy to the distinct-value
-    frame, below-counts via `distributed_below_counts` (group_cols
-    passes through its coarse-group form — offsets must stay
-    broadcast-sized, the usual coarse-groups-over-continuous-values
-    regime), per-group totals join (group-cardinality-sized), then a
-    bin-table aggregation. No data-sized single-partition stage.
+    frame, below-counts and group totals via `distributed_below_counts`
+    (group_cols passes through its coarse-group form — offsets must
+    stay broadcast-sized, the usual coarse-groups-over-continuous-values
+    regime), then a bin-table aggregation. No data-sized
+    single-partition stage and no totals join: the group totals ride
+    on the offsets frame the core already broadcasts. Counts and their
+    prefix sums are BIGINT (exact; an overflow raises under ANSI) and
+    only the final bin DIV widens to decimal(38,0).
 
-    Eager-job contract: with group_cols set, construction runs one
-    Spark job (a group-cardinality count over the pinned below-counts
-    frame) to decide whether the totals join may broadcast — callers
-    that only build/explain the returned plan still execute that
-    sizing pass.
+    Eager-job contract: construction runs only the shuffle stages
+    under the core's two lazy pins (the distinct-value aggregation and
+    the range shuffle with its boundary sampling); there is no sizing
+    job, at any group cardinality.
     """
     if n_bins < 1:
         raise ValueError(f"equal_freq_bins: n_bins must be >= 1, got {n_bins}")
     groups = list(group_cols)
     v = F.col(value_col).cast("long")
     d = df.select(*groups, v.alias("__v")).where(v.isNotNull())
-    g = d.groupBy(*groups, "__v").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("__c")
-    )
+    g = d.groupBy(*groups, "__v").agg(F.count(F.lit(1)).alias("__c"))
     cum = distributed_below_counts(
         g, "__v", ["__c"], inclusive=False, group_cols=groups
     )
-    # Totals come from `cum`, NOT from `g`: distributed_below_counts
-    # pins its range-partitioned frame, so aggregating cum reuses that
-    # materialization — aggregating g would replay the source scan AND
-    # the data-sized distinct-value groupBy a second time (r9
-    # multi-consumer rule; plan-verified FileScan 2 → 0; local timing
-    # is noise-bound at sf0.1 but a second corpus scan is never the
-    # 100 TB plan).
-    totals = cum.groupBy(*groups).agg(
-        F.sum("__c").cast("decimal(38,0)").alias("__n")
-    )
-    if groups:
-        tt = totals.select(
-            *[F.col(g).alias(f"__tg_{g}") for g in groups], "__n"
-        )
-        cond = [F.col(g).eqNullSafe(F.col(f"__tg_{g}")) for g in groups]
-        # group-cardinality-sized by the operator's own contract (coarse
-        # groups — the offsets frame must already be broadcast-sized),
-        # but it hangs off a checkpointed frame with no stats, so the
-        # planner ran this as a SortMergeJoin re-shuffling the whole
-        # distinct-value frame (r15 runtime-plan audit). Broadcast it —
-        # gated on a runtime group-cardinality count (r15 verdict #7:
-        # the r15 form broadcast unconditionally, so a caller passing a
-        # high-cardinality group set would have built a data-sized
-        # broadcast). The count is one aggregation over the frame
-        # distributed_below_counts already pins, so the extra job is
-        # cache-local; like spearman_matrix's rank-map gate this makes
-        # the operator run eager Spark jobs at DataFrame-construction
-        # time (callers that only build/explain the plan pay it too).
-        if totals.count() <= _GROUP_TOTALS_BROADCAST_MAX_ROWS:
-            tt = F.broadcast(tt)
-        joined = cum.join(tt, cond).drop(
-            *[f"__tg_{g}" for g in groups]
-        )
-    else:
-        joined = cum.crossJoin(F.broadcast(totals))
-    binned = joined.select(
+    binned = cum.select(
         *groups,
         "__v",
         "__c",
         F.expr(
-            f"CAST((CAST({n_bins} AS DECIMAL(38,0)) * __c_cum) DIV __n "
-            "AS BIGINT)"
+            f"CAST((CAST({n_bins} AS DECIMAL(38,0)) * "
+            "CAST(__c_cum AS DECIMAL(38,0))) DIV __c_total AS BIGINT)"
         ).alias("bin"),
     )
     return binned.groupBy(*groups, "bin").agg(
@@ -3340,31 +3314,19 @@ def trimmed_mean(
     )
     cum = distributed_below_counts(
         per_v, "__v", ["__c"], inclusive=False, group_cols=groups
-    ).localCheckpoint(eager=False)  # totals + kept-row scan (r9 rule)
-    # trim count per side floor(n·ppm/1e6) is a GROUP CONSTANT —
-    # computed here on the group-count-sized totals frame so the
-    # per-distinct-value stage below stays in pure long arithmetic
-    # (the lorenz_points r11 hoist: the per-row decimal DIV was the
-    # dominant cost of the final stage on ~all-distinct columns).
-    totals = cum.groupBy(*groups).agg(
-        F.sum("__c").cast("long").alias("__n")
-    ).withColumn(
-        "__t",
-        F.expr(
-            f"CAST((CAST(__n AS DECIMAL(38,0)) * {int(trim_ppm)}) "
-            "DIV 1000000 AS BIGINT)"
-        ),
     )
-    if groups:
-        tt = totals.select(
-            *[F.col(g).alias(f"__tg_{g}") for g in groups], "__n", "__t"
-        )
-        cond = [F.col(g).eqNullSafe(F.col(f"__tg_{g}")) for g in groups]
-        j = cum.join(F.broadcast(tt), cond).drop(
-            *[f"__tg_{g}" for g in groups]
-        )
-    else:
-        j = cum.crossJoin(F.broadcast(totals))
+    # trim count per side floor(n·ppm/1e6) is a GROUP CONSTANT kept in
+    # BIGINT, never a per-row decimal DIV (the lorenz_points r11 hoist:
+    # that DIV was the dominant cost of the final stage on ~all-distinct
+    # columns).
+    j = cum.select(
+        *groups,
+        "__v",
+        "__c",
+        "__c_cum",
+        F.col("__c_total").alias("__n"),
+        bigint_mul_div("__c_total", int(trim_ppm), 1_000_000).alias("__t"),
+    )
     lo = F.greatest(F.col("__c_cum"), F.col("__t"))
     hi = F.least(
         F.col("__c_cum") + F.col("__c"), F.col("__n") - F.col("__t")

@@ -813,6 +813,7 @@ def vocab_coverage_points(
     """
     groups = list(group_cols)
     from legendary_data_pipeline_spark.operators.stats import (
+        bigint_mul_div,
         distributed_below_counts,
     )
 
@@ -827,38 +828,18 @@ def vocab_coverage_points(
     classes = classes.withColumn("__negc", -F.col("__c")).withColumn(
         "__tok", (F.col("__c") * F.col("__m")).cast("long")
     )
-    cum = distributed_below_counts(
+    joined = distributed_below_counts(
         classes, "__negc", ["__m", "__tok"], inclusive=False,
         group_cols=groups,
     ).select(
         *groups,
         "__c",
         "__m",
-        F.col("__m_cum").cast("long").alias("__types_above"),
-        F.col("__tok_cum").cast("long").alias("__tokens_above"),
-    ).localCheckpoint(eager=False)  # totals + per-target crossing scans
-    totals = cum.groupBy(*groups).agg(
-        F.sum((F.col("__c") * F.col("__m")).cast("long"))
-        .cast("long")
-        .alias("n_tokens"),
-        F.sum("__m").cast("long").alias("vocab"),
+        F.col("__m_cum").alias("__types_above"),
+        F.col("__tok_cum").alias("__tokens_above"),
+        F.col("__tok_total").alias("n_tokens"),
+        F.col("__m_total").alias("vocab"),
     )
-    tt = (
-        totals.select(
-            *[F.col(g).alias(f"__tg_{g}") for g in groups],
-            "n_tokens",
-            "vocab",
-        )
-        if groups
-        else totals
-    )
-    if groups:
-        cond = [F.col(g).eqNullSafe(F.col(f"__tg_{g}")) for g in groups]
-        joined = cum.join(F.broadcast(tt), cond).drop(
-            *[f"__tg_{g}" for g in groups]
-        )
-    else:
-        joined = cum.crossJoin(F.broadcast(totals))
     targets = sorted(set(int(p) for p in targets_ppm))
     names = [f"types_p{p // 10_000}" for p in targets]
     if len(set(names)) != len(names):
@@ -872,15 +853,10 @@ def vocab_coverage_points(
         F.max("vocab").alias("vocab"),
     ]
     for p in targets:
-        # T_p = ceil(p·N/1e6) exactly — integer DIV, never a decimal
-        # round-half-up cast; decimal operand keeps p·N exact past
-        # int64 at petascale token counts
+        # T_p = ceil(p·N/1e6) exactly — BIGINT integer DIV, never a
+        # decimal round-half-up cast, and exact for every BIGINT N
         joined = joined.withColumn(
-            f"__tp_{p}",
-            F.expr(
-                f"CAST((CAST(n_tokens AS DECIMAL(38,0)) * {p} + 999999) "
-                "DIV 1000000 AS BIGINT)"
-            ),
+            f"__tp_{p}", bigint_mul_div("n_tokens", p, 1_000_000, ceil=True)
         )
         crossing = (F.col("__tokens_above") < F.col(f"__tp_{p}")) & (
             F.col(f"__tp_{p}")

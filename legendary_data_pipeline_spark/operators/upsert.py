@@ -96,8 +96,10 @@ def write_upsert_parquet(
     renames leaves `<path>.__old__` and no `<path>`; the old copy is
     renamed back before the merge reads it. A `.__old__` next to a
     present `<path>` is a finished swap whose delete did not run, and is
-    removed. For partitioned daily-snapshot tables prefer
-    `write_upsert_partitioned` (rewrites only touched dates).
+    removed. `<path>` is read only when it exists; an error reading it
+    raises before the swap, so the table keeps its files. For
+    partitioned daily-snapshot tables prefer `write_upsert_partitioned`
+    (rewrites only touched dates).
     """
     fs, path = hadoop_fs(spark, existing_path)
     new, old = path.suffix(".__new__"), path.suffix(".__old__")
@@ -106,19 +108,18 @@ def write_upsert_parquet(
             fs.delete(old, True)
         else:
             rename(fs, old, path)
-    try:
+    replaced = fs.exists(path)
+    if replaced:
+        # A present target that fails to read raises here: merging it as
+        # a first write would swap in only the updates.
         existing = spark.read.parquet(existing_path)
-    except Exception:
-        existing = None
-    if existing is None:
+    else:
         # First write still needs within-source key dedup (duplicate keys
         # inside one batch must collapse exactly as they would on merge);
         # an empty existing side reuses the identical window semantics.
-        merged = upsert(updates.limit(0), updates, keys, order_within_source)
-    else:
-        merged = upsert(existing, updates, keys, order_within_source)
+        existing = updates.limit(0)
+    merged = upsert(existing, updates, keys, order_within_source)
     merged.write.mode("overwrite").parquet(new.toString())
-    replaced = fs.exists(path)
     if replaced:
         rename(fs, path, old)
     try:

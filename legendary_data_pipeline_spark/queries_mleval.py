@@ -302,14 +302,13 @@ _RANKED_CTE = f"""
 """
 
 
-def _bounded_query_ids(spark: SparkSession, sf_dir: str) -> list[int]:
-    """The md5-first ≤_RET_MAX_Q eligible query ids — a distributed
-    TakeOrderedAndProject, not a global rank window; the ≤-sample-size
-    id pull is the one driver action (the sim_hard_negatives
-    convention)."""
+def _bounded_query_ids(emb: DataFrame) -> list[int]:
+    """The md5-first ≤_RET_MAX_Q eligible query ids of the embeddings
+    frame `emb` — a distributed TakeOrderedAndProject, not a global rank
+    window; the ≤-sample-size id pull is the one driver action (the
+    sim_hard_negatives convention)."""
     from legendary_data_pipeline_spark.functions.hashing import md5_long
 
-    emb = load_distributed(spark, sf_dir, "embeddings")
     return [
         r.vec_id
         for r in emb.filter(F.col("vec_id") % 5 == 0)
@@ -324,12 +323,13 @@ def _bounded_query_ids(spark: SparkSession, sf_dir: str) -> list[int]:
 
 
 def _ranked_frame(
-    spark: SparkSession, sf_dir: str, query_ids: list[int] | None = None
+    emb: DataFrame, query_ids: list[int] | None = None
 ) -> DataFrame:
-    """Spark twin of _RANKED_CTE: (query_id, q_label, rank, rel)."""
-    emb = load_distributed(spark, sf_dir, "embeddings")
+    """Spark twin of _RANKED_CTE over the embeddings frame `emb`:
+    (query_id, q_label, rank, rel). Callers load `emb` once per query
+    and pass it here, so building the query reads the footer once."""
     if query_ids is None:
-        query_ids = _bounded_query_ids(spark, sf_dir)
+        query_ids = _bounded_query_ids(emb)
     topk = SIM.cosine_topk(
         emb,
         k=_RET_K,
@@ -387,7 +387,7 @@ _MRR_LCM = M._lcm_1_to(_RET_K)
     "negatives with it.",
 )
 def ret_mrr_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ranked = _ranked_frame(spark, sf_dir)
+    ranked = _ranked_frame(load_distributed(spark, sf_dir, "embeddings"))
     return M.mrr_at_k(ranked, "query_id", "rank", "rel", k=_RET_K)
 
 
@@ -448,7 +448,7 @@ _GAIN_CASE, _IDEAL_CASE = _ndcg_case_sql()
 )
 def ret_ndcg_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_distributed(spark, sf_dir, "embeddings")
-    ranked = _ranked_frame(spark, sf_dir)
+    ranked = _ranked_frame(emb)
     lab_cnt = emb.groupBy("label").agg(F.count(F.lit(1)).alias("__c"))
     nrel = lab_cnt.select(
         F.col("label").alias("q_label"),
@@ -798,9 +798,9 @@ def ml_two_proportion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ret_precision_recall_at_10(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    qids = _bounded_query_ids(spark, sf_dir)  # shared with the ranked frame
-    ranked = _ranked_frame(spark, sf_dir, query_ids=qids)
     emb = load_distributed(spark, sf_dir, "embeddings")
+    qids = _bounded_query_ids(emb)  # shared with the ranked frame
+    ranked = _ranked_frame(emb, query_ids=qids)
     labels = emb.select("vec_id", "label").localCheckpoint(
         eager=False
     )  # label counts + query side (r11 scan audit)

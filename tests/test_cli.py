@@ -423,3 +423,10 @@ def test_cli_stats_round10_metrics(spark, tmp_path, capsys):
         capture_output=True, text=True, timeout=600,
     )
     assert bad.returncode != 0 and "not supported" in bad.stderr
+
+
+def test_read_optional_missing_table_is_none(spark, tmp_path):
+    wh = str(tmp_path / "wh")
+    spark.createDataFrame([(1,)], "k int").write.parquet(f"{wh}/present")
+    assert cli._read_optional(spark, wh, "absent") is None
+    assert cli._read_optional(spark, wh, "present").collect()[0].k == 1

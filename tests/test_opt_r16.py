@@ -1,63 +1,15 @@
 """Round-16 OPTIMIZATION pins.
 
 The optimization round changed operator internals without changing any
-query's results; these tests pin the internals' contracts:
-
-1. `equal_freq_bins` totals-join broadcast gate (r15 verdict #7): the
-   group-cardinality count decides at runtime — a group set over the
-   threshold must NOT plan a broadcast of the totals frame, while a
-   small one must (values identical either way).
-2. `sessionize_stream`'s NaN handling replaces only NaN/None with 0.0
-   (the batch coalesce contract) — ±inf propagates into totals instead
-   of being clamped (r15 advice).
+query's results; these tests pin the internals' contracts. Among them,
+`sessionize_stream`'s NaN handling replaces only NaN/None with 0.0 (the
+batch coalesce contract) — ±inf propagates into totals instead of being
+clamped (r15 advice).
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-from legendary_data_pipeline_spark.operators import stats as stats_mod
-from legendary_data_pipeline_spark.operators.stats import equal_freq_bins
-
-
-def _grouped_fixture(spark):
-    return spark.range(200).selectExpr(
-        "CAST(id % 10 AS STRING) AS g", "id AS v"
-    )
-
-
-def test_equal_freq_bins_broadcast_gated_on_group_count(spark, monkeypatch):
-    import re
-
-    df = _grouped_fixture(spark)
-
-    def n_hints(frame):
-        return len(
-            re.findall(
-                r"ResolvedHint", frame._jdf.queryExecution().analyzed().toString()
-            )
-        )
-
-    # 10 groups <= threshold: the totals join carries the explicit
-    # broadcast hint (on top of the two hints distributed_below_counts
-    # always plants for its offsets frames).
-    small = equal_freq_bins(df, "v", n_bins=2, group_cols=["g"])
-
-    # Same data, threshold forced below the group count: the totals
-    # join must NOT be forced to broadcast — F.broadcast bypasses every
-    # byte threshold, so forcing it on a high-cardinality group set
-    # would build a data-sized broadcast side. (The planner may still
-    # pick a broadcast from its own size estimates; the gate only
-    # controls the unconditional hint.)
-    monkeypatch.setattr(stats_mod, "_GROUP_TOTALS_BROADCAST_MAX_ROWS", 4)
-    large = equal_freq_bins(df, "v", n_bins=2, group_cols=["g"])
-    assert n_hints(small) == n_hints(large) + 1
-
-    # Values are identical on both paths.
-    key = ["g", "bin", "lo", "hi", "n_values", "n_rows"]
-    assert sorted(map(tuple, small.select(key).collect())) == sorted(
-        map(tuple, large.select(key).collect())
-    )
 
 
 def test_ensure_engine_confs_respects_explicit_threshold(spark):

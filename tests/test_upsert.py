@@ -144,6 +144,29 @@ def test_write_upsert_parquet_drops_leftover_old_copy(spark, tmp_path):
     assert not os.path.exists(path + ".__old__")
 
 
+def test_write_upsert_parquet_unreadable_target_raises_and_keeps_files(
+    spark, tmp_path
+):
+    """A present target that cannot be read is not a first write: the
+    merge raises, and the table's files are left as they were."""
+    path = str(tmp_path / "t")
+    write_upsert_parquet(
+        path, spark.createDataFrame([(1, 10)], "k int, v int"), ["k"], spark
+    )
+    for name in os.listdir(path):
+        if name.endswith(".parquet"):
+            with open(os.path.join(path, name), "wb") as fh:
+                fh.write(b"not a parquet file")
+    before = sorted(os.listdir(path))
+    with pytest.raises(Exception):
+        write_upsert_parquet(
+            path, spark.createDataFrame([(2, 20)], "k int, v int"),
+            ["k"], spark,
+        )
+    assert sorted(os.listdir(path)) == before
+    assert not os.path.exists(path + ".__old__")
+
+
 def test_upsert_sink_rerun_after_interrupted_batch_converges(
     spark, tmp_path, monkeypatch
 ):
