@@ -72,12 +72,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def load_distributed(
     spark: SparkSession, sf_dir: str, name: str, partitions: int | None = None
 ) -> DataFrame:
@@ -92,9 +86,3 @@ def load_distributed(
     df = load_table(spark, sf_dir, name)
     n = partitions or spark.sparkContext.defaultParallelism
     return df.repartition(n)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for spark.sql(...) plans)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -477,6 +477,8 @@ def cmd_dq(spark: SparkSession, args) -> int:
             # (e.g. --not-null price + --check price_not_null:…)
             raise SystemExit(f"duplicate check name {name!r}")
         checks[name] = F.expr(expr)
+    if args.drift_baseline and not args.drift_col:
+        raise SystemExit("--drift-baseline requires --drift-col")
 
     df = spark.read.parquet(args.input)
     cols = args.columns.split(",") if args.columns else None
@@ -497,8 +499,6 @@ def cmd_dq(spark: SparkSession, args) -> int:
         reports.append(check_unique(df, args.unique_key.split(",")))
     psi_alerted = False
     if args.drift_baseline:
-        if not args.drift_col:
-            raise SystemExit("--drift-baseline requires --drift-col")
         from legendary_data_pipeline_spark.operators.profiling import (
             psi_drift,
         )
@@ -625,9 +625,9 @@ def cmd_stats(spark: SparkSession, args) -> int:
     cols = args.cols.split(",") if args.cols else []
     groups = args.group.split(",") if args.group else []
     m = args.metric
-    # Fail loud, not silent: only gini and cusum support grouping.
-    # Accepting-and-ignoring --group for the others would hand back
-    # ungrouped results the user believes are per-group.
+    # Fail loud, not silent: only the seven metrics below support
+    # grouping. Accepting-and-ignoring --group for the others would hand
+    # back ungrouped results the user believes are per-group.
     grouped_metrics = (
         "gini", "cusum", "mann_kendall", "theil_sen", "acf",
         "seasonal", "trimmed_mean",

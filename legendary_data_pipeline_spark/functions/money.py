@@ -52,7 +52,7 @@ def sql_money_clean_cents(col: Column) -> Column:
     return F.round(guarded.cast("decimal(24,6)") * 100, 0).cast("long")
 
 
-def cents_to_display(col: Column, currency: str = "USD") -> Column:
+def cents_to_display(col: Column) -> Column:
     """123456 → `'1234.56 USD'` (exportGoogleMerchantFeed.mjs:78-82).
 
     Built with pure integer arithmetic (div/mod/lpad) so the rendering is
@@ -63,4 +63,4 @@ def cents_to_display(col: Column, currency: str = "USD") -> Column:
     abs_cents = F.abs(col)
     whole = F.floor(abs_cents / 100).cast("long").cast("string")
     frac = F.lpad((abs_cents % 100).cast("string"), 2, "0")
-    return F.concat(sign, whole, F.lit("."), frac, F.lit(" " + currency))
+    return F.concat(sign, whole, F.lit("."), frac, F.lit(" USD"))

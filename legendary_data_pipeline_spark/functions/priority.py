@@ -59,11 +59,3 @@ def priority_rank(col: Column, ladder: Mapping[str, int], default: int) -> Colum
     if expr is None:
         return F.lit(default)
     return expr.otherwise(default)
-
-
-def priority_rank_sql(col_name: str, ladder: Mapping[str, int], default: int) -> str:
-    """The equivalent ANSI CASE expression (for oracle SQL strings)."""
-    whens = " ".join(
-        f"WHEN '{value}' THEN {rank}" for value, rank in ladder.items()
-    )
-    return f"CASE {col_name} {whens} ELSE {default} END"

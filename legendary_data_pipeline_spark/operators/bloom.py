@@ -95,11 +95,10 @@ def probe_bloom(
     key_col: str,
     bitmap: np.ndarray,
     k_hashes: int = 4,
-    flag_col: str = "maybe_seen",
 ) -> DataFrame:
     """Flag each row of `df` whose key the filter accepts.
 
-    Adds `flag_col` (boolean): True ⇒ possibly in the corpus (false
+    Adds `maybe_seen` (boolean): True ⇒ possibly in the corpus (false
     positives at the configured rate), False ⇒ DEFINITELY not. The
     bitmap rides a Spark broadcast; the test is a vectorized numpy
     bit-lookup per batch — zero shuffles.
@@ -128,7 +127,7 @@ def probe_bloom(
     flagged = F.when(
         F.col(key_col).isNull(), F.lit(False)
     ).otherwise(member(h1c, h2c))
-    return df.withColumn(flag_col, flagged)
+    return df.withColumn("maybe_seen", flagged)
 
 
 def bloom_sql_positions(key_expr: str, i: str, m_bits: int) -> str:

@@ -82,14 +82,7 @@ def train_bpe(
     return merges
 
 
-def sample_texts(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_sample: int = 4096,
-    sample_fraction: float = 0.2,
-    seed: int = 17,
-) -> list[str]:
+def sample_texts(df: DataFrame, seed: int = 17) -> list[str]:
     """Bounded, layout-independent training sample (hash-gated on the
     id, sorted, limited — the same contract as the IVF codebook sample:
     a pure function of the data, metadata-scale collect)."""
@@ -98,11 +91,7 @@ def sample_texts(
     )
 
     rows = bounded_hash_sample(
-        df.select(F.col(id_col), F.col(text_col)),
-        id_col,
-        seed,
-        max_rows=max_sample,
-        fraction=sample_fraction,
+        df.select(F.col("doc_id"), F.col("text")), "doc_id", seed
     )
     return [r[1] for r in rows if r[1]]
 
@@ -124,8 +113,6 @@ def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
 def apply_bpe(
     df: DataFrame,
     merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Segment every document with a learned merge table, corpus-wide.
 
@@ -161,12 +148,12 @@ def apply_bpe(
             n_toks.append(total)
         return pd.DataFrame({"n_words": n_words, "n_bpe_tokens": n_toks})
 
-    out = df.select(F.col(id_col), seg(F.col(text_col)).alias("__s"))
+    out = df.select(F.col("doc_id"), seg(F.col("text")).alias("__s"))
     per_word = F.col("__s.n_bpe_tokens").cast("double") / F.nullif(
         F.col("__s.n_words").cast("double"), F.lit(0.0)
     )
     return out.select(
-        id_col,
+        "doc_id",
         F.col("__s.n_words").alias("n_words"),
         F.col("__s.n_bpe_tokens").alias("n_bpe_tokens"),
         F.round(per_word, 6).alias("bpe_per_word"),

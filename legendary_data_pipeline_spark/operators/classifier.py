@@ -41,8 +41,6 @@ LOG_SCALE = 1_000_000
 
 def hashed_token_counts(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     m: int = 4096,
 ) -> DataFrame:
     """(id, bucket, cnt): each document's hashed-unigram profile.
@@ -52,14 +50,14 @@ def hashed_token_counts(
     """
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
-                F.split(F.trim(F.col(text_col)), r"\s+")
+                F.split(F.trim(F.col("text")), r"\s+")
             ).alias("__tok"),
         )
         .filter(F.col("__tok") != "")
-        .select(id_col, (md5_long(F.col("__tok")) % m).alias("bucket"))
-        .groupBy(id_col, "bucket")
+        .select("doc_id", (md5_long(F.col("__tok")) % m).alias("bucket"))
+        .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
@@ -67,8 +65,6 @@ def hashed_token_counts(
 def train_nb(
     pos: DataFrame,
     neg: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     m: int = 4096,
     scale: int = LOG_SCALE,
 ) -> tuple[DataFrame, int]:
@@ -88,12 +84,8 @@ def train_nb(
     # Pin each class's token profile: the eager total (.first below)
     # and the per-bucket weight aggregation are two consumers that
     # would otherwise each replay the seed scan + tokenize + groupBy.
-    pos_counts = hashed_token_counts(pos, id_col, text_col, m).localCheckpoint(
-        eager=False
-    )
-    neg_counts = hashed_token_counts(neg, id_col, text_col, m).localCheckpoint(
-        eager=False
-    )
+    pos_counts = hashed_token_counts(pos, m=m).localCheckpoint(eager=False)
+    neg_counts = hashed_token_counts(neg, m=m).localCheckpoint(eager=False)
 
     def per_bucket(counts: DataFrame, name: str) -> DataFrame:
         return counts.groupBy("bucket").agg(F.sum("cnt").alias(name))
@@ -135,8 +127,6 @@ def score_nb(
     df: DataFrame,
     weights: DataFrame,
     prior: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     m: int = 4096,
 ) -> DataFrame:
     """(id, score, predicted_pos): integer-scaled NB log-odds per doc.
@@ -147,16 +137,16 @@ def score_nb(
     broadcast; the corpus-side shuffle is the (doc, bucket) groupBy in
     `hashed_token_counts` plus the final per-doc sum.
     """
-    feats = hashed_token_counts(df, id_col, text_col, m)
+    feats = hashed_token_counts(df, m=m)
     doc_scores = (
         feats.join(F.broadcast(weights), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum(F.col("cnt") * F.col("w")).alias("__s"))
     )
-    ids = df.select(F.col(id_col))
+    ids = df.select(F.col("doc_id"))
     score = F.coalesce(F.col("__s"), F.lit(0)) + F.lit(prior)
-    return ids.join(doc_scores, id_col, "left").select(
-        id_col,
+    return ids.join(doc_scores, "doc_id", "left").select(
+        "doc_id",
         score.alias("score"),
         (score > 0).alias("predicted_pos"),
     )
@@ -166,14 +156,11 @@ def nb_quality_filter(
     raw: DataFrame,
     pos_seed: DataFrame,
     neg_seed: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     m: int = 4096,
-    scale: int = LOG_SCALE,
 ) -> DataFrame:
     """Train on the two seeds, score `raw`, return rows of `raw`
     augmented with (score, predicted_pos) — the keep-decision column a
     curation pipeline filters on."""
-    weights, prior = train_nb(pos_seed, neg_seed, id_col, text_col, m, scale)
-    scored = score_nb(raw, weights, prior, id_col, text_col, m)
-    return raw.join(scored, id_col)
+    weights, prior = train_nb(pos_seed, neg_seed, m=m)
+    scored = score_nb(raw, weights, prior, m=m)
+    return raw.join(scored, "doc_id")

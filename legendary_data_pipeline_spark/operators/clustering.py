@@ -40,7 +40,7 @@ _SEED = 33
 def doc_feature_vectors(df: DataFrame) -> DataFrame:
     """(doc_id, buckets, counts): each document's sparse hashed profile,
     bucket-sorted so densification is a deterministic scatter."""
-    counts = hashed_ngram_counts(df, "doc_id", "text", _SHINGLE_N, _M)
+    counts = hashed_ngram_counts(df, shingle_n=_SHINGLE_N, m=_M)
     pairs = F.array_sort(
         F.collect_list(F.struct("bucket", "cnt"))
     )

@@ -37,8 +37,6 @@ from legendary_data_pipeline_spark.operators.dedup import shingle_sets, tokens_e
 def contamination_flags(
     train: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 3,
 ) -> DataFrame:
     """Flag training documents sharing any word-`shingle_n`-gram with the
@@ -53,21 +51,21 @@ def contamination_flags(
     training corpus at all. Shingling is one generator pass per side
     (`shingle_sets`, array slices fused in codegen).
     """
-    train_sh = shingle_sets(train, id_col, text_col, shingle_n).select(
-        F.col(id_col), F.explode("__set").alias("__s")
+    train_sh = shingle_sets(train, "doc_id", "text", shingle_n).select(
+        F.col("doc_id"), F.explode("__set").alias("__s")
     )
     bench_sh = (
-        shingle_sets(benchmark, id_col, text_col, shingle_n)
+        shingle_sets(benchmark, "doc_id", "text", shingle_n)
         .select(F.explode("__set").alias("__s"))
         .distinct()
     )
     hit_ids = (
         train_sh.join(F.broadcast(bench_sh), "__s", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("__hit", F.lit(True))
     )
-    return train.join(hit_ids, id_col, "left").withColumn(
+    return train.join(hit_ids, "doc_id", "left").withColumn(
         "contaminated", F.coalesce(F.col("__hit"), F.lit(False))
     ).drop("__hit")
 
@@ -110,13 +108,11 @@ def scrub_pii(text: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def repetition_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_token_max_frac: float = 0.20,
-    dup_bigram_max_frac: float = 0.40,
-) -> DataFrame:
+_TOP_TOKEN_MAX_FRAC = 0.20
+_DUP_BIGRAM_MAX_FRAC = 0.40
+
+
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Per-document repetition signals + a keep/drop gate, after the
     Gopher repetition-removal rules (Rae et al. 2021 §A1.1): fraction of
     tokens taken by the single most frequent token, and fraction of
@@ -128,21 +124,21 @@ def repetition_stats(
     no skew beyond document size itself (cap extreme docs upstream).
     """
     toks = df.select(
-        F.col(id_col),
-        tokens_expr(text_col).alias("__t"),
+        F.col("doc_id"),
+        tokens_expr("text").alias("__t"),
     ).filter(F.size("__t") > 0)
 
-    unigram = toks.select(F.col(id_col), F.explode("__t").alias("__w"))
-    uni_counts = unigram.groupBy(id_col, "__w").agg(
+    unigram = toks.select(F.col("doc_id"), F.explode("__t").alias("__w"))
+    uni_counts = unigram.groupBy("doc_id", "__w").agg(
         F.count(F.lit(1)).alias("__c")
     )
-    uni_stats = uni_counts.groupBy(id_col).agg(
+    uni_stats = uni_counts.groupBy("doc_id").agg(
         F.sum("__c").alias("n_tokens"),
         F.max("__c").alias("__top_c"),
     )
 
     bigrams = toks.filter(F.size("__t") >= 2).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.zip_with(
                 F.slice(F.col("__t"), 1, F.size("__t") - 1),
@@ -151,10 +147,10 @@ def repetition_stats(
             )
         ).alias("__bg"),
     )
-    bg_counts = bigrams.groupBy(id_col, "__bg").agg(
+    bg_counts = bigrams.groupBy("doc_id", "__bg").agg(
         F.count(F.lit(1)).alias("__c")
     )
-    bg_stats = bg_counts.groupBy(id_col).agg(
+    bg_stats = bg_counts.groupBy("doc_id").agg(
         F.sum("__c").alias("__n_bg"),
         # a bigram occurring c times contributes c−1 duplicated instances
         F.sum(F.col("__c") - 1).alias("__dup_bg"),
@@ -163,17 +159,17 @@ def repetition_stats(
     top_frac = F.col("__top_c").cast("double") / F.col("n_tokens").cast("double")
     dup_frac = F.col("__dup_bg").cast("double") / F.col("__n_bg").cast("double")
     return (
-        uni_stats.join(bg_stats, id_col, "left")
+        uni_stats.join(bg_stats, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_tokens"),
             top_frac.alias("top_token_frac"),
             F.coalesce(dup_frac, F.lit(0.0)).alias("dup_bigram_frac"),
         )
         .withColumn(
             "low_quality",
-            (F.col("top_token_frac") > top_token_max_frac)
-            | (F.col("dup_bigram_frac") > dup_bigram_max_frac),
+            (F.col("top_token_frac") > _TOP_TOKEN_MAX_FRAC)
+            | (F.col("dup_bigram_frac") > _DUP_BIGRAM_MAX_FRAC),
         )
     )
 
@@ -187,10 +183,8 @@ def stratified_hash_sample(
     df: DataFrame,
     rates: Mapping[str, float],
     stratum_col: str = "lang",
-    id_col: str = "doc_id",
     seed: int = 7,
     default_rate: float = 0.0,
-    keep_col: str = "keep",
 ) -> DataFrame:
     """Deterministic per-stratum downsampling: keep a row iff
     `seeded_md5(id) mod 10_000 < rate·10_000` for its stratum's rate —
@@ -203,7 +197,7 @@ def stratified_hash_sample(
     pipelines. Pure column expressions; the rate ladder is a literal
     CASE tree (strata counts are small); zero shuffles added.
     """
-    bucket = seeded_md5_long(F.col(id_col).cast("string"), seed) % 10_000
+    bucket = seeded_md5_long(F.col("doc_id").cast("string"), seed) % 10_000
     # round(), not int(): float products like 0.57*10000 land at
     # 5699.999…, and truncation would silently drop the top bucket the
     # contract says to keep.
@@ -214,7 +208,7 @@ def stratified_hash_sample(
                 F.col(stratum_col) == stratum, F.lit(int(round(rate * 10_000)))
             ).otherwise(rate_expr)
         )
-    return df.withColumn(keep_col, bucket < rate_expr)
+    return df.withColumn("keep", bucket < rate_expr)
 
 
 def stratified_take_n(
@@ -223,7 +217,6 @@ def stratified_take_n(
     stratum_col: str = "lang",
     id_col: str = "doc_id",
     seed: int = 7,
-    rank_col: str = "sample_rank",
 ) -> DataFrame:
     """Exactly min(n, |stratum|) rows per stratum, selected and ordered
     by a seeded hash of the id — the count-based companion to
@@ -242,7 +235,7 @@ def stratified_take_n(
         seeded_md5_long(F.col(id_col).cast("string"), seed).asc(),
         F.col(id_col).asc(),
     ]
-    return top_k_per_group(df, [stratum_col], order, k=n, rank_col=rank_col)
+    return top_k_per_group(df, [stratum_col], order, k=n, rank_col="sample_rank")
 
 
 # ---------------------------------------------------------------------------
@@ -253,9 +246,6 @@ def stratified_take_n(
 def pack_sequences(
     df: DataFrame,
     budget_tokens: int,
-    shard_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_shard_buckets: int | None = None,
     shard_seed: int = 7,
 ) -> DataFrame:
@@ -271,7 +261,7 @@ def pack_sequences(
     that splits them across packs).
 
     `n_shard_buckets` is the 100 TB knob: when set, the shard key
-    becomes (shard_col, shard_bucket) with shard_bucket =
+    becomes (lang, shard_bucket) with shard_bucket =
     seeded_md5(id) mod n_shard_buckets — a composite shard (e.g.
     lang × 4096 buckets) sized so each shard's token stream fits one
     task, since the cumulative-sum window sorts WITHIN one partition per
@@ -281,19 +271,19 @@ def pack_sequences(
     column; pack_id is per (shard, bucket). No single-partition stage
     exists in this plan at any setting.
     """
-    tokens = F.size(tokens_expr(text_col))
+    tokens = F.size(tokens_expr("text"))
     base = df.select(
-        F.col(shard_col), F.col(id_col), tokens.alias("n_tokens")
+        F.col("lang"), F.col("doc_id"), tokens.alias("n_tokens")
     )
     if n_shard_buckets is not None:
         bucket = (
-            seeded_md5_long(F.col(id_col).cast("string"), shard_seed)
+            seeded_md5_long(F.col("doc_id").cast("string"), shard_seed)
             % n_shard_buckets
         )
         base = base.withColumn("shard_bucket", bucket)
-        w = Window.partitionBy(shard_col, "shard_bucket").orderBy(id_col)
+        w = Window.partitionBy("lang", "shard_bucket").orderBy("doc_id")
     else:
-        w = Window.partitionBy(shard_col).orderBy(id_col)
+        w = Window.partitionBy("lang").orderBy("doc_id")
     cum = F.sum("n_tokens").over(w)
     return base.withColumn(
         "pack_id",
@@ -301,14 +291,13 @@ def pack_sequences(
     )
 
 
+_SHARD_SEED = 7
+
+
 def chunk_sequences(
     df: DataFrame,
     budget_tokens: int,
-    shard_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_shard_buckets: int | None = None,
-    shard_seed: int = 7,
 ) -> DataFrame:
     """Pack assignment that SPLITS over-budget documents across packs —
     the other packing strategy real training pipelines use (every pack
@@ -327,21 +316,21 @@ def chunk_sequences(
     ceil(n_tokens/budget) − 1 extra rows per doc — proportional to the
     data already being read, never quadratic.
     """
-    tokens = F.size(tokens_expr(text_col))
+    tokens = F.size(tokens_expr("text"))
     base = df.select(
-        F.col(shard_col), F.col(id_col), tokens.alias("n_tokens")
+        F.col("lang"), F.col("doc_id"), tokens.alias("n_tokens")
     ).filter(F.col("n_tokens") > 0)
     if n_shard_buckets is not None:
         bucket = (
-            seeded_md5_long(F.col(id_col).cast("string"), shard_seed)
+            seeded_md5_long(F.col("doc_id").cast("string"), _SHARD_SEED)
             % n_shard_buckets
         )
         base = base.withColumn("shard_bucket", bucket)
-        w = Window.partitionBy(shard_col, "shard_bucket").orderBy(id_col)
-        keep_cols = [shard_col, "shard_bucket", id_col, "n_tokens"]
+        w = Window.partitionBy("lang", "shard_bucket").orderBy("doc_id")
+        keep_cols = ["lang", "shard_bucket", "doc_id", "n_tokens"]
     else:
-        w = Window.partitionBy(shard_col).orderBy(id_col)
-        keep_cols = [shard_col, id_col, "n_tokens"]
+        w = Window.partitionBy("lang").orderBy("doc_id")
+        keep_cols = ["lang", "doc_id", "n_tokens"]
     spanned = base.withColumn("__end", F.sum("n_tokens").over(w)).withColumn(
         "__start", F.col("__end") - F.col("n_tokens")
     )
@@ -374,10 +363,7 @@ def chunk_sequences(
 def shuffle_shard(
     df: DataFrame,
     n_shards: int,
-    id_col: str = "doc_id",
     seed: int = 7,
-    shard_col: str = "shard",
-    pos_col: str = "shard_pos",
 ) -> DataFrame:
     """Reproducible global corpus shuffle: every row gets a (shard,
     position) address that is a pure function of (id, seed) — the step
@@ -397,14 +383,14 @@ def shuffle_shard(
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    h = seeded_md5_long(F.col(id_col).cast("string"), seed)
-    w = Window.partitionBy(shard_col).orderBy(
-        F.col("__h").asc(), F.col(id_col).asc()
+    h = seeded_md5_long(F.col("doc_id").cast("string"), seed)
+    w = Window.partitionBy("shard").orderBy(
+        F.col("__h").asc(), F.col("doc_id").asc()
     )
     return (
         df.withColumn("__h", h)
-        .withColumn(shard_col, (F.col("__h") % n_shards).cast("long"))
-        .withColumn(pos_col, (F.row_number().over(w) - 1).cast("long"))
+        .withColumn("shard", (F.col("__h") % n_shards).cast("long"))
+        .withColumn("shard_pos", (F.row_number().over(w) - 1).cast("long"))
         .drop("__h")
     )
 
@@ -418,15 +404,13 @@ def repeat_by_weight(
     df: DataFrame,
     weights: Mapping[str, float],
     stratum_col: str = "source",
-    id_col: str = "doc_id",
     seed: int = 11,
     default_weight: float = 1.0,
-    epoch_col: str = "epoch",
 ) -> DataFrame:
     """Compose a training mixture by per-stratum REPEAT weights: weight
     2.3 on a source emits every doc twice plus a deterministic 30% of
     docs a third time; weight 0.4 keeps a 40% subset once; weight 0
-    drops the stratum. Emitted copies carry `epoch_col` = 0..k−1 so
+    drops the stratum. Emitted copies carry `epoch` = 0..k−1 so
     downstream sharding can interleave epochs.
 
     This is the up/down-weighting step of mixture recipes (à la
@@ -450,7 +434,7 @@ def repeat_by_weight(
         w10k_expr = F.when(
             F.col(stratum_col) == stratum, F.lit(int(round(wt * 10_000)))
         ).otherwise(w10k_expr)
-    bucket = seeded_md5_long(F.col(id_col).cast("string"), seed) % 10_000
+    bucket = seeded_md5_long(F.col("doc_id").cast("string"), seed) % 10_000
     copies = (w10k_expr / 10_000).cast("long") + (
         bucket < w10k_expr % 10_000
     ).cast("long")
@@ -459,7 +443,7 @@ def repeat_by_weight(
     epochs = F.when(
         copies > 0, F.sequence(F.lit(0).cast("long"), copies - 1)
     ).otherwise(F.array().cast("array<long>"))
-    return df.withColumn(epoch_col, F.explode(epochs))
+    return df.withColumn("epoch", F.explode(epochs))
 
 
 # ---------------------------------------------------------------------------
@@ -469,8 +453,6 @@ def repeat_by_weight(
 
 def span_frame(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     span_tokens: int = 16,
 ) -> DataFrame:
     """(id, span_idx, span_text, span_hash) — each document cut into
@@ -486,7 +468,7 @@ def span_frame(
     """
     if span_tokens < 1:
         raise ValueError(f"span_tokens must be >= 1, got {span_tokens}")
-    toks = tokens_expr(text_col)
+    toks = tokens_expr("text")
 
     def spans_of(t: Column) -> Column:
         n_spans = F.ceil(F.size(t) / F.lit(float(span_tokens))).cast("int")
@@ -499,7 +481,7 @@ def span_frame(
 
     spans = F.transform(F.array(toks), spans_of)[0]
     exploded = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.when(F.size(toks) > 0, spans).otherwise(
                 F.array().cast("array<string>")
@@ -507,7 +489,7 @@ def span_frame(
         ).alias("span_idx", "span_text"),
     )
     return exploded.select(
-        id_col,
+        "doc_id",
         F.col("span_idx").cast("long").alias("span_idx"),
         "span_text",
         md5_long(F.col("span_text")).alias("span_hash"),
@@ -516,8 +498,6 @@ def span_frame(
 
 def boilerplate_span_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     span_tokens: int = 16,
     min_docs: int = 2,
 ) -> DataFrame:
@@ -538,11 +518,11 @@ def boilerplate_span_stats(
     """
     # Pin the span frame (it feeds the frequency table AND the flag
     # join — exchange reuse is not a scan guarantee, r11 lesson).
-    spans = span_frame(df, id_col, text_col, span_tokens).localCheckpoint(
+    spans = span_frame(df, span_tokens=span_tokens).localCheckpoint(
         eager=False
     )
     freq = spans.groupBy("span_hash").agg(
-        F.count_distinct(F.col(id_col)).alias("__docs")
+        F.count_distinct(F.col("doc_id")).alias("__docs")
     )
     flagged = spans.join(
         freq.filter(F.col("__docs") >= min_docs).select(
@@ -555,7 +535,7 @@ def boilerplate_span_stats(
         "n_spans"
     ).cast("double")
     return (
-        flagged.groupBy(id_col)
+        flagged.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_spans"),
             F.sum(F.coalesce(F.col("__boiler"), F.lit(False)).cast("long")).alias(
@@ -563,7 +543,7 @@ def boilerplate_span_stats(
             ),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_spans",
             "n_boilerplate_spans",
             frac.alias("boilerplate_frac"),
@@ -573,11 +553,8 @@ def boilerplate_span_stats(
 
 def strip_boilerplate(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     span_tokens: int = 16,
     min_docs: int = 2,
-    out_col: str = "clean_text",
 ) -> DataFrame:
     """Remove corpus-level boilerplate spans from each document: the
     companion transform to `boilerplate_span_stats` — spans repeated in
@@ -599,18 +576,18 @@ def strip_boilerplate(
     # full scans + re-tokenizations; at 100 TB this is the standard
     # checkpoint-vs-recompute trade and either side is one knob away
     # (drop the pin to trade local disk for scan bandwidth).
-    spans = span_frame(df, id_col, text_col, span_tokens).localCheckpoint(
+    spans = span_frame(df, span_tokens=span_tokens).localCheckpoint(
         eager=False
     )
     freq = spans.groupBy("span_hash").agg(
-        F.count_distinct(F.col(id_col)).alias("__docs")
+        F.count_distinct(F.col("doc_id")).alias("__docs")
     )
     kept = spans.join(
         freq.filter(F.col("__docs") >= min_docs).select("span_hash"),
         "span_hash",
         "left_anti",
     )
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -619,10 +596,10 @@ def strip_boilerplate(
                 lambda s: s["span_text"],
             ),
             " ",
-        ).alias(out_col)
+        ).alias("clean_text")
     )
-    return df.join(rebuilt, id_col, "left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.lit(""))
+    return df.join(rebuilt, "doc_id", "left").withColumn(
+        "clean_text", F.coalesce(F.col("clean_text"), F.lit(""))
     )
 
 
@@ -631,15 +608,15 @@ def strip_boilerplate(
 # ---------------------------------------------------------------------------
 
 
+_KEY_DECIMALS = 9
+
+
 def weighted_sample_n(
     df: DataFrame,
     n: int,
     weight_col: str,
     stratum_col: str | None = None,
-    id_col: str = "doc_id",
     seed: int = 13,
-    rank_col: str = "sample_rank",
-    key_decimals: int = 9,
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement: exactly min(n, |stratum|)
     rows per stratum (one global stratum when `stratum_col` is None),
@@ -650,7 +627,7 @@ def weighted_sample_n(
     (0,1]; the n largest keys are a weighted draw without replacement.
     u derives from seeded_md5(id) — NOT rand() — so the draw is a pure
     function of (data, seed): reruns, retries, and the DuckDB oracle
-    select the identical rows. Keys are rounded to `key_decimals` before
+    select the identical rows. Keys are rounded to 9 decimals before
     ranking (ties then broken by id) so the float pow() ranks
     identically across engines — the same rounding contract the cosine
     operators use.
@@ -670,16 +647,16 @@ def weighted_sample_n(
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     u = (
-        seeded_md5_long(F.col(id_col).cast("string"), seed).cast("double")
+        seeded_md5_long(F.col("doc_id").cast("string"), seed).cast("double")
         + F.lit(1.0)
     ) / F.lit(float(1 << 60))
     w = F.col(weight_col).cast("double")
-    key = F.round(F.pow(u, F.lit(1.0) / w), key_decimals)
+    key = F.round(F.pow(u, F.lit(1.0) / w), _KEY_DECIMALS)
     filtered = df.filter(w > 0).withColumn("__key", key)
-    order = [F.col("__key").desc(), F.col(id_col).asc()]
+    order = [F.col("__key").desc(), F.col("doc_id").asc()]
     groups = [stratum_col] if stratum_col is not None else []
     return top_k_per_group(
-        filtered, groups, order, k=n, rank_col=rank_col
+        filtered, groups, order, k=n, rank_col="sample_rank"
     ).drop("__key")
 
 
@@ -691,8 +668,6 @@ def weighted_sample_n(
 def contamination_scores(
     train: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 3,
     flag_threshold: float = 0.1,
 ) -> DataFrame:
@@ -717,17 +692,17 @@ def contamination_scores(
     contaminated); docs with fewer than `shingle_n` tokens have no
     shingles and are reported with n_shingles = 0, frac = 0.0.
     """
-    train_sh = shingle_sets(train, id_col, text_col, shingle_n).select(
-        F.col(id_col), F.explode("__set").alias("__s")
+    train_sh = shingle_sets(train, "doc_id", "text", shingle_n).select(
+        F.col("doc_id"), F.explode("__set").alias("__s")
     )
     bench_sh = (
-        shingle_sets(benchmark, id_col, text_col, shingle_n)
+        shingle_sets(benchmark, "doc_id", "text", shingle_n)
         .select(F.explode("__set").alias("__s"))
         .distinct()
         .withColumn("__hit", F.lit(True))
     )
     probed = train_sh.join(F.broadcast(bench_sh), "__s", "left")
-    per_doc = probed.groupBy(id_col).agg(
+    per_doc = probed.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shingles"),
         F.sum(F.coalesce(F.col("__hit"), F.lit(False)).cast("long")).alias(
             "n_contaminated"
@@ -737,11 +712,11 @@ def contamination_scores(
         F.col("n_contaminated").cast("double")
         / F.col("n_shingles").cast("double")
     )
-    ids = train.select(F.col(id_col))
+    ids = train.select(F.col("doc_id"))
     return (
-        ids.join(per_doc, id_col, "left")
+        ids.join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_shingles"), F.lit(0)).alias("n_shingles"),
             F.coalesce(F.col("n_contaminated"), F.lit(0)).alias(
                 "n_contaminated"
@@ -763,17 +738,17 @@ def contamination_scores(
 GOPHER_STOPWORDS: tuple[str, ...] = ("the", "a", "and", "of", "to")
 
 
+_MIN_WORDS = 50
+_MAX_WORDS = 100_000
+_MIN_MEAN_WORD_LEN = 3.0
+_MAX_MEAN_WORD_LEN = 10.0
+_MAX_SYMBOL_RATIO = 0.1
+_MIN_ALPHA_WORD_FRAC = 0.8
+_MIN_STOPWORDS = 2
+
+
 def gopher_gates(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_alpha_word_frac: float = 0.8,
-    min_stopwords: int = 2,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """The document-level Gopher quality rules (Rae et al. 2021 §A1.1)
@@ -794,7 +769,7 @@ def gopher_gates(
     shuffles; exactly replayable in DuckDB.
     """
     base = df.withColumn(
-        "__words", F.filter(tokens_expr(text_col), lambda t: t != F.lit(""))
+        "__words", F.filter(tokens_expr("text"), lambda t: t != F.lit(""))
     )
     words = F.col("__words")
     n_words = F.size(words)
@@ -809,8 +784,8 @@ def gopher_gates(
         ).cast("double")
         / F.nullif(n_words.cast("double"), F.lit(0.0))
     )
-    n_hash = F.regexp_count(F.col(text_col), F.lit("#"))
-    n_ellipsis = F.regexp_count(F.col(text_col), F.lit(r"\.\.\.|…"))
+    n_hash = F.regexp_count(F.col("text"), F.lit("#"))
+    n_ellipsis = F.regexp_count(F.col("text"), F.lit(r"\.\.\.|…"))
     hash_ratio = n_hash.cast("double") / F.nullif(
         n_words.cast("double"), F.lit(0.0)
     )
@@ -826,7 +801,7 @@ def gopher_gates(
         F.filter(words, lambda w: F.array_contains(stop_arr, F.lower(w)))
     )
     out = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.cast("long").alias("n_words"),
         mean_len.alias("mean_word_len"),
         hash_ratio.alias("hash_ratio"),
@@ -839,14 +814,14 @@ def gopher_gates(
         *[F.col(c) for c in keep_cols],
     )
     rules = {
-        "pass_word_count": (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words),
-        "pass_mean_word_len": (F.col("mean_word_len") >= min_mean_word_len)
-        & (F.col("mean_word_len") <= max_mean_word_len),
-        "pass_symbol_ratio": (F.col("hash_ratio") <= max_symbol_ratio)
-        & (F.col("ellipsis_ratio") <= max_symbol_ratio),
-        "pass_alpha_words": F.col("alpha_word_frac") >= min_alpha_word_frac,
-        "pass_stopwords": F.col("n_stopwords") >= min_stopwords,
+        "pass_word_count": (F.col("n_words") >= _MIN_WORDS)
+        & (F.col("n_words") <= _MAX_WORDS),
+        "pass_mean_word_len": (F.col("mean_word_len") >= _MIN_MEAN_WORD_LEN)
+        & (F.col("mean_word_len") <= _MAX_MEAN_WORD_LEN),
+        "pass_symbol_ratio": (F.col("hash_ratio") <= _MAX_SYMBOL_RATIO)
+        & (F.col("ellipsis_ratio") <= _MAX_SYMBOL_RATIO),
+        "pass_alpha_words": F.col("alpha_word_frac") >= _MIN_ALPHA_WORD_FRAC,
+        "pass_stopwords": F.col("n_stopwords") >= _MIN_STOPWORDS,
     }
     keep = F.lit(True)
     for name, cond in rules.items():
@@ -915,8 +890,6 @@ def temperature_mix(
     df: DataFrame,
     alpha: float = 0.5,
     budget_frac: float = 0.5,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
     tokens_col: str = "n_tokens",
     seed: int = 11,
 ) -> DataFrame:
@@ -942,7 +915,7 @@ def temperature_mix(
     # Pin the stratum totals (stratum-cardinality — KiB-scale): they
     # feed both the normalizer agg and the rate projection; unpinned,
     # each consumer replays the corpus scan (r13 audit: 3 scans).
-    nd = df.groupBy(stratum_col).agg(
+    nd = df.groupBy("lang").agg(
         F.sum(F.col(tokens_col)).cast("double").alias("__nd")
     ).localCheckpoint(eager=False)
     z = nd.agg(
@@ -952,7 +925,7 @@ def temperature_mix(
     rates = (
         nd.crossJoin(F.broadcast(z))
         .select(
-            stratum_col,
+            "lang",
             F.least(
                 F.lit(1.0),
                 F.lit(float(budget_frac))
@@ -963,13 +936,13 @@ def temperature_mix(
             ).alias("__rate"),
         )
     )
-    bucket = seeded_md5_long(F.col(id_col).cast("string"), seed) % 10_000
+    bucket = seeded_md5_long(F.col("doc_id").cast("string"), seed) % 10_000
     # Null-safe stratum join: a NULL stratum is a stratum (it already
     # contributed to __z/__n_total above); equi-join would drop its rows.
     return (
         df.join(
-            F.broadcast(rates.withColumnRenamed(stratum_col, "__strat")),
-            F.col(stratum_col).eqNullSafe(F.col("__strat")),
+            F.broadcast(rates.withColumnRenamed("lang", "__strat")),
+            F.col("lang").eqNullSafe(F.col("__strat")),
         )
         .drop("__strat")
         .select(
@@ -986,8 +959,6 @@ def sliding_chunks(
     df: DataFrame,
     size_tokens: int,
     stride_tokens: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Sliding-window document chunking with overlap (the HF
@@ -1008,14 +979,14 @@ def sliding_chunks(
     """
     if size_tokens < 1 or stride_tokens < 1:
         raise ValueError("size_tokens and stride_tokens must be >= 1")
-    toks = tokens_expr(text_col)
+    toks = tokens_expr("text")
     n = F.size(toks)
     upper = F.least(
         F.greatest(F.lit(1), n - size_tokens + stride_tokens), n
     )
     starts = F.sequence(F.lit(1), upper, F.lit(stride_tokens))
     exploded = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         toks.alias("__toks"),
         F.posexplode(
@@ -1026,7 +997,7 @@ def sliding_chunks(
     )
     piece = F.slice(F.col("__toks"), F.col("start_pos"), size_tokens)
     return exploded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         "chunk_idx",
         "start_pos",
@@ -1038,9 +1009,6 @@ def sliding_chunks(
 def leakage_safe_split(
     df: DataFrame,
     components: DataFrame,
-    id_col: str = "doc_id",
-    node_col: str = "node",
-    component_col: str = "component",
     val_pct: int = 10,
     seed: int = 41,
 ) -> DataFrame:
@@ -1070,17 +1038,17 @@ def leakage_safe_split(
     # Group keys take the id column's own type (string ids work — the
     # component label from `graph.connected_components` carries the
     # node type through), so no silent long-cast NULLs for non-long ids.
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
     comp = components.select(
-        F.col(node_col).alias("__n"),
-        F.col(component_col).cast(id_type).alias("__c"),
+        F.col("node").alias("__n"),
+        F.col("component").cast(id_type).alias("__c"),
     )
     # No broadcast hint: comp is data-sized at real dup rates (see
     # docstring); AQE chooses the strategy from measured size.
     joined = df.join(
-        comp, df[id_col] == F.col("__n"), "left"
+        comp, df["doc_id"] == F.col("__n"), "left"
     )
-    group = F.coalesce(F.col("__c"), F.col(id_col))
+    group = F.coalesce(F.col("__c"), F.col("doc_id"))
     bucket = seeded_md5_long(group.cast("string"), seed) % 100
     return joined.select(
         *[F.col(c) for c in df.columns],
@@ -1277,24 +1245,22 @@ def gate_funnel_report(
     return out
 
 
-def c4_span_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span: int = 3,
-) -> DataFrame:
+_C4_SPAN = 3  # sentences per span
+
+
+def c4_span_stats(df: DataFrame) -> DataFrame:
     """Corpus-wide duplicated three-sentence-span accounting — the
     dedup half of the C4 recipe ("we discarded all but one of any
     three-sentence span occurring more than once in the data set",
     Raffel et al. 2020 §2.2).
 
-    Each doc's sentences are sliced into every consecutive `span`-gram;
+    Each doc's sentences are sliced into every consecutive 3-gram;
     the FIRST occurrence of a span (ordered by (id, span position) — a
     total order, so both engines pick the same canonical) is canonical
     and every later occurrence is a duplicate. Returns one row per doc:
     `n_spans`, `n_dup_spans` (occurrences that lost canonicity) and
     `dup_span_frac` — the doc-level removal pressure; docs with fewer
-    than `span` sentences report zero spans.
+    than three sentences report zero spans.
 
     Scale shape: explode (×~sentences per doc) → ONE hash-partitioned
     window (row_number per span md5 — no skew beyond genuinely
@@ -1309,39 +1275,39 @@ def c4_span_stats(
         split_sentences_expr,
     )
 
-    sents = split_sentences_expr(F.col(text_col))
+    sents = split_sentences_expr(F.col("text"))
     n = F.size(sents)
     spans_arr = F.when(
-        n >= span,
+        n >= _C4_SPAN,
         F.transform(
-            F.sequence(F.lit(1), n - span + 1),
-            lambda i: F.concat_ws(" ", F.slice(sents, i, span)),
+            F.sequence(F.lit(1), n - _C4_SPAN + 1),
+            lambda i: F.concat_ws(" ", F.slice(sents, i, _C4_SPAN)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     spans = (
-        df.select(F.col(id_col), spans_arr.alias("__spans"))
+        df.select(F.col("doc_id"), spans_arr.alias("__spans"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.posexplode(F.col("__spans")).alias("__i", "__span"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (F.col("__i") + 1).cast("long").alias("span_idx"),
             F.md5(F.col("__span")).alias("__h"),
         )
     )
-    w = Window.partitionBy("__h").orderBy(F.col(id_col), F.col("span_idx"))
+    w = Window.partitionBy("__h").orderBy(F.col("doc_id"), F.col("span_idx"))
     ranked = spans.withColumn("__rn", F.row_number().over(w))
-    agg = ranked.groupBy(id_col).agg(
+    agg = ranked.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum((F.col("__rn") > 1).cast("long")).alias("n_dup_spans"),
     )
-    ids = df.select(F.col(id_col))
+    ids = df.select(F.col("doc_id"))
     # Raw IEEE ratio of exact integers — bit-stable on any engine; a
     # fractional round(·, 6) would ADD cross-version fragility
     # (round-9 representation audit, NOTES.md §Round-9).
-    return ids.join(agg, [id_col], "left").select(
-        F.col(id_col),
+    return ids.join(agg, ["doc_id"], "left").select(
+        F.col("doc_id"),
         F.coalesce(F.col("n_spans"), F.lit(0)).alias("n_spans"),
         F.coalesce(F.col("n_dup_spans"), F.lit(0)).alias("n_dup_spans"),
         (
@@ -1353,15 +1319,10 @@ def c4_span_stats(
 
 def domain_quality_gates(
     scored: DataFrame,
-    domain_col: str = "source",
-    bucket_col: str = "quality_bucket",
-    good_bucket: str = "high",
     min_docs: int = 5,
-    share_num: int = 95,
-    share_den: int = 100,
 ) -> DataFrame:
     """Domain-level curation gate: drop WHOLE domains whose share of
-    good documents falls below ``share_num/share_den``.
+    good documents (``quality_bucket = 'high'``) falls below 95%.
 
     Per-document filters miss systematic sources — a spam/SEO domain
     where every page individually squeaks past the per-doc gates still
@@ -1369,7 +1330,7 @@ def domain_quality_gates(
     RefinedWeb's per-domain statistics: curate the SOURCE, not just the
     page). A domain is flagged when it has at least ``min_docs``
     documents AND its good-bucket share is below the floor, tested in
-    exact integer form (``n_good * share_den < n_docs * share_num``) so
+    exact integer form (``n_good * 100 < n_docs * 95``) so
     the verdict is engine-deterministic. Small domains (< min_docs) are
     never flagged — too few observations to condemn a source.
 
@@ -1378,23 +1339,23 @@ def domain_quality_gates(
     shuffles zero times. Output: the scored rows plus per-domain
     (n_docs, n_good, domain_flagged) and ``kept = NOT flagged``.
     """
-    good = (F.col(bucket_col) == good_bucket).cast("long")
-    dom = scored.groupBy(domain_col).agg(
+    good = (F.col("quality_bucket") == "high").cast("long")
+    dom = scored.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(good).cast("long").alias("n_good"),
     )
     flagged = (F.col("n_docs") >= min_docs) & (
-        F.col("n_good") * share_den < F.col("n_docs") * share_num
+        F.col("n_good") * 100 < F.col("n_docs") * 95
     )
     dom = dom.withColumn("domain_flagged", flagged).withColumnRenamed(
-        domain_col, "__dom"
+        "source", "__dom"
     )
     # NULL-SAFE verdict join: GROUP BY treats NULL as its own domain, so
     # the join back must too — a plain equi-join would silently drop
     # every NULL-domain row from the output (no verdict, no row).
     joined = scored.join(
         F.broadcast(dom),
-        scored[domain_col].eqNullSafe(dom["__dom"]),
+        scored["source"].eqNullSafe(dom["__dom"]),
     ).drop("__dom")
     return joined.withColumn("kept", ~F.col("domain_flagged"))
 
@@ -1402,9 +1363,6 @@ def domain_quality_gates(
 def mixture_allocate(
     sources: DataFrame,
     budget: int,
-    source_col: str = "source",
-    capacity_col: str = "capacity",
-    weight_col: str = "weight",
 ) -> DataFrame:
     """Capacity-constrained mixture allocation (water-filling): split a
     total document budget across sources in proportion to integer
@@ -1434,10 +1392,10 @@ def mixture_allocate(
     table has tens of rows); the corpus is never touched.
     """
     n_budget = int(budget)
-    c = F.col(capacity_col).cast("decimal(38,0)")
-    w = F.col(weight_col).cast("decimal(38,0)")
+    c = F.col("capacity").cast("decimal(38,0)")
+    w = F.col("weight").cast("decimal(38,0)")
     d = sources.select(
-        F.col(source_col).alias("__src"),
+        F.col("source").alias("__src"),
         c.alias("__c"),
         w.alias("__w"),
     ).where(
@@ -1520,9 +1478,9 @@ def mixture_allocate(
     # above), but least() documents the invariant defensively
     alloc = F.least(alloc, F.col("__c"))
     return ann3.select(
-        F.col("__src").alias(source_col),
-        F.col("__c").cast("long").alias(capacity_col),
-        F.col("__w").cast("long").alias(weight_col),
+        F.col("__src").alias("source"),
+        F.col("__c").cast("long").alias("capacity"),
+        F.col("__w").cast("long").alias("weight"),
         alloc.cast("long").alias("allocation"),
         F.col("__sat").alias("saturated"),
     )
@@ -1533,10 +1491,9 @@ def token_budget_head(
     budget: int,
     weight_col: str,
     order_col: str,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Curriculum head selection under a global token budget: rank
-    documents by ``order_col`` DESCENDING (quality first; ``id_col``
+    documents by ``order_col`` DESCENDING (quality first; ``doc_id``
     ascending breaks ties — a total order) and keep whole documents
     while the running Σ ``weight_col`` stays within ``budget`` — the
     "best N tokens" primitive behind quality-curriculum corpus cuts
@@ -1554,7 +1511,7 @@ def token_budget_head(
     strictly-below + own weight. The within-class pass uses
     group_cols=[order class], whose offsets frame must stay
     broadcast-sized: intended for COARSE scores (quality points,
-    e6-bucketed scores — the common case). ``id_col`` values must be
+    e6-bucketed scores — the common case). ``doc_id`` values must be
     UNIQUE per row (the prefix-sum contract — duplicate (score, id)
     rows would make the within-class order, and thus the selection
     frontier, partition-dependent); for near-unique continuous scores
@@ -1572,7 +1529,7 @@ def token_budget_head(
     o = F.col(order_col).cast("long")
     w = F.col(weight_col).cast("long")
     d = df.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         o.alias("__o"),
         w.alias("__w"),
     ).where(o.isNotNull() & w.isNotNull())
@@ -1627,7 +1584,7 @@ def token_budget_head(
         F.col("__above_w") + F.col("__within_w") + F.col("__w")
     ).cast("long")
     return within.join(key_below, "__key").select(
-        F.col("__id").alias(id_col),
+        F.col("__id").alias("doc_id"),
         (-F.col("__key")).cast("long").alias(order_col),
         F.col("__w").alias(weight_col),
         cum.alias("cum_weight"),
@@ -1652,12 +1609,7 @@ GOPHER_REP_THRESHOLDS: dict[str, float] = {
 }
 
 
-def gopher_repetition_suite(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    thresholds: Mapping[str, float] = GOPHER_REP_THRESHOLDS,
-) -> DataFrame:
+def gopher_repetition_suite(df: DataFrame) -> DataFrame:
     """The COMPLETE Gopher repetition-removal rule set (Rae et al. 2021
     §A1.1) — `repetition_stats` covers the two headline signals; this
     emits all eleven:
@@ -1710,18 +1662,18 @@ def gopher_repetition_suite(
 
     Output: id, n_lines, the 11 fractions, rep_keep.
     """
-    toks = F.filter(tokens_expr(text_col), lambda t: t != F.lit(""))
-    total_chars = F.length(F.coalesce(F.col(text_col), F.lit("")))
+    toks = F.filter(tokens_expr("text"), lambda t: t != F.lit(""))
+    total_chars = F.length(F.coalesce(F.col("text"), F.lit("")))
     lines_arr = F.filter(
         F.transform(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"),
+            F.split(F.coalesce(F.col("text"), F.lit("")), "\n"),
             lambda x: F.trim(x),
         ),
         lambda x: x != F.lit(""),
     )
     # Single consumer now (the whole suite is one projection) — no pin.
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("__t"),
         total_chars.alias("__chars"),
         lines_arr.alias("__lines"),
@@ -1758,7 +1710,7 @@ def gopher_repetition_suite(
         dup_line_chars.cast("double") / F.col("__chars").cast("double"),
     )
     lines_part = base.select(
-        id_col,
+        "doc_id",
         "__t",
         "__chars",
         n_lines.cast("long").alias("n_lines"),
@@ -1843,7 +1795,7 @@ def gopher_repetition_suite(
     )
     chars_d = F.nullif(F.col("__chars").cast("double"), F.lit(0.0))
     out_cols = [
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_lines"),
         F.col("dup_line_frac"),
         F.col("dup_line_char_frac"),
@@ -1869,7 +1821,7 @@ def gopher_repetition_suite(
     for name, col in frac_cols.items():
         out_cols.append(col.alias(name))
     keep = F.lit(True)
-    for name, thr in thresholds.items():
+    for name, thr in GOPHER_REP_THRESHOLDS.items():
         sig = (
             frac_cols[name]
             if name in frac_cols
@@ -1880,15 +1832,13 @@ def gopher_repetition_suite(
     return stats.select(*out_cols)
 
 
-def fineweb_line_signals(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_short_line_frac: float = 0.67,
-    min_punct_line_frac: float = 0.12,
-    max_bullet_line_frac: float = 0.90,
-    short_line_chars: int = 30,
-) -> DataFrame:
+_MAX_SHORT_LINE_FRAC = 0.67
+_MIN_PUNCT_LINE_FRAC = 0.12
+_MAX_BULLET_LINE_FRAC = 0.90
+_SHORT_LINE_CHARS = 30
+
+
+def fineweb_line_signals(df: DataFrame) -> DataFrame:
     """FineWeb-style line-shape quality signals (Penedo et al. 2024
     §3.3 — the C4/Gopher-complementary gates that FineWeb's ablations
     found load-bearing): fraction of lines ending in terminal
@@ -1911,12 +1861,12 @@ def fineweb_line_signals(
     """
     lines = F.filter(
         F.transform(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"),
+            F.split(F.coalesce(F.col("text"), F.lit("")), "\n"),
             lambda x: F.trim(x),
         ),
         lambda x: x != F.lit(""),
     )
-    base = df.select(F.col(id_col), lines.alias("__ls"))
+    base = df.select(F.col("doc_id"), lines.alias("__ls"))
     n = F.size("__ls")
 
     def frac_where(pred) -> Column:
@@ -1929,21 +1879,21 @@ def fineweb_line_signals(
     punct = frac_where(
         lambda x: F.substring(x, -1, 1).isin(".", "!", "?", '"', "'")
     )
-    short = frac_where(lambda x: F.length(x) < short_line_chars)
+    short = frac_where(lambda x: F.length(x) < _SHORT_LINE_CHARS)
     bullet = frac_where(
         lambda x: x.rlike(r"^(-|\*|•|[0-9]+[.)])")
     )
     out = base.select(
-        id_col,
+        "doc_id",
         n.cast("long").alias("n_lines"),
         punct.alias("punct_line_frac"),
         short.alias("short_line_frac"),
         bullet.alias("bullet_line_frac"),
     )
     keep = (
-        (F.col("short_line_frac") <= F.lit(float(max_short_line_frac)))
-        & (F.col("punct_line_frac") >= F.lit(float(min_punct_line_frac)))
-        & (F.col("bullet_line_frac") <= F.lit(float(max_bullet_line_frac)))
+        (F.col("short_line_frac") <= F.lit(_MAX_SHORT_LINE_FRAC))
+        & (F.col("punct_line_frac") >= F.lit(_MIN_PUNCT_LINE_FRAC))
+        & (F.col("bullet_line_frac") <= F.lit(_MAX_BULLET_LINE_FRAC))
     )
     return out.withColumn(
         "fineweb_keep", F.coalesce(keep, F.lit(False))

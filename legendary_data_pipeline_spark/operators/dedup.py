@@ -39,24 +39,20 @@ from legendary_data_pipeline_spark.functions.hashing import md5_long
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_dedup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """One row per distinct text: content hash, keeper id (min), dup count."""
-    return df.groupBy(F.sha2(F.col(text_col), 256).alias("text_sha")).agg(
-        F.min(id_col).alias("keeper_id"),
+    return df.groupBy(F.sha2(F.col("text"), 256).alias("text_sha")).agg(
+        F.min("doc_id").alias("keeper_id"),
         F.count(F.lit(1)).alias("dup_count"),
     )
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep exactly the min-id row per distinct text (deterministic)."""
     from pyspark.sql import Window
 
-    window = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(
-        F.col(id_col).asc()
+    window = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy(
+        F.col("doc_id").asc()
     )
     return (
         df.withColumn("__rn", F.row_number().over(window))
@@ -120,11 +116,10 @@ def shingle_sets(
 
 
 def hashed_shingle_sets(
-    df: DataFrame | None,
+    df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    sets: DataFrame | None = None,
 ) -> DataFrame:
     """(id, __hset) frame: each document's distinct shingles as a SORTED
     array of their 60-bit md5 hashes.
@@ -139,12 +134,8 @@ def hashed_shingle_sets(
     Set sizes and intersection counts match the string-set versions
     exactly unless two distinct shingles of one document collide in 60
     bits (birthday bound ~2^30 shingles per doc — not a real corpus).
-    Pass `sets` (a `shingle_sets` frame) to build from an existing
-    string-shingle pass instead of re-shingling `df`.
     """
-    if sets is None:
-        sets = shingle_sets(df, id_col, text_col, shingle_n)
-    return sets.select(
+    return shingle_sets(df, id_col, text_col, shingle_n).select(
         F.col(id_col),
         F.array_sort(F.transform("__set", md5_long)).alias("__hset"),
     )
@@ -187,11 +178,7 @@ def _intersect_sizes_udf():
 
 def minhash_signatures(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 16,
-    shingle_n: int = 3,
-    sets: DataFrame | None = None,
     hsets: DataFrame | None = None,
 ) -> DataFrame:
     """doc_id + h0..h{num_hashes-1} minhash signature columns.
@@ -203,13 +190,13 @@ def minhash_signatures(
     and combine map-side, so the shuffle carries `num_hashes` longs per
     doc — this beats array-lambda variants, which Catalyst's projection
     collapse makes recompute the hash array per output column.
-    Rows with fewer than `shingle_n` tokens are dropped (no shingles).
+    Rows with fewer than 3 tokens are dropped (no shingles).
 
-    Pass `sets` (a `shingle_sets` frame) or `hsets` (a
-    `hashed_shingle_sets` frame, preferred — the md5s are already done
-    and signatures reduce to explode + mod + min), ideally cached, to
-    share the shingling/hashing pass with other consumers — min over
+    Pass `hsets` (a `hashed_shingle_sets` frame — the md5s are already
+    done and signatures reduce to explode + mod + min), ideally cached,
+    to share the shingling/hashing pass with other consumers — min over
     DISTINCT shingles is identical to min over all shingles.
+    Without it the shingles are built and hashed here.
     """
     from legendary_data_pipeline_spark.functions.hashing import (
         MERSENNE_P,
@@ -219,27 +206,24 @@ def minhash_signatures(
 
     if hsets is not None:
         based = hsets.select(
-            F.col(id_col), F.explode(F.col("__hset")).alias("__h")
-        ).select(F.col(id_col), (F.col("__h") % MERSENNE_P).alias("__hb"))
+            F.col("doc_id"), F.explode(F.col("__hset")).alias("__h")
+        ).select(F.col("doc_id"), (F.col("__h") % MERSENNE_P).alias("__hb"))
     else:
-        if sets is None:
-            sets = shingle_sets(df, id_col, text_col, shingle_n)
-        exploded = sets.select(
-            F.col(id_col), F.explode(F.col("__set")).alias("__s")
+        exploded = shingle_sets(df).select(
+            F.col("doc_id"), F.explode(F.col("__set")).alias("__s")
         )
         based = exploded.select(
-            F.col(id_col), (md5_long(F.col("__s")) % MERSENNE_P).alias("__hb")
+            F.col("doc_id"), (md5_long(F.col("__s")) % MERSENNE_P).alias("__hb")
         )
     aggs = [
         F.min((F.col("__hb") * F.lit(a) + F.lit(b)) % MERSENNE_P).alias(f"h{i}")
         for i, (a, b) in enumerate(hash_family_params(num_hashes))
     ]
-    return based.groupBy(id_col).agg(*aggs)
+    return based.groupBy("doc_id").agg(*aggs)
 
 
 def banded_keys(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
@@ -259,8 +243,8 @@ def banded_keys(
             F.struct(F.lit(b).alias("band_idx"), band_key.alias("band_key"))
         )
     return signatures.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_key")
+        F.col("doc_id"), F.explode(F.array(*band_structs)).alias("band")
+    ).select("doc_id", "band.band_idx", "band.band_key")
 
 
 def _cap_band_buckets(
@@ -285,7 +269,6 @@ def _cap_band_buckets(
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 4,
     max_bucket_size: int | None = None,
@@ -313,15 +296,15 @@ def lsh_candidate_pairs(
     # num_hashes longs per doc) signature frame so the upstream shingle
     # pipeline isn't recomputed per join side.
     signatures = signatures.cache()
-    banded = banded_keys(signatures, id_col, num_hashes, bands)
+    banded = banded_keys(signatures, num_hashes=num_hashes, bands=bands)
     if max_bucket_size is not None:
-        banded = _cap_band_buckets(banded, id_col, max_bucket_size)
+        banded = _cap_band_buckets(banded, "doc_id", max_bucket_size)
 
     left = banded.select(
-        F.col(id_col).alias("id_a"), "band_idx", "band_key"
+        F.col("doc_id").alias("id_a"), "band_idx", "band_key"
     )
     right = banded.select(
-        F.col(id_col).alias("id_b"), "band_idx", "band_key"
+        F.col("doc_id").alias("id_b"), "band_idx", "band_key"
     )
     return (
         left.join(right, ["band_idx", "band_key"])
@@ -334,10 +317,6 @@ def lsh_candidate_pairs(
 def jaccard_pairs(
     df: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    sets: DataFrame | None = None,
     hsets: DataFrame | None = None,
     max_cache_rows: int = 1_000_000,
     allow_large_cache: bool = False,
@@ -351,39 +330,33 @@ def jaccard_pairs(
     inter / (|A| + |B| − inter), identical to the string-set value
     (collision odds are negligible; see `hashed_shingle_sets`).
 
-    Pass a cached `hashed_shingle_sets` frame via `hsets` (preferred) or
-    a `shingle_sets` frame via `sets` to share the shingling/hashing
-    pass with signature computation in the same pipeline. The
-    convenience path (neither given) `.cache()`s a corpus-sized hashed-
+    Pass a cached `hashed_shingle_sets` frame via `hsets` to share the
+    shingling/hashing pass with signature computation in the same
+    pipeline. The convenience path (no `hsets`) `.cache()`s a corpus-sized hashed-
     shingle frame — fine for notebooks and tests, a memory hazard at
     corpus scale — so it is GUARDED: above `max_cache_rows` input rows
     it raises unless `allow_large_cache=True`, directing callers to the
     staging-table pattern the fused pipelines already use (round 8).
     """
     if hsets is None:
-        if sets is None:
-            # Probed twice (both pair sides) — cache so shingling runs
-            # once. At scale, prefer a staging table keyed by id.
-            if not allow_large_cache:
-                # limit(N+1).count() short-circuits: small inputs stop
-                # scanning at the threshold instead of paying a full
-                # input count before any work (round-9 advice).
-                n = df.limit(max_cache_rows + 1).count()
-                if n > max_cache_rows:
-                    raise ValueError(
-                        f"jaccard_pairs convenience path would .cache() a "
-                        f">{max_cache_rows}-row hashed-shingle frame "
-                        f"(max_cache_rows={max_cache_rows}). Pass hsets= "
-                        "(a staged hashed_shingle_sets frame — the fused-"
-                        "pipeline pattern), raise max_cache_rows, or opt "
-                        "in with allow_large_cache=True."
-                    )
-            hsets = hashed_shingle_sets(
-                df, id_col, text_col, shingle_n
-            ).cache()
-        else:
-            hsets = hashed_shingle_sets(None, id_col, sets=sets)
-    hs = hsets.select(F.col(id_col).alias("__id"), F.col("__hset"))
+        # Probed twice (both pair sides) — cache so shingling runs
+        # once. At scale, prefer a staging table keyed by id.
+        if not allow_large_cache:
+            # limit(N+1).count() short-circuits: small inputs stop
+            # scanning at the threshold instead of paying a full
+            # input count before any work (round-9 advice).
+            n = df.limit(max_cache_rows + 1).count()
+            if n > max_cache_rows:
+                raise ValueError(
+                    f"jaccard_pairs convenience path would .cache() a "
+                    f">{max_cache_rows}-row hashed-shingle frame "
+                    f"(max_cache_rows={max_cache_rows}). Pass hsets= "
+                    "(a staged hashed_shingle_sets frame — the fused-"
+                    "pipeline pattern), raise max_cache_rows, or opt "
+                    "in with allow_large_cache=True."
+                )
+        hsets = hashed_shingle_sets(df, "doc_id", "text").cache()
+    hs = hsets.select(F.col("doc_id").alias("__id"), F.col("__hset"))
     a = hs.select(
         F.col("__id").alias("id_a"),
         F.col("__hset").alias("hset_a"),
@@ -627,16 +600,11 @@ SIMHASH_BITS = 60  # md5_long yields 60-bit values
 _SIMHASH_PACK = 4  # bit-counters per packed long (16 bits each)
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pack: int = _SIMHASH_PACK,
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """60-bit SimHash per document (frequency-weighted sign fingerprint).
 
     Explodes tokens then computes all 60 bit-majorities in ONE groupBy.
-    The counters are PACKED `pack` per long (64/pack bits each): 16
+    The counters are PACKED four per long (16 bits each): 16
     aggregate columns instead of 61 keeps whole-stage codegen small — the
     naive 61-agg plan spent multiple seconds just COMPILING. The
     fingerprint is reconstructed post-agg with one array higher-order
@@ -644,34 +612,29 @@ def simhash(
     of a 60-term when() chain.
 
     Overflow guard: the TOP packed field owns the long's sign bit, so
-    the carry-free capacity is 2^(64/pack − 1)−1 tokens (32,767 for the
-    default pack=4; 2^31−1 ≈ 2.1e9 for pack=2) — one more and the
+    the carry-free capacity is 2^15−1 = 32,767 tokens — one more and the
     running sum crosses Long.MAX. Under Spark 4's ANSI default a plain
     `sum` would then throw ARITHMETIC_OVERFLOW and kill the whole query,
     so the packed counters use `try_sum` (NULL on overflow) and the
     fingerprint is NULLed for any document whose token_count exceeds the
-    capacity (token_count is still reported). For long-document corpora
-    pass pack=2 at the cost of twice the aggregate columns.
+    capacity (token_count is still reported). Long-document corpora
+    would need two counters per long, at twice the aggregate columns.
     """
-    if pack not in (1, 2, 4):
-        raise ValueError(f"pack must be 1, 2, or 4, got {pack}")
-    counter_bits = 64 // pack
+    counter_bits = 64 // _SIMHASH_PACK
     # The top field's high bit is the long's sign bit: capacity is one
     # bit less than the field width, so every per-counter total (each
     # bounded by token_count) keeps the full packed sum below Long.MAX.
     capacity = (1 << (counter_bits - 1)) - 1
-    if pack == 1:
-        capacity = (1 << 62) - 1  # single counter per long, no packing
-    groups = -(-SIMHASH_BITS // pack)  # ceil
+    groups = -(-SIMHASH_BITS // _SIMHASH_PACK)  # ceil
     toks = df.select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("__tok")
+        F.col("doc_id"), F.explode(tokens_expr()).alias("__tok")
     ).withColumn("__h", md5_long(F.col("__tok")))
 
     aggs = [F.count(F.lit(1)).alias("__n")]
     for g in range(groups):
         contrib = None
-        for i in range(pack):
-            b = g * pack + i
+        for i in range(_SIMHASH_PACK):
+            b = g * _SIMHASH_PACK + i
             if b >= SIMHASH_BITS:
                 break
             term = F.shiftleft(
@@ -682,12 +645,15 @@ def simhash(
         # try_sum: NULL instead of ANSI ARITHMETIC_OVERFLOW for docs past
         # capacity — the <= capacity guard below NULLs their fingerprint.
         aggs.append(F.try_sum(contrib).alias(f"__g{g}"))
-    counted = toks.groupBy(id_col).agg(*aggs)
+    counted = toks.groupBy("doc_id").agg(*aggs)
 
-    mask = (1 << counter_bits) - 1 if pack > 1 else (1 << 62) - 1
+    mask = (1 << counter_bits) - 1
     counts = F.array(
         *[
-            F.shiftright(F.col(f"__g{b // pack}"), (b % pack) * counter_bits)
+            F.shiftright(
+                F.col(f"__g{b // _SIMHASH_PACK}"),
+                (b % _SIMHASH_PACK) * counter_bits,
+            )
             .bitwiseAND(F.lit(mask))
             for b in range(SIMHASH_BITS)
         ]
@@ -707,7 +673,7 @@ def simhash(
         lambda acc, x: acc + x,
     )
     return with_counts.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(F.col("__n") <= capacity, fingerprint).alias("simhash"),
         F.col("__n").alias("token_count"),
     )
@@ -720,8 +686,6 @@ def hamming_distance(a: Column, b: Column) -> Column:
 
 def simhash_band_pairs(
     fingerprints: DataFrame,
-    id_col: str = "doc_id",
-    fingerprint_col: str = "simhash",
     bands: int = 4,
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
@@ -751,11 +715,11 @@ def simhash_band_pairs(
     bits_per_band = SIMHASH_BITS // bands
     band_mask = (1 << bits_per_band) - 1
     fp = fingerprints.select(
-        F.col(id_col), F.col(fingerprint_col).alias("__fp")
+        F.col("doc_id"), F.col("simhash").alias("__fp")
     ).filter(F.col("__fp").isNotNull())
     fp = fp.cache()
     banded = fp.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__fp"),
         F.explode(
             F.array(
@@ -770,12 +734,12 @@ def simhash_band_pairs(
                 ]
             )
         ).alias("band"),
-    ).select(id_col, "__fp", "band.band_idx", "band.band_val")
+    ).select("doc_id", "__fp", "band.band_idx", "band.band_val")
     if max_bucket_size is not None:
         from pyspark.sql import Window
 
         w = Window.partitionBy("band_idx", "band_val").orderBy(
-            md5_long(F.col(id_col).cast("string")).asc(), F.col(id_col).asc()
+            md5_long(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
         )
         banded = (
             banded.withColumn("__rn", F.row_number().over(w))
@@ -783,13 +747,13 @@ def simhash_band_pairs(
             .drop("__rn")
         )
     left = banded.select(
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         F.col("__fp").alias("fp_a"),
         "band_idx",
         "band_val",
     )
     right = banded.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         F.col("__fp").alias("fp_b"),
         "band_idx",
         "band_val",
@@ -814,22 +778,19 @@ def simhash_band_pairs(
 
 
 def corpus_hash_index(
-    df: DataFrame, text_col: str = "text", sha_col: str = "text_sha"
+    df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Distinct content hashes of a corpus — the exact-dedup index an
     ingestion pipeline persists between batches (32 bytes per distinct
     text; at 100 TB this is the only corpus-derived state incremental
     exact dedup ever reads or shuffles)."""
-    return df.select(F.sha2(F.col(text_col), 256).alias(sha_col)).distinct()
+    return df.select(F.sha2(F.col(text_col), 256).alias("text_sha")).distinct()
 
 
 def incremental_exact_dedup(
     new_df: DataFrame,
     corpus_index: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    sha_col: str = "text_sha",
-    status_col: str = "dedup_status",
 ) -> DataFrame:
     """Classify every NEW doc against an existing corpus and its own
     batch: `corpus_dup` (text already in the corpus), `batch_dup` (first
@@ -844,20 +805,20 @@ def incremental_exact_dedup(
     batch for the new-vs-new decision. Statuses are deterministic
     (min-id keeper, same convention as `exact_dedup`).
     """
-    hashed = new_df.withColumn(sha_col, F.sha2(F.col(text_col), 256))
-    idx = corpus_index.select(sha_col).distinct().withColumn(
+    hashed = new_df.withColumn("text_sha", F.sha2(F.col(text_col), 256))
+    idx = corpus_index.select("text_sha").distinct().withColumn(
         "__in_corpus", F.lit(True)
     )
     from pyspark.sql import Window
 
     rn = F.row_number().over(
-        Window.partitionBy(sha_col).orderBy(F.col(id_col).asc())
+        Window.partitionBy("text_sha").orderBy(F.col("doc_id").asc())
     )
     return (
-        hashed.join(idx, sha_col, "left")
+        hashed.join(idx, "text_sha", "left")
         .withColumn("__rn", rn)
         .withColumn(
-            status_col,
+            "dedup_status",
             F.when(F.col("__in_corpus"), F.lit("corpus_dup"))
             .when(F.col("__rn") > 1, F.lit("batch_dup"))
             .otherwise(F.lit("unique")),
@@ -869,9 +830,6 @@ def incremental_exact_dedup(
 def lsh_probe_pairs(
     new_banded: DataFrame,
     corpus_banded: DataFrame,
-    id_col: str = "doc_id",
-    new_id: str = "id_new",
-    corpus_id: str = "id_corpus",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup candidates between a NEW batch and an existing corpus:
@@ -893,19 +851,19 @@ def lsh_probe_pairs(
     path's cap bounds. Pre-capped persisted indexes can omit it.
     """
     if max_bucket_size is not None:
-        new_banded = _cap_band_buckets(new_banded, id_col, max_bucket_size)
+        new_banded = _cap_band_buckets(new_banded, "doc_id", max_bucket_size)
         corpus_banded = _cap_band_buckets(
-            corpus_banded, id_col, max_bucket_size
+            corpus_banded, "doc_id", max_bucket_size
         )
     left = new_banded.select(
-        F.col(id_col).alias(new_id), "band_idx", "band_key"
+        F.col("doc_id").alias("id_new"), "band_idx", "band_key"
     )
     right = corpus_banded.select(
-        F.col(id_col).alias(corpus_id), "band_idx", "band_key"
+        F.col("doc_id").alias("id_corpus"), "band_idx", "band_key"
     )
     return (
         left.join(right, ["band_idx", "band_key"])
-        .select(new_id, corpus_id)
+        .select("id_new", "id_corpus")
         .distinct()
     )
 
@@ -917,8 +875,6 @@ def lsh_probe_pairs(
 
 def winnow_fingerprints(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 4,
     window: int = 4,
 ) -> DataFrame:
@@ -950,8 +906,8 @@ def winnow_fingerprints(
     if w < 1 or k < 1:
         raise ValueError(f"winnow_fingerprints: k={k}, window={w} must be >= 1")
     base = df.select(
-        F.col(id_col),
-        F.transform(shingles_expr(text_col, k), md5_long).alias("__H"),
+        F.col("doc_id"),
+        F.transform(shingles_expr("text", k), md5_long).alias("__H"),
     )
     nwin = F.size("__H") - F.lit(w - 1)
     js = F.filter(
@@ -966,10 +922,10 @@ def winnow_fingerprints(
 
     positions = F.array_distinct(F.transform(js, sel))
     out = base.select(
-        F.col(id_col), F.col("__H"), F.explode(positions).alias("__p")
+        F.col("doc_id"), F.col("__H"), F.explode(positions).alias("__p")
     )
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__p").alias("pos"),
         F.element_at("__H", F.col("__p").cast("int")).alias("fp"),
     )
@@ -977,7 +933,6 @@ def winnow_fingerprints(
 
 def winnow_pairs(
     fps: DataFrame,
-    id_col: str = "doc_id",
     min_shared: int = 2,
     max_bucket: int = 64,
 ) -> DataFrame:
@@ -992,7 +947,7 @@ def winnow_pairs(
     """
     from pyspark.sql import Window
 
-    d = fps.select(F.col(id_col).alias("__id"), "fp").distinct()
+    d = fps.select(F.col("doc_id").alias("__id"), "fp").distinct()
     # Both self-join sides consume this frame — pin it or each side
     # replays the fingerprint scan (the r11 standing rule; the r12
     # scan-budget gate caught exactly this on first registration).

@@ -36,19 +36,17 @@ from legendary_data_pipeline_spark.operators.dedup import shingles_expr
 
 def hashed_ngram_counts(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 2,
     m: int = 1024,
 ) -> DataFrame:
     """(id, bucket, cnt): each document's hashed n-gram profile."""
     return (
         df.select(
-            F.col(id_col),
-            F.explode(shingles_expr(text_col, shingle_n)).alias("__s"),
+            F.col("doc_id"),
+            F.explode(shingles_expr("text", shingle_n)).alias("__s"),
         )
-        .select(id_col, (md5_long(F.col("__s")) % m).alias("bucket"))
-        .groupBy(id_col, "bucket")
+        .select("doc_id", (md5_long(F.col("__s")) % m).alias("bucket"))
+        .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
@@ -72,8 +70,6 @@ def _bucket_log_probs(counts: DataFrame, m: int, name: str) -> DataFrame:
 def dsir_importance(
     raw: DataFrame,
     target: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 2,
     m: int = 1024,
 ) -> DataFrame:
@@ -81,9 +77,9 @@ def dsir_importance(
     of its hashed profile under target vs raw bucket distributions.
     Documents with no n-grams score 0 (indifferent)."""
     raw_counts = hashed_ngram_counts(
-        raw, id_col, text_col, shingle_n, m
+        raw, shingle_n=shingle_n, m=m
     ).localCheckpoint(eager=False)  # LM build + scoring (r11 scan audit)
-    tgt_counts = hashed_ngram_counts(target, id_col, text_col, shingle_n, m)
+    tgt_counts = hashed_ngram_counts(target, shingle_n=shingle_n, m=m)
     ratio = (
         _bucket_log_probs(tgt_counts, m, "__lp_t")
         .join(_bucket_log_probs(raw_counts, m, "__lp_r"), "bucket")
@@ -93,14 +89,14 @@ def dsir_importance(
     )
     scored = (
         raw_counts.join(F.broadcast(ratio), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.round(F.sum(F.col("cnt") * F.col("__lr")), 6).alias(
             "log_importance"
         ))
     )
-    ids = raw.select(F.col(id_col))
-    return ids.join(scored, id_col, "left").select(
-        id_col,
+    ids = raw.select(F.col("doc_id"))
+    return ids.join(scored, "doc_id", "left").select(
+        "doc_id",
         F.coalesce(F.col("log_importance"), F.lit(0.0)).alias(
             "log_importance"
         ),
@@ -111,8 +107,6 @@ def dsir_select(
     raw: DataFrame,
     target: DataFrame,
     n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 2,
     m: int = 1024,
     seed: int = 29,
@@ -121,9 +115,9 @@ def dsir_select(
     distribution: Gumbel-top-n on log_importance — inclusion probability
     ∝ exp(log_importance), without replacement, a pure function of
     (data, seed). Returns (id, log_importance, sample_rank)."""
-    imp = dsir_importance(raw, target, id_col, text_col, shingle_n, m)
+    imp = dsir_importance(raw, target, shingle_n=shingle_n, m=m)
     u = (
-        seeded_md5_long(F.col(id_col).cast("string"), seed).cast("double")
+        seeded_md5_long(F.col("doc_id").cast("string"), seed).cast("double")
         + F.lit(1.0)
     ) / F.lit(float(1 << 60))
     gumbel = -F.log(-F.log(u))
@@ -133,11 +127,11 @@ def dsir_select(
     # rank window then runs over ≤ n rows.
     top = (
         imp.withColumn("__key", key)
-        .orderBy(F.col("__key").desc(), F.col(id_col).asc())
+        .orderBy(F.col("__key").desc(), F.col("doc_id").asc())
         .limit(n)
     )
-    w = Window.orderBy(F.col("__key").desc(), F.col(id_col).asc())
+    w = Window.orderBy(F.col("__key").desc(), F.col("doc_id").asc())
     return (
         top.withColumn("sample_rank", F.row_number().over(w))
-        .select(id_col, "log_importance", "sample_rank")
+        .select("doc_id", "log_importance", "sample_rank")
     )

@@ -224,7 +224,6 @@ def survivorship_fuse(
     latest_by: str | None = None,
     latest_cols=(),
     max_cols=(),
-    min_cols=(),
     longest_cols=(),
 ) -> DataFrame:
     """Golden-record survivorship: fuse duplicate records per key into
@@ -236,7 +235,7 @@ def survivorship_fuse(
       smallest — deterministic, no arbitrary first()).
     - ``latest_cols`` + ``latest_by``: value from the row with the
       greatest ``latest_by`` (tie → greatest value) — last-writer-wins.
-    - ``max_cols`` / ``min_cols``: extreme non-NULL value.
+    - ``max_cols``: greatest non-NULL value.
     - ``longest_cols``: longest non-NULL string (tie →
       lexicographically smallest).
 
@@ -245,7 +244,7 @@ def survivorship_fuse(
     record is bit-deterministic on any engine/partitioning. A key
     whose values are all NULL for a column yields NULL.
 
-    Scale: ONE key-shuffle groupBy covers latest/max/min/longest; each
+    Scale: ONE key-shuffle groupBy covers latest/max/longest; each
     ``most_frequent`` column adds one (key, value) groupBy + one
     key-sized join (value-count tables are the model — what a real MDM
     run persists). Keys are the parallelism unit.
@@ -257,8 +256,6 @@ def survivorship_fuse(
     aggs = [F.count(F.lit(1)).cast("long").alias("n_records")]
     for c in max_cols:
         aggs.append(F.max(F.col(c)).alias(c))
-    for c in min_cols:
-        aggs.append(F.min(F.col(c)).alias(c))
     for c in longest_cols:
         aggs.append(
             F.min(

@@ -36,9 +36,6 @@ def funnel_times(
     events: DataFrame,
     steps: Sequence[str],
     horizon_s: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """(user, t1..tk): first-touch step times in epoch nanos.
 
@@ -53,18 +50,18 @@ def funnel_times(
     # PINNED step-events projection instead of rescanning the events
     # table per step (k steps previously meant k full scans).
     step_events = (
-        events.filter(F.col(type_col).isin(*steps))
-        .select(user_col, ts_col, type_col)
+        events.filter(F.col("event_type").isin(*steps))
+        .select("user_id", "ts", "event_type")
         .localCheckpoint(eager=False)
     )
     cur = (
-        step_events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t1"))
+        step_events.filter(F.col("event_type") == steps[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
     )
     for i, step in enumerate(steps[1:], start=2):
-        nxt = step_events.filter(F.col(type_col) == step).select(
-            user_col, F.col(ts_col).alias("__t")
+        nxt = step_events.filter(F.col("event_type") == step).select(
+            "user_id", F.col("ts").alias("__t")
         )
         prev_cols = [f"t{j}" for j in range(1, i)]
         hit = (
@@ -72,8 +69,8 @@ def funnel_times(
             & (F.col("__t") <= F.col("t1") + F.lit(horizon_ns))
         )
         cur = (
-            cur.join(nxt, user_col, "left")
-            .groupBy(user_col, *prev_cols)
+            cur.join(nxt, "user_id", "left")
+            .groupBy("user_id", *prev_cols)
             .agg(F.min(F.when(hit, F.col("__t"))).alias(f"t{i}"))
         )
     return cur
@@ -83,17 +80,12 @@ def funnel_report(
     events: DataFrame,
     steps: Sequence[str],
     horizon_s: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Per-step conversion summary: (step_idx, step, n_users,
     conversion) where conversion = n_users / step-1 users — a RAW
     IEEE ratio of exact integers (bit-stable; the round-9
     representation audit removed the superfluous fractional round)."""
-    times = funnel_times(
-        events, steps, horizon_s, user_col, ts_col, type_col
-    )
+    times = funnel_times(events, steps, horizon_s)
     counts = times.agg(
         *[
             F.count(F.col(f"t{i}")).alias(f"n{i}")
@@ -126,12 +118,10 @@ def funnel_report(
     )
 
 
-def retention_cohorts(
-    events: DataFrame,
-    day_offsets: Sequence[int] = (0, 1, 3, 7, 14),
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+_DAY_OFFSETS = (0, 1, 3, 7, 14)
+
+
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Day-granularity cohort retention: (cohort_day, day_offset,
     n_active, cohort_size, retention).
 
@@ -149,20 +139,20 @@ def retention_cohorts(
     # activity footprint (users × active days), far smaller than the
     # event log it derives from.
     days = events.select(
-        user_col,
-        F.expr(f"{ts_col} DIV {NANOS_PER_DAY}").alias("__day"),
+        "user_id",
+        F.expr(f"ts DIV {NANOS_PER_DAY}").alias("__day"),
     ).distinct().localCheckpoint(eager=False)
-    cohort = days.groupBy(user_col).agg(F.min("__day").alias("__c"))
-    activity = days.join(cohort, user_col).select(
-        user_col, "__c", (F.col("__day") - F.col("__c")).alias("__k")
+    cohort = days.groupBy("user_id").agg(F.min("__day").alias("__c"))
+    activity = days.join(cohort, "user_id").select(
+        "user_id", "__c", (F.col("__day") - F.col("__c")).alias("__k")
     )
     sizes = cohort.groupBy("__c").agg(
-        F.count_distinct(F.col(user_col)).alias("cohort_size")
+        F.count_distinct(F.col("user_id")).alias("cohort_size")
     )
     ret = (
-        activity.filter(F.col("__k").isin(*day_offsets))
+        activity.filter(F.col("__k").isin(*_DAY_OFFSETS))
         .groupBy("__c", "__k")
-        .agg(F.count_distinct(F.col(user_col)).alias("n_active"))
+        .agg(F.count_distinct(F.col("user_id")).alias("n_active"))
     )
     cohort_day = F.date_format(
         F.expr("date_add(DATE '1970-01-01', CAST(__c AS INT))"), "yyyy-MM-dd"
@@ -179,29 +169,23 @@ def retention_cohorts(
     )
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    order_tiebreak: str = "event_id",
-) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """First-order transition matrix over each user's event sequence:
     (from_type, to_type, n_transitions, p) with p row-normalized per
     from_type (a raw IEEE ratio of exact integers — bit-stable).
 
     The lag/lead window partitions by user — per-partition state is one
     user's events; the count and normalization aggregate over the
-    TYPE×TYPE matrix (tiny). `order_tiebreak` makes the within-user
+    TYPE×TYPE matrix (tiny). The `event_id` tie-break makes the within-user
     order total, so the matrix is deterministic under any layout.
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         events.select(
-            F.col(type_col).alias("from_type"),
-            F.lead(type_col).over(w).alias("to_type"),
+            F.col("event_type").alias("from_type"),
+            F.lead("event_type").over(w).alias("to_type"),
         )
         .filter(F.col("to_type").isNotNull())
     )

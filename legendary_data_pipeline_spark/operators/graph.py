@@ -116,8 +116,6 @@ def _local_components(sym, node_type) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     max_iterations: int = 25,
     algorithm: str = "auto",
     local_threshold: int = LOCAL_CC_THRESHOLD,
@@ -144,7 +142,7 @@ def connected_components(
     # different behavior depending on which side of local_threshold the
     # edge count landed.)
     raw = edges.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
 
     if algorithm == "auto" and local_threshold > 0:
@@ -352,13 +350,13 @@ def canonical_members(components: DataFrame) -> DataFrame:
     )
 
 
+_DAMPING = 0.85
+
+
 def pagerank(
     edges: DataFrame,
-    damping: float = 0.85,
     max_iterations: int = 20,
     tol: float = 1e-6,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """PageRank over a directed edge list → (node, rank), Σrank = 1.
 
@@ -377,9 +375,7 @@ def pagerank(
     order varies across runs at ~1e-15 — round the OUTPUT, not the
     iteration, if byte-stable results are needed.
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct().localCheckpoint(eager=True)
+    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -396,7 +392,7 @@ def pagerank(
     degs = degs.localCheckpoint(eager=True)
 
     ranks = degs.select("node", "__deg", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
+    base = (1.0 - _DAMPING) / n
     for _ in range(max_iterations):
         dangling = (
             ranks.filter(F.col("__deg") == 0).agg(F.sum("rank")).first()[0]
@@ -418,8 +414,8 @@ def pagerank(
                 "node",
                 "__deg",
                 (
-                    F.lit(base + damping * dangling / n)
-                    + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
+                    F.lit(base + _DAMPING * dangling / n)
+                    + F.lit(_DAMPING) * F.coalesce(F.col("__in"), F.lit(0.0))
                 ).alias("rank"),
             )
             .localCheckpoint(eager=True)
@@ -440,9 +436,6 @@ def pagerank_fixed_int(
     edges: DataFrame,
     iterations: int = 20,
     scale: int = 10**12,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
     local_threshold: int = 100_000,
 ) -> DataFrame:
     """PageRank with FIXED iteration count and scaled-INTEGER rank state
@@ -481,7 +474,7 @@ def pagerank_fixed_int(
     recurrence in an unrolled CTE chain).
     """
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         # NULL endpoints drop BEFORE the local/distributed branch: the
         # distributed leg's equi-joins never match NULL anyway, and
         # without this shared filter the local leg would keep None as
@@ -501,7 +494,7 @@ def pagerank_fixed_int(
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank_e12", F.lit(0).cast("long"))
-    d_pct_i = int(damping_pct)
+    d_pct_i = 85  # damping, in percent
     if local_threshold and e.count() <= local_threshold:
         from pyspark.sql.types import LongType, StructField, StructType
 
@@ -603,7 +596,6 @@ def best_member(
     components: DataFrame,
     attrs: DataFrame,
     order_by,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """One keeper per component chosen by an explicit quality order —
     the "keep the longest / highest-quality member" dedup policy (the
@@ -611,14 +603,14 @@ def best_member(
     most complete variant, not an arbitrary one).
 
     `components` is a `connected_components` frame (node, component);
-    `attrs` carries `id_col` plus the columns `order_by` references.
+    `attrs` carries `doc_id` plus the columns `order_by` references.
     Output: one row per component with the member's attrs, plus
     `n_members`. Both windows share the component partition key — a
     single exchange."""
     from legendary_data_pipeline_spark.operators.ranking import best_of_group
 
     mem = components.join(
-        attrs.withColumnRenamed(id_col, "node"), "node"
+        attrs.withColumnRenamed("doc_id", "node"), "node"
     ).withColumn(
         "n_members",
         F.count(F.lit(1)).over(Window.partitionBy("component")),
@@ -626,15 +618,7 @@ def best_member(
     return best_of_group(mem, ["component"], order_by)
 
 
-def near_dup_components(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    min_jaccard: float = 0.5,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def near_dup_components(docs: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
     """Docs → verified near-dup pairs → connected components, in one
     call: the composition every dedup/split endpoint needs (MinHash
     signatures and exact-Jaccard verification share ONE cached
@@ -646,18 +630,10 @@ def near_dup_components(
 
     from legendary_data_pipeline_spark.operators import dedup as D
 
-    hsets = D.hashed_shingle_sets(docs, id_col, text_col).cache()
-    sigs = D.minhash_signatures(
-        docs, id_col, text_col, num_hashes=num_hashes, hsets=hsets
-    )
-    pairs = D.lsh_candidate_pairs(
-        sigs,
-        id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        max_bucket_size=max_bucket_size,
-    )
-    verified = D.jaccard_pairs(docs, pairs, id_col, text_col, hsets=hsets)
+    hsets = D.hashed_shingle_sets(docs).cache()
+    sigs = D.minhash_signatures(docs, hsets=hsets)
+    pairs = D.lsh_candidate_pairs(sigs)
+    verified = D.jaccard_pairs(docs, pairs, hsets=hsets)
     # Materialize the (pairs-list-sized) verified edges and cut their
     # lineage so the shingle cache can be released immediately — without
     # this, long-lived sessions (the curate CLI calls this per run) leak
@@ -674,8 +650,6 @@ def near_dup_components(
 
 def triangle_count(
     edges: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
     orient: str = "id",
     method: str = "join",
 ) -> DataFrame:
@@ -724,8 +698,8 @@ def triangle_count(
             f"method must be 'join' or 'adjacency', got {method!r}"
         )
 
-    lo = F.least(F.col(a_col), F.col(b_col)).alias("a")
-    hi = F.greatest(F.col(a_col), F.col(b_col)).alias("b")
+    lo = F.least(F.col("id_a"), F.col("id_b")).alias("a")
+    hi = F.greatest(F.col("id_a"), F.col("id_b")).alias("b")
     e = (
         edges.select(lo, hi)
         .filter(F.col("a") != F.col("b"))
@@ -794,9 +768,7 @@ def triangle_count(
     )
 
 
-def clustering_coefficients(
-    edges: DataFrame, a_col: str = "id_a", b_col: str = "id_b"
-) -> DataFrame:
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per node:
     C(v) = 2·T(v) / (deg(v)·(deg(v)−1)).
 
@@ -812,8 +784,8 @@ def clustering_coefficients(
 
     Output: (node, degree, triangles, coeff).
     """
-    lo = F.least(F.col(a_col), F.col(b_col)).alias("a")
-    hi = F.greatest(F.col(a_col), F.col(b_col)).alias("b")
+    lo = F.least(F.col("id_a"), F.col("id_b")).alias("a")
+    hi = F.greatest(F.col("id_a"), F.col("id_b")).alias("b")
     e = edges.select(lo, hi).filter(F.col("a") != F.col("b")).distinct()
     # four consumers (deg + the three wedge sides) — pin the dedup so
     # the source self-join + distinct materializes once (see
@@ -857,8 +829,6 @@ def link_prediction_topk(
     edges: DataFrame,
     top_k: int = 100,
     max_degree: int | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """Common-neighbor / Jaccard link prediction: the top-k NON-edges
     most likely to be real connections — "parts that should co-occur",
@@ -897,8 +867,8 @@ def link_prediction_topk(
     """
     e = (
         edges.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("__a"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("__b"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("__a"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("__b"),
         )
         .where(
             F.col("__a").isNotNull()
@@ -984,7 +954,6 @@ def basket_pair_lift(
     basket_col: str,
     item_col: str,
     min_pair_count: int = 2,
-    top_k: int | None = None,
     max_basket_size: int = 1_000,
 ) -> DataFrame:
     """Market-basket association lift over item pairs — the
@@ -1010,8 +979,7 @@ def basket_pair_lift(
     hub-sized MEANS) — an in-plan guard raises if any basket exceeds
     ``max_basket_size`` (cap or re-spec upstream; TPC-H orders hold
     ≤7 items). ``min_pair_count`` prunes the pair tail BEFORE the
-    count joins; ``top_k`` (by lift desc, then pair asc — total order)
-    bounds the output. Only the 1-row n_baskets frame broadcasts; the
+    count joins. Only the 1-row n_baskets frame broadcasts; the
     item_counts frame does NOT — its cardinality is the number of
     DISTINCT ITEMS (data-sized and unbounded, ~20M parts at sf100),
     so it shuffle-joins like association_rules' item_freq frame
@@ -1108,10 +1076,4 @@ def basket_pair_lift(
             ).alias("lift"),
         )
     )
-    if top_k is not None:
-        return scored.orderBy(
-            F.col("lift").desc(),
-            F.col("item_a").asc(),
-            F.col("item_b").asc(),
-        ).limit(int(top_k))
     return scored

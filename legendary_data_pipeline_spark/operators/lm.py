@@ -55,8 +55,6 @@ def train_bigram_lm(
 def score_perplexity(
     df: DataFrame,
     model: tuple[dict[str, int], dict[tuple[str, str], int], int],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_ppl: float = 1000.0,
 ) -> DataFrame:
     """(id, n_tokens, ppl, keep): per-document perplexity under the
@@ -107,10 +105,10 @@ def score_perplexity(
             p_out.append(math.exp(-lp / len(words)))
         return pd.DataFrame({"n_tokens": n_out, "ppl": p_out})
 
-    out = df.select(F.col(id_col), score(F.col(text_col)).alias("__s"))
+    out = df.select(F.col("doc_id"), score(F.col("text")).alias("__s"))
     ppl = F.round(F.col("__s.ppl"), 4)
     return out.select(
-        id_col,
+        "doc_id",
         F.col("__s.n_tokens").alias("n_tokens"),
         ppl.alias("ppl"),
         (ppl.isNull() | (ppl <= max_ppl)).alias("keep"),
@@ -121,19 +119,13 @@ def perplexity_filter(
     df: DataFrame,
     trusted: DataFrame,
     max_ppl: float = 1000.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_sample: int = 4096,
-    seed: int = 37,
 ) -> DataFrame:
     """End-to-end CCNet-style gate: train the bigram LM on a bounded
     hash-gated sample of `trusted`, score `df`, keep low-perplexity
     documents. Deterministic from (data, seed)."""
     from legendary_data_pipeline_spark.operators.bpe import sample_texts
 
-    texts = sample_texts(
-        trusted, id_col, text_col, max_sample=max_sample, seed=seed
-    )
+    texts = sample_texts(trusted, seed=37)
     if not texts:
         # An empty model scores EVERYTHING at ppl 2.5 and the gate
         # silently keeps the whole corpus — surface the misconfigured
@@ -143,15 +135,13 @@ def perplexity_filter(
             "empty texts) — the gate would degenerate to keep-everything"
         )
     model = train_bigram_lm(texts)
-    return score_perplexity(df, model, id_col, text_col, max_ppl)
+    return score_perplexity(df, model, max_ppl=max_ppl)
 
 
 def unigram_surprisal_gate(
     df: DataFrame,
     trusted: DataFrame,
     max_mean_micro: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     scale: int = 1_000_000,
 ) -> DataFrame:
     """Deterministic DISTRIBUTED unigram surprisal gate — the
@@ -187,7 +177,7 @@ def unigram_surprisal_gate(
     Returns (id, n_tokens, mean_surprisal_micro, kept).
     """
     toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
+        F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""
     )
     tr = trusted.select(F.explode(toks).alias("__tok"))
     # Pin the vocab-sized count table: weights and (twice, via the
@@ -218,12 +208,12 @@ def unigram_surprisal_gate(
     )
 
     doc_toks = df.select(
-        F.col(id_col), F.explode_outer(toks).alias("__tok")
+        F.col("doc_id"), F.explode_outer(toks).alias("__tok")
     )
     scored = (
         doc_toks.join(weights, "__tok", "left")
         .crossJoin(F.broadcast(oov))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.col("__tok")).cast("long").alias("n_tokens"),
             F.sum(F.coalesce(F.col("__w"), F.col("__w_oov")))
@@ -238,7 +228,7 @@ def unigram_surprisal_gate(
         ).cast("long"),
     )
     out = scored.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         mean_micro.alias("mean_surprisal_micro"),
         F.coalesce(
@@ -252,8 +242,6 @@ def bigram_surprisal_gate(
     df: DataFrame,
     trusted: DataFrame,
     max_mean_micro: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     scale: int = 1_000_000,
 ) -> DataFrame:
     """Deterministic DISTRIBUTED bigram surprisal gate — the
@@ -292,7 +280,7 @@ def bigram_surprisal_gate(
     Returns (id, n_bigrams, mean_surprisal_micro, kept).
     """
     toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
+        F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""
     )
 
     def bigrams(arr: F.Column) -> F.Column:
@@ -356,9 +344,9 @@ def bigram_surprisal_gate(
     w_glob = vocab.select(micro(F.lit(1), F.col("__v")).alias("__w_glob"))
 
     doc_bg = df.select(
-        F.col(id_col), F.explode_outer(bigrams(toks)).alias("__bg")
+        F.col("doc_id"), F.explode_outer(bigrams(toks)).alias("__bg")
     ).select(
-        id_col,
+        "doc_id",
         F.col("__bg.w1").alias("__w1"),
         F.col("__bg.w2").alias("__w2"),
     )
@@ -366,7 +354,7 @@ def bigram_surprisal_gate(
         doc_bg.join(w_bg, ["__w1", "__w2"], "left")
         .join(w_ctx, "__w1", "left")
         .crossJoin(F.broadcast(w_glob))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.col("__w1")).cast("long").alias("n_bigrams"),
             F.sum(
@@ -389,7 +377,7 @@ def bigram_surprisal_gate(
         ).cast("long"),
     )
     return scored.select(
-        id_col,
+        "doc_id",
         "n_bigrams",
         mean_micro.alias("mean_surprisal_micro"),
         F.coalesce(

@@ -670,7 +670,6 @@ def precision_recall_at_k(
     rel_col: str,
     k: int,
     total_rel: DataFrame | None = None,
-    total_rel_col: str = "n_rel",
 ) -> DataFrame:
     """Exact precision@k / recall@k over a ranked retrieval frame —
     the set-overlap companions to MRR (first hit) and NDCG (graded
@@ -715,7 +714,7 @@ def precision_recall_at_k(
     if total_rel is not None:
         tr = total_rel.select(
             F.col(query_col).alias("__tq"),
-            F.col(total_rel_col).cast("long").alias("__nrel"),
+            F.col("n_rel").cast("long").alias("__nrel"),
         )
         joined = hits.join(
             tr, F.col(query_col).eqNullSafe(F.col("__tq")), "full_outer"

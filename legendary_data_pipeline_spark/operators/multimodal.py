@@ -123,17 +123,15 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_plan(
-    media: DataFrame, max_side: int = 256, use_real_codec: bool = False
-) -> DataFrame:
+def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
     """Image-resize stage: aspect-preserving fit into max_side×max_side.
 
     The Spark plumbing is real — decoded dims feed a pure-expression
     target-size computation, and the pixel transform runs as a second
-    Arrow-batched mapInPandas over (payload, target dims). The pixel
-    codec itself is stubbed (no imaging library in this container): the
-    stand-in emits the sha256 of (payload, target dims) as the
-    "resized" bytes, deterministic so tests assert exact values.
+    Arrow-batched mapInPandas over (payload, target dims). There is no
+    pixel codec (the engine carries no imaging library): the transform
+    emits the sha256 of (payload, target dims) as the "resized" bytes,
+    deterministic so tests assert exact values.
     """
     decoded = extract_media_meta(media.filter(F.col("kind") == "image"))
     scale = F.greatest(F.col("width"), F.col("height")) / F.lit(max_side)
@@ -163,11 +161,6 @@ def resize_plan(
             for payload, tw, th in zip(
                 batch["payload"], batch["target_w"], batch["target_h"]
             ):
-                if use_real_codec:
-                    raise NotImplementedError(
-                        "pixel resize needs an imaging library; "
-                        "not available in this container"
-                    )
                 digest = _hashlib.sha256(
                     bytes(payload) + f":{tw}x{th}".encode()
                 ).digest()
@@ -231,10 +224,13 @@ def audio_window_offsets(media: DataFrame, window_s: int = 5) -> DataFrame:
 AHASH_SCHEMA = "media_id long, ahash long"
 
 
-def ahash_images(media: DataFrame, cells: int = 64) -> DataFrame:
+_AHASH_CELLS = 64  # one bit per cell, packed into a signed int64
+
+
+def ahash_images(media: DataFrame) -> DataFrame:
     """Average-hash perceptual fingerprints over image payloads: the
     LAION-style image-dedup front end. Each payload's bytes are
-    resampled into `cells` buckets; each bucket's mean vs the global
+    resampled into 64 buckets; each bucket's mean vs the global
     mean yields one bit — near-identical payloads differ in few bits.
 
     With a real codec the bytes would be the decoded 8x8 luma plane
@@ -244,9 +240,6 @@ def ahash_images(media: DataFrame, cells: int = 64) -> DataFrame:
     payload difference. Arrow-batched numpy; the hash is packed into a
     signed int64 (two's complement) so banding/XOR stay JVM-side.
     """
-    if cells != 64:
-        raise ValueError("ahash packs exactly 64 bits (cells=64)")
-
     def hash_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import numpy as np
         import pandas as pd
@@ -259,11 +252,11 @@ def ahash_images(media: DataFrame, cells: int = 64) -> DataFrame:
                     hashes.append(None)
                     continue
                 means = np.array(
-                    [c.mean() for c in np.array_split(arr.astype(np.float64), cells)
-                     if c.size] 
+                    [c.mean() for c in np.array_split(
+                        arr.astype(np.float64), _AHASH_CELLS) if c.size]
                 )
-                if means.size < cells:  # fewer bytes than cells: pad
-                    means = np.pad(means, (0, cells - means.size))
+                if means.size < _AHASH_CELLS:  # fewer bytes than cells: pad
+                    means = np.pad(means, (0, _AHASH_CELLS - means.size))
                 bits = means > means.mean()
                 h = 0
                 for bit in bits:
@@ -286,8 +279,6 @@ def ahash_pairs(
     hashes: DataFrame,
     max_hamming: int = 8,
     bands: int = 8,
-    id_col: str = "media_id",
-    hash_col: str = "ahash",
 ) -> DataFrame:
     """Near-duplicate image pairs: band the 64-bit hash into `bands`
     equal-width keys, bucket-join candidates, verify with an exact
@@ -304,32 +295,32 @@ def ahash_pairs(
 
     width = 64 // bands
     mask = (1 << width) - 1
-    banded = hashes.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col),
-        F.col(hash_col),
+    banded = hashes.filter(F.col("ahash").isNotNull()).select(
+        F.col("media_id"),
+        F.col("ahash"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band_idx"),
                         F.shiftrightunsigned(
-                            F.col(hash_col), b * width
+                            F.col("ahash"), b * width
                         ).bitwiseAND(F.lit(mask)).alias("band_key"),
                     )
                     for b in range(bands)
                 ]
             )
         ).alias("bk"),
-    ).select(id_col, hash_col, "bk.band_idx", "bk.band_key")
+    ).select("media_id", "ahash", "bk.band_idx", "bk.band_key")
     a = banded.select(
-        F.col(id_col).alias("id_a"),
-        F.col(hash_col).alias("h_a"),
+        F.col("media_id").alias("id_a"),
+        F.col("ahash").alias("h_a"),
         "band_idx",
         "band_key",
     )
     b = banded.select(
-        F.col(id_col).alias("id_b"),
-        F.col(hash_col).alias("h_b"),
+        F.col("media_id").alias("id_b"),
+        F.col("ahash").alias("h_b"),
         "band_idx",
         "band_key",
     )

@@ -172,7 +172,6 @@ def categorical_drift(
     base: DataFrame,
     current: DataFrame,
     col: str,
-    null_label: str = "<null>",
     require_nonempty: bool = True,
 ) -> DataFrame:
     """Distribution drift of a categorical column between two table
@@ -185,7 +184,7 @@ def categorical_drift(
     (expected from the pooled distribution). Σ chisq_contrib is the
     two-sample chi-square statistic with (k−1) dof; compare it to a
     critical value, or rank values by contribution to see WHERE the
-    distribution moved. NULLs are a category (`null_label`).
+    distribution moved. NULLs are a category (`<null>`).
 
     Chi-square instead of PSI/KL deliberately: it needs only
     +,−,×,÷ on exact integer counts — deterministic across engines
@@ -208,7 +207,7 @@ def categorical_drift(
                     "a vanished upstream feed; fail here, don't "
                     "silently suppress the alert."
                 )
-    v = F.coalesce(F.col(col).cast("string"), F.lit(null_label))
+    v = F.coalesce(F.col(col).cast("string"), F.lit("<null>"))
 
     def counts(df: DataFrame, alias: str) -> DataFrame:
         return df.select(v.alias("value")).groupBy("value").agg(
@@ -364,18 +363,14 @@ def benford_audit(df: DataFrame, value: Column) -> DataFrame:
     )
 
 
-def table_checksum(
-    df: DataFrame,
-    cols: Sequence[str],
-    sep: str = "\x1f",
-) -> DataFrame:
+def table_checksum(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Order-independent content checksum of a table — the tool that
     validates a migration ("does the Spark copy hold exactly the rows
     the old system held?") without shipping either side's data.
 
-    Each row is canonicalized as the `sep`-joined string form of the
-    selected columns (NULL → the literal 'NULL' token — distinguishable
-    because `sep` = unit-separator never appears in data), hashed with
+    Each row is canonicalized as the unit-separator-joined string form
+    of the selected columns (NULL → the literal 'NULL' token —
+    distinguishable because the unit separator never appears in data), hashed with
     the engine's md5_long convention, and the hashes are SUMMED as
     decimal(38,0): addition commutes, so the checksum is independent of
     row order, partitioning, and engine — two sides agree iff their
@@ -400,7 +395,8 @@ def table_checksum(
     from legendary_data_pipeline_spark.functions.hashing import md5_long
 
     canon = F.concat_ws(
-        sep, *[F.coalesce(F.col(c).cast("string"), F.lit("NULL")) for c in cols]
+        "\x1f",
+        *[F.coalesce(F.col(c).cast("string"), F.lit("NULL")) for c in cols],
     )
     return df.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -455,7 +451,6 @@ def psi_drift(
     base: DataFrame,
     current: DataFrame,
     col: str,
-    null_label: str = "<null>",
     smoothing: float = 0.5,
     require_nonempty: bool = True,
     scaled_e6: bool = False,
@@ -471,7 +466,7 @@ def psi_drift(
 
     with Laplace smoothing s over the K union categories so a category
     present on only one side contributes a finite term instead of ±∞.
-    NULLs are a category (`null_label`). Counts are exact integers; the
+    NULLs are a category (`<null>`). Counts are exact integers; the
     ln and divisions are fixed double expressions with round(6)
     absorbing last-ulp libm drift — the mutual-information convention
     (the module's chi-square-first note predates that convention
@@ -496,7 +491,7 @@ def psi_drift(
                     "snapshot usually means a vanished upstream feed; "
                     "fail here, don't silently suppress the alert."
                 )
-    v = F.coalesce(F.col(col).cast("string"), F.lit(null_label))
+    v = F.coalesce(F.col(col).cast("string"), F.lit("<null>"))
 
     def counts(df: DataFrame, alias: str) -> DataFrame:
         return df.select(v.alias("value")).groupBy("value").agg(
@@ -562,7 +557,6 @@ def ks_two_sample(
     base: DataFrame,
     current: DataFrame,
     value: Column,
-    require_nonempty: bool = True,
 ) -> DataFrame:
     """EXACT two-sample Kolmogorov–Smirnov statistic for a numeric
     column between two snapshots — the unbinned companion to
@@ -588,14 +582,13 @@ def ks_two_sample(
     DISTINCT-VALUE frame (cardinality-sized, the spearman_matrix
     construction), one 1-row aggregation.
     """
-    if require_nonempty:
-        for name, side in (("base", base), ("current", current)):
-            if side.limit(1).count() == 0:
-                raise ValueError(
-                    f"ks_two_sample: {name} snapshot is empty — its "
-                    "empirical CDF is undefined. A missing snapshot "
-                    "usually means a vanished upstream feed."
-                )
+    for name, side in (("base", base), ("current", current)):
+        if side.limit(1).count() == 0:
+            raise ValueError(
+                f"ks_two_sample: {name} snapshot is empty — its "
+                "empirical CDF is undefined. A missing snapshot "
+                "usually means a vanished upstream feed."
+            )
 
     def counts(df: DataFrame, alias: str) -> DataFrame:
         return (
@@ -664,7 +657,6 @@ def cramer_von_mises(
     base: DataFrame,
     current: DataFrame,
     value: Column,
-    require_nonempty: bool = True,
 ) -> DataFrame:
     """EXACT two-sample Cramér–von Mises statistic — the whole-curve
     companion to `ks_two_sample`'s single-supremum D: KS sees only the
@@ -703,14 +695,13 @@ def cramer_von_mises(
 
     Output (1 row): n_base, n_current, t_e6.
     """
-    if require_nonempty:
-        for name, side in (("base", base), ("current", current)):
-            if side.limit(1).count() == 0:
-                raise ValueError(
-                    f"cramer_von_mises: {name} snapshot is empty — its "
-                    "empirical CDF is undefined. A missing snapshot "
-                    "usually means a vanished upstream feed."
-                )
+    for name, side in (("base", base), ("current", current)):
+        if side.limit(1).count() == 0:
+            raise ValueError(
+                f"cramer_von_mises: {name} snapshot is empty — its "
+                "empirical CDF is undefined. A missing snapshot "
+                "usually means a vanished upstream feed."
+            )
 
     def counts(df: DataFrame, alias: str) -> DataFrame:
         return (
@@ -771,7 +762,6 @@ def numeric_drift(
     current: DataFrame,
     value: Column,
     n_bins: int = 10,
-    require_nonempty: bool = True,
 ) -> DataFrame:
     """`categorical_drift` for numeric columns: both snapshots are
     binned on ONE pooled equi-width grid (bounds from the union, so the
@@ -794,16 +784,15 @@ def numeric_drift(
     vc = current.select(value.cast("long").alias("__v")).filter(
         F.col("__v").isNotNull()
     )
-    if require_nonempty:
-        # probe the RAW sides here: probing after binning would force
-        # the pooled-bounds aggregation once per probe (two extra full
-        # scans of both inputs)
-        for name, side in (("base", vb), ("current", vc)):
-            if side.limit(1).count() == 0:
-                raise ValueError(
-                    f"numeric_drift: {name} snapshot is empty — see "
-                    "categorical_drift's require_nonempty contract."
-                )
+    # probe the RAW sides here: probing after binning would force
+    # the pooled-bounds aggregation once per probe (two extra full
+    # scans of both inputs)
+    for name, side in (("base", vb), ("current", vc)):
+        if side.limit(1).count() == 0:
+            raise ValueError(
+                f"numeric_drift: {name} snapshot is empty — see "
+                "categorical_drift's require_nonempty contract."
+            )
     # pinned AFTER the cheap limit(1) probes (pinning first would turn
     # each probe into a full materialization): each side feeds the
     # pooled-bounds union AND its own binned counts — the r11 scan
@@ -962,7 +951,6 @@ def write_with_expectations(
     constraints: Mapping[str, Column],
     path: str,
     quarantine_path: str,
-    mode: str = "overwrite",
 ) -> DataFrame:
     """Expectations-gated parquet sink: rows meeting every constraint
     land at `path`, the rest at `quarantine_path` with their
@@ -973,15 +961,15 @@ def write_with_expectations(
     The split frame is cached for the two writes + report so the source
     is scanned once (at 100 TB the cache becomes a staging table, but
     the two-sink shape is the same); it is unpersisted before return.
-    Both writes use `mode` — the default overwrite keeps reruns
-    idempotent, and the quarantine is always (re)written, even empty,
-    so a fixed rerun never leaves stale failures behind.
+    Both writes overwrite, which keeps reruns idempotent, and the
+    quarantine is always (re)written, even empty, so a fixed rerun never
+    leaves stale failures behind.
     """
     flagged = df.cache()
     try:
         passed, failed = enforce_expectations(flagged, constraints)
-        passed.write.mode(mode).parquet(path)
-        failed.write.mode(mode).parquet(quarantine_path)
+        passed.write.mode("overwrite").parquet(path)
+        failed.write.mode("overwrite").parquet(quarantine_path)
         return check_constraints(flagged, constraints)
     finally:
         flagged.unpersist()

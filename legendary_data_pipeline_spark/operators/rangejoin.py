@@ -27,12 +27,11 @@ def range_join(
     interval_start: str,
     interval_end: str,
     bucket: int,
-    how: str = "inner",
 ) -> DataFrame:
     """Join each point to the interval(s) containing it (inclusive ends).
 
     Output: all point columns + all interval columns (minus duplicate
-    keys). `how='left'` keeps uncovered points with null interval cols.
+    keys); an inner join, so points no interval covers are dropped.
     """
     keys = list(on)
     exploded = intervals.withColumn(
@@ -55,7 +54,7 @@ def range_join(
             f"p.{point_ts} <= i.{interval_end}",
         ]
     )
-    joined = pts.alias("p").join(exploded.alias("i"), F.expr(cond), how)
+    joined = pts.alias("p").join(exploded.alias("i"), F.expr(cond))
     interval_cols = [c for c in intervals.columns if c not in keys]
     return joined.select(
         *[F.col(f"p.{c}") for c in points.columns],

@@ -26,14 +26,13 @@ def best_of_group(
     df: DataFrame,
     partition_by: Sequence[str | Column],
     order_by: Sequence[Column],
-    rank_col: str = "rn",
 ) -> DataFrame:
     """Keep exactly one row per partition, the first under `order_by`."""
     window = Window.partitionBy(*partition_by).orderBy(*order_by)
     return (
-        df.withColumn(rank_col, F.row_number().over(window))
-        .filter(F.col(rank_col) == 1)
-        .drop(rank_col)
+        df.withColumn("rn", F.row_number().over(window))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
     )
 
 
@@ -71,6 +70,9 @@ def _bucket_search_tree(value: Column, bounds: Sequence) -> Column:
     return build(0, len(bounds))
 
 
+_SKETCH_ACCURACY = 100
+
+
 def global_row_number(
     df: DataFrame,
     bucket_by: Column,
@@ -78,7 +80,6 @@ def global_row_number(
     rn_col: str = "rn",
     total_col: str | None = None,
     num_buckets: int = 64,
-    accuracy: int = 100,
     nulls: str = "first",
 ) -> DataFrame:
     """Exact GLOBAL row_number without funneling the data through one
@@ -101,7 +102,7 @@ def global_row_number(
 
     The only single-partition stage is the offset window over the counts
     frame — ≤num_buckets metadata rows, invariant to data volume. Sketch
-    accuracy only affects load BALANCE, never correctness (default 100 ≈
+    accuracy only affects load BALANCE, never correctness (100 ≈
     1% relative error — bucket sizes within a few percent of even, at a
     fraction of a high-accuracy sketch's cost); a degenerate
     column (all values equal) degrades to one bucket, i.e. the naive
@@ -135,7 +136,7 @@ def global_row_number(
     if nulls not in ("first", "last"):
         raise ValueError(f"nulls must be 'first' or 'last', got {nulls!r}")
     row = df.agg(
-        F.percentile_approx(bucket_by, qs, F.lit(accuracy)).alias("__bounds")
+        F.percentile_approx(bucket_by, qs, F.lit(_SKETCH_ACCURACY)).alias("__bounds")
     ).first()
     bounds = sorted(set(row["__bounds"] or []))
     null_bucket = -1 if nulls == "first" else len(bounds) + 1

@@ -12,8 +12,7 @@ Spark-first notes:
   percentiles — one aggregation, map-side combinable, no window sort
   and no re-join, unlike the reference's stats-CTE + correlated lookup.
 - `percentile(...)` is exact (matches `percentile_cont` on doubles
-  bit-for-bit); at 100 TB swap in `percentile_approx` — the API keeps
-  the choice a parameter.
+  bit-for-bit); `percentile_approx` would be the 100 TB swap.
 """
 
 from __future__ import annotations
@@ -41,7 +40,6 @@ def percentile_rollup(
     ts_col: str,
     tie_breakers: Sequence[str] = (),
     percentiles: Sequence[float] = (0.25, 0.5, 0.75),
-    exact: bool = True,
 ) -> DataFrame:
     """Grouped percentile stats + deterministic last-value per group.
 
@@ -52,10 +50,9 @@ def percentile_rollup(
     descend, which is exactly the reference's `ORDER BY sold_at DESC`.
     """
     pcts = ", ".join(str(p) for p in percentiles)
-    pct_fn = "percentile" if exact else "percentile_approx"
     latest_key = F.struct(F.col(ts_col), *[F.col(c) for c in tie_breakers])
     aggs = [
-        F.expr(f"{pct_fn}({value_col}, array({pcts}))").alias("__pcts"),
+        F.expr(f"percentile({value_col}, array({pcts}))").alias("__pcts"),
         F.count(F.lit(1)).alias("sales_count"),
         F.max(ts_col).alias("last_ts"),
         F.max_by(F.col(value_col), latest_key).alias("last_value"),

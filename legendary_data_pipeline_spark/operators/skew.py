@@ -64,23 +64,25 @@ def salted_count_sum(
     return salted_agg(df, keys, partials, merges, salt_buckets)
 
 
+_SALT_BUCKETS = 8
+
+
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,
     on: Sequence[str],
     how: str = "inner",
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """Equi-join where `fact` is skewed on the join keys and `dim` is too
     big to broadcast: salt fact rows, explode dim across all salts, join
     on (keys, salt). Output columns match a plain `fact.join(dim, on, how)`.
     """
     salted_fact = fact.withColumn(
-        _SALT, F.spark_partition_id() % salt_buckets
+        _SALT, F.spark_partition_id() % _SALT_BUCKETS
     )
     exploded_dim = dim.withColumn(
         _SALT,
-        F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
+        F.explode(F.array(*[F.lit(i) for i in range(_SALT_BUCKETS)])),
     )
     return salted_fact.join(
         exploded_dim, [*on, _SALT], how

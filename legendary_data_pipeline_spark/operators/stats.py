@@ -379,14 +379,13 @@ def two_proportion_ztest(
     success: Column,
     control_label: str,
     treatment_label: str,
-    group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Experiment readout: two-proportion z-test between a control and
     a treatment variant.
 
-    `success` is a boolean per row (unit). Output per group:
-      (*group_cols, n_control, n_treatment, conv_control,
-       conv_treatment, lift, zscore)
+    `success` is a boolean per row (unit). Output (1 row):
+      (n_control, n_treatment, conv_control, conv_treatment, lift,
+       zscore)
     with conv_* = successes/units (exact-count division), lift =
     conv_t − conv_c, and z = lift / sqrt(p̂(1−p̂)(1/n_c + 1/n_t)) from
     the pooled proportion p̂. Everything flows from four exact integer
@@ -399,9 +398,7 @@ def two_proportion_ztest(
     """
     v = F.col(variant_col)
     s = F.coalesce(success, F.lit(False))
-    agg = df.filter(v.isin(control_label, treatment_label)).groupBy(
-        *group_cols
-    ).agg(
+    agg = df.filter(v.isin(control_label, treatment_label)).agg(
         F.sum(F.when(v == control_label, 1).otherwise(0))
         .cast("long").alias("n_control"),
         F.sum(F.when(v == treatment_label, 1).otherwise(0))
@@ -424,7 +421,6 @@ def two_proportion_ztest(
     )
     z = F.when(both & (se2 > 0), (conv_t - conv_c) / F.sqrt(se2))
     return agg.select(
-        *group_cols,
         "n_control",
         "n_treatment",
         conv_c.alias("conv_control"),
@@ -1273,13 +1269,13 @@ def kendall_tau_b(
 #: Rank maps at or under this many distinct values join back to the
 #: spine via an explicit broadcast (see the r15 note inside
 #: `spearman_matrix`); larger maps keep the shuffle join.
+_SPEARMAN_SCALE = 4
 _RANKMAP_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def spearman_matrix(
     df: DataFrame,
     cols: Sequence[str],
-    scale: int = 4,
     scaled_e6: bool = False,
     int64_values: bool = False,
 ) -> DataFrame:
@@ -1301,7 +1297,7 @@ def spearman_matrix(
 
     Rows with a NULL in ANY profiled column are dropped (listwise
     complete, same contract as `correlation_matrix` — every pair must
-    describe the same sample). Values are fixed to `scale` decimal
+    describe the same sample). Values are fixed to 4 decimal
     places before ranking so tie structure is engine-stable.
 
     Output: (col_a, col_b, n, rho) per unordered pair, `cols` order.
@@ -1322,7 +1318,7 @@ def spearman_matrix(
     """
     if len(cols) < 2:
         raise ValueError("spearman_matrix needs at least two columns")
-    # decimal(38,scale), not 18: with the default scale=4 an 18-digit
+    # decimal(38,scale), not 18: with scale=4 an 18-digit
     # decimal overflows to NULL for |v| >= 10^14 in non-ANSI mode, and
     # the listwise NULL filter below would then silently DROP that row,
     # changing n and rho with no warning. 38 digits admit |v| < 10^(38-
@@ -1345,7 +1341,7 @@ def spearman_matrix(
     if int64_values:
         base = df.select(
             *[
-                F.round(F.col(c) * F.lit(10 ** scale))
+                F.round(F.col(c) * F.lit(10 ** _SPEARMAN_SCALE))
                 .cast("long")
                 .alias(c)
                 for c in cols
@@ -1353,7 +1349,7 @@ def spearman_matrix(
         )
     else:
         base = df.select(
-            *[F.col(c).cast(f"decimal(38,{scale})").alias(c) for c in cols]
+            *[F.col(c).cast(f"decimal(38,{_SPEARMAN_SCALE})").alias(c) for c in cols]
         )
     notnull = F.lit(True)
     for c in cols:
@@ -1776,10 +1772,9 @@ def contribution_topn(
     category_col: str,
     value_cents: Column,
     n: int = 10,
-    other_label: str = "__other__",
 ) -> DataFrame:
     """Share-of-total contribution report: the top-`n` categories by
-    exact value with their share, plus ONE `other_label` row folding
+    exact value with their share, plus ONE '__other__' row folding
     the long tail — the shape every revenue/volume breakdown wants
     ("top 10 sources and everything else").
 
@@ -1833,7 +1828,7 @@ def contribution_topn(
         total.crossJoin(F.broadcast(top_sum))
         .filter(F.col("__k") > F.col("__top_k"))
         .select(
-            F.lit(other_label).alias("category"),
+            F.lit("__other__").alias("category"),
             (F.col("__total") - F.col("__top_sum")).alias("value_cents"),
             (
                 (F.col("__total") - F.col("__top_sum")).cast("double")

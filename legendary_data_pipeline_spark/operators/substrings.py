@@ -13,7 +13,7 @@ Spark-first instead of via a monolithic suffix array:
    expression inside the scan stage — no shuffle),
 2. count each shingle's corpus-wide occurrences (map-side-combinable
    groupBy on a uniform 60-bit md5 key),
-3. keep positions whose shingle occurs >= `min_count` times, and merge
+3. keep positions whose shingle occurs at least twice, and merge
    overlapping windows per document into maximal spans with a
    gaps-and-islands window (partitioned by doc — per-doc state only),
 4. strip: subtract covered token positions per row with a higher-order
@@ -30,7 +30,7 @@ were entirely duplicated text come out empty and can be dropped by a
 length gate downstream.
 
 Scale (100 TB): the only wide operations are the shingle-count groupBy
-and the count>=min_count join, both keyed on the uniform md5 hash (no
+and the count>=2 join, both keyed on the uniform md5 hash (no
 skew); the islands window partitions by doc_id and only sees DUP
 positions (bounded per doc). Suffix arrays do this with O(corpus)
 memory on one machine; this shape needs nothing beyond ordinary
@@ -51,8 +51,6 @@ from legendary_data_pipeline_spark.operators.dedup import (
 
 def positioned_gram_frame(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
 ) -> DataFrame:
     """(id, pos, gram_hash) for every sliding n-token window.
@@ -62,29 +60,23 @@ def positioned_gram_frame(
     """
     return (
         df.select(
-            F.col(id_col),
-            F.posexplode(shingles_expr(text_col, n)).alias("__i", "__g"),
+            F.col("doc_id"),
+            F.posexplode(shingles_expr("text", n)).alias("__i", "__g"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (F.col("__i") + 1).alias("pos"),
             md5_long(F.col("__g")).alias("gram_hash"),
         )
     )
 
 
-def duplicated_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def duplicated_spans(df: DataFrame, n: int = 8) -> DataFrame:
     """Maximal duplicated-token spans per document.
 
     Returns (id, span_start, span_end), 1-based inclusive token
     positions. A position is duplicated when some n-gram window
-    covering it occurs >= `min_count` times corpus-wide; windows whose
+    covering it occurs at least twice corpus-wide; windows whose
     covered token runs overlap OR abut merge into one span, so each
     span is a maximal contiguous run of duplicated tokens.
     """
@@ -99,33 +91,33 @@ def duplicated_spans(
     # dominant CPU cost. Contrast contamination_score's by-contract 3
     # scans, where the replayed side is the full text column and a pin
     # WOULD materialize the corpus.
-    grams = positioned_gram_frame(df, id_col, text_col, n).localCheckpoint(
+    grams = positioned_gram_frame(df, n=n).localCheckpoint(
         eager=False
     )
     freq = (
         grams.groupBy("gram_hash")
         .agg(F.count(F.lit(1)).alias("__cnt"))
-        .filter(F.col("__cnt") >= min_count)
+        .filter(F.col("__cnt") >= 2)
         .select("gram_hash")
     )
-    dup = grams.join(freq, "gram_hash").select(id_col, "pos")
+    dup = grams.join(freq, "gram_hash").select("doc_id", "pos")
 
     # Gaps-and-islands: a window [pos, pos+n-1] starts a new span iff
     # its tokens neither overlap nor abut the furthest end reached so
     # far (pos > prev_end + 1). End positions are monotone in pos
     # (fixed width), so running-max(end) = running-max(pos) + n - 1.
     w_prev = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_run = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     marked = dup.select(
-        id_col,
+        "doc_id",
         "pos",
         (
             F.col("pos")
@@ -135,38 +127,32 @@ def duplicated_spans(
         .alias("__new"),
     )
     islands = marked.select(
-        id_col, "pos", F.sum("__new").over(w_run).alias("__gid")
+        "doc_id", "pos", F.sum("__new").over(w_run).alias("__gid")
     )
-    return islands.groupBy(id_col, "__gid").agg(
+    return islands.groupBy("doc_id", "__gid").agg(
         F.min("pos").alias("span_start"),
         (F.max("pos") + (n - 1)).alias("span_end"),
     ).drop("__gid")
 
 
-def dup_span_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def dup_span_stats(df: DataFrame, n: int = 8) -> DataFrame:
     """Per-document duplicated-substring profile for documents with at
     least one duplicated span: (id, n_tokens, n_dup_spans, dup_tokens,
     dup_frac). `dup_frac` is the fraction of the document's tokens
     covered by corpus-duplicated runs — the gating dial (1.0 = the
     whole document exists elsewhere)."""
-    spans = duplicated_spans(df, id_col, text_col, n, min_count)
-    stats = spans.groupBy(id_col).agg(
+    spans = duplicated_spans(df, n=n)
+    stats = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_dup_spans"),
         F.sum(F.col("span_end") - F.col("span_start") + 1)
         .cast("long")
         .alias("dup_tokens"),
     )
     sized = df.select(
-        F.col(id_col), F.size(tokens_expr(text_col)).cast("long").alias("n_tokens")
+        F.col("doc_id"), F.size(tokens_expr()).cast("long").alias("n_tokens")
     )
-    return sized.join(stats, id_col).select(
-        id_col,
+    return sized.join(stats, "doc_id").select(
+        "doc_id",
         "n_tokens",
         "n_dup_spans",
         "dup_tokens",
@@ -190,10 +176,7 @@ def _keep_tokens(toks: Column, spans: Column) -> Column:
 
 def strip_duplicated_substrings(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
-    min_count: int = 2,
     keep_cols: tuple[str, ...] = (),
     normalize_untouched: bool = True,
 ) -> DataFrame:
@@ -216,11 +199,11 @@ def strip_duplicated_substrings(
     dedup.shingles_expr; CollapseProject keeps non-cheap expressions
     two-stage), stage two extracts the cheap fields.
     """
-    spans = duplicated_spans(df, id_col, text_col, n, min_count)
-    per_doc = spans.groupBy(id_col).agg(
+    spans = duplicated_spans(df, n=n)
+    per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
-    toks = tokens_expr(text_col)
+    toks = tokens_expr("text")
     sp = F.col("__spans")
     packed = F.transform(
         F.array(toks),
@@ -231,11 +214,11 @@ def strip_duplicated_substrings(
     untouched_text = (
         F.array_join(toks, " ")
         if normalize_untouched
-        else F.col(text_col)
+        else F.col("text")
     )
-    staged = df.join(per_doc, id_col, "left").withColumn("__p", packed)
+    staged = df.join(per_doc, "doc_id", "left").withColumn("__p", packed)
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         F.when(sp.isNull(), untouched_text)
         .otherwise(F.array_join(F.col("__p.k"), " "))

@@ -36,8 +36,6 @@ def _count_in(tokens: Column, words: tuple[str, ...]) -> Column:
 
 def token_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per-doc token counts + stopword counts (basis for ratios).
@@ -45,20 +43,18 @@ def token_stats(
     `keep_cols` pass through untouched — lets callers fuse other per-row
     columns into the same projection instead of joining back by id.
     """
-    toks = tokens_expr(text_col)
+    toks = tokens_expr("text")
     return df.withColumn("__toks", toks).select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         F.size("__toks").cast("long").alias("token_count"),
         _count_in(F.col("__toks"), STOPWORDS).cast("long").alias("stopword_count"),
-        F.length(F.trim(F.col(text_col))).cast("long").alias("char_count"),
+        F.length(F.trim(F.col("text"))).cast("long").alias("char_count"),
     )
 
 
 def quality_score(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Integer quality score (0-100) from length / stopword / shape
@@ -67,7 +63,7 @@ def quality_score(
     Thresholds compare exact int-ratio doubles, so scoring is
     deterministic across engines.
     """
-    stats = token_stats(df, id_col, text_col, keep_cols)
+    stats = token_stats(df, keep_cols=keep_cols)
     tc = F.col("token_count").cast("double")
     stop_ratio = F.col("stopword_count").cast("double") / tc
     chars_per_tok = F.col("char_count").cast("double") / tc
@@ -83,7 +79,7 @@ def quality_score(
         F.when(score >= 80, "high").when(score >= 50, "medium").otherwise("low")
     )
     return stats.select(
-        id_col,
+        "doc_id",
         *keep_cols,
         "token_count",
         score.alias("quality_score"),
@@ -93,8 +89,6 @@ def quality_score(
 
 def lang_id(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Keyword-profile language ID: count marker hits per language,
@@ -103,7 +97,7 @@ def lang_id(
     A real deployment would use char-n-gram profiles per language; the
     operator shape (N profile scores → deterministic argmax) is the same.
     """
-    out = df.withColumn("__toks", tokens_expr(text_col))
+    out = df.withColumn("__toks", tokens_expr("text"))
     langs = sorted(LANG_MARKERS)
     for lang in langs:
         out = out.withColumn(
@@ -124,24 +118,22 @@ def lang_id(
         )
     assert predicted is not None
     return out.select(
-        id_col,
+        "doc_id",
         *keep_cols,
         *[F.col(f"score_{lang}") for lang in langs],
         predicted.otherwise(langs[-1]).alias("predicted_lang"),
     )
 
 
-def fingerprint(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Order-insensitive bag-of-words fingerprint:
     sum(md5_60bit(token) mod p) mod p, p = 1e9+7 — overflow-safe in
     signed 64-bit even for million-token documents."""
     toks = df.select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("__tok")
+        F.col("doc_id"), F.explode(tokens_expr("text")).alias("__tok")
     )
     h = md5_long(F.col("__tok")) % FINGERPRINT_MOD
-    return toks.groupBy(id_col).agg(
+    return toks.groupBy("doc_id").agg(
         (F.sum(h) % FINGERPRINT_MOD).alias("fingerprint"),
         F.count(F.lit(1)).alias("token_count"),
     )
@@ -152,11 +144,7 @@ def fingerprint(
 # ---------------------------------------------------------------------------
 
 
-def normalize_unicode(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def normalize_unicode(df: DataFrame) -> DataFrame:
     """Unicode hygiene for crawled corpora: NFC-compose the text, then
     derive a fold (accent-stripped + lowercased) for matching/dedup.
 
@@ -195,19 +183,17 @@ def normalize_unicode(
 
         return s.map(fold)
 
-    nfc_text = nfc(F.col(text_col))
+    nfc_text = nfc(F.col("text"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         nfc_text.alias("nfc_text"),
-        F.lower(strip_marks(F.col(text_col))).alias("folded_text"),
-        (nfc_text != F.col(text_col)).alias("composed"),
+        F.lower(strip_marks(F.col("text"))).alias("folded_text"),
+        (nfc_text != F.col("text")).alias("composed"),
     )
 
 
 def collocations(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_pair_docs: int = 2,
     top_k: int = 50,
 ) -> DataFrame:
@@ -233,7 +219,7 @@ def collocations(
     from legendary_data_pipeline_spark.operators.dedup import tokens_expr
 
     toks = df.select(
-        F.col(id_col).alias("__id"), tokens_expr(text_col).alias("__t")
+        F.col("doc_id").alias("__id"), tokens_expr("text").alias("__t")
     ).filter(F.size("__t") >= 2).localCheckpoint(
         eager=False
     )  # n_docs + unigram + bigram consumers (r11 scan audit: 4 scans)
@@ -300,9 +286,7 @@ def collocations(
 # (Spark 4 table-function surface, with character offsets)
 # ---------------------------------------------------------------------------
 
-def readability(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def readability(df: DataFrame) -> DataFrame:
     """Flesch reading-ease per document (heuristic syllable counting).
 
     FRE = 206.835 − 1.015·(words/sentences) − 84.6·(syllables/words),
@@ -319,20 +303,20 @@ def readability(
     filtering (e.g. drop FRE < 0 boilerplate/code pages).
     """
     words = F.size(
-        F.filter(tokens_expr(text_col), lambda x: x != F.lit(""))
+        F.filter(tokens_expr("text"), lambda x: x != F.lit(""))
     ).cast("long")
     sents = F.greatest(
         F.lit(1).cast("long"),
-        F.regexp_count(F.col(text_col), F.lit(r"[.!?]+")).cast("long"),
+        F.regexp_count(F.col("text"), F.lit(r"[.!?]+")).cast("long"),
     )
     syl = F.greatest(
         F.lit(1).cast("long"),
-        F.regexp_count(F.lower(F.col(text_col)), F.lit("[aeiouy]+")).cast(
+        F.regexp_count(F.lower(F.col("text")), F.lit("[aeiouy]+")).cast(
             "long"
         ),
     )
     out = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         words.alias("n_words"),
         sents.alias("n_sentences"),
         syl.alias("n_syllables"),
@@ -351,8 +335,6 @@ def readability(
 
 def keywords_tf_rarity(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     top_k: int = 3,
 ) -> DataFrame:
     """Top-k distinctive terms per document, ranked (tf desc, df asc).
@@ -372,9 +354,9 @@ def keywords_tf_rarity(
     Output: (doc_id, term, tf, df_docs, rank), rank 1..top_k.
     """
     toks = df.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         F.explode(
-            F.filter(tokens_expr(text_col), lambda x: x != F.lit(""))
+            F.filter(tokens_expr("text"), lambda x: x != F.lit(""))
         ).alias("__w"),
     )
     tf = toks.groupBy("__id", "__w").agg(
@@ -391,7 +373,7 @@ def keywords_tf_rarity(
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= top_k)
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("doc_id"),
             F.col("__w").alias("term"),
             "tf",
             "df_docs",
@@ -468,8 +450,6 @@ def register_udtfs(spark) -> None:
 
 def ngram_novelty(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 3,
 ) -> DataFrame:
     """Per-document n-gram NOVELTY: what fraction of a doc's distinct
@@ -504,7 +484,7 @@ def ngram_novelty(
     # re-deriving it twice (scan + explode + distinct exchange each).
     pairs = (
         df.select(
-            F.col(id_col), F.explode(shingles_expr(text_col, shingle_n)).alias("__s")
+            F.col("doc_id"), F.explode(shingles_expr("text", shingle_n)).alias("__s")
         )
         .distinct()
         .localCheckpoint(eager=False)
@@ -514,7 +494,7 @@ def ngram_novelty(
     )
     per_doc = (
         pairs.join(dfreq, "__s")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_shingles"),
             F.sum(F.when(F.col("__df") == 1, 1).otherwise(0))
@@ -522,9 +502,9 @@ def ngram_novelty(
             .alias("n_novel"),
         )
     )
-    base = df.select(id_col)
-    out = base.join(per_doc, id_col, "left").select(
-        id_col,
+    base = df.select("doc_id")
+    out = base.join(per_doc, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("n_shingles", F.lit(0)).cast("long").alias("n_shingles"),
         F.coalesce("n_novel", F.lit(0)).cast("long").alias("n_novel"),
         F.when(
@@ -552,11 +532,7 @@ SCRIPT_CLASSES: tuple[tuple[str, str], ...] = (
 )
 
 
-def script_profile(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def script_profile(df: DataFrame) -> DataFrame:
     """Per-document Unicode-script composition — the multilingual-corpus
     primitive under mixing decisions and mojibake detection: a document
     claiming lang='en' that is 40% Cyrillic is mislabeled or corrupted;
@@ -571,7 +547,7 @@ def script_profile(
     text, class, ''))` inside whole-stage codegen; no tokenization, no
     Python. NULL text profiles as zero counts with NULL dominant.
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n_chars = F.length(t)
     counts = {
         name: (n_chars - F.length(F.regexp_replace(t, cls, "")))
@@ -579,7 +555,7 @@ def script_profile(
         .alias(name)
         for name, cls in SCRIPT_CLASSES
     }
-    out = df.select(F.col(id_col), n_chars.cast("long").alias("n_chars"),
+    out = df.select(F.col("doc_id"), n_chars.cast("long").alias("n_chars"),
                     *counts.values())
     classified = None
     for name, _ in SCRIPT_CLASSES:
@@ -598,7 +574,7 @@ def script_profile(
             F.when(cond, name) if dominant is None else dominant.when(cond, name)
         )
     return out.select(
-        id_col,
+        "doc_id",
         "n_chars",
         *[name for name, _ in SCRIPT_CLASSES],
         (F.col("n_chars") - classified).cast("long").alias("other"),
@@ -608,11 +584,7 @@ def script_profile(
     )
 
 
-def vocab_richness(
-    df: DataFrame,
-    text_col: str = "text",
-    group_cols: tuple[str, ...] = ("source",),
-) -> DataFrame:
+def vocab_richness(df: DataFrame) -> DataFrame:
     """Vocabulary-richness estimators per corpus slice — "how much
     vocabulary have we NOT seen yet?", the coverage question behind
     corpus-growth and tokenizer-vocab decisions:
@@ -632,16 +604,15 @@ def vocab_richness(
     IEEE divisions of exact integers emitted RAW (the representation
     rule). Empty slices yield no row; V ≥ 1 always has N ≥ 1.
 
-    Output per group: n_tokens, vocab, hapax, doubletons, chao1,
+    Output per source: n_tokens, vocab, hapax, doubletons, chao1,
     gt_unseen.
     """
-    groups = list(group_cols)
-    toks = F.filter(tokens_expr(text_col), lambda t: t != F.lit(""))
-    tok = df.select(*groups, F.explode(toks).alias("__w"))
-    counts = tok.groupBy(*groups, "__w").agg(
+    toks = F.filter(tokens_expr("text"), lambda t: t != F.lit(""))
+    tok = df.select("source", F.explode(toks).alias("__w"))
+    counts = tok.groupBy("source", "__w").agg(
         F.count(F.lit(1)).cast("long").alias("__c")
     )
-    agg = counts.groupBy(*groups).agg(
+    agg = counts.groupBy("source").agg(
         F.sum("__c").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("vocab"),
         F.sum(F.when(F.col("__c") == 1, 1).otherwise(0))
@@ -659,7 +630,7 @@ def vocab_richness(
     ).otherwise(v + f1 * (f1 - F.lit(1.0)) / F.lit(2.0))
     gt_unseen = f1 / F.col("n_tokens").cast("double")
     return agg.select(
-        *groups,
+        "source",
         "n_tokens",
         "vocab",
         "hapax",
@@ -669,11 +640,7 @@ def vocab_richness(
     )
 
 
-def corpus_entropy(
-    df: DataFrame,
-    text_col: str = "text",
-    group_cols: tuple[str, ...] = ("source",),
-) -> DataFrame:
+def corpus_entropy(df: DataFrame) -> DataFrame:
     """Unigram/bigram Shannon entropy per corpus slice (nats) — the
     diversity/compressibility profile: low entropy = templated or
     repetitive text, a falling conditional entropy across snapshots =
@@ -699,16 +666,15 @@ def corpus_entropy(
     bigram table is the big one (corpus-sized fan-in bounded by doc
     length); both map-side combinable, final re-agg is group-sized.
 
-    Output per group: n_tokens, n_bigrams, h1_e6, h2_e6, h_cond_e6,
+    Output per source: n_tokens, n_bigrams, h1_e6, h2_e6, h_cond_e6,
     redundancy_e6.
     """
-    groups = list(group_cols)
-    toks = F.filter(tokens_expr(text_col), lambda t: t != F.lit(""))
-    base = df.select(*groups, toks.alias("__t"))
+    toks = F.filter(tokens_expr("text"), lambda t: t != F.lit(""))
+    base = df.select("source", toks.alias("__t"))
 
     def entropy_over(counts: DataFrame, cnt: str, out: str) -> DataFrame:
-        """group rows → (groups..., n_<out>, sum c·ln c) aggregated."""
-        return counts.groupBy(*groups).agg(
+        """group rows → (source, n_<out>, sum c·ln c) aggregated."""
+        return counts.groupBy("source").agg(
             F.sum(F.col(cnt)).cast("long").alias(f"__n_{out}"),
             F.sum(
                 F.col(cnt).cast("double")
@@ -716,12 +682,12 @@ def corpus_entropy(
             ).alias(f"__s_{out}"),
         )
 
-    uni = base.select(*groups, F.explode("__t").alias("__w"))
-    uni_counts = uni.groupBy(*groups, "__w").agg(
+    uni = base.select("source", F.explode("__t").alias("__w"))
+    uni_counts = uni.groupBy("source", "__w").agg(
         F.count(F.lit(1)).cast("long").alias("__c")
     )
     # vocab for redundancy comes from the same distinct frame
-    uni_agg = uni_counts.groupBy(*groups).agg(
+    uni_agg = uni_counts.groupBy("source").agg(
         F.sum("__c").cast("long").alias("__n_uni"),
         F.sum(
             F.col("__c").cast("double") * F.log(F.col("__c").cast("double"))
@@ -729,7 +695,7 @@ def corpus_entropy(
         F.count(F.lit(1)).cast("long").alias("__v"),
     )
     bi = base.where(F.size("__t") >= 2).select(
-        *groups,
+        "source",
         F.explode(
             F.zip_with(
                 F.slice(F.col("__t"), 1, F.size("__t") - 1),
@@ -739,28 +705,24 @@ def corpus_entropy(
         ).alias("__bg"),
     )
     bi_counts = bi.groupBy(
-        *groups, F.col("__bg.w1").alias("__w1"), F.col("__bg.w2").alias("__w2")
+        "source", F.col("__bg.w1").alias("__w1"), F.col("__bg.w2").alias("__w2")
     ).agg(F.count(F.lit(1)).cast("long").alias("__c"))
     # Pin: the bigram count frame feeds both the joint entropy and the
     # first-word marginal (r9 multi-consumer rule).
     bi_counts = bi_counts.localCheckpoint(eager=False)
     bi_agg = entropy_over(bi_counts, "__c", "bi")
-    ctx_counts = bi_counts.groupBy(*groups, "__w1").agg(
+    ctx_counts = bi_counts.groupBy("source", "__w1").agg(
         F.sum("__c").cast("long").alias("__c")
     )
     ctx_agg = entropy_over(ctx_counts, "__c", "ctx")
 
     def attach(left: DataFrame, right: DataFrame) -> DataFrame:
-        if groups:
-            rr = right.select(
-                *[F.col(g).alias(f"__rg_{g}") for g in groups],
-                *[c for c in right.columns if c not in groups],
-            )
-            cond = [F.col(g).eqNullSafe(F.col(f"__rg_{g}")) for g in groups]
-            return left.join(rr, cond, "left").drop(
-                *[f"__rg_{g}" for g in groups]
-            )
-        return left.crossJoin(right)
+        rr = right.select(
+            F.col("source").alias("__rg_source"),
+            *[c for c in right.columns if c != "source"],
+        )
+        cond = F.col("source").eqNullSafe(F.col("__rg_source"))
+        return left.join(rr, cond, "left").drop("__rg_source")
 
     j = attach(attach(uni_agg, bi_agg), ctx_agg)
 
@@ -777,7 +739,7 @@ def corpus_entropy(
         F.col("__v") >= 2, F.lit(1.0) - h1 / F.log(F.col("__v").cast("double"))
     )
     return j.select(
-        *groups,
+        "source",
         F.col("__n_uni").alias("n_tokens"),
         F.coalesce(F.col("__n_bi"), F.lit(0)).alias("n_bigrams"),
         e6(h1).alias("h1_e6"),
@@ -789,8 +751,6 @@ def corpus_entropy(
 
 def vocab_coverage_points(
     df: DataFrame,
-    text_col: str = "text",
-    group_cols: tuple[str, ...] = ("source",),
     targets_ppm: tuple[int, ...] = (500_000, 900_000, 990_000),
 ) -> DataFrame:
     """Vocabulary coverage points per corpus slice: the SMALLEST number
@@ -808,21 +768,20 @@ def vocab_coverage_points(
     arithmetic, bit-deterministic, no per-type ranking window at all
     (the frame that matters is CLASS-sized: ≤ distinct count values).
 
-    Output per group: n_tokens, vocab, types_p50, types_p90,
+    Output per source: n_tokens, vocab, types_p50, types_p90,
     types_p99 (column per target, ppm-labeled).
     """
-    groups = list(group_cols)
     from legendary_data_pipeline_spark.operators.stats import (
         bigint_mul_div,
         distributed_below_counts,
     )
 
-    toks = F.filter(tokens_expr(text_col), lambda t: t != F.lit(""))
-    tok = df.select(*groups, F.explode(toks).alias("__w"))
-    type_counts = tok.groupBy(*groups, "__w").agg(
+    toks = F.filter(tokens_expr("text"), lambda t: t != F.lit(""))
+    tok = df.select("source", F.explode(toks).alias("__w"))
+    type_counts = tok.groupBy("source", "__w").agg(
         F.count(F.lit(1)).cast("long").alias("__c")
     )
-    classes = type_counts.groupBy(*groups, "__c").agg(
+    classes = type_counts.groupBy("source", "__c").agg(
         F.count(F.lit(1)).cast("long").alias("__m")
     )
     classes = classes.withColumn("__negc", -F.col("__c")).withColumn(
@@ -830,9 +789,9 @@ def vocab_coverage_points(
     )
     joined = distributed_below_counts(
         classes, "__negc", ["__m", "__tok"], inclusive=False,
-        group_cols=groups,
+        group_cols=["source"],
     ).select(
-        *groups,
+        "source",
         "__c",
         "__m",
         F.col("__m_cum").alias("__types_above"),
@@ -870,14 +829,10 @@ def vocab_coverage_points(
         agg_cols.append(
             F.min(F.when(crossing, need)).alias(f"types_p{p // 10_000}")
         )
-    return joined.groupBy(*groups).agg(*agg_cols)
+    return joined.groupBy("source").agg(*agg_cols)
 
 
-def zipf_fit(
-    df: DataFrame,
-    text_col: str = "text",
-    group_cols: tuple[str, ...] = ("source",),
-) -> DataFrame:
+def zipf_fit(df: DataFrame) -> DataFrame:
     """Binned Zipf rank-frequency fit per corpus slice: weighted OLS of
     ln(frequency) on ln(rank) with one point per COUNT CLASS at its
     midpoint rank, weighted by the class's type count — the standard
@@ -893,26 +848,25 @@ def zipf_fit(
     Sums run over ≤ |distinct count values| classes — float noise
     ≪ 1e-6, the e6 emission absorbs it (the MI/BM25 precedent).
 
-    Output per group: n_classes, vocab, slope_e6, intercept_e6, r2_e6
+    Output per source: n_classes, vocab, slope_e6, intercept_e6, r2_e6
     (NULL fit when < 2 classes).
     """
-    groups = list(group_cols)
     from legendary_data_pipeline_spark.operators.stats import (
         distributed_below_counts,
     )
 
-    toks = F.filter(tokens_expr(text_col), lambda t: t != F.lit(""))
-    tok = df.select(*groups, F.explode(toks).alias("__w"))
-    type_counts = tok.groupBy(*groups, "__w").agg(
+    toks = F.filter(tokens_expr("text"), lambda t: t != F.lit(""))
+    tok = df.select("source", F.explode(toks).alias("__w"))
+    type_counts = tok.groupBy("source", "__w").agg(
         F.count(F.lit(1)).cast("long").alias("__c")
     )
-    classes = type_counts.groupBy(*groups, "__c").agg(
+    classes = type_counts.groupBy("source", "__c").agg(
         F.count(F.lit(1)).cast("long").alias("__m")
     ).withColumn("__negc", -F.col("__c"))
     cum = distributed_below_counts(
-        classes, "__negc", ["__m"], inclusive=False, group_cols=groups
+        classes, "__negc", ["__m"], inclusive=False, group_cols=["source"]
     ).select(
-        *groups,
+        "source",
         "__c",
         "__m",
         F.col("__m_cum").cast("long").alias("__above"),
@@ -924,7 +878,7 @@ def zipf_fit(
     x = F.log(mid2 / F.lit(2.0))
     y = F.log(F.col("__c").cast("double"))
     w = F.col("__m").cast("double")
-    agg = cum.groupBy(*groups).agg(
+    agg = cum.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_classes"),
         F.sum("__m").cast("long").alias("vocab"),
         F.sum(w).alias("__sw"),
@@ -943,7 +897,7 @@ def zipf_fit(
     r2 = (num * num) / F.nullif(den_x * den_y, F.lit(0.0))
     ok = F.col("n_classes") >= 2
     return agg.select(
-        *groups,
+        "source",
         "n_classes",
         "vocab",
         F.when(ok, e6(slope)).alias("slope_e6"),
@@ -952,11 +906,7 @@ def zipf_fit(
     )
 
 
-def source_cosine_matrix(
-    df: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-) -> DataFrame:
+def source_cosine_matrix(df: DataFrame) -> DataFrame:
     """Pairwise cosine similarity between corpus slices' unigram
     count vectors — the WEIGHTED companion to the vocabulary-overlap
     Jaccard (which ignores frequencies): "how alike do these sources
@@ -984,8 +934,8 @@ def source_cosine_matrix(
 
     Output per pair: source_a, source_b, dot, cos_e6.
     """
-    g = F.col(group_col)
-    toks = F.filter(tokens_expr(text_col), lambda t: t != F.lit(""))
+    g = F.col("source")
+    toks = F.filter(tokens_expr("text"), lambda t: t != F.lit(""))
     tok = df.select(g.alias("__g"), F.explode(toks).alias("__w"))
     counts = tok.groupBy("__g", "__w").agg(
         F.count(F.lit(1)).cast("long").alias("__c")

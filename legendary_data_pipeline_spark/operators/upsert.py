@@ -154,10 +154,6 @@ def scd2_apply(
     updates: DataFrame,
     key_cols: Sequence[str],
     attr_cols: Sequence[str],
-    effective_col: str = "effective_date",
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """Slowly-changing-dimension type 2 MERGE: apply an update batch to a
     versioned dimension, closing changed rows and opening new versions.
@@ -167,8 +163,8 @@ def scd2_apply(
     historized variant a warehouse needs when "what was the price in
     March" must stay answerable. Semantics per update key:
     - attrs differ from the CURRENT row (null-safe) → the current row
-      closes (`valid_to` = effective, `current` = false) and a new
-      current version opens (`valid_from` = effective);
+      closes (`valid_to` = `effective_date`, `is_current` = false) and
+      a new current version opens (`valid_from` = `effective_date`);
     - attrs identical → no-op (no empty versions);
     - key absent from the dimension → inserted as a new current row.
     Historic (non-current) rows pass through untouched; current rows
@@ -194,13 +190,13 @@ def scd2_apply(
     # "Catalyst reuses the exchange" assumption does not hold across
     # the four filter branches under AQE)
     dim = dim.localCheckpoint(eager=False)
-    cur = dim.filter(F.col(current_col))
-    hist = dim.filter(~F.col(current_col))
+    cur = dim.filter(F.col("is_current"))
+    hist = dim.filter(~F.col("is_current"))
 
     upd = updates.select(
         *[F.col(k).alias(f"__u_{k}") for k in keys],
         *[F.col(a).alias(f"__u_{a}") for a in attrs],
-        F.col(effective_col).alias("__u_eff"),
+        F.col("effective_date").alias("__u_eff"),
     )
     cond = None
     for k in keys:
@@ -217,7 +213,7 @@ def scd2_apply(
         d = ~F.col(a).eqNullSafe(F.col(f"__u_{a}"))
         differs = d if differs is None else differs | d
 
-    out_cols = [*keys, *attrs, valid_from, valid_to, current_col]
+    out_cols = [*keys, *attrs, "valid_from", "valid_to", "is_current"]
 
     # 1. current rows without an update, or with a no-op update: as-is.
     kept = joined.filter(
@@ -227,9 +223,9 @@ def scd2_apply(
     closed = joined.filter(has_cur & has_upd & differs).select(
         *keys,
         *attrs,
-        F.col(valid_from),
-        F.col("__u_eff").alias(valid_to),
-        F.lit(False).alias(current_col),
+        F.col("valid_from"),
+        F.col("__u_eff").alias("valid_to"),
+        F.lit(False).alias("is_current"),
     )
     # 3. new versions: changed keys + brand-new keys.
     opened = joined.filter(
@@ -237,9 +233,9 @@ def scd2_apply(
     ).select(
         *[F.col(f"__u_{k}").alias(k) for k in keys],
         *[F.col(f"__u_{a}").alias(a) for a in attrs],
-        F.col("__u_eff").alias(valid_from),
-        F.lit(None).cast(dim.schema[valid_to].dataType).alias(valid_to),
-        F.lit(True).alias(current_col),
+        F.col("__u_eff").alias("valid_from"),
+        F.lit(None).cast(dim.schema["valid_to"].dataType).alias("valid_to"),
+        F.lit(True).alias("is_current"),
     )
     # 4. history passthrough.
     return (

@@ -248,9 +248,10 @@ def build_market_price_daily(
 # 10 — percentile valuation rollup
 # ---------------------------------------------------------------------------
 
-def rollup_market_values(
-    sales: DataFrame, as_of_date: str, lookback_days: int = 180
-) -> DataFrame:
+_LOOKBACK_DAYS = 180  # the reference's sales window (10:33-48)
+
+
+def rollup_market_values(sales: DataFrame, as_of_date: str) -> DataFrame:
     """`market_sales_comps` → `market_values_daily` (10:33-92).
 
     Per (card_key, grade) over the lookback window: median + quartiles
@@ -260,7 +261,7 @@ def rollup_market_values(
     from legendary_data_pipeline_spark.operators.rollup import percentile_rollup
 
     cutoff = F.lit(as_of_date).cast("timestamp") - F.expr(
-        f"INTERVAL {lookback_days} DAYS"
+        f"INTERVAL {_LOOKBACK_DAYS} DAYS"
     )
     windowed = sales.filter(
         (F.col("sold_at") >= cutoff)
@@ -285,7 +286,7 @@ def rollup_market_values(
         F.col("p75").cast(dec).alias("range_high_usd"),
         F.col("last_value").cast(dec).alias("last_sale_usd"),
         F.col("last_ts").alias("last_sale_at"),
-        F.col("sales_count").cast("int").alias(f"sales_count_{lookback_days}d"),
+        F.col("sales_count").cast("int").alias(f"sales_count_{_LOOKBACK_DAYS}d"),
         "confidence",
     )
 
@@ -337,7 +338,6 @@ def export_google_merchant_feed(
     ygo_card_images: DataFrame | None = None,
     scryfall_cards_raw: DataFrame | None = None,
     site_base: str = "https://example.com",
-    brand: str = "Legendary Collectibles",
 ) -> DataFrame:
     """Products (+ per-game image dims) → 37-column feed rows
     (exportGoogleMerchantFeed.mjs:316-393), ordered like the reference
@@ -465,7 +465,7 @@ def export_google_merchant_feed(
         "identifier exists": F.lit("false"),
         "gtin": empty,
         "mpn": empty,
-        "brand": F.lit(brand),
+        "brand": F.lit("Legendary Collectibles"),
         "product highlight": highlight,
         "product detail": F.coalesce(F.col("p.subtitle"), empty),
         "additional image link": empty,

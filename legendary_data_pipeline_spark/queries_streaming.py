@@ -114,11 +114,9 @@ def _stage_events(spark: SparkSession, sf_dir: str, root: str, copies: int = 1) 
 
 
 def _read_staged_stream(spark: SparkSession, staging: str) -> DataFrame:
-    return (
-        spark.readStream.schema(_STAGED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
+    from legendary_data_pipeline_spark.streaming.snapshots import _read_stream
+
+    return _read_stream(spark, staging, _STAGED_SCHEMA, 1)
 
 
 def _scratch_base() -> str | None:
@@ -214,6 +212,7 @@ def _parity_run(spark: SparkSession, prefix: str, partitions: str = "8"):
 )
 def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from legendary_data_pipeline_spark.streaming.snapshots import (
+        _drain,
         daily_event_rollup_stream,
         upsert_sink,
     )
@@ -226,14 +225,12 @@ def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark=_NEVER_LATE,
             include_approx_users=False,
         )
-        q = (
-            rolled.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(upsert_sink(target, ["day", "event_type"]))
-            .trigger(availableNow=True)
-            .start()
+        _drain(
+            rolled.writeStream.outputMode("update").foreachBatch(
+                upsert_sink(target, ["day", "event_type"])
+            ),
+            ckpt,
         )
-        q.awaitTermination()
     return spark.read.parquet(target).select(
         "day", "event_type", "events", "total_value_cents"
     )
@@ -264,6 +261,7 @@ def stream_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from legendary_data_pipeline_spark.streaming.snapshots import (
+        _drain,
         dedup_events_stream,
     )
 
@@ -273,15 +271,12 @@ def stream_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped = dedup_events_stream(
             _read_staged_stream(spark, staging), watermark=_NEVER_LATE
         )
-        q = (
+        _drain(
             deduped.writeStream.outputMode("append")
             .format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", target),
+            ckpt,
         )
-        q.awaitTermination()
     cents = F.round(F.col("value").cast("decimal(18,2)") * 100, 0).cast("long")
     return (
         spark.read.parquet(target)
@@ -716,6 +711,7 @@ def stream_attribution_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         attribute_purchases,
         split_clicks_purchases,
     )
+    from legendary_data_pipeline_spark.streaming.snapshots import _drain
 
     # partitions=2: the stream-stream join is JVM state-I/O-bound (two
     # buffered sides x per-batch store commits); 2 tiny-state partitions
@@ -730,15 +726,12 @@ def stream_attribution_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             clicks, purchases,
             horizon_minutes=_ATTR_HORIZON_MIN, watermark=_NEVER_LATE,
         )
-        q = (
+        _drain(
             pairs.writeStream.outputMode("append")
             .format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", target),
+            ckpt,
         )
-        q.awaitTermination()
     return spark.read.parquet(target).select(
         "purchase_event_id", "click_event_id", "user_id", "lag_us"
     )

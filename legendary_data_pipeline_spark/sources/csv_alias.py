@@ -46,10 +46,7 @@ PRICECHARTING_ALIASES: dict[str, tuple[str, ...]] = {
 
 
 def read_csv_with_aliases(
-    spark: SparkSession,
-    path: str,
-    aliases: Mapping[str, Sequence[str]],
-    keep_unmapped: bool = False,
+    spark: SparkSession, path: str, aliases: Mapping[str, Sequence[str]]
 ) -> DataFrame:
     """Read a CSV and resolve logical fields from header variants.
 
@@ -69,7 +66,6 @@ def read_csv_with_aliases(
         normalized.setdefault(normalize_header(col), col)
 
     selects = []
-    mapped_sources = set()
     for target, variants in aliases.items():
         source = next(
             (normalized[normalize_header(v)] for v in variants
@@ -79,10 +75,5 @@ def read_csv_with_aliases(
         if source is None:
             selects.append(F.lit(None).cast("string").alias(target))
         else:
-            mapped_sources.add(source)
             selects.append(F.col(f"`{source}`").cast("string").alias(target))
-    if keep_unmapped:
-        for col in df.columns:
-            if col not in mapped_sources:
-                selects.append(F.col(f"`{col}`").alias(normalize_header(col)))
     return df.select(*selects)

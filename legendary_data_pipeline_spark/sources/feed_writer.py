@@ -5,9 +5,9 @@ JS with manual TSV/CSV escaping and CRLF line endings
 (`scripts/feeds/exportGoogleMerchantFeed.mjs:29-113,316-398`).
 
 Spark-first: sanitize with column expressions (F5), let the CSV writer
-handle quoting, write distributed parts. `single_file=True` coalesces to
-one part for byte-for-byte feed parity (fine for feed-sized outputs; a
-100 TB export keeps many parts behind a manifest).
+handle quoting, and coalesce to one part for byte-for-byte feed parity
+(fine for feed-sized outputs; a 100 TB export would keep many parts
+behind a manifest).
 """
 
 from __future__ import annotations
@@ -22,12 +22,7 @@ from pyspark.sql import functions as F
 from legendary_data_pipeline_spark.functions.text import sanitize_field
 
 
-def write_feed(
-    df: DataFrame,
-    path: str,
-    fmt: str = "tsv",
-    single_file: bool = True,
-) -> None:
+def write_feed(df: DataFrame, path: str, fmt: str = "tsv") -> None:
     """Write a string-typed feed DataFrame as TSV (default) or CSV.
 
     Every column is sanitized (control chars stripped, whitespace
@@ -40,11 +35,8 @@ def write_feed(
     cleaned = df.select(
         *[sanitize_field(F.col(c).cast("string")).alias(c) for c in df.columns]
     )
-    writer = cleaned
-    if single_file:
-        writer = cleaned.coalesce(1)
     (
-        writer.write.mode("overwrite")
+        cleaned.coalesce(1).write.mode("overwrite")
         .option("header", "true")
         .option("sep", sep)
         .option("lineSep", "\r\n")

@@ -16,32 +16,25 @@ from pyspark.sql import functions as F
 CORRUPT_COL = "_corrupt_record"
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    corrupt_col: str = CORRUPT_COL,
-) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Schema-declared JSONL read with corrupt-line capture.
 
     `schema` is the expected data schema (DDL string, WITHOUT the
     corrupt column — it is appended here). PERMISSIVE mode yields, per
     malformed line, a row with every data column NULL and the raw line
-    in `corrupt_col` — split the frame with `quarantine` below. The
+    in `CORRUPT_COL` — split the frame with `quarantine` below. The
     declared schema also disables Spark's double-pass inference scan
     (one read of the data, not two: at 100 TB inference IS a job).
     """
     return (
-        spark.read.schema(f"{schema}, {corrupt_col} string")
+        spark.read.schema(f"{schema}, {CORRUPT_COL} string")
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
     )
 
 
-def quarantine(
-    df: DataFrame, corrupt_col: str = CORRUPT_COL
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(clean, quarantined, pinned): clean rows lose the corrupt
     column; quarantined rows keep only the raw line for triage/replay;
     `pinned` is the cached parse both derive from — callers unpersist
@@ -61,15 +54,15 @@ def quarantine(
     corpus per ingest.
     """
     df = df.cache()
-    clean = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = df.filter(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw_line")
+    clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
+        F.col(CORRUPT_COL).alias("raw_line")
     )
     return clean, bad, df
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """Write a frame as JSONL part-files (the hand-off format for
     tokenizer/training jobs). Spark's json sink emits one JSON object
     per line per row; partitioning of `df` controls shard count."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)

@@ -24,7 +24,6 @@ def write_range_partitioned(
     path: str,
     key: str,
     n_files: int,
-    mode: str = "overwrite",
 ) -> None:
     """Write `df` as `n_files` parquet files clustering `key`.
 
@@ -38,16 +37,15 @@ def write_range_partitioned(
     (
         df.repartitionByRange(n_files, key)
         .sortWithinPartitions(key)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
 
-def z_order_key(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 16,
-):
+_Z_BITS = 16  # bits per column in the Morton key
+
+
+def z_order_key(df: DataFrame, cols: list[str]):
     """Z-order (Morton) key column for multi-dimension clustering.
 
     Single-key range layout prunes one predicate column; Z-order
@@ -56,7 +54,7 @@ def z_order_key(
     narrow on each column, and min/max pruning engages for predicates
     on any of them (the Delta OPTIMIZE ZORDER contract).
 
-    Each column is min/max-scaled to `bits` bits (one metadata-scale
+    Each column is min/max-scaled to 16 bits (one metadata-scale
     aggregate to fetch the bounds), then interleaved with pure
     shift/mask column expressions — whole-stage codegen, no Python.
     Returns (key_column, bounds) so callers can log the bounds.
@@ -66,13 +64,13 @@ def z_order_key(
     k = len(cols)
     if k < 2:
         raise ValueError("z-ordering needs >= 2 columns")
-    if bits * k > 62:
-        raise ValueError(f"bits*cols = {bits * k} exceeds a long's capacity")
+    if _Z_BITS * k > 62:
+        raise ValueError(f"bits*cols = {_Z_BITS * k} exceeds a long's capacity")
     bounds = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"__min_{c}") for c in cols],
         *[F.max(F.col(c).cast("double")).alias(f"__max_{c}") for c in cols],
     ).first()
-    max_bucket = (1 << bits) - 1
+    max_bucket = (1 << _Z_BITS) - 1
     scaled = []
     for c in cols:
         lo, hi = bounds[f"__min_{c}"], bounds[f"__max_{c}"]
@@ -93,7 +91,7 @@ def z_order_key(
             )
         )
     z = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(_Z_BITS):
         for i, s in enumerate(scaled):
             z = z + F.shiftleft(
                 F.shiftright(s, b).bitwiseAND(F.lit(1)), b * k + i
@@ -106,19 +104,17 @@ def write_z_ordered(
     path: str,
     cols: list[str],
     n_files: int,
-    bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Write `df` clustered on the Z-order of `cols`: range-partition
     and sort by the Morton key, then drop it — the clustering lives in
     the file layout, not the schema."""
-    z, _ = z_order_key(df, cols, bits)
+    z, _ = z_order_key(df, cols)
     (
         df.withColumn("__z", z)
         .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

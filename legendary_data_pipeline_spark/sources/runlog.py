@@ -90,7 +90,6 @@ def start_run(
     job: str,
     file_name: str | None = None,
     file_sha256: str | None = None,
-    meta: str | None = None,
 ) -> str:
     run_id = str(uuid.uuid4())
     _append(
@@ -103,7 +102,7 @@ def start_run(
             "file_name": file_name,
             "file_sha256": file_sha256,
             "row_count": None,
-            "meta": meta,
+            "meta": None,
             "event_at": datetime.now(timezone.utc),
         },
     )

@@ -131,7 +131,6 @@ def write_version(
 def publish_group(
     tables: dict[str, DataFrame],
     group_marker: str,
-    op: str = "group",
 ) -> dict[str, int]:
     """Atomic MULTI-TABLE publish: commit one new snapshot per table
     such that readers see either ALL of them or NONE.
@@ -168,7 +167,7 @@ def publish_group(
         n, data_path, rows = _stage_snapshot(df, table)
         manifest = {
             "version": n,
-            "op": op,
+            "op": "group",
             "rows": rows,
             "committed_at": time.time(),
             "data_path": data_path,
@@ -180,7 +179,7 @@ def publish_group(
     tmp = group_marker + ".tmp"
     with open(tmp, "w") as f:
         json.dump(
-            {"tables": out, "committed_at": time.time(), "op": op}, f
+            {"tables": out, "committed_at": time.time(), "op": "group"}, f
         )
     os.rename(tmp, group_marker)  # the one publish point for ALL tables
     return out
@@ -249,10 +248,12 @@ def upsert_version(
     return write_version(merged, table, op="upsert")
 
 
+_TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
 def compact_version(
     spark: SparkSession,
     table: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
 ) -> int:
     """Commit a compacted copy of the latest snapshot as a new version.
 
@@ -273,7 +274,7 @@ def compact_version(
         for f in files:
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, -(-total // target_file_bytes))
+    n_files = max(1, -(-total // _TARGET_FILE_BYTES))
     df = spark.read.parquet(data_path).coalesce(n_files)
     return write_version(df, table, op="compact")
 

@@ -216,25 +216,24 @@ def run_ewma_anomaly_once(
     from pyspark.sql import functions as F
 
     from legendary_data_pipeline_spark.streaming.snapshots import (
+        _drain,
+        _read_stream,
         with_event_time,
     )
 
-    reader = spark.readStream.schema("user_id long, ts long, t long, v long")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(source_dir)
+    src = _read_stream(
+        spark, source_dir, "user_id long, ts long, t long, v long",
+        max_files_per_trigger,
+    )
     timed = with_event_time(src).withWatermark("event_time", watermark)
     scored = ewma_anomaly_stream(
         timed.select("user_id", "event_time", "t", "v"),
         k=k,
         idle_timeout_ms=idle_timeout_ms,
     )
-    (
+    _drain(
         scored.writeStream.format("parquet")
         .option("path", target)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .outputMode("append"),
+        checkpoint,
     )

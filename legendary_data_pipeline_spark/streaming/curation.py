@@ -25,7 +25,11 @@ from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.operators.curation import pii_counts, scrub_pii
 from legendary_data_pipeline_spark.operators.textstats import quality_score
-from legendary_data_pipeline_spark.streaming.snapshots import upsert_sink
+from legendary_data_pipeline_spark.streaming.snapshots import (
+    _drain,
+    _read_stream,
+    upsert_sink,
+)
 
 DOCUMENTS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -56,11 +60,7 @@ def curate_documents(docs: DataFrame) -> DataFrame:
 
 
 def read_documents_stream(spark: SparkSession, docs_path: str) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_path)
-    )
+    return _read_stream(spark, docs_path, DOCUMENTS_SCHEMA, 1)
 
 
 def run_curation_once(
@@ -73,20 +73,16 @@ def run_curation_once(
     curate, and MERGE into the target keyed by content hash."""
     stream = read_documents_stream(spark, docs_path)
     curated = curate_documents(stream)
-    query = (
-        curated.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
+    _drain(
+        curated.writeStream.outputMode("append").foreachBatch(
             upsert_sink(
                 target_path,
                 ["text_sha"],
                 order_within_source=[F.col("doc_id").asc()],
             )
-        )
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_path,
     )
-    query.awaitTermination()
 
 
 def dedup_against_corpus_stream(
@@ -141,17 +137,13 @@ def run_incremental_dedup_once(
     idx = spark.read.parquet(corpus_index_path)
     classified = dedup_against_corpus_stream(stream, idx)
     fresh = classified.filter(F.col("dedup_status") == "new")
-    query = (
-        fresh.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
+    _drain(
+        fresh.writeStream.outputMode("append").foreachBatch(
             upsert_sink(
                 target_path,
                 ["text_sha"],
                 order_within_source=[F.col("doc_id").asc()],
             )
-        )
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_path,
     )
-    query.awaitTermination()

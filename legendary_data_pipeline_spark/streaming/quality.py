@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from legendary_data_pipeline_spark.operators.profiling import (
     check_constraints,
 )
+from legendary_data_pipeline_spark.streaming.snapshots import _drain, _read_stream
 
 
 def quality_report_sink(
@@ -84,25 +85,22 @@ def run_quality_monitor_once(
     through the constraint monitor. `max_files_per_trigger` splits the
     backlog into multiple audited micro-batches (useful in tests and
     for bounding per-batch work on large backfills)."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(quality_report_sink(report_path, checks, fail_path))
-        .trigger(availableNow=True)
-        .start()
+    stream = _read_stream(spark, input_path, input_schema, max_files_per_trigger)
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
+            quality_report_sink(report_path, checks, fail_path)
+        ),
+        checkpoint_path,
     )
-    query.awaitTermination()
+
+
+_CHISQ_ALERT = 20.1  # χ²(8) p≈0.99; tune per column dof
 
 
 def drift_monitor_sink(
     baseline: DataFrame,
     col: str,
     report_path: str,
-    chisq_alert: float = 20.1,  # χ²(8) p≈0.99; tune per column dof
 ):
     """`foreachBatch` writer: chi-square drift of each micro-batch's
     `col` distribution against a STATIC baseline snapshot.
@@ -110,7 +108,7 @@ def drift_monitor_sink(
     Per batch the per-category drift decomposition is written to
     `<report_path>/batch_id=N/` (overwrite — idempotent under retries,
     same contract as `quality_report_sink`) with an `alert` flag set
-    when the summed statistic crosses `chisq_alert`. The baseline side
+    when the summed statistic crosses `_CHISQ_ALERT`. The baseline side
     aggregates to a value-cardinality count table once per batch —
     metadata-scale; cache the baseline DataFrame if batches are small
     and frequent.
@@ -141,7 +139,7 @@ def drift_monitor_sink(
         out = spark.createDataFrame(rows, drift.schema).select(
             "*",
             F.lit(total).alias("chisq_total"),
-            F.lit(total > chisq_alert).alias("alert"),
+            F.lit(total > _CHISQ_ALERT).alias("alert"),
         )
         out.write.mode("overwrite").parquet(
             f"{report_path}/batch_id={int(batch_id)}"
@@ -158,31 +156,25 @@ def run_drift_monitor_once(
     col: str,
     report_path: str,
     checkpoint_path: str,
-    chisq_alert: float = 20.1,
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain all available input files once through the drift monitor."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
-            drift_monitor_sink(baseline, col, report_path, chisq_alert)
-        )
-        .trigger(availableNow=True)
-        .start()
+    stream = _read_stream(spark, input_path, input_schema, max_files_per_trigger)
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
+            drift_monitor_sink(baseline, col, report_path)
+        ),
+        checkpoint_path,
     )
-    query.awaitTermination()
+
+
+_PSI_ALERT = 0.25  # the standard "population shifted" bar
 
 
 def psi_monitor_sink(
     baseline: DataFrame,
     col: str,
     report_path: str,
-    psi_alert: float = 0.25,  # the standard "population shifted" bar
 ):
     """`foreachBatch` writer: Population Stability Index of each
     micro-batch's `col` distribution against a STATIC baseline — the
@@ -193,12 +185,12 @@ def psi_monitor_sink(
     Per batch the per-category PSI decomposition is written to
     `<report_path>/batch_id=N/` (overwrite — idempotent under retries,
     the module's sink contract) with `alert` set when the feature-level
-    PSI crosses `psi_alert`. Both sides reduce to value-cardinality
+    PSI crosses `_PSI_ALERT`. Both sides reduce to value-cardinality
     count tables per batch — metadata-scale.
 
     The report is `psi_drift`'s `scaled_e6` form (exact BIGINT
     micro-units, `functions.e6`): the alert compares
-    `psi_e6 > round(psi_alert * 1e6)`, bit-equivalent across engine
+    `psi_e6 > round(_PSI_ALERT * 1e6)`, bit-equivalent across engine
     versions.
     """
     from legendary_data_pipeline_spark.operators.profiling import psi_drift
@@ -219,7 +211,7 @@ def psi_monitor_sink(
         if not rows:
             return
         psi_total = rows[0]["psi_e6"]
-        alert = psi_total is not None and psi_total > round(psi_alert * 1e6)
+        alert = psi_total is not None and psi_total > round(_PSI_ALERT * 1e6)
         spark = batch_df.sparkSession
         out = spark.createDataFrame(rows, rep.schema).select(
             "*", F.lit(alert).alias("alert")
@@ -239,21 +231,13 @@ def run_psi_monitor_once(
     col: str,
     report_path: str,
     checkpoint_path: str,
-    psi_alert: float = 0.25,
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain all available input files once through the PSI monitor."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
-            psi_monitor_sink(baseline, col, report_path, psi_alert)
-        )
-        .trigger(availableNow=True)
-        .start()
+    stream = _read_stream(spark, input_path, input_schema, max_files_per_trigger)
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
+            psi_monitor_sink(baseline, col, report_path)
+        ),
+        checkpoint_path,
     )
-    query.awaitTermination()

@@ -38,6 +38,7 @@ from legendary_data_pipeline_spark.sources.versioned import (
     versions,
     write_version,
 )
+from legendary_data_pipeline_spark.streaming.snapshots import _drain, _read_stream
 
 
 def rollup_maintenance_sink(
@@ -82,20 +83,13 @@ def run_rollup_maintenance_once(
 ) -> None:
     """Drain all available input files once through the maintenance
     sink (Trigger.AvailableNow)."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(
+    stream = _read_stream(spark, input_path, input_schema, max_files_per_trigger)
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
             rollup_maintenance_sink(table, keys, specs, kinds)
-        )
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_path,
     )
-    query.awaitTermination()
 
 
 def cms_maintenance_sink(
@@ -146,15 +140,10 @@ def run_cms_maintenance_once(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain all available input files once through the CMS sink."""
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(cms_maintenance_sink(table, key_col, depth, width))
-        .trigger(availableNow=True)
-        .start()
+    stream = _read_stream(spark, input_path, input_schema, max_files_per_trigger)
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
+            cms_maintenance_sink(table, key_col, depth, width)
+        ),
+        checkpoint_path,
     )
-    query.awaitTermination()

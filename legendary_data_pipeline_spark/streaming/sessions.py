@@ -209,6 +209,7 @@ def run_sessionize_once(
     the parity query and tests use 1).
     """
     from legendary_data_pipeline_spark.streaming.snapshots import (
+        _drain,
         read_events_stream,
         with_event_time,
     )
@@ -221,14 +222,11 @@ def run_sessionize_once(
     sessions = sessionize_stream(
         stream, gap_seconds=gap_seconds, watermark=watermark
     )
-    (
+    _drain(
         sessions.writeStream.outputMode("append")
         .format("parquet")
-        .option("path", target_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .option("path", target_path),
+        checkpoint_path,
     )
 
 

@@ -16,11 +16,33 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"
 )
+
+
+def _read_stream(
+    spark: SparkSession, path: str, schema: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """Parquet files appearing under `path`, read with a declared
+    schema. `max_files_per_trigger` (None: no cap) splits a backlog into
+    several micro-batches."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
+def _drain(writer: DataStreamWriter, checkpoint_path: str) -> None:
+    """Run a configured stream writer once under Trigger.AvailableNow:
+    process every file available now, in one or more micro-batches,
+    and return when done."""
+    writer.option("checkpointLocation", checkpoint_path).trigger(
+        availableNow=True
+    ).start().awaitTermination()
 
 
 def read_events_stream(
@@ -36,10 +58,9 @@ def read_events_stream(
     from legendary_data_pipeline_spark.catalog import normalize_event_ts
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return normalize_event_ts(reader.parquet(path))
+    return normalize_event_ts(
+        _read_stream(spark, path, EVENTS_SCHEMA, max_files_per_trigger)
+    )
 
 
 def with_event_time(events: DataFrame) -> DataFrame:
@@ -83,11 +104,7 @@ def daily_event_rollup_stream(
     )
 
 
-def dedup_events_stream(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
+def dedup_events_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming exact dedup of re-delivered events.
 
     `dropDuplicatesWithinWatermark` keeps state only for the watermark
@@ -96,14 +113,13 @@ def dedup_events_stream(
     at-least-once upstream delivery collapses to exactly-once downstream.
     """
     timed = with_event_time(events).withWatermark("event_time", watermark)
-    return timed.dropDuplicatesWithinWatermark(keys or ["event_id"])
+    return timed.dropDuplicatesWithinWatermark(["event_id"])
 
 
 def sliding_stats_stream(
     events: DataFrame,
     window_days: int = 7,
     slide_days: int = 1,
-    watermark: str = "2 days",
 ) -> DataFrame:
     """Sliding-window value stats per event_type — the streaming analogue
     of the 180-day rollup (10_rollup_market_values_daily.mjs:33-48).
@@ -114,7 +130,7 @@ def sliding_stats_stream(
     100 TB. Window panes: `window_days` wide, sliding every
     `slide_days`.
     """
-    timed = with_event_time(events).withWatermark("event_time", watermark)
+    timed = with_event_time(events).withWatermark("event_time", "2 days")
     return timed.groupBy(
         F.window(
             "event_time", f"{window_days} days", f"{slide_days} days"
@@ -173,7 +189,6 @@ def run_daily_rollup_once(
     events_path: str,
     target_path: str,
     checkpoint_path: str,
-    watermark: str = "2 days",
 ) -> None:
     """Process all available events once (Trigger.AvailableNow) and stop.
 
@@ -181,13 +196,11 @@ def run_daily_rollup_once(
     files, updates the snapshot table idempotently, and exits.
     """
     stream = read_events_stream(spark, events_path)
-    rolled = daily_event_rollup_stream(stream, watermark)
-    query = (
-        rolled.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(upsert_sink(target_path, ["day", "event_type"]))
-        .trigger(availableNow=True)
-        .start()
+    rolled = daily_event_rollup_stream(stream)
+    _drain(
+        rolled.writeStream.outputMode("update").foreachBatch(
+            upsert_sink(target_path, ["day", "event_type"])
+        ),
+        checkpoint_path,
     )
-    query.awaitTermination()
 

@@ -189,12 +189,16 @@ def test_dq_drift_requires_col(spark, tmp_path):
     import pytest as _pytest
 
     base = str(tmp_path / "b")
+    wh = tmp_path / "wh"
     _write_table(spark, base)
     with _pytest.raises(SystemExit, match="drift-col"):
         _run(spark, [
-            "dq", "--warehouse", str(tmp_path / "wh"), "--input", base,
+            "dq", "--warehouse", str(wh), "--input", base,
             "--drift-baseline", base,
         ])
+    # argv validation runs before the run is logged or the profile written
+    assert not (wh / "pipeline_runs").exists()
+    assert not (wh / "dq_profile").exists()
 
 
 def test_stats_cli_metrics(spark, tmp_path, capsys):
