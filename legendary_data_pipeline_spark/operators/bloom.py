@@ -47,6 +47,16 @@ def _hash_cols(key: Column) -> tuple[Column, Column]:
     return md5_long(s), seeded_md5_long(s, BLOOM_SEED)
 
 
+def _int_hashes(h1: pd.Series, h2: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """The hash columns of one Arrow batch as int64. A batch that holds a
+    NULL arrives as float64, whose 53-bit mantissa has already dropped
+    the hashes' low bits, so that raises instead of casting."""
+    for s in (h1, h2):
+        if not pd.api.types.is_integer_dtype(s.dtype):
+            raise TypeError(f"bloom hashes must arrive as integers, got {s.dtype}")
+    return h1.to_numpy(dtype=np.int64), h2.to_numpy(dtype=np.int64)
+
+
 def build_bloom(
     df: DataFrame,
     key_col: str,
@@ -74,8 +84,7 @@ def build_bloom(
     def partial(batches):
         bm = np.zeros(n_bytes, dtype=np.uint8)
         for pdf in batches:
-            h1 = pdf["h1"].to_numpy(dtype=np.int64)
-            h2 = pdf["h2"].to_numpy(dtype=np.int64)
+            h1, h2 = _int_hashes(pdf["h1"], pdf["h2"])
             for i in range(k_hashes):
                 pos = (h1 + i * h2) % m_bits
                 np.bitwise_or.at(
@@ -115,18 +124,23 @@ def probe_bloom(
     @F.pandas_udf("boolean")
     def member(h1: pd.Series, h2: pd.Series) -> pd.Series:
         bm = np.frombuffer(bc.value, dtype=np.uint8)
-        a = h1.to_numpy(dtype=np.int64)
-        b = h2.to_numpy(dtype=np.int64)
+        a, b = _int_hashes(h1, h2)
         ok = np.ones(len(a), dtype=bool)
         for i in range(k_hashes):
             pos = (a + i * b) % m_bits
             ok &= (bm[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
         return pd.Series(ok)
 
+    # A NULL key's hashes are NULL; one NULL in an Arrow batch turns the
+    # whole column into float64 and the 60-bit hashes lose their low
+    # bits. The UDF gets a 0 sentinel instead and the NULL row is
+    # answered False outside it.
     h1c, h2c = _hash_cols(F.col(key_col))
     flagged = F.when(
         F.col(key_col).isNull(), F.lit(False)
-    ).otherwise(member(h1c, h2c))
+    ).otherwise(
+        member(F.coalesce(h1c, F.lit(0).cast("long")), F.coalesce(h2c, F.lit(0).cast("long")))
+    )
     return df.withColumn("maybe_seen", flagged)
 
 

@@ -146,16 +146,16 @@ def fixed_codebook_assign(
     """(vec_id, cluster) nearest-centroid assignment against a FIXED
     codebook: the corpus vectors with the ``n_centroids`` smallest ids
     (same freeze convention and the same `similarity._fixed_assign`
-    kernel as `similarity.ivf_fixed_topk`). Distances are declarative
-    sequential-fold arithmetic (`zip_with`/`aggregate`, ties → lower
-    centroid id), so a SQL oracle replays every assignment bit-for-bit
-    — the hash-oracle-able twin of the trained `kmeans_topics` (whose
-    Lloyd codebook is rows-only checkable).
+    kernel as `similarity.ivf_fixed_topk`). Distances are
+    sequential-fold arithmetic (the `dot_expr` / `_sq_norm` operation
+    order, ties → lower centroid id), so a SQL oracle replays every
+    assignment bit-for-bit — the hash-oracle-able twin of the trained
+    `kmeans_topics` (whose Lloyd codebook is rows-only checkable).
 
-    Plan shape: the codebook is an ``n_centroids``-row broadcast; the
-    corpus streams through one broadcast nested-loop fan-out and a
-    per-vector top-1 window — no shuffle of the corpus besides the
-    window's hash partitioning on the id.
+    Plan shape: the corpus is hashed by id into `defaultParallelism`
+    blocks and the ``n_centroids``-row codebook is copied into each;
+    one cogrouped pair-kernel pass ranks every vector's centroids — one
+    shuffle of the corpus, no nested-loop join and no window.
     """
     base = embeddings.select(
         "vec_id", _as_double(F.col("embedding")).alias("vec")

@@ -2,9 +2,9 @@
 
 `embeddings` table: `vec_id, embedding array<float>, label`.
 
-- `cosine_topk` — brute-force exact top-k: candidate join (optionally
-  label-blocked) → cosine via array `zip_with`/`aggregate` (JVM-side,
-  no Python) → window top-k. The baseline; exact and oracle-checkable.
+- `cosine_topk` — brute-force exact top-k: label blocks (or hash blocks
+  of the corpus) scored by the fold-exact pair kernel → window top-k.
+  The baseline; exact and oracle-checkable.
 - `lsh_bucket_topk` — random-hyperplane sign buckets; top-k within
   buckets only. Approximate (rows-only check).
 - `ivf_topk` / `ivf_pq_topk` — FAISS-shaped inverted lists (sampled
@@ -20,6 +20,13 @@ set of shared pieces, so each piece of arithmetic has one definition:
 - `dot_expr` / `norm_expr` (`_sq_norm`) — the sequential left folds
   all JVM-side similarity math uses; `_normed` projects a query or
   candidate side with its norm, `_cosine` divides the fold by the norms.
+- `_scored_pairs` / `_fixed_assign` — the fold-exact pair kernel: one
+  cogrouped Arrow block per label, list, cluster or hash bucket, scored
+  in numpy in the folds' own operation order. `cosine_topk`,
+  `lsh_bucket_topk`, `embedding_cosine_pairs`, `ivf_fixed_topk` and
+  `semdedup_fixed` score their pairs there; per-row folds and the
+  `hard_negatives` / `ivf_pq_topk` refine / decontamination pair joins
+  stay on `dot_expr`.
 - `_rank_top_k` — the ranking tail: per query, the k best rows by
   (score desc, neighbor id asc), numbered `rank`.
 - `_trained_codebook` — the bounded-sample Lloyd prelude of the
@@ -31,15 +38,18 @@ set of shared pieces, so each piece of arithmetic has one definition:
 
 Scale design (100 TB): brute force is O(Q×N); block it (label, LSH
 bucket, IVF coarse centroid) so each probe touches a small candidate
-set. The query side should be broadcast when small. Math stays in
-`array<double>` to make results reproducible across engines.
+set. Unblocked, the small side is copied into each hash block of the
+corpus; the corpus is never broadcast. Math stays in `array<double>`
+to make results reproducible across engines.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from legendary_data_pipeline_spark.functions.numeric import e6
@@ -121,6 +131,282 @@ def _rank_top_k(
     ).select(q, nid, *carry, "rank", score)
 
 
+# ---------------------------------------------------------------------------
+# Fold-exact pair kernel
+# ---------------------------------------------------------------------------
+#
+# The exact pair scorers run as one cogrouped Arrow kernel per block (a
+# label, an inverted list, a cluster, or a hash bucket of the corpus
+# with the small side copied into every bucket). Each block is scored
+# in numpy in the JVM folds' own operation order, column by column —
+# never a BLAS matmul — so every dot, norm and distance is the double
+# `dot_expr` / `norm_expr` give. The kernel only drops pairs that
+# cannot make the cut: Spark still divides, rounds and ranks the rest.
+
+#: A block is scored in row tiles of at most this many pairs (~1 MiB
+#: per temporary), never as one whole score matrix.
+_TILE_PAIRS = 1 << 17
+#: Rounding to 6 places or to `e6` is monotone and moves a score by at
+#: most 0.5e-6, so a raw score more than 2e-6 below the k-th best (or
+#: below tau) can never make the rounded cut.
+_SLACK = 2e-6
+
+
+def _ids(table: pa.Table, name: str) -> tuple[np.ndarray, np.ndarray]:
+    """(values, is_valid) of an integer id column. An id that arrives
+    as a float has lost its low bits, so that raises."""
+    col = table.column(name)
+    if not pa.types.is_integer(col.type):
+        raise TypeError(
+            f"{name} must cross the Arrow boundary as an integer, got {col.type}"
+        )
+    return (
+        pc.fill_null(col, 0).to_numpy(),
+        col.is_valid().to_numpy(zero_copy_only=False),
+    )
+
+
+def _fold_dot(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """`dot_expr` for every (row of Q, row of C): acc = acc + q_j·c_j,
+    j ascending."""
+    acc = np.zeros((len(Q), len(C)))
+    prod = np.empty_like(acc)
+    for j in range(Q.shape[1]):
+        np.multiply(Q[:, j, None], C[None, :, j], out=prod)
+        acc += prod
+    return acc
+
+
+def _fold_sq(X: np.ndarray) -> np.ndarray:
+    """`_sq_norm` of every row of X: acc = acc + x_j·x_j, j ascending."""
+    acc = np.zeros(len(X))
+    for j in range(X.shape[1]):
+        acc = acc + X[:, j] * X[:, j]
+    return acc
+
+
+class _Side:
+    """One side of a block: its `vec` column as the JVM folds see it.
+    A NULL array, or one with a NULL element, is not `valid` (every fold
+    over it is NULL). `zip_with` pads unequal lengths with NULL, so rows
+    are stacked per length and only equal lengths pair up; with
+    `within`, only rows of equal (non-NULL) `within` ids pair up too."""
+
+    def __init__(self, table: pa.Table, vec: str, within: str | None = None):
+        arr = table.column(vec).combine_chunks()
+        self.n = len(arr)
+        offsets = arr.offsets.to_numpy()
+        lens = offsets[1:] - offsets[:-1]
+        null_elems = np.concatenate(
+            [[0], np.cumsum(arr.values.is_null().to_numpy(zero_copy_only=False))]
+        )
+        valid = arr.is_valid().to_numpy(zero_copy_only=False) & (
+            null_elems[offsets[1:]] == null_elems[offsets[:-1]]
+        )
+        self.within = np.zeros(self.n, dtype=np.int64)
+        if within is not None:
+            self.within, w_ok = _ids(table, within)
+            valid &= w_ok
+        self.lens = np.where(valid, lens, -1)
+        flat = pc.fill_null(arr.values, 0.0).to_numpy()
+        self.pos = np.zeros(self.n, dtype=np.int64)
+        self.sq = np.zeros(self.n)
+        self.groups: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
+        for L, W in set(zip(self.lens[valid].tolist(), self.within[valid].tolist())):
+            rows = np.flatnonzero((self.lens == L) & (self.within == W))
+            M = flat[offsets[rows, None] + np.arange(L)[None, :]]
+            self.groups[L, W] = (rows, M)
+            self.pos[rows] = np.arange(len(rows))
+            self.sq[rows] = _fold_sq(M)
+        self.norm = np.sqrt(self.sq)
+
+    def tiles(self, n_other: int):
+        step = max(1, _TILE_PAIRS // max(1, n_other))
+        for lo in range(0, self.n, step):
+            yield np.arange(lo, min(lo + step, self.n))
+
+    def dots(self, rows: np.ndarray, other: _Side) -> tuple[np.ndarray, np.ndarray]:
+        """(dot, ok) of these rows against every row of `other`; `ok` is
+        False where the fold is NULL."""
+        dot = np.zeros((len(rows), other.n))
+        ok = np.zeros(dot.shape, dtype=bool)
+        lens, within = self.lens[rows], self.within[rows]
+        for (L, W), (o_rows, OM) in other.groups.items():
+            sel = np.flatnonzero((lens == L) & (within == W))
+            if len(sel):
+                cell = np.ix_(sel, o_rows)
+                dot[cell] = _fold_dot(self.groups[L, W][1][self.pos[rows[sel]]], OM)
+                ok[cell] = True
+        return dot, ok
+
+
+def _pair_table(qt, ct, picks, carry) -> pa.Table:
+    """The kept (query row, candidate row, dot, den, ok) picks as the
+    kernel's output table: ids, `carry` columns, and dot/den (NULL where
+    the fold is)."""
+    qi, ci, dot, den, ok = (np.concatenate(p) for p in zip(*picks))
+    cols = {
+        "query_id": qt.column("query_id").take(qi),
+        "neighbor_id": ct.column("neighbor_id").take(ci),
+    }
+    for name in carry:
+        side = qt if name in qt.column_names else ct
+        cols[name] = side.column(name).take(qi if side is qt else ci)
+    cols["dot"] = pa.array(dot, mask=~ok)
+    cols["den"] = pa.array(den, mask=~ok)
+    return pa.table(cols)
+
+
+def _pair_block(
+    qt: pa.Table,
+    ct: pa.Table,
+    k: int | None,
+    tau: float | None,
+    carry: tuple[str, ...],
+    within: str | None,
+) -> pa.Table:
+    """The pairs of one block that can still make the cut once Spark
+    rounds `dot / den` (`_cosine`'s ratio): with `k`, per query row the
+    non-self candidates whose raw score is ≥ the k-th best − `_SLACK`;
+    with `tau`, the pairs with query id < neighbor id and raw score ≥
+    tau − `_SLACK`. Zero-norm pairs are always kept, for Spark to turn
+    into NULL or an error. With `within`, only rows of equal `within`
+    ids pair up (an equi-join inside the block)."""
+    picks = [(np.zeros(0, np.int64),) * 2 + (np.zeros(0),) * 2 + (np.zeros(0, bool),)]
+    if qt.num_rows and ct.num_rows:
+        q, c = _Side(qt, "q_vec", within), _Side(ct, "c_vec", within)
+        qid, q_ok = _ids(qt, "query_id")
+        nid, n_ok = _ids(ct, "neighbor_id")
+        for rows in q.tiles(c.n):
+            dot, ok = q.dots(rows, c)
+            den = q.norm[rows, None] * c.norm[None, :]
+            zero = ok & (den == 0)
+            # key ranks like Spark's descending sort: NaN first, NULL last
+            with np.errstate(divide="ignore", invalid="ignore"):
+                key = np.where(ok & ~zero, dot / den, -np.inf)
+            key[np.isnan(key)] = np.inf
+            q_id, n_id = qid[rows, None], nid[None, :]
+            pair = q_ok[rows, None] & n_ok[None, :]
+            pair &= (q_id != n_id) if tau is None else (q_id < n_id)
+            cut = tau
+            if tau is None:
+                key[~pair] = -np.inf
+                cut = -np.inf
+                if key.shape[1] > k:
+                    cut = np.partition(key, -k, axis=1)[:, -k, None]
+            r, cc = np.nonzero(pair & ((key >= cut - _SLACK) | zero))
+            picks.append((rows[r], cc, dot[r, cc], den[r, cc], ok[r, cc]))
+    return _pair_table(qt, ct, picks, carry)
+
+
+def _bucket_count(df: DataFrame) -> int:
+    return df.sparkSession.sparkContext.defaultParallelism
+
+
+def _hash_spread(
+    hashed: DataFrame, id_col: str, copied: DataFrame, n: int
+) -> tuple[DataFrame, DataFrame]:
+    """Block key `__blk` for an unblocked pair scan: `hashed` splits
+    into `n` buckets by id, `copied` (the small side) goes into every
+    bucket, so each pair meets in exactly one block and no side is
+    broadcast."""
+    return (
+        hashed.withColumn("__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n))),
+        copied.withColumn(
+            "__blk",
+            F.explode(F.sequence(F.lit(0).cast("long"), F.lit(n - 1).cast("long"))),
+        ),
+    )
+
+
+def _scored_pairs(
+    queries: DataFrame,
+    cands: DataFrame,
+    keys: list[str],
+    k: int | None = None,
+    tau: float | None = None,
+    carry: tuple[str, ...] = (),
+    within: str | None = None,
+) -> DataFrame:
+    """The kernel over `queries` (query_id, q_vec, …) and `cands`
+    (neighbor_id, c_vec, …) cogrouped on `keys`: the pairs that can
+    reach a top `k` (or pass a rounded ≥ `tau`) and share their
+    `within` id if one is named, as (query_id,
+    neighbor_id, *carry, dot, den). `_cosine_of` turns dot/den into the
+    ratio."""
+    types = {
+        f.name: f.dataType.simpleString()
+        for f in queries.schema.fields + cands.schema.fields
+    }
+    schema = ", ".join(
+        ["query_id long", "neighbor_id long"]
+        + [f"{c} {types[c]}" for c in carry]
+        + ["dot double", "den double"]
+    )
+
+    def fn(qt, ct):
+        return _pair_block(qt, ct, k, tau, carry, within)
+
+    return queries.groupBy(*keys).cogroup(cands.groupBy(*keys)).applyInArrow(
+        fn, schema
+    )
+
+
+def _cosine_of() -> Column:
+    """`_cosine`'s ratio of a `_scored_pairs` row, divided by Spark."""
+    return F.col("dot") / F.col("den")
+
+
+def labeled_cosine_topk(
+    embeddings: DataFrame,
+    k: int,
+    query_filter: Column | None,
+    block_on_label: bool,
+    scaled_e6: bool,
+) -> DataFrame:
+    """`cosine_topk` with the query and neighbor labels carried along:
+    (query_id, neighbor_id, q_label, c_label, rank, score)."""
+    # Pin the parsed-vector frame: the query and candidate sides are
+    # two consumers and would otherwise each replay the scan + parse.
+    base = embeddings.select(
+        "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
+    ).localCheckpoint(eager=False)
+    queries = base if query_filter is None else base.filter(query_filter)
+    queries = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("q_label"),
+        F.col("vec").alias("q_vec"),
+    )
+    cands = base.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("c_label"),
+        F.col("vec").alias("c_vec"),
+    )
+    if block_on_label:
+        # an equi-join on label: NULL labels meet nothing
+        queries = queries.where(F.col("q_label").isNotNull()).withColumn(
+            "__blk", F.col("q_label")
+        )
+        cands = cands.where(F.col("c_label").isNotNull()).withColumn(
+            "__blk", F.col("c_label")
+        )
+    else:
+        cands, queries = _hash_spread(
+            cands, "neighbor_id", queries, _bucket_count(base)
+        )
+    pairs = _scored_pairs(
+        queries, cands, ["__blk"], k=k, carry=("q_label", "c_label")
+    )
+    if scaled_e6:
+        cos, sim_col = e6(_cosine_of()), "cos_sim_e6"
+    else:
+        cos, sim_col = F.round(_cosine_of(), 6), "cos_sim"
+    scored = pairs.select(
+        "query_id", "neighbor_id", "q_label", "c_label", cos.alias(sim_col)
+    )
+    return _rank_top_k(scored, k, sim_col, carry=("q_label", "c_label"))
+
+
 def cosine_topk(
     embeddings: DataFrame,
     k: int = 3,
@@ -134,29 +420,17 @@ def cosine_topk(
     selected top-k) is stable across engines/retries; ties break on
     neighbor id. The score is `cos_sim`, rounded to 6 places, or with
     `scaled_e6` the `e6` integer `cos_sim_e6`.
+
+    Plan shape: label-blocked, each label's queries and candidates meet
+    in one pair-kernel block; unblocked, the corpus is hashed by id into
+    `defaultParallelism` buckets and the query side is copied into each,
+    so the corpus is neither broadcast nor crossed with itself in the
+    JVM. Each block returns its near-top-k shortlist per query, and one
+    window ranks the union.
     """
-    # Pin the parsed-vector frame: the query and candidate sides are
-    # two consumers and would otherwise each replay the scan + parse.
-    base = embeddings.select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
-    ).localCheckpoint(eager=False)
-    queries = base if query_filter is None else base.filter(query_filter)
-    queries = _normed(queries, "query_id", "q", F.col("label").alias("q_label"))
-    cands = _normed(base, "neighbor_id", "c", F.col("label").alias("c_label"))
-    if block_on_label:
-        joined = queries.join(cands, F.col("q_label") == F.col("c_label"))
-    else:
-        joined = queries.crossJoin(cands)
-    joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    ratio = _cosine("q", "c")
-    if scaled_e6:
-        cos = e6(ratio)
-        sim_col = "cos_sim_e6"
-    else:
-        cos = F.round(ratio, 6)
-        sim_col = "cos_sim"
-    scored = joined.select("query_id", "neighbor_id", cos.alias(sim_col))
-    return _rank_top_k(scored, k, sim_col)
+    return labeled_cosine_topk(
+        embeddings, k, query_filter, block_on_label, scaled_e6
+    ).drop("q_label", "c_label")
 
 
 def _lloyd_codebook(X, n_centroids: int, iters: int, seed: int):
@@ -283,11 +557,10 @@ def ivf_topk(
     are one vectorized numpy matmul per Arrow batch. Scoring runs as a
     blocked matmul PER INVERTED LIST (cogrouped `applyInPandas`): each
     task gets one list's query block and candidate block and scores them
-    with a single `Q @ C.T` — the FAISS search shape — instead of
-    exploding (query × candidate) pair rows through Spark's interpreted
-    array fold (which made the pair join the bottleneck: ~64 interpreted
-    lambda steps per dot product). The per-list local top-k keeps the
-    final global window at ≤ n_probe·k rows per query.
+    with a single `Q @ C.T` — the FAISS search shape; this trained
+    (rows-only) form needs no fold order, unlike the fold-exact pair
+    kernel of the hash-oracle-able scorers. The per-list local top-k
+    keeps the final global window at ≤ n_probe·k rows per query.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -343,39 +616,28 @@ def embedding_cosine_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cos ≥ threshold).
 
-    The dedup-by-embedding operator: label-blocked self-join (at 100 TB,
-    block on an LSH bucket or IVF centroid instead of / in addition to
-    the label), cosine JVM-side, threshold filter pushed into the join
-    output before any further shuffle.
+    The dedup-by-embedding operator: one pair-kernel block per label
+    (at 100 TB, block on an LSH bucket or IVF centroid instead of / in
+    addition to the label); the kernel returns only the pairs whose raw
+    cosine can pass the threshold, and Spark rounds and filters them.
     """
-    base = embeddings.select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("vec")
-    ).select(
-        "vec_id", "label", "vec", norm_expr("vec").alias("nrm")
+    base = embeddings.where(F.col("label").isNotNull()).select(
+        F.col("vec_id"),
+        F.col("label").alias("__blk"),
+        _as_double(F.col("embedding")).alias("vec"),
     )
     a = base.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("label").alias("label_a"),
-        F.col("vec").alias("vec_a"),
-        F.col("nrm").alias("nrm_a"),
+        F.col("vec_id").alias("query_id"), "__blk", F.col("vec").alias("q_vec")
     )
     b = base.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("label").alias("label_b"),
-        F.col("vec").alias("vec_b"),
-        F.col("nrm").alias("nrm_b"),
+        F.col("vec_id").alias("neighbor_id"), "__blk", F.col("vec").alias("c_vec")
     )
-    joined = a.join(
-        b,
-        (F.col("label_a") == F.col("label_b")) & (F.col("id_a") < F.col("id_b")),
-    )
-    cos = F.round(
-        dot_expr("vec_a", "vec_b") / (F.col("nrm_a") * F.col("nrm_b")), 6
-    )
-    return (
-        joined.select("id_a", "id_b", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    pairs = _scored_pairs(a, b, ["__blk"], tau=float(threshold))
+    return pairs.select(
+        F.col("query_id").alias("id_a"),
+        F.col("neighbor_id").alias("id_b"),
+        F.round(_cosine_of(), 6).alias("cos_sim"),
+    ).filter(F.col("cos_sim") >= threshold)
 
 
 def lsh_bucket_topk(
@@ -451,17 +713,19 @@ def lsh_bucket_topk(
         )
     else:
         queries = queries.withColumn("__probe", F.col("bucket"))
-    queries = _normed(
-        queries, "query_id", "q", F.col("__probe").alias("q_bucket")
+    queries = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("vec").alias("q_vec"),
+        F.col("__probe").alias("__blk"),
     )
-    cands = _normed(
-        bucketed, "neighbor_id", "c", F.col("bucket").alias("c_bucket")
+    cands = bucketed.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("vec").alias("c_vec"),
+        F.col("bucket").alias("__blk"),
     )
-    joined = queries.join(cands, F.col("q_bucket") == F.col("c_bucket")).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = joined.select(
-        "query_id", "neighbor_id", e6(_cosine("q", "c")).alias("cos_sim_e6")
+    pairs = _scored_pairs(queries, cands, ["__blk"], k=k)
+    scored = pairs.select(
+        "query_id", "neighbor_id", e6(_cosine_of()).alias("cos_sim_e6")
     )
     if probes > 1:
         # a neighbor reachable through several probed buckets appears
@@ -916,6 +1180,46 @@ def _frozen_codebook(base: DataFrame, n_centroids: int) -> DataFrame:
     )
 
 
+def _assign_block(vt: pa.Table, ct: pa.Table, keep_rank: int) -> pa.Table:
+    """Kernel of `_fixed_assign` over one block of (vec_id, vec) rows
+    and the whole codebook (cid, cvec): per vec_id, the `keep_rank`
+    rows a window ordered by (d2 asc — NULL first, NaN last —, cid asc)
+    numbers first, d2 = (‖v‖² + ‖c‖²) − 2.0·v·c in fold order."""
+    picks = [(np.zeros(0, np.int64),) * 2 + (np.zeros(0),) + (np.zeros(0, bool),)]
+    if vt.num_rows and ct.num_rows:
+        v, c = _Side(vt, "vec"), _Side(ct, "cvec")
+        for rows in v.tiles(c.n):
+            dot, ok = v.dots(rows, c)
+            d2 = (v.sq[rows, None] + c.sq[None, :]) - 2.0 * dot
+            # larger key = earlier in the window's order
+            key = np.where(ok, -d2, np.inf)
+            key[np.isnan(key)] = -np.inf
+            kth = -np.inf
+            if c.n > keep_rank:
+                kth = np.partition(key, -keep_rank, axis=1)[:, -keep_rank, None]
+            r, cc = np.nonzero(key >= kth)
+            picks.append((rows[r], cc, d2[r, cc], ok[r, cc]))
+    ri, ci, d2, ok = (np.concatenate(p) for p in zip(*picks))
+    if len(ri):
+        vid, v_ok = _ids(vt, "vec_id")
+        cid, _ = _ids(ct, "cid")
+        g_id, g_null = vid[ri], ~v_ok[ri]
+        order = np.lexsort((cid[ci], np.where(ok, d2, 0.0), ok, g_id, g_null))
+        ri, ci, g_id, g_null = ri[order], ci[order], g_id[order], g_null[order]
+        at = np.arange(len(ri))
+        first = np.ones(len(ri), dtype=bool)
+        first[1:] = (g_id[1:] != g_id[:-1]) | (g_null[1:] != g_null[:-1])
+        rank = at - np.maximum.accumulate(np.where(first, at, 0))
+        ri, ci = ri[rank < keep_rank], ci[rank < keep_rank]
+    return pa.table(
+        {
+            "vec_id": vt.column("vec_id").take(ri),
+            "cid": ct.column("cid").take(ci),
+            "vec": vt.column("vec").take(ri),
+        }
+    )
+
+
 def _fixed_assign(
     base: DataFrame, cents: DataFrame, keep_rank: int
 ) -> DataFrame:
@@ -927,14 +1231,16 @@ def _fixed_assign(
     `ivf_fixed_list_profile`, `semdedup_fixed` and
     `clustering.fixed_codebook_assign`, so the balance profile and the
     clustering twins can never desynchronize from the index arithmetic.
-    The codebook broadcasts into a nested-loop fan-out."""
-    d2 = _sq_norm("vec") + _sq_norm("cvec") - F.lit(2.0) * dot_expr("vec", "cvec")
-    w = Window.partitionBy("vec_id").orderBy(d2.asc(), F.col("cid").asc())
-    return (
-        base.crossJoin(F.broadcast(cents))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= keep_rank)
-        .select("vec_id", "cid", "vec")
+    The corpus is hashed by id into `defaultParallelism` blocks and the
+    codebook is copied into each; every block ranks its rows in the
+    pair kernel, so no window or per-pair JVM fold runs."""
+    rows, book = _hash_spread(base, "vec_id", cents, _bucket_count(base))
+
+    def fn(vt, ct):
+        return _assign_block(vt, ct, keep_rank)
+
+    return rows.groupBy("__blk").cogroup(book.groupBy("__blk")).applyInArrow(
+        fn, "vec_id long, cid long, vec array<double>"
     )
 
 
@@ -951,21 +1257,22 @@ def ivf_fixed_topk(
     The trained form (`ivf_topk`) is rows-only checkable: its Lloyd
     codebook and numpy assignment arithmetic are not replayable in SQL.
     This variant freezes the codebook to the corpus vectors with the
-    ``n_centroids`` smallest ids and computes EVERYTHING as declarative
-    column expressions with sequential-fold arithmetic (dot products /
-    norms via `dot_expr`/`norm_expr` — the same index-order folds
-    DuckDB's list functions use), so assignments, probe lists, and the
-    final ranking are bit-deterministic and a DuckDB oracle can replay
-    the whole index end-to-end. Codebook quality is NOT the point —
+    ``n_centroids`` smallest ids and computes EVERYTHING with
+    sequential-fold arithmetic (the pair kernel's column-by-column dot
+    products and norms — the same index-order folds as `dot_expr` /
+    `norm_expr` and DuckDB's list functions), so assignments, probe
+    lists, and the final ranking are bit-deterministic and a DuckDB
+    oracle can replay the whole index end-to-end. Codebook quality is NOT the point —
     recall tuning stays with the trained form; this one pins index
     CORRECTNESS (bucket routing, probe union, rank) under a hash
     oracle, and probing ALL lists must reproduce the exact brute-force
     top-k (pinned in tests).
 
-    Plan shape: centroid table is n_centroids rows (broadcast);
-    assignment is a broadcast join + per-vector top-1 window; search
-    joins queries' probed lists to corpus lists on centroid id — no
-    cartesian over the corpus.
+    Plan shape: assignment is `_fixed_assign` (the n_centroids-row
+    codebook copied into each hash block of the corpus); search
+    cogroups the queries' probed lists with the corpus lists on
+    centroid id, one pair-kernel block per list — no cartesian over the
+    corpus.
 
     Output: (query_id, neighbor_id, rank, cos_sim_e6).
     """
@@ -987,14 +1294,11 @@ def ivf_fixed_topk(
         F.col("vec_id").alias("query_id"), "cid", F.col("vec").alias("q_vec")
     )
 
-    joined = queries.join(corpus, "cid").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    cos = dot_expr("q_vec", "c_vec") / (norm_expr("q_vec") * norm_expr("c_vec"))
+    pairs = _scored_pairs(queries, corpus, ["cid"], k=k)
     # e6, not a rounded double: the ORDER BY over a fractional round
     # could flip ranks across engine versions.
-    scored = joined.select(
-        "query_id", "neighbor_id", e6(cos).alias("cos_sim_e6")
+    scored = pairs.select(
+        "query_id", "neighbor_id", e6(_cosine_of()).alias("cos_sim_e6")
     ).distinct()  # a neighbor can appear via several probed lists
     return _rank_top_k(scored, k, "cos_sim_e6")
 
@@ -1015,8 +1319,8 @@ def ivf_fixed_list_profile(
     Same assignment arithmetic as `ivf_fixed_topk` (sequential-fold
     distances, min-distance/ties-to-smallest-cid routing), so the
     whole readout replays in DuckDB under a hash oracle. Plan: one
-    corpus scan, broadcast n_centroids-row codebook, per-vector top-1
-    window, then centroid-cardinality aggregation.
+    corpus scan, `_fixed_assign`'s pair-kernel top-1, then
+    centroid-cardinality aggregation.
     """
     base = embeddings.select(
         "vec_id", _as_double(F.col("embedding")).alias("vec")
@@ -1062,8 +1366,8 @@ def semdedup_fixed(
     `semdedup` (same division of labor as ivf_topk / ivf_fixed_topk).
 
     Assignment uses the frozen codebook (corpus vectors with the
-    ``n_centroids`` smallest ids; declarative fold arithmetic via
-    `clustering.fixed_codebook_assign`), and the keeper rule is the
+    ``n_centroids`` smallest ids; fold arithmetic via `_fixed_assign`,
+    as `clustering.fixed_codebook_assign`), and the keeper rule is the
     MIN-ID-ANCHOR form: vector b is a duplicate iff SOME lower-id
     vector a in the same cluster has round(cos(a,b), 6) ≥ tau, with
     dup_of = the smallest such a. That rule is a pure join/aggregation
@@ -1075,73 +1379,54 @@ def semdedup_fixed(
     its collapse/keeper contracts; this one pins cluster routing, the
     threshold arithmetic, and keeper bookkeeping exactly.
 
-    Plan: broadcast codebook + per-vector top-1 window (assignment),
-    then ONE cluster-keyed self-join — the quadratic step is bounded by
+    Plan: `_fixed_assign` (assignment), then ONE pair scan that pairs
+    rows of the same cluster only — the quadratic step is bounded by
     cluster size exactly as in SemDeDup/IVF. No corpus-wide cartesian.
+    The pair kernel returns only the pairs whose raw cosine can pass the
+    rounded ≥ tau test; Spark rounds, filters and takes the min anchor.
 
-    The pair join is SALTED (``pair_salt``): its natural key is
-    `cluster`, which has only ``n_centroids`` distinct values — an
-    unsalted shuffle join runs each cluster's entire quadratic kernel
-    on ONE task (and near the broadcast threshold the planner's
-    size-estimate coin flip makes the same query read 2 s or 44 s on
-    identical data — the r15 sf1 probe). The a side carries a
-    deterministic per-row salt, the b side replicates once per salt
-    value, so every (a, b) pair meets exactly once while each
-    cluster's kernel spreads over ``pair_salt`` tasks. The b-side
-    replication multiplies shuffle volume by ``pair_salt`` — the
-    standard trade for skew-bounded self-joins (operators/skew.py);
-    at corpus scale the production path remains the trained
-    `semdedup`, whose cluster count grows with the corpus.
+    The pair scan is SALTED (``pair_salt``): keyed on the cluster, which
+    has only ``n_centroids`` distinct values, each cluster's entire
+    quadratic kernel would run on ONE task. The a side carries a
+    deterministic per-row salt (its id hashed into ``pair_salt``
+    buckets), the b side is copied once per salt value, and each salt
+    bucket is one kernel block that pairs rows within their cluster, so
+    every (a, b) pair meets in exactly one block while each cluster's
+    kernel spreads over ``pair_salt`` tasks. The b-side copies multiply
+    its shuffle volume by ``pair_salt`` — the standard trade for
+    skew-bounded self-joins (operators/skew.py); at corpus scale the
+    production path remains the trained `semdedup`, whose cluster count
+    grows with the corpus.
 
     Returns (vec_id, cluster, keep, dup_of).
     """
-    from legendary_data_pipeline_spark.operators.clustering import (
-        fixed_codebook_assign,
-    )
-
     base = embeddings.select(
         "vec_id", _as_double(F.col("embedding")).alias("vec")
     )
-    assigned = fixed_codebook_assign(
-        embeddings, n_centroids
-    ).localCheckpoint(eager=False)  # self-join + final keeper join
-    # Norms are per-VECTOR, so compute them once here (n rows) rather
-    # than inside the pair expression (n² evaluations of the same fold).
-    withvec = (
-        assigned.join(base, "vec_id")
-        .withColumn("__norm", norm_expr("vec"))
-        .localCheckpoint(eager=False)
-    )  # both pair-join sides (r11 scan audit: 8 embeddings scans)
-    n_salt = max(1, int(pair_salt))
-    a = withvec.select(
-        F.col("cluster"),
-        F.col("vec_id").alias("__ia"),
-        F.col("vec").alias("__va"),
-        F.col("__norm").alias("__na"),
-        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_salt)).alias("__salt"),
+    assigned = _fixed_assign(
+        base, _frozen_codebook(base, n_centroids), 1
+    ).localCheckpoint(eager=False)  # pair scan + final keeper join
+    a = assigned.select(
+        F.col("cid").alias("cluster"),
+        F.col("vec_id").alias("query_id"),
+        F.col("vec").alias("q_vec"),
     )
-    b = withvec.select(
-        F.col("cluster"),
-        F.col("vec_id").alias("__ib"),
-        F.col("vec").alias("__vb"),
-        F.col("__norm").alias("__nb"),
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), F.lit(n_salt - 1).cast("long"))
-        ).alias("__salt"),
+    b = assigned.select(
+        F.col("cid").alias("cluster"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("vec").alias("c_vec"),
     )
-    pairs = a.join(b, ["cluster", "__salt"]).filter(
-        F.col("__ia") < F.col("__ib")
-    )
-    cos = F.round(
-        dot_expr("__va", "__vb") / (F.col("__na") * F.col("__nb")), 6
-    )
+    a, b = _hash_spread(a, "query_id", b, max(1, int(pair_salt)))
+    pairs = _scored_pairs(a, b, ["__blk"], tau=float(tau), within="cluster")
     dups = (
-        pairs.filter(cos >= F.lit(float(tau)))
-        .groupBy("__ib")
-        .agg(F.min("__ia").alias("dup_of"))
-        .select(F.col("__ib").alias("vec_id"), "dup_of")
+        pairs.filter(F.round(_cosine_of(), 6) >= F.lit(float(tau)))
+        .groupBy("neighbor_id")
+        .agg(F.min("query_id").alias("dup_of"))
+        .select(F.col("neighbor_id").alias("vec_id"), "dup_of")
     )
-    return assigned.join(dups, "vec_id", "left").select(
+    return assigned.select("vec_id", F.col("cid").alias("cluster")).join(
+        dups, "vec_id", "left"
+    ).select(
         "vec_id",
         "cluster",
         F.col("dup_of").isNull().alias("keep"),

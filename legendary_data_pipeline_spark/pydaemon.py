@@ -12,8 +12,14 @@ two seconds of CPU re-reading the same unchanged zip.
 
 Here an importer re-reads its archive only when the archive's stat
 stamp (mtime, size, inode) differs from the one it last read, so a zip
-that is rewritten or re-shipped is still picked up. Everything else is
-``pyspark.daemon`` unchanged.
+that is rewritten or re-shipped is still picked up.
+
+The daemon also imports numpy, pandas, pyarrow and pyspark's worker
+before it forks any worker, and freezes them out of the cyclic
+collector (``gc.freeze``), so the workers share those pages instead of
+each importing a private copy: on a 4-vCPU host four Arrow-kernel
+workers held ~76 MB each, ~48 MB with the shared imports. Everything
+else is ``pyspark.daemon`` unchanged.
 
 Spark starts it as ``python -m legendary_data_pipeline_spark.pydaemon
 <worker module>`` when ``spark.python.daemon.module`` names it
@@ -46,6 +52,15 @@ def _invalidate_if_changed(self) -> None:
 
 def main() -> None:
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+    import gc
+
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+    from pyspark import worker  # noqa: F401
+    from pyspark.sql.pandas import serializers  # noqa: F401
+
+    gc.freeze()
     # pyspark.daemon picks the worker module from sys.argv[1] on import.
     from pyspark import daemon
 

@@ -1541,9 +1541,10 @@ def curation_cluster_balanced_sample(
     "by seeded hash order. Every stage is declarative and "
     "deterministic, so the WHOLE draw replays in DuckDB under the "
     "hash oracle — the correctness twin of the trained k-means "
-    "variant (contract-pinned in test_clustering.py). Plan: 16-row "
-    "broadcast codebook, per-vector top-1 window, per-cluster bounded "
-    "top-N — the corpus never joins itself.",
+    "variant (contract-pinned in test_clustering.py). Plan: the 16-row "
+    "codebook copied into each hash block of the corpus, one pair-kernel "
+    "pass for every vector's top-1, per-cluster bounded top-N — the "
+    "corpus never joins itself.",
 )
 def curation_cluster_fixed_sample(
     spark: SparkSession, sf_dir: str

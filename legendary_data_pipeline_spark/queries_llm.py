@@ -513,7 +513,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Embedding-cosine near-dup pairs (label-blocked, threshold 0.35): "
     "semantic dedup over the embedding column. At 100 TB the label block "
-    "becomes an LSH/IVF bucket; cosine stays JVM-side via zip_with/aggregate.",
+    "becomes an LSH/IVF bucket; each block's cosines come from the "
+    "fold-exact pair kernel (the JVM fold's order, column by column).",
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_distributed(spark, sf_dir, "embeddings")
@@ -550,7 +551,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rn <= 3
     """,
     doc="Brute-force exact cosine top-k (label-blocked): the ANN baseline. "
-    "Dot products via zip_with/aggregate stay JVM-side; similarity is "
+    "Each label block is scored by the fold-exact pair kernel (dot "
+    "products in the JVM fold's order, column by column); similarity is "
     "rounded before ranking so the selected top-k is engine-stable.",
 )
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2642,9 +2644,10 @@ _IVFX_K = 3
     "ENTIRE index replays in DuckDB under the hash oracle — the "
     "correctness twin of the trained `sim_ivf_topk` (whose Lloyd "
     "codebook is rows-only + recall-bounded). Probing every list "
-    "reproduces exact brute-force top-k (pinned in tests). Plan: "
-    "16-row broadcast codebook, per-vector top-1 window, probe-list "
-    "equi-join — no cartesian over the corpus.",
+    "reproduces exact brute-force top-k (pinned in tests). Plan: the "
+    "16-row codebook copied into each hash block of the corpus for "
+    "assignment, then one pair-kernel block per probed list — no "
+    "cartesian over the corpus.",
 )
 def sim_ivf_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_distributed(spark, sf_dir, "embeddings")

@@ -330,28 +330,20 @@ def _ranked_frame(
     and pass it here, so building the query reads the footer once."""
     if query_ids is None:
         query_ids = _bounded_query_ids(emb)
-    topk = SIM.cosine_topk(
+    # The scorer carries both labels, so relevance needs no join back
+    # to the corpus.
+    topk = SIM.labeled_cosine_topk(
         emb,
-        k=_RET_K,
-        query_filter=F.col("vec_id").isin(query_ids),
+        _RET_K,
+        F.col("vec_id").isin(query_ids),
         block_on_label=False,
+        scaled_e6=False,
     )
-    labels = emb.select("vec_id", "label")
-    q_lab = labels.select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")
-    )
-    n_lab = labels.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("label").alias("n_label")
-    )
-    return (
-        topk.join(F.broadcast(q_lab), "query_id")
-        .join(F.broadcast(n_lab), "neighbor_id")
-        .select(
-            "query_id",
-            "q_label",
-            F.col("rank"),
-            (F.col("q_label") == F.col("n_label")).cast("int").alias("rel"),
-        )
+    return topk.select(
+        "query_id",
+        "q_label",
+        F.col("rank"),
+        (F.col("q_label") == F.col("c_label")).cast("int").alias("rel"),
     )
 
 

@@ -11,6 +11,10 @@ Defaults are chosen for correctness-at-scale, not just local runs:
   load as integer nanos; event-time math is then pure integer arithmetic.
 - on local masters, Python workers start from `pydaemon`, which spares
   each Python task a re-read of pyspark.zip's directory.
+- 4 MB memory pages: every sort and aggregation hash map of a task
+  takes one zero-filled page on its first row. The default page follows
+  the driver memory up to 64 MB, so a cogroup over four tasks touched
+  512 MB of heap for a few MB of rows; larger inputs take more pages.
 """
 
 from __future__ import annotations
@@ -86,6 +90,7 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("LDP_DRIVER_MEM", "8g"))
+        .config("spark.buffer.pageSize", "4m")
     )
     if master.startswith("local"):
         # Python workers run on this host: start them through `pydaemon`

@@ -68,3 +68,15 @@ def test_build_partition_invariant(spark):
         corpus.repartition(17), "key", m_bits=1 << 12, k_hashes=_K
     )
     assert (a == b).all()
+
+
+def test_null_key_shares_an_arrow_batch_with_members(spark):
+    # One partition: the NULL key and every member cross the Arrow
+    # boundary in the same batch, whatever the session's core count. A
+    # NULL hash in that batch would turn the hash columns into float64
+    # and drop the 60-bit hashes' low bits (false negatives).
+    keys = [(f"member-{i}",) for i in range(200)] + [(None,)]
+    df = spark.createDataFrame(keys, "key string").coalesce(1)
+    bm = build_bloom(df, "key", m_bits=1 << 14, k_hashes=_K)
+    out = probe_bloom(df, "key", bm, k_hashes=_K).collect()
+    assert [r["key"] for r in out if not r["maybe_seen"]] == [None]

@@ -8,6 +8,11 @@ broadcastable side — at 100 TB that plan never finishes. (Broadcast
 nested-loop joins of 1-row bounds frames and literal grids are the
 engine's documented pattern and remain allowed.)
 
+A second, tree-walking guard pins the retrieval queries' corpus side:
+no BroadcastExchange in `ret_mrr_at_10` / `ret_ndcg_at_10` may reach
+the embeddings scan, or a pinned (checkpointed) frame, unless an
+aggregate or a limit bounds it first.
+
 Plans are built at sf0.001. Queries whose CONSTRUCTION executes jobs
 (codebook training, connected components, checkpointed edges) still
 yield a final physical plan — the guard checks that plan, whatever
@@ -33,3 +38,56 @@ def test_no_cartesian_product(spark, sf_dir, name):
     if name in ALLOWED_CARTESIAN:
         pytest.skip("documented unblocked exact baseline")
     assert "CartesianProduct" not in plan, name
+
+
+#: Nodes that bound what flows above them to a small, data-independent
+#: size: a broadcast above one of them does not carry the corpus.
+_BOUNDING = frozenset(
+    {
+        "HashAggregateExec",
+        "ObjectHashAggregateExec",
+        "SortAggregateExec",
+        "GlobalLimitExec",
+        "LocalLimitExec",
+        "CollectLimitExec",
+        "TakeOrderedAndProjectExec",
+    }
+)
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _children(node) -> list:
+    if _kind(node) == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    seq = node.children()
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _reaches_corpus(node, table: str) -> bool:
+    kind = _kind(node)
+    if kind in _BOUNDING:
+        return False
+    if kind == "FileSourceScanExec":
+        return table in node.relation().location().rootPaths().mkString(",")
+    if kind == "RDDScanExec":  # a checkpointed frame: its source is unnamed
+        return True
+    return any(_reaches_corpus(c, table) for c in _children(node))
+
+
+def _corpus_broadcasts(node, table: str) -> list[str]:
+    found = []
+    if _kind(node) == "BroadcastExchangeExec" and _reaches_corpus(node, table):
+        found.append(node.toString())
+    for child in _children(node):
+        found += _corpus_broadcasts(child, table)
+    return found
+
+
+@pytest.mark.parametrize("name", ["ret_mrr_at_10", "ret_ndcg_at_10"])
+def test_retrieval_never_broadcasts_the_corpus(spark, sf_dir, name):
+    df = REGISTRY[name].spark_fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan()
+    assert _corpus_broadcasts(plan, "embeddings") == [], name

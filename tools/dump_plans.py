@@ -61,7 +61,7 @@ def main() -> None:
         n_ex = txt.count("Exchange")
         n_py = txt.count("EvalPython") + txt.count("MapInPandas") + txt.count(
             "FlatMapGroupsInPandas"
-        ) + txt.count("MapInArrow")
+        ) + txt.count("MapInArrow") + txt.count("FlatMapCoGroupsIn")
         joins = [
             j for j in (
                 "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
